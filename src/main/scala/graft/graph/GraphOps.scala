@@ -20,6 +20,13 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
+  /** Process-wide sequence that scopes `observe` metric names per run:
+    * names must be unique among the session's ACTIVE observations, and
+    * two runs on one session (even over the same input DataFrame, from
+    * different threads) must never share one. */
+  private val obsSeq = new java.util.concurrent.atomic.AtomicLong()
+  private def nextObsScope(): Long = obsSeq.incrementAndGet()
+
   /** EP edge payload (EP.scala:12-30); pb = round(probability*255). */
   case class Edge(src: Long, dst: Long, version: Long, pb: Long,
                   vendor: Long, ts: Long)
@@ -587,10 +594,7 @@ object GraphOps {
     // The signature rides the round's own checkpoint-materialization
     // job as an `observe` metric instead of a second full-pass
     // aggregation job per round (guide §1.2: one pass, not two).
-    // name-scoped per invocation: observation names must be unique
-    // among ACTIVE observations on the session, and two cc runs could
-    // in principle overlap on one session
-    val obsScope = System.identityHashCode(pairs)
+    val obsScope = nextObsScope()
     def sigObs(name: String): org.apache.spark.sql.Observation =
       org.apache.spark.sql.Observation(s"${name}_$obsScope")
     def withSig(d: DataFrame, o: org.apache.spark.sql.Observation): DataFrame =
@@ -725,8 +729,9 @@ object GraphOps {
       (d.observe(o, count(lit(1)).as("n")),
         () => o.get("n").asInstanceOf[Long])
     }
+    val obsScope = nextObsScope()
     val sym = if (symmetric) in else reverse(in).distinct()
-    val (sym0, n0) = counted(sym, s"kcore_n_stage_${System.identityHashCode(in)}")
+    val (sym0, n0) = counted(sym, s"kcore_n_stage_$obsScope")
     var edges = sym0.localCheckpoint(true)
     var n = n0()
     var round = 0
@@ -741,7 +746,7 @@ object GraphOps {
         .join(keep.withColumnRenamed("vertex", "dst"), Seq("dst"),
           "left_semi")
         .select(col("src"), col("dst")),
-        s"kcore_n_${round}_${System.identityHashCode(in)}")
+        s"kcore_n_${round}_$obsScope")
       val next = nextObs.localCheckpoint(true)
       val m = m0()
       converged = m == n
@@ -855,6 +860,7 @@ object GraphOps {
     // rewrite (AttributeMap lookup on the pruned side), so the first
     // superstep's delta BECOMES the pending set instead
     var pending: Option[DataFrame] = None
+    val obsScope = nextObsScope()
     var inbox = canon(batch)
     var step = 1
     var drained = false
@@ -869,7 +875,7 @@ object GraphOps {
       // the drained probe rides the delta's checkpoint job as an
       // `observe` count instead of a separate limit-1 job per superstep
       val deltaObs = org.apache.spark.sql.Observation(
-        s"g16_delta_${step}_${System.identityHashCode(batch)}")
+        s"g16_delta_${step}_$obsScope")
       val delta = pending.fold(vsState) { p =>
         vsState.as("c")
           .join(p.as("p"), $"c.vertex" === $"p.vertex" &&

@@ -282,7 +282,7 @@ class KVResolvedReaderFactory(required: StructType, pushed: Array[Filter],
 }
 
 /** Bucket-local latest-wins resolve — the executor-side mirror of
-  * `KVTable.resolve` (write/KVStore.scala:377): per (key, family,
+  * `KVTable.resolve` (write/KVStore.scala): per (key, family,
   * qualifier) the max-(ts, value) non-tombstone cell wins, then row /
   * family / cell tombstones mask winners at-or-below their ts. State is
   * one entry per LIVE cell of the bucket — the same per-task footprint

@@ -1,6 +1,6 @@
 package graft.write
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: appends are cheap (no read-modify-write at write time —
   * the reference's BufferedMutator analogue); resolution cost is one
-  * hash aggregation keyed by (key,family,qualifier), so periodic
+  * key-partitioned window sort ([[KVTable.resolve]]), so periodic
   * compaction bounds read amplification exactly like HBase memstore
   * flush + compaction does. At 100 TB the compacted form is key-sorted
   * parquet → merge-joinable and range-prunable.
@@ -185,10 +185,10 @@ class KVTable(val spark: SparkSession, val path: String) {
     *
     * Shape at scale: both cutoff states come from the same bucketed
     * scan with a pushed `ts` predicate (row-group pruning), each
-    * resolve shuffles once on (key,family,qualifier), and the final
-    * full-outer join is co-partitioned with the resolve windows — no
-    * extra exchange on the join legs. Net-change semantics mean a
-    * cell written and superseded entirely inside (from, to] emits only
+    * resolve is one window pass that shuffles at most once, on key
+    * (not at all off the bucketed layout), and the final full-outer
+    * join is keyed by (key,family,qualifier). Net-change semantics mean
+    * a cell written and superseded entirely inside (from, to] emits only
     * the net row, and the same retention rule as [[resolvedAsOf]]
     * applies to `from` cutoffs older than the last compaction. */
   def changesBetween(from: Long, to: Long): DataFrame = {
@@ -239,8 +239,8 @@ class KVTable(val spark: SparkSession, val path: String) {
     * CDC-walk shape a derived-state consumer uses to catch up over
     * several refresh points (`m16_cdc_apply`): O(one log scan), not
     * O(cutoffs × log scans). [[changesBetween]] stays the declarative
-    * two-state form (Catalyst pushdown of the ts filter, broadcast
-    * tombstone masks — the better plan when diffing exactly two
+    * two-state form (Catalyst pushdown of the ts filter, one window
+    * pass per cutoff — the better plan when diffing exactly two
     * cutoffs far apart). */
   def changeLog(cutoffs: Seq[Long]): DataFrame = {
     require(cutoffs.size >= 2 && cutoffs == cutoffs.sorted &&
@@ -737,41 +737,40 @@ object KVTable {
     * non-tombstone cell wins, unless masked by a row/family/cell
     * tombstone at or above its ts (maxVersions=1 + delete markers).
     *
-    * NULL family/qualifier are legitimate cell coordinates (the
-    * version window already groups them), so the mask joins are
-    * null-SAFE — and any tombstone marker that is not 'row'/'family'
-    * masks at cell granularity, exactly like the executor-side
-    * resolve (KVResolvedPartitionReader) and [[KVTable.changeLog]]'s
-    * in-memory replay; the three paths must agree cell-for-cell. */
+    * One window pass over the cells: every window is partitioned by a
+    * prefix of (key, family, qualifier) and ordered by the rest of one
+    * shared order, so the plan is a single hashpartitioning(key)
+    * Exchange (none on a bucketed or key-grouped scan) and one Sort.
+    * The masks are whole-partition maxima. `partitionBy` groups NULL
+    * family/qualifier values as equal, so a NULL is a real cell
+    * coordinate with null-safe (<=>) matching. Any tombstone marker
+    * that is not 'row'/'family' masks at cell granularity, exactly like
+    * the executor-side resolve (KVResolvedPartitionReader) and
+    * [[KVTable.changeLog]]'s in-memory replay; the three paths must
+    * agree cell-for-cell. */
   def resolve(cells: DataFrame): DataFrame = {
-    val rowDel = cells.filter(col("tomb") === "row")
-      .groupBy(col("key").as("rd_key")).agg(max(col("ts")).as("row_del_ts"))
-    val famDel = cells.filter(col("tomb") === "family")
-      .groupBy(col("key").as("fd_key"), col("family").as("fd_family"))
-      .agg(max(col("ts")).as("fam_del_ts"))
-    val cellDel = cells.filter(col("tomb").isNotNull &&
-        col("tomb") =!= "row" && col("tomb") =!= "family")
-      .groupBy(col("key").as("cd_key"), col("family").as("cd_family"),
-        col("qualifier").as("cd_qualifier"))
-      .agg(max(col("ts")).as("cell_del_ts"))
-    // ts desc + value desc: a TOTAL order within the version group, so
-    // two cells written at the same (key,family,qualifier,ts) resolve to
-    // a stable winner across runs (the reference's KeyValueOrdering is
-    // total for the same reason, HBaseTable.scala:219-232).
-    val w = Window.partitionBy(col("key"), col("family"), col("qualifier"))
-      .orderBy(col("ts").desc, col("value").desc_nulls_last)
-    cells.filter(col("tomb").isNull)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
-      .join(rowDel, col("key") <=> col("rd_key"), "left_outer")
-      .join(famDel, col("key") <=> col("fd_key") &&
-        col("family") <=> col("fd_family"), "left_outer")
-      .join(cellDel, col("key") <=> col("cd_key") &&
-        col("family") <=> col("cd_family") &&
-        col("qualifier") <=> col("cd_qualifier"), "left_outer")
-      .filter(col("ts") > coalesce(col("row_del_ts"), lit(Long.MinValue)) &&
-              col("ts") > coalesce(col("fam_del_ts"), lit(Long.MinValue)) &&
-              col("ts") > coalesce(col("cell_del_ts"), lit(Long.MinValue)))
+    // live cells (NULL tomb) before tombstones, then ts desc + value
+    // desc: a TOTAL order within the version group, so two cells written
+    // at the same (key,family,qualifier,ts) resolve to a stable winner
+    // across runs (the reference's KeyValueOrdering is total for the
+    // same reason, HBaseTable.scala:219-232). Plain columns only, so all
+    // four windows share one sort.
+    val order = Seq(col("family"), col("qualifier"), col("tomb").asc_nulls_first,
+      col("ts").desc, col("value").desc_nulls_last)
+    def over(depth: Int) = Window.partitionBy(col("key") +: order.take(depth): _*)
+      .orderBy(order.drop(depth): _*)
+    def whole(depth: Int) =
+      over(depth).rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    def maskTs(tomb: Column, depth: Int) =
+      coalesce(max(when(tomb, col("ts"))).over(whole(depth)), lit(Long.MinValue))
+    val t = col("tomb")
+    cells
+      .withColumn("row_del_ts", maskTs(t === "row", 0))
+      .withColumn("fam_del_ts", maskTs(t === "family", 1))
+      .withColumn("cell_del_ts", maskTs(t =!= "row" && t =!= "family", 2))
+      .withColumn("rn", row_number().over(over(2)))
+      .filter(col("rn") === 1 && t.isNull && col("ts") > col("row_del_ts") &&
+        col("ts") > col("fam_del_ts") && col("ts") > col("cell_del_ts"))
       .select(col("key"), col("family"), col("qualifier"), col("value"), col("ts"))
   }
 }

@@ -63,12 +63,12 @@ class BucketingSpec extends AnyFunSuite with SparkSpec {
     a.compact()
     b.compact()
     // the compacted bucketed scan reports hashpartitioning(key): the
-    // resolve window (key,family,qualifier), the tombstone joins AND the
+    // resolve windows (partitioned by key and its prefixes) AND the
     // cross-table key join are all satisfied by it — no Exchange anywhere
     val joined = a.resolved().select($"key", $"value".as("status"))
       .join(b.resolved().select($"key", $"value".as("price")), Seq("key"))
-    // no SHUFFLE exchange anywhere (BroadcastExchange is fine — that's
-    // AQE choosing broadcast for the small tombstone sides, not a shuffle)
+    // no SHUFFLE exchange anywhere (a BroadcastExchange would be fine —
+    // it moves no table, only a small side)
     val plan = joined.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning"),
       s"compacted KV join still shuffles:\n${plan.take(3000)}")

@@ -297,6 +297,26 @@ class GraphOpsSpec extends AnyFunSuite with SparkSpec {
     } finally spark.conf.unset("spark.graft.debug.validate")
   }
 
+  test("kcoreFixpoint: two runs on one session from two threads over " +
+    "the same input each match their sequential run") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    // the per-round counts ride `observe` metrics; concurrent runs must
+    // each read their OWN counts, so the peel depth (and with it the
+    // core) of one run cannot leak into the other
+    val raw = GraphQueries.pairs2(spark, sf).select($"src", $"dst")
+    def core(k: Int): Set[(Long, Long)] =
+      GraphOps.kcoreFixpoint(raw, k).as[(Long, Long)].collect().toSet
+    val ks = Seq(2, 3)
+    val sequential = ks.map(core)
+    val concurrent = Await.result(
+      Future.sequence(ks.map(k => Future(core(k)))), 5.minutes)
+    assert(sequential.map(_.size).distinct.size === 2,
+      "fixture must give the two runs different cores")
+    assert(concurrent === sequential)
+  }
+
   // --- probability-product incremental BSP (reference
   //     incrementalNetBSP, HGraphTable.scala:143-228) ---
 

@@ -130,7 +130,7 @@ class KVTableSpec extends AnyFunSuite with SparkSpec {
     assert(t.changesBetween(1L, 2L).filter($"key" === 1L).count() === 0)
     assert(t.changeLog(Seq(1L, 2L)).filter($"key" === 1L).count() === 0)
     // a cell tombstone at the (null, null) coordinate masks it — on the
-    // library resolve (null-safe mask join) exactly as on the replay
+    // library resolve (null-safe window partition) exactly as on the replay
     t.put(Seq((1L, Option.empty[String], Option.empty[String],
         Option.empty[String], 3L, Option("cell")))
       .toDF("key", "family", "qualifier", "value", "ts", "tomb"))
@@ -153,6 +153,57 @@ class KVTableSpec extends AnyFunSuite with SparkSpec {
       .select($"change_type").as[String].collect().toSeq === Seq("delete"))
     assert(t2.changesBetween(1L, 2L)
       .select($"change_type").as[String].collect().toSeq === Seq("delete"))
+  }
+
+  test("resolve over a log-only table with row, family and cell tombstones " +
+      "and null coordinates plans exactly one shuffle Exchange") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val t = fresh("oneexchange")
+    val F = Option("F")
+    val none = Option.empty[String]
+    t.put(Seq[(Long, Option[String], Option[String], Option[String], Long,
+        Option[String])](
+      (1L, F, Some("a"), Some("v1"), 1L, none),
+      (1L, F, Some("a"), Some("v2"), 3L, none),
+      (1L, F, Some("b"), Some("x"), 1L, none),
+      (1L, Some("T"), Some("c"), Some("t"), 1L, none),
+      (1L, F, none, none, 2L, Some("family")),
+      (2L, F, Some("a"), Some("y"), 1L, none),
+      (2L, none, none, none, 2L, Some("row")),
+      (2L, F, Some("b"), Some("z"), 3L, none),
+      (3L, none, none, Some("n1"), 1L, none),
+      (3L, F, none, Some("fn"), 1L, none),
+      (3L, none, none, none, 1L, Some("cell")),
+      (4L, none, Some("q"), Some("a"), 1L, none),
+      (4L, none, Some("r"), Some("b"), 2L, none),
+      (4L, none, none, none, 1L, Some("family")),
+      (5L, F, Some("a"), Some("v"), 4L, none),
+      (5L, F, Some("a"), none, 5L, Some("cell")),
+      (5L, F, Some("a"), Some("w"), 6L, none))
+      .toDF("key", "family", "qualifier", "value", "ts", "tomb"))
+    def count(df: org.apache.spark.sql.DataFrame)(
+        pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, Unit]) =
+      new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan)(pf).size
+    def live(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Option[String], Option[String], String, Long)].collect().toSet
+    val now = t.resolved()
+    val asOf = t.resolvedAsOf(2L)
+    // every window shares one order: one shuffle on key, one sort
+    for ((name, df) <- Seq("resolved" -> now, "resolvedAsOf" -> asOf)) {
+      val plan = df.queryExecution.executedPlan.toString.take(3000)
+      assert(count(df) { case _: ShuffleExchangeExec => } === 1,
+        s"$name shuffles more than once:\n$plan")
+      assert(count(df) { case _: SortExec => } === 1,
+        s"$name sorts more than once:\n$plan")
+    }
+    assert(live(now) === Set((1L, F, Some("a"), "v2", 3L),
+      (1L, Some("T"), Some("c"), "t", 1L), (2L, F, Some("b"), "z", 3L),
+      (3L, F, none, "fn", 1L), (4L, none, Some("r"), "b", 2L),
+      (5L, F, Some("a"), "w", 6L)))
+    assert(live(asOf) === Set((1L, Some("T"), Some("c"), "t", 1L),
+      (3L, F, none, "fn", 1L), (4L, none, Some("r"), "b", 2L)))
   }
 
   test("increment merges deltas and skips zeros") {
