@@ -2,14 +2,8 @@ package graft.sources.kv
 
 import java.util.OptionalLong
 
-import scala.collection.JavaConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
@@ -19,7 +13,6 @@ import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning,
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSourceV2 table over a graft KV layout — the engine's counterpart
   * of the reference's scan machinery (`HBaseRDD.scala:18-91`: one
@@ -41,10 +34,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * memstore-sized log is re-read per bucket (classic LSM read
   * amplification, bounded by compaction cadence).
   *
-  * Pushdown: key/family/qualifier/ts predicates are evaluated inside
-  * the reader (and key equality/In prunes whole buckets, the analogue
-  * of the reference's multi-get partition pruning,
-  * `HBaseRDDFunctions.scala:103-113`); runtime (DPP-style) In-filters
+  * Pushdown: key/family/qualifier/ts predicates prune parquet row
+  * groups inside the reader (and key equality/In prunes whole
+  * buckets, the analogue of the reference's multi-get partition
+  * pruning, `HBaseRDDFunctions.scala:103-113`); runtime (DPP-style) In-filters
   * on the key prune buckets at execution time. Columns are pruned down
   * to the parquet page reads via the requested projection.
   */
@@ -52,7 +45,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *   only returns cells with `ts <= v` — the reference's timestamped
   *   read (`Scan.setTimeRange(0, v+1)`, HBaseRDDFunctions.scala:39-46).
   *   The cutoff joins the pushed-filter set, so it prunes parquet row
-  *   groups like any other ts predicate. */
+  *   groups like any other ts predicate, and the reader keeps exactly
+  *   the rows at or below it. */
 class KVBatchTable(path: String, tsMax: Option[Long] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
@@ -62,9 +56,9 @@ class KVBatchTable(path: String, tsMax: Option[Long] = None)
   /** `_cell` — the non-null row-identity struct the row-level delta
     * rewrite uses as rowId (see [[KVCellIdColumn]]) — and `_bucket` —
     * the group identity the CoW rewrite's runtime group filter keys on
-    * (see [[KVBucketColumn]]); both available to any scan (the
-    * row-wise readers synthesize them from the cell columns and the
-    * partition's bucket id). */
+    * (see [[KVBucketColumn]]); both available to any scan (synthesized
+    * from the cell columns and the partition's bucket id by
+    * [[KVCellProjection]]). */
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
     Array(KVCellIdColumn, KVBucketColumn)
@@ -131,9 +125,10 @@ class KVScanBuilder(path: String, tsMax: Option[Long] = None)
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = KVBatchTable.CELL_SCHEMA
 
-  /** Accept every filter we can evaluate row-wise for IO reduction, but
-    * return ALL filters as residual: Spark re-checks them above the
-    * scan, so null/collation corner semantics stay Spark's. This is the
+  /** Accept every filter of a supported shape for IO reduction (the
+    * translatable ones prune parquet row groups), but return ALL
+    * filters as residual: Spark re-checks them above the scan, so
+    * null/collation corner semantics stay Spark's. This is the
     * reference's model too — filters run server-side AND the client
     * trusts the scan contract (HBaseRDDFiltered.scala:8-15). */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -152,8 +147,8 @@ class KVScanBuilder(path: String, tsMax: Option[Long] = None)
 /** @param tsMax kept SEPARATE from `pushed`: Spark re-checks pushed
   *   filters above the scan (they are all returned as residual), but
   *   the time-travel cutoff is scan-internal — nothing re-applies it —
-  *   so the reader must enforce it row-exactly, which pins those scans
-  *   to the row-wise reader (see [[KVReaderFactory]]). */
+  *   so the reader gates rows on it exactly (see
+  *   [[KVColumnarPartitionReader]]). */
 class KVScan(path: String, layout: KVLayout, required: StructType,
              sparkPushed: Array[Filter], tsMax: Option[Long] = None)
     extends Scan with Batch
@@ -222,14 +217,7 @@ class KVScan(path: String, layout: KVLayout, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // evaluated driver-side; `graft.kv.vectorized=false` restores the
-    // row-wise reader everywhere (debug / differential-testing escape
-    // hatch). Time-travel scans are row-wise regardless (see ctor doc).
     val session = org.apache.spark.sql.SparkSession.getActiveSession
-    val vectorized =
-      session.forall(_.conf.get("graft.kv.vectorized", "true").toBoolean) &&
-        !required.fieldNames.contains(KVCellIdColumn.NAME) &&
-        !required.fieldNames.contains(KVBucketColumn.NAME)
     // snapshot the DRIVER's Hadoop conf for the executor-side parquet
     // opens — a bare `new Configuration(false)` would strip the
     // cluster's filesystem settings (HDFS auth, buffer sizes, S3
@@ -237,7 +225,7 @@ class KVScan(path: String, layout: KVLayout, required: StructType,
     val hconf = new org.apache.spark.util.SerializableConfiguration(
       session.map(_.sessionState.newHadoopConf())
         .getOrElse(GraftFs.hadoopConf))
-    new KVReaderFactory(required, pushed, vectorized && tsMax.isEmpty, hconf)
+    new KVReaderFactory(required, pushed, tsMax, hconf)
   }
 }
 
@@ -250,185 +238,115 @@ case class KVBucketPartition(bucket: Int, numBuckets: Int,
                              compactedFiles: Array[String],
                              compactedLens: Array[Long],
                              logFiles: Array[String],
-                             logLens: Array[Long] = Array.empty)
+                             logLens: Array[Long])
     extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow = InternalRow(bucket)
 }
 
-/** Vectorized by default: the compacted leg decodes through Spark's own
-  * VectorizedParquetRecordReader (the same columnar decode the V1
-  * bucketed scan gets) and the memstore-sized log leg is packed into
-  * on-heap column vectors — so a merged read is no longer paying a
-  * row-wise parquet-mr decode for the bulk of the table. Correctness
-  * contract: every Spark-pushed filter is also re-applied ABOVE the
-  * scan (KVScanBuilder returns them all as residual), so the columnar
-  * leg may skip row-level filter evaluation; only the bucket gate on
-  * log rows (a partition-integrity property, not a filter) must be —
-  * and is — enforced inside the reader. */
+/** Every scan decodes through [[KVColumnarPartitionReader]]. A scan
+  * that requests the `_cell` / `_bucket` metadata columns cannot be
+  * columnar (they are computed, not decoded), so it gets a row view
+  * over the decoded cell batches that synthesizes them
+  * ([[KVCellRowReader]]). Correctness contract: every Spark-pushed
+  * filter is also re-applied ABOVE the scan (KVScanBuilder returns
+  * them all as residual), so the reader only prunes row groups with
+  * them; the row gates the reader must own itself are the bucket gate
+  * on log rows (a partition-integrity property) and the `VERSION AS
+  * OF` cutoff (scan-internal, nothing above re-applies it). */
 class KVReaderFactory(required: StructType, filters: Array[Filter],
-                      vectorized: Boolean,
+                      tsMax: Option[Long],
                       hconf: org.apache.spark.util.SerializableConfiguration)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[KVBucketPartition]
-    new KVPartitionReader(p, required, filters, hconf)
-  }
+  private val synthesized = required.fieldNames.exists(n =>
+    n == KVCellIdColumn.NAME || n == KVBucketColumn.NAME)
 
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    vectorized
+    !synthesized
 
   override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    new KVColumnarPartitionReader(partition.asInstanceOf[KVBucketPartition],
+      required, filters, tsMax, hconf)
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[KVBucketPartition]
-    new KVColumnarPartitionReader(p, required, filters, hconf)
+    new KVCellRowReader(new KVColumnarPartitionReader(
+      p, KVBatchTable.CELL_SCHEMA, filters, tsMax, hconf),
+      new KVCellProjection(required, p))
   }
 }
 
-/** Row-wise parquet reader (parquet-mr Group API). Columns are pruned
-  * at the parquet layer via the requested projection; pushed filters
-  * are applied per row; log rows are additionally gated on their bucket
-  * hash so the partition's output is exactly bucket-local. */
-class KVPartitionReader(p: KVBucketPartition, required: StructType,
-                        filters: Array[Filter],
-                        hconf: org.apache.spark.util.SerializableConfiguration)
-    extends PartitionReader[InternalRow] {
-
-  // columns to decode = required ∪ filter references ∪ key (for the
-  // bucket gate on log rows) ∪ the `_cell` struct's parts when the
-  // metadata column is requested; output = required only, in order
-  // (`_cell` synthesized from the parts, `_bucket` from the
-  // partition's bucket id, at emit).
-  private val filterCols = filters.flatMap(_.references).distinct
-  private val needKey = p.numBuckets > 0 && p.logFiles.nonEmpty
-  private val cellParts = Array("key", "family", "qualifier", "ts")
-  private val metaCols = Set(KVCellIdColumn.NAME, KVBucketColumn.NAME)
-  private val wantsCell = required.fieldNames.contains(KVCellIdColumn.NAME)
-  private val readCols: Array[String] =
-    (required.fieldNames.filterNot(metaCols) ++
-      (if (wantsCell) cellParts else Array.empty[String]) ++
-      filterCols ++ (if (needKey) Seq("key") else Nil))
-      .distinct
-  private val colIdx: Map[String, Int] = readCols.zipWithIndex.toMap
-  private val readColSet: Set[String] = readCols.toSet
-  // -1 marks the `_cell` slot (a struct of the parts), -2 the
-  // `_bucket` slot (the partition's bucket id — every row this task
-  // emits is bucket-gated to it; -1 on an unbucketed layout)
+/** Projects one cell — its six `CELL_SCHEMA` values — onto a scan's
+  * required columns, synthesizing the `_cell` struct from the cell's
+  * coordinates and `_bucket` from the partition (every row a task
+  * emits is bucket-gated to it; -1 on an unbucketed layout). */
+private[kv] final class KVCellProjection(required: StructType,
+                                         p: KVBucketPartition) {
+  private val bucketVal =
+    java.lang.Integer.valueOf(if (p.numBuckets > 0) p.bucket else -1)
   private val outIdx: Array[Int] = required.fieldNames.map {
     case KVCellIdColumn.NAME => -1
     case KVBucketColumn.NAME => -2
-    case n => colIdx(n)
+    case n => KVBatchTable.CELL_SCHEMA.fieldIndex(n)
   }
-  private val bucketVal: java.lang.Integer =
-    java.lang.Integer.valueOf(if (p.numBuckets > 0) p.bucket else -1)
-  private val cellPartIdx: Array[Int] =
-    if (wantsCell) cellParts.map(colIdx) else Array.empty
-  private val keyIdx: Int = colIdx.getOrElse("key", -1)
 
-  // row-group / dictionary pruning at the parquet layer (min/max
-  // statistics) — evaluated once, applied to every file this task opens
-  private val parquetFilter = KVParquetFilters.build(filters)
+  def apply(cell: Array[Any]): InternalRow = new GenericInternalRow(outIdx.map {
+    case -1 => new GenericInternalRow(Array[Any](cell(0), cell(1), cell(2), cell(4)))
+    case -2 => bucketVal
+    case i => cell(i)
+  })
+}
 
-  private var fileIdx = 0
-  private var inLog = false
-  private var reader: ParquetReader[Group] = _
+/** Row view over full-`CELL_SCHEMA` cell batches, one projected row per
+  * decoded cell. */
+private[kv] class KVCellRowReader(cols: KVColumnarPartitionReader,
+                                  proj: KVCellProjection)
+    extends PartitionReader[InternalRow] {
+  private val types = KVBatchTable.CELL_SCHEMA.fields.map(_.dataType)
+  private var batch: org.apache.spark.sql.vectorized.ColumnarBatch = _
+  private var r = 0
   private var row: InternalRow = _
-  // per-file projection bookkeeping (field order follows the FILE's
-  // schema, and repetition must match it — Spark writes non-nullable
-  // columns as `required`, so the projection is carved out of the
-  // file's own footer schema rather than synthesized)
-  private var projToVals: Array[Int] = _
-  private var projIsLong: Array[Boolean] = _
 
-  private val files: Array[(String, Boolean)] =
-    p.compactedFiles.map(f => (f, false)) ++ p.logFiles.map(f => (f, true))
-
-  private def openNext(): Boolean = {
-    if (reader != null) { reader.close(); reader = null }
-    if (fileIdx >= files.length) return false
-    val (f, isLog) = files(fileIdx)
-    fileIdx += 1
-    inLog = isLog
-    // copy: PARQUET_READ_SCHEMA is per-file state, the snapshot is shared
-    val conf = new Configuration(hconf.value)
-    val hpath = new HPath(f)
-    val pf = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hpath, conf))
-    val fileSchema = try pf.getFooter.getFileMetaData.getSchema finally pf.close()
-    val projFields = fileSchema.getFields.asScala.filter(t => readColSet(t.getName))
-    val projection = new org.apache.parquet.schema.MessageType(
-      "graft_cells", projFields.asJava)
-    projToVals = projFields.map(t => colIdx(t.getName)).toArray
-    projIsLong = projFields.map(t =>
-      t.getName == "key" || t.getName == "ts").toArray
-    conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-    val builder = ParquetReader.builder[Group](new GroupReadSupport(), hpath)
-      .withConf(conf)
-    reader = parquetFilter.fold(builder)(builder.withFilter).build()
+  override def next(): Boolean = {
+    while (batch == null || r >= batch.numRows()) {
+      if (!cols.next()) return false
+      batch = cols.get(); r = 0
+    }
+    row = proj(Array.tabulate[Any](types.length) { i =>
+      val c = batch.column(i)
+      if (c.isNullAt(r)) null
+      else if (types(i) == LongType) java.lang.Long.valueOf(c.getLong(r))
+      else c.getUTF8String(r)
+    })
+    r += 1
     true
   }
 
-  override def next(): Boolean = {
-    while (true) {
-      if (reader == null && !openNext()) return false
-      val g = reader.read()
-      if (g == null) {
-        reader.close(); reader = null
-      } else {
-        val vals = new Array[Any](readCols.length)
-        var i = 0
-        while (i < projToVals.length) {
-          vals(projToVals(i)) =
-            if (g.getFieldRepetitionCount(i) == 0) null
-            else if (projIsLong(i)) java.lang.Long.valueOf(g.getLong(i, 0))
-            else UTF8String.fromBytes(g.getBinary(i, 0).getBytes)
-          i += 1
-        }
-        val bucketOk = !inLog || p.numBuckets <= 0 ||
-          GraftBucket.of(
-            if (keyIdx >= 0) vals(keyIdx) else null, p.numBuckets) == p.bucket
-        if (bucketOk && filters.forall(KVFilterEval.eval(_, colIdx, vals))) {
-          val out = new Array[Any](outIdx.length)
-          var j = 0
-          while (j < outIdx.length) {
-            out(j) =
-              if (outIdx(j) >= 0) vals(outIdx(j))
-              else if (outIdx(j) == -2) bucketVal
-              else new GenericInternalRow(cellPartIdx.map(vals(_)))
-            j += 1
-          }
-          row = new GenericInternalRow(out)
-          return true
-        }
-      }
-    }
-    false
-  }
-
   override def get(): InternalRow = row
-  override def close(): Unit = if (reader != null) reader.close()
+  override def close(): Unit = cols.close()
 }
 
-/** Columnar scan task. The compacted files — the whole table, at scale —
+/** The KV source's one parquet decoder. Compacted and log files alike
   * stream through Spark's VectorizedParquetRecordReader (batch decode,
-  * dictionary-aware, row groups pruned by the same FilterPredicates the
-  * row-wise reader uses). The log files (round 18) ALSO stream through
-  * the vectorized decode: each decoded batch is bucket-gated per row
-  * (the one check the reader must own — a partition-integrity property)
-  * and the surviving rows are packed into on-heap column vectors; the
-  * pushed filters are NOT re-evaluated row-exactly on this leg because
-  * Spark re-applies every one of them above the scan (KVScanBuilder
-  * returns them all as residual) and the row-group FilterPredicate
-  * still prunes at the parquet layer. Before round 18 the log leg rode
-  * the row-wise parquet-mr Group decode — one Group allocation plus
-  * per-field boxing per row, per BUCKET (every bucket task re-reads
-  * the whole log) — which made the memstore-sized log the CPU
-  * bottleneck of every merged read with a hot log (the CDC replays,
-  * the mutation scripts). Falls back to the row-wise leg when the
-  * planning-time log lengths were not provided (older partition
-  * encodings). Output order (compacted then log) is irrelevant: every
-  * consumer of this scan resolves or aggregates per key. */
+  * dictionary-aware, row groups pruned by the translated pushed
+  * filters). Rows are gated only where the reader itself owns a row
+  * rule, and the surviving rows are packed into on-heap column vectors:
+  *  - the bucket gate on log rows — every bucket task opens the whole
+  *    log, so it keeps only the rows whose key hashes to its bucket.
+  *    With one bucket (or on a log-only layout) every key hashes to the
+  *    task's bucket and the gate is skipped;
+  *  - the `VERSION AS OF` cutoff `tsMax`, on both legs: exactly the
+  *    rows with `ts <= tsMax` (null `ts` dropped) — row-group pruning
+  *    alone keeps any group whose minimum is below the cutoff.
+  * A gate column the projection pruned (`key`, `ts`) is appended to the
+  * leg's read schema and projected back out when packing; a batch with
+  * no active gate is handed through as decoded. Pushed filters are NOT
+  * re-evaluated per row: Spark re-applies every one of them above the
+  * scan (KVScanBuilder returns them all as residual). Output order
+  * (compacted then log) is irrelevant: every consumer of this scan
+  * resolves or aggregates per key. */
 class KVColumnarPartitionReader(p: KVBucketPartition, required: StructType,
-                                filters: Array[Filter],
+                                filters: Array[Filter], tsMax: Option[Long],
                                 hconf: org.apache.spark.util.SerializableConfiguration)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
@@ -439,30 +357,20 @@ class KVColumnarPartitionReader(p: KVBucketPartition, required: StructType,
   private val CAP = 4096
   private val rowGroupPredicate = KVParquetFilters.predicate(filters)
 
-  private var compIdx = 0
+  // GraftBucket.of(_, 1) == 0 for every key: a 1-bucket gate is a no-op
+  private val bucketGate = p.numBuckets > 1
+  private def withCols(cols: Seq[String]): StructType = StructType(required.fields ++
+    cols.filterNot(required.fieldNames.contains).map(StructField(_, LongType)))
+  private val compSchema = withCols(tsMax.map(_ => "ts").toSeq)
+  private val logSchema =
+    withCols((if (bucketGate) Seq("key") else Nil) ++ tsMax.map(_ => "ts"))
+  private val files = p.compactedFiles ++ p.logFiles
+  private val lens = p.compactedLens ++ p.logLens
+
+  private var fileIdx = 0
+  private var inLog = false
   private var vec: VectorizedParquetRecordReader = _
   private var batch: ColumnarBatch = _
-
-  private val vectorizedLog = p.logLens.length == p.logFiles.length
-  private val needGate = p.numBuckets > 0
-  // the bucket gate needs `key`; append it to the log leg's read schema
-  // when the projection pruned it, and project it back out when packing
-  private val logSchema: StructType =
-    if (!vectorizedLog || !needGate || required.fieldNames.contains("key"))
-      required
-    else StructType(required.fields :+ StructField("key", LongType))
-  private val logKeyIdx: Int = logSchema.fieldNames.indexOf("key")
-  private var logIdx = 0
-  private var logVec: VectorizedParquetRecordReader = _
-
-  // fallback log leg: the row-wise reader over ONLY the log files — it
-  // applies the bucket gate and the pushed filters row-exactly
-  private var logRows: KVPartitionReader =
-    if (p.logFiles.isEmpty || vectorizedLog) null
-    else new KVPartitionReader(
-      KVBucketPartition(p.bucket, p.numBuckets, Array.empty, Array.empty,
-        p.logFiles),
-      required, filters, hconf)
 
   private def openVectorized(f: String, fLen: Long,
                              schema: StructType): VectorizedParquetRecordReader = {
@@ -501,113 +409,68 @@ class KVColumnarPartitionReader(p: KVBucketPartition, required: StructType,
     r
   }
 
-  private def openNextCompacted(): Boolean = {
-    if (compIdx >= p.compactedFiles.length) return false
-    val f = p.compactedFiles(compIdx)
-    val fLen = p.compactedLens(compIdx)
-    compIdx += 1
-    vec = openVectorized(f, fLen, required)
-    true
-  }
-
   override def next(): Boolean = {
     while (true) {
-      if (vec == null && !openNextCompacted())
-        return if (vectorizedLog) nextLogBatchVectorized() else nextLogBatch()
-      if (vec.nextKeyValue()) {
-        batch = vec.getCurrentValue.asInstanceOf[ColumnarBatch]
-        return true
+      if (vec == null) {
+        if (fileIdx >= files.length) return false
+        inLog = fileIdx >= p.compactedFiles.length
+        vec = openVectorized(files(fileIdx), lens(fileIdx),
+          if (inLog) logSchema else compSchema)
+        fileIdx += 1
       }
-      vec.close(); vec = null
-    }
-    false
-  }
-
-  /** Vectorized log leg: decode each log file through the same batch
-    * reader, bucket-gate rows on the (possibly appended) key column,
-    * pack survivors into fresh vectors projected back to `required`. */
-  private def nextLogBatchVectorized(): Boolean = {
-    while (true) {
-      if (logVec == null) {
-        if (logIdx >= p.logFiles.length) return false
-        logVec = openVectorized(p.logFiles(logIdx), p.logLens(logIdx), logSchema)
-        logIdx += 1
-      }
-      if (!logVec.nextKeyValue()) { logVec.close(); logVec = null }
+      if (!vec.nextKeyValue()) { vec.close(); vec = null }
       else {
-        val src = logVec.getCurrentValue.asInstanceOf[ColumnarBatch]
-        // ungated leg (log-only layout, numBuckets <= 0): logSchema ==
-        // required, nothing to filter — hand the decoded batch straight
-        // through like the compacted leg does, no repack
-        if (!needGate) { batch = src; return true }
-        val n = src.numRows()
-        val kCol = src.column(logKeyIdx)
-        val out = OnHeapColumnVector.allocateColumns(n.max(1), required)
-        var m = 0
-        var r = 0
-        while (r < n) {
-          val kv: Any =
-            if (kCol.isNullAt(r)) null
-            else java.lang.Long.valueOf(kCol.getLong(r))
-          if (GraftBucket.of(kv, p.numBuckets) == p.bucket) {
-            var i = 0
-            while (i < required.length) {
-              val sc = src.column(i) // required cols lead logSchema
-              if (sc.isNullAt(r)) out(i).putNull(m)
-              else required.fields(i).dataType match {
-                case LongType => out(i).putLong(m, sc.getLong(r))
-                case _ =>
-                  val b = sc.getUTF8String(r).getBytes
-                  out(i).putByteArray(m, b, 0, b.length)
-              }
-              i += 1
-            }
-            m += 1
-          }
-          r += 1
-        }
-        if (m == 0) out.foreach(_.close())
-        else {
-          batch = new ColumnarBatch(out.map(v => v: ColumnVector).toArray, m)
-          return true
-        }
+        val src = vec.getCurrentValue.asInstanceOf[ColumnarBatch]
+        val gateBucket = inLog && bucketGate
+        if (!gateBucket && tsMax.isEmpty) { batch = src; return true }
+        batch = gate(src, gateBucket, if (inLog) logSchema else compSchema)
+        if (batch != null) return true
       }
     }
     false
   }
 
-  private def nextLogBatch(): Boolean = {
-    if (logRows == null) return false
-    val vectors = OnHeapColumnVector.allocateColumns(CAP, required)
-    var n = 0
-    while (n < CAP && logRows.next()) {
-      val r = logRows.get()
-      var i = 0
-      while (i < required.length) {
-        if (r.isNullAt(i)) vectors(i).putNull(n)
-        else required.fields(i).dataType match {
-          case LongType => vectors(i).putLong(n, r.getLong(i))
-          case _ =>
-            val b = r.getUTF8String(i).getBytes
-            vectors(i).putByteArray(n, b, 0, b.length)
+  /** The rows of `src` (read as `schema`) that pass the active gates,
+    * packed into fresh vectors projected back to `required` (whose
+    * columns lead `schema`); null when no row passes. */
+  private def gate(src: ColumnarBatch, gateBucket: Boolean,
+                   schema: StructType): ColumnarBatch = {
+    val n = src.numRows()
+    val kCol = if (gateBucket) src.column(schema.fieldIndex("key")) else null
+    val tCol = if (tsMax.isDefined) src.column(schema.fieldIndex("ts")) else null
+    val cut = tsMax.getOrElse(Long.MaxValue)
+    val out = OnHeapColumnVector.allocateColumns(n.max(1), required)
+    var m = 0
+    var r = 0
+    while (r < n) {
+      val keep =
+        (tCol == null || (!tCol.isNullAt(r) && tCol.getLong(r) <= cut)) &&
+          (kCol == null || GraftBucket.of(
+            if (kCol.isNullAt(r)) null else java.lang.Long.valueOf(kCol.getLong(r)),
+            p.numBuckets) == p.bucket)
+      if (keep) {
+        var i = 0
+        while (i < required.length) {
+          val sc = src.column(i)
+          if (sc.isNullAt(r)) out(i).putNull(m)
+          else required.fields(i).dataType match {
+            case LongType => out(i).putLong(m, sc.getLong(r))
+            case _ =>
+              val b = sc.getUTF8String(r).getBytes
+              out(i).putByteArray(m, b, 0, b.length)
+          }
+          i += 1
         }
-        i += 1
+        m += 1
       }
-      n += 1
+      r += 1
     }
-    if (n < CAP) { logRows.close(); logRows = null }
-    if (n == 0) { vectors.foreach(_.close()); return false }
-    batch = new ColumnarBatch(
-      vectors.map(v => v: ColumnVector).toArray, n)
-    true
+    if (m == 0) { out.foreach(_.close()); null }
+    else new ColumnarBatch(out.map(v => v: ColumnVector).toArray, m)
   }
 
   override def get(): ColumnarBatch = batch
-  override def close(): Unit = {
-    if (vec != null) vec.close()
-    if (logVec != null) logVec.close()
-    if (logRows != null) logRows.close()
-  }
+  override def close(): Unit = if (vec != null) vec.close()
 }
 
 /** Spark `Filter` → parquet-mr `FilterPredicate` translation, so the
@@ -619,9 +482,8 @@ class KVColumnarPartitionReader(p: KVBucketPartition, required: StructType,
   * row groups; a ts-range predicate prunes old groups in append-ordered
   * logs. Translation is all-or-nothing per filter tree (a partially
   * translated Or/Not would be wrong); untranslatable conjuncts are
-  * simply dropped — the reader and Spark both re-check. */
+  * simply dropped — Spark re-checks every filter above the scan. */
 object KVParquetFilters {
-  import org.apache.parquet.filter2.compat.FilterCompat
   import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
   import org.apache.parquet.io.api.Binary
 
@@ -665,17 +527,14 @@ object KVParquetFilters {
   }
 
   /** Conjunction of every translatable filter — the row-group pruning
-    * predicate shared by the row-wise and vectorized readers. */
+    * predicate [[KVColumnarPartitionReader]] sets on every file it
+    * opens. */
   def predicate(filters: Array[Filter]): Option[FilterPredicate] =
     filters.flatMap(translate(_)).reduceOption(FilterApi.and(_, _))
-
-  def build(filters: Array[Filter]): Option[FilterCompat.Filter] =
-    predicate(filters).map(FilterCompat.get)
 }
 
-/** Row-wise evaluation of Spark V1 `Filter`s over decoded cell values.
-  * Unsupported shapes evaluate to `true` (the row passes) — safe
-  * because every filter is also re-applied by Spark above the scan. */
+/** Which Spark V1 `Filter`s the KV scans accept, and the buckets a
+  * filter set's key predicates can reach. */
 object KVFilterEval {
   def supported(f: Filter): Boolean = f match {
     case And(l, r) => supported(l) && supported(r)
@@ -686,39 +545,6 @@ object KVFilterEval {
          _: IsNull | _: IsNotNull | _: StringStartsWith |
          _: StringEndsWith | _: StringContains => true
     case _ => false
-  }
-
-  private def cmp(v: Any, lit: Any): Option[Int] = (v, lit) match {
-    case (null, _) | (_, null) => None
-    case (a: java.lang.Long, b: java.lang.Number) =>
-      Some(java.lang.Long.compare(a, b.longValue()))
-    case (a: UTF8String, b: String) => Some(a.toString.compareTo(b))
-    case (a: UTF8String, b: UTF8String) => Some(a.compareTo(b))
-    case _ => None
-  }
-
-  def eval(f: Filter, idx: Map[String, Int], vals: Array[Any]): Boolean = {
-    def v(attr: String): Any = idx.get(attr).map(vals(_)).orNull
-    f match {
-      case And(l, r) => eval(l, idx, vals) && eval(r, idx, vals)
-      case Or(l, r) => eval(l, idx, vals) || eval(r, idx, vals)
-      case Not(c) => !eval(c, idx, vals)
-      case EqualTo(a, lit) => cmp(v(a), lit).contains(0)
-      case GreaterThan(a, lit) => cmp(v(a), lit).exists(_ > 0)
-      case GreaterThanOrEqual(a, lit) => cmp(v(a), lit).exists(_ >= 0)
-      case LessThan(a, lit) => cmp(v(a), lit).exists(_ < 0)
-      case LessThanOrEqual(a, lit) => cmp(v(a), lit).exists(_ <= 0)
-      case In(a, vsL) => vsL.exists(l => cmp(v(a), l).contains(0))
-      case IsNull(a) => v(a) == null
-      case IsNotNull(a) => v(a) != null
-      case StringStartsWith(a, s) => v(a) match {
-        case u: UTF8String => u.toString.startsWith(s); case _ => false }
-      case StringEndsWith(a, s) => v(a) match {
-        case u: UTF8String => u.toString.endsWith(s); case _ => false }
-      case StringContains(a, s) => v(a) match {
-        case u: UTF8String => u.toString.contains(s); case _ => false }
-      case _ => true
-    }
   }
 
   /** Bucket ids reachable under the (conjunctive) filters' key

@@ -1,7 +1,5 @@
 package graft.sources.kv
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
@@ -281,88 +279,24 @@ class KVResolvedReaderFactory(required: StructType, pushed: Array[Filter],
       partition.asInstanceOf[KVBucketPartition], required, pushed, hconf)
 }
 
-/** Bucket-local latest-wins resolve — the executor-side mirror of
-  * `KVTable.resolve` (write/KVStore.scala): per (key, family,
-  * qualifier) the max-(ts, value) non-tombstone cell wins, then row /
-  * family / cell tombstones mask winners at-or-below their ts. State is
-  * one entry per LIVE cell of the bucket — the same per-task footprint
-  * as a hash aggregate over the bucket, which is what any engine pays
-  * to resolve; bucket count is the sizing lever at scale. */
+/** Bucket-local latest-wins resolve: the live cells of one
+  * [[KVResolveKernel]] pass at cutoff `Long.MaxValue`, projected onto
+  * the required columns plus the `_cell` / `_bucket` metadata. The
+  * pushed key predicates prune row groups only — resolve-safe, since a
+  * key's whole resolve group carries the key — and Spark re-checks them
+  * above the scan. */
 class KVResolvedPartitionReader(p: KVBucketPartition, required: StructType,
                                 pushed: Array[Filter],
                                 hconf: org.apache.spark.util.SerializableConfiguration)
     extends PartitionReader[InternalRow] {
 
-  private type CellKey = (Long, String, String)
-
   private val iter: Iterator[InternalRow] = {
-    val winners = mutable.HashMap.empty[CellKey, (Long, UTF8String)]
-    val rowDel = mutable.HashMap.empty[Long, Long]
-    val famDel = mutable.HashMap.empty[(Long, String), Long]
-    val cellDel = mutable.HashMap.empty[CellKey, Long]
-    // full-schema row-wise read of the bucket (compacted + its log rows,
-    // bucket-gated and key-filtered inside)
-    val raw = new KVPartitionReader(p, KVBatchTable.CELL_SCHEMA, pushed, hconf)
-    try {
-      while (raw.next()) {
-        val r = raw.get()
-        val key = if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
-        val fam = if (r.isNullAt(1)) null else r.getUTF8String(1).toString
-        val qual = if (r.isNullAt(2)) null else r.getUTF8String(2).toString
-        val ts = if (r.isNullAt(4)) Long.MinValue else r.getLong(4)
-        if (r.isNullAt(5)) {
-          // clone: the underlying reader may reuse its row buffer
-          val value = if (r.isNullAt(3)) null else r.getUTF8String(3).clone()
-          val ck = (key, fam, qual)
-          winners.get(ck) match {
-            case Some((bts, bv))
-                if bts > ts || (bts == ts && cmpValue(bv, value) >= 0) => ()
-            case _ => winners(ck) = (ts, value)
-          }
-        } else r.getUTF8String(5).toString match {
-          case "row" => bump(rowDel, key, ts)
-          case "family" => bump(famDel, (key, fam), ts)
-          case _ => bump(cellDel, (key, fam, qual), ts)
-        }
-      }
-    } finally raw.close()
-    // -1 marks the `_cell` metadata struct (the delta rewrite's rowId),
-    // -2 the `_bucket` id (the CoW group filter's key)
-    val outIdx = required.fieldNames.map {
-      case KVCellIdColumn.NAME => -1
-      case KVBucketColumn.NAME => -2
-      case n => KVBatchTable.CELL_SCHEMA.fieldNames.indexOf(n)
-    }
-    val bucketVal =
-      java.lang.Integer.valueOf(if (p.numBuckets > 0) p.bucket else -1)
-    winners.iterator.collect {
-      case ((key, fam, qual), (ts, value))
-          if ts > rowDel.getOrElse(key, Long.MinValue) &&
-             ts > famDel.getOrElse((key, fam), Long.MinValue) &&
-             ts > cellDel.getOrElse((key, fam, qual), Long.MinValue) =>
-        val kv = if (key == Long.MinValue) null else java.lang.Long.valueOf(key)
-        val full = Array[Any](
-          kv, UTF8String.fromString(fam), UTF8String.fromString(qual),
-          value, java.lang.Long.valueOf(ts), null)
-        new GenericInternalRow(outIdx.map(i =>
-          if (i >= 0) full(i)
-          else if (i == -2) bucketVal
-          else new GenericInternalRow(Array[Any](kv,
-            UTF8String.fromString(fam), UTF8String.fromString(qual),
-            java.lang.Long.valueOf(ts))): Any)): InternalRow
-    }
+    val k = KVResolveKernel.run(p, Array(Long.MaxValue), pushed, hconf)
+    val proj = new KVCellProjection(required, p)
+    k.cells.filter(k.isLive(_, 0)).map(s => proj(Array[Any](
+      k.key(s), k.family(s), k.qualifier(s), k.value(s, 0),
+      java.lang.Long.valueOf(k.ts(s, 0)), null)))
   }
-
-  /** Same-ts tie-break on VALUE in UTF-8 BINARY order — byte-identical
-    * to the library resolve's `max_by` over Spark strings
-    * (write/KVStore.scala). Java String.compareTo would order by UTF-16
-    * code units, which disagrees on supplementary-plane characters. */
-  private def cmpValue(a: UTF8String, b: UTF8String): Int =
-    if (a == null && b == null) 0 else if (a == null) -1
-    else if (b == null) 1 else a.compareTo(b)
-
-  private def bump[K](m: mutable.HashMap[K, Long], k: K, ts: Long): Unit =
-    if (ts > m.getOrElse(k, Long.MinValue)) m(k) = ts
 
   private var row: InternalRow = _
   override def next(): Boolean =

@@ -745,9 +745,10 @@ object KVTable {
     * family/qualifier values as equal, so a NULL is a real cell
     * coordinate with null-safe (<=>) matching. Any tombstone marker
     * that is not 'row'/'family' masks at cell granularity, exactly like
-    * the executor-side resolve (KVResolvedPartitionReader) and
-    * [[KVTable.changeLog]]'s in-memory replay; the three paths must
-    * agree cell-for-cell. */
+    * the executor-side resolve kernel
+    * ([[graft.sources.kv.KVResolveKernel]], under the resolved scan and
+    * the graft-cdc replay) and [[KVTable.changeLog]]'s in-memory
+    * replay; the three paths must agree cell-for-cell. */
   def resolve(cells: DataFrame): DataFrame = {
     // live cells (NULL tomb) before tombstones, then ts desc + value
     // desc: a TOTAL order within the version group, so two cells written

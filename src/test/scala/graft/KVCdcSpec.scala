@@ -326,4 +326,92 @@ class KVCdcSpec extends AnyFunSuite with SparkSpec {
     assert(limited.latestOffset(o3, limited.getDefaultReadLimit)
       === KVCdcOffset(3L), "offset must not advance past available data")
   }
+
+  private type Change = (java.lang.Long, String, String, String, String,
+    String, java.lang.Long, java.lang.Long)
+
+  /** One graft-cdc window, drained straight from its partition readers. */
+  private def drainCdc(path: String, from: Long, to: Long): Seq[Change] = {
+    val stream = new KVCdcMicroBatchStream(path, 0L, Long.MaxValue)
+    val factory = stream.createReaderFactory()
+    stream.planInputPartitions(KVCdcOffset(from), KVCdcOffset(to)).toSeq
+      .flatMap { p =>
+        val r = factory.createReader(p)
+        try Iterator.continually(r).takeWhile(_.next()).map { rr =>
+          val row = rr.get()
+          def str(i: Int) =
+            if (row.isNullAt(i)) null else row.getUTF8String(i).toString
+          def lng(i: Int) =
+            if (row.isNullAt(i)) null else java.lang.Long.valueOf(row.getLong(i))
+          (lng(0), str(1), str(2), str(3), str(4), str(5), lng(6), lng(7))
+        }.toList
+        finally r.close()
+      }.sortBy(_.toString)
+  }
+
+  private def batchChanges(t: KVTable, from: Long, to: Long): Seq[Change] =
+    t.changesBetween(from, to).collect().toSeq.map { r =>
+      def str(i: Int) = if (r.isNullAt(i)) null else r.getString(i)
+      def lng(i: Int) =
+        if (r.isNullAt(i)) null else java.lang.Long.valueOf(r.getLong(i))
+      (lng(0), str(1), str(2), str(3), str(4), str(5), lng(6), lng(7))
+    }.sortBy(_.toString)
+
+  test("70,000 distinct qualifiers in one bucket: graft-cdc and SQL DELETE") {
+    // more names than a 16-bit cell id can hold, all in ONE bucket
+    val path = targetPath("graft_kv_test/cdc_wide")
+    val t = KVTable(spark, path, wipe = true)
+    val n = 70000
+    val base = spark.range(n).select(($"id" % 100).as("key"),
+      lit("F").as("family"), concat(lit("q"), $"id".cast("string")).as("qualifier"),
+      $"id".cast("string").as("value"), lit(1L).as("ts"))
+    t.put(base)
+    t.compact(numBuckets = 1)
+    // window (1,2]: every 10th cell updated, key 3 row-deleted
+    t.put(base.filter($"id" % 10 === 0).withColumn("value", lit("upd"))
+      .withColumn("ts", lit(2L)))
+    t.delete(Seq(3L).toDF("key").select($"key",
+      lit(null).cast("string").as("family"),
+      lit(null).cast("string").as("qualifier")), ts = 2L)
+    val got = drainCdc(path, 1L, 2L)
+    assert(got.count(_._4 == "update") === n / 10)
+    assert(got.count(_._4 == "delete") === n / 100)
+    assert(got === batchChanges(t, 1L, 2L))
+    // the row-level read resolves the same bucket through the kernel
+    spark.sql(s"DELETE FROM ${graft.sources.kv.KVSource.sqlName(spark, path)} " +
+      "WHERE key = 7")
+    val model = (0 until n).filter(i => i % 100 != 3 && i % 100 != 7).map { i =>
+      if (i % 10 == 0) (i % 100L, "F", s"q$i", "upd", 2L)
+      else (i % 100L, "F", s"q$i", i.toString, 1L)
+    }.toSet
+    assert(t.resolved().as[(Long, String, String, String, Long)]
+      .collect().toSet === model)
+  }
+
+  test("a NULL key and a Long.MinValue key stay apart: resolved(), " +
+      "SQL DELETE and graft-cdc") {
+    val path = targetPath("graft_kv_test/cdc_minkey")
+    val t = KVTable(spark, path, wipe = true)
+    val min = Long.MinValue
+    def put(rows: (Option[Long], String, Long)*): Unit =
+      t.put(rows.toDF("key", "value", "ts").select($"key",
+        lit("F").as("family"), lit("q").as("qualifier"), $"value", $"ts"))
+    def live() = t.resolved().select($"key", $"value", $"ts")
+      .as[(Option[Long], String, Long)].collect().toSet
+    put((None, "n1", 1L), (Some(min), "m1", 1L), (Some(1L), "o1", 1L))
+    t.compact()
+    // both keys overwritten in the log at the SAME ts
+    put((None, "n2", 2L), (Some(min), "m2", 2L))
+    assert(live() ===
+      Set((None, "n2", 2L), (Some(min), "m2", 2L), (Some(1L), "o1", 1L)))
+    // the resolved scan must hand the MinValue cell up with its real key
+    spark.sql(s"DELETE FROM ${graft.sources.kv.KVSource.sqlName(spark, path)} " +
+      s"WHERE key = $min")
+    assert(live() === Set((None, "n2", 2L), (Some(1L), "o1", 1L)))
+    val got = drainCdc(path, 1L, 2L)
+    assert(got === batchChanges(t, 1L, 2L))
+    assert(got.toSet === Set[Change](
+      (null, "F", "q", "update", "n1", "n2", 1L, 2L),
+      (min, "F", "q", "delete", "m1", null, 1L, null)))
+  }
 }

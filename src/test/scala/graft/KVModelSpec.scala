@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+import graft.sources.kv.{KVBatchTable, KVCdcMicroBatchStream, KVCdcOffset, KVLayout, KVResolvedScan}
 import graft.write.KVTable
 
 /** Property-based model test (KeySpaceTest statistical-genre parity,
@@ -49,6 +50,60 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
       }.toSet
   }
 
+  private type Cell = (Long, String, String, String, Long)
+
+  private def str(row: org.apache.spark.sql.catalyst.InternalRow, i: Int) =
+    if (row.isNullAt(i)) null else row.getUTF8String(i).toString
+
+  /** The executor-side resolve kernel against the DataFrame resolve and
+    * the model: drains the resolved scan's partitions directly (the
+    * kernel at cutoff Long.MaxValue), then one graft-cdc window between
+    * two random cutoffs (the kernel at both) against changesBetween. */
+  private def kernelLeg(t: KVTable, want: Set[Cell], seed: Long,
+                        clue: String): Unit = {
+    val scan = new KVResolvedScan(t.path, KVLayout(t.path),
+      org.apache.spark.sql.types.StructType(KVBatchTable.CELL_SCHEMA.take(5)),
+      Array.empty)
+    val factory = scan.createReaderFactory()
+    val viaKernel = scan.planInputPartitions().toSeq.flatMap { p =>
+      val r = factory.createReader(p)
+      try Iterator.continually(r).takeWhile(_.next()).map { rr =>
+        val row = rr.get()
+        (row.getLong(0), str(row, 1), str(row, 2), str(row, 3), row.getLong(4))
+      }.toList
+      finally r.close()
+    }
+    assert(viaKernel.size === viaKernel.toSet.size, s"duplicate cells, $clue")
+    assert(viaKernel.toSet === want, s"kernel != model, $clue")
+    assert(viaKernel.toSet ===
+      t.resolved().as[Cell].collect().toSet, s"kernel != resolved(), $clue")
+
+    val Seq(from, to) = Seq(
+      Gen.choose(0L, 20L).pureApply(Gen.Parameters.default, Seed(seed)),
+      Gen.choose(0L, 20L).pureApply(Gen.Parameters.default, Seed(seed + 1)))
+      .distinct.padTo(2, 21L).sorted
+    val stream = new KVCdcMicroBatchStream(t.path, 0L, Long.MaxValue)
+    val cdcFactory = stream.createReaderFactory()
+    val viaCdc = stream.planInputPartitions(KVCdcOffset(from), KVCdcOffset(to))
+      .toSeq.flatMap { p =>
+        val r = cdcFactory.createReader(p)
+        try Iterator.continually(r).takeWhile(_.next()).map { rr =>
+          val row = rr.get()
+          def lng(i: Int) = if (row.isNullAt(i)) null else Long.box(row.getLong(i))
+          (row.getLong(0), str(row, 1), str(row, 2), str(row, 3), str(row, 4),
+            str(row, 5), lng(6), lng(7))
+        }.toList
+        finally r.close()
+      }
+    val batch = t.changesBetween(from, to).collect().toSeq.map { r =>
+      def str(i: Int) = if (r.isNullAt(i)) null else r.getString(i)
+      def lng(i: Int) = if (r.isNullAt(i)) null else Long.box(r.getLong(i))
+      (r.getLong(0), str(1), str(2), str(3), str(4), str(5), lng(6), lng(7))
+    }
+    assert(viaCdc.sortBy(_.toString) === batch.sortBy(_.toString),
+      s"graft-cdc ($from, $to] != changesBetween, $clue")
+  }
+
   test("resolve matches the naive model on random op sequences") {
     for (seed <- 1 to 8) {
       val ops = Gen.listOfN(40, genOp)
@@ -76,6 +131,7 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
       val got = t.resolved()
         .as[(Long, String, String, String, Long)].collect().toSet
       assert(got === model(deduped), s"mismatch at seed=$seed")
+      kernelLeg(t, model(deduped), 3000L + seed, s"seed=$seed")
     }
   }
 
@@ -87,7 +143,7 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
     // away tombstone — the one case where HBase major-compaction parity
     // legitimately resurrects (documented in resolvedAsOf's scaladoc)
     // and a log-only replay would diverge by design.
-    for (seed <- 1 to 6) {
+    for (numBuckets <- Seq(1, 4); seed <- 1 to 6) {
       val ops = Gen.listOfN(40, genOp)
         .pureApply(Gen.Parameters.default, Seed(1000L + seed))
       val deduped = ops.zipWithIndex
@@ -96,7 +152,7 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
       val cut = Gen.choose(1L, 20L)
         .pureApply(Gen.Parameters.default, Seed(2000L + seed))
       val t = KVTable(spark,
-        targetPath(s"graft_kv_test/modelc_${seed}"), wipe = true)
+        targetPath(s"graft_kv_test/modelc_${numBuckets}_$seed"), wipe = true)
       def apply(batch: List[Op]): Unit = {
         val puts = batch.filter(_.tomb.isEmpty)
           .map(o => (o.key, o.family, o.qualifier, s"v${o.key}_${o.ts}", o.ts))
@@ -113,12 +169,14 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
       }
       val (before, after) = deduped.partition(_.ts <= cut)
       apply(before)
-      t.compact(numBuckets = 4)
+      t.compact(numBuckets = numBuckets)
       apply(after)
       val got = t.resolved()
         .as[(Long, String, String, String, Long)].collect().toSet
-      assert(got === model(deduped),
-        s"mismatch at seed=$seed cut=$cut (compacted ${before.size} ops)")
+      val clue = s"buckets=$numBuckets seed=$seed cut=$cut " +
+        s"(compacted ${before.size} ops)"
+      assert(got === model(deduped), s"mismatch at $clue")
+      kernelLeg(t, model(deduped), 4000L + seed, clue)
     }
   }
 }

@@ -108,16 +108,16 @@ class KVSourceSpec extends AnyFunSuite with SparkSpec {
   test("range predicates translate to parquet row-group filters and read right") {
     import org.apache.spark.sql.sources._
     import graft.sources.kv.KVParquetFilters
-    assert(KVParquetFilters.build(Array(
+    assert(KVParquetFilters.predicate(Array(
       GreaterThan("ts", java.lang.Long.valueOf(1L)), EqualTo("family", "f"),
       In("key", Array[Any](java.lang.Long.valueOf(1L),
         java.lang.Long.valueOf(2L))))).isDefined)
     // untranslatable conjuncts drop without poisoning the rest
-    assert(KVParquetFilters.build(Array(
+    assert(KVParquetFilters.predicate(Array(
       StringContains("value", "x"),
       LessThanOrEqual("ts", java.lang.Long.valueOf(5L)))).isDefined)
     // an Or with an untranslatable side must NOT partially translate
-    assert(KVParquetFilters.build(Array(
+    assert(KVParquetFilters.predicate(Array(
       Or(StringContains("value", "x"),
         EqualTo("ts", java.lang.Long.valueOf(5L))))).isEmpty)
     // a read through the row-group-pruned path stays correct
@@ -200,36 +200,54 @@ class KVSourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("merged read is columnar; VERSION AS OF stays row-wise exact") {
-    val t = mkTable("vec", "st", 1L)
-    // the merged read should plan columnar (vectorized compacted decode
-    // + batched log leg) — Spark inserts ColumnarToRow above the scan
+    mkTable("vec", "st", 1L)
+    // the merged read plans columnar (vectorized compacted decode +
+    // batched log leg) — Spark inserts ColumnarToRow above the scan
     val plan = graft.sources.kv.KVSource
       .read(spark, targetPath("graft_kv_test/dsv2_vec"))
       .queryExecution.executedPlan.toString
     assert(plan.contains("ColumnarToRow"),
       s"merged KV scan no longer columnar:\n${plan.take(3000)}")
-    // escape hatch restores the row-wise reader
-    spark.conf.set("graft.kv.vectorized", "false")
-    try {
-      val rowPlan = graft.sources.kv.KVSource
-        .read(spark, targetPath("graft_kv_test/dsv2_vec"))
-      assert(!rowPlan.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-      // and both readers agree bit-for-bit
-      spark.conf.set("graft.kv.vectorized", "true")
-      val vecRows = graft.sources.kv.KVSource
-        .read(spark, targetPath("graft_kv_test/dsv2_vec")).collect().toSet
-      spark.conf.set("graft.kv.vectorized", "false")
-      assert(rowPlan.collect().toSet === vecRows)
-    } finally spark.conf.set("graft.kv.vectorized", "true")
-    // time travel carries a scan-internal ts cutoff nothing re-checks —
-    // it must NOT ride the columnar leg (which skips row-level filters)
-    val ident = new java.io.File(targetPath("graft_kv_test/dsv2_vec"))
-      .getAbsolutePath.split("/").filter(_.nonEmpty)
-      .map(s => s"`$s`").mkString(".")
-    val tt = spark.sql(s"SELECT * FROM graft.$ident VERSION AS OF 1")
-    assert(!tt.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-      "time-travel scan went columnar: the ts<=v cutoff would be unenforced")
-    assert(tt.filter($"ts" > 1).count() === 0)
+    // time travel carries a scan-internal ts cutoff nothing re-checks,
+    // so the columnar reader must gate rows on it exactly. Fixture: the
+    // compacted file and the log file EACH hold ts 1 and ts 3 in one
+    // row group, which row-group pruning alone cannot split
+    val path = targetPath("graft_kv_test/dsv2_vec_tt")
+    val t = KVTable(spark, path, wipe = true)
+    def cells(rows: (Long, String, Long)*) =
+      rows.toDF("key", "value", "ts")
+        .select($"key", lit("f").as("family"), lit("q").as("qualifier"),
+          $"value", $"ts").coalesce(1)
+    t.put(cells((1L, "c1", 1L), (2L, "c3", 3L)))
+    t.compact(numBuckets = 1)
+    t.put(cells((3L, "l1", 1L), (4L, "l3", 3L)))
+    val layout = graft.sources.kv.KVLayout(path)
+    val files = layout.compactedByBucket.values.flatten.toSeq ++ layout.logFiles
+    assert(layout.compactedByBucket.values.flatten.size === 1 &&
+      layout.logFiles.size === 1)
+    files.foreach { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), graft.sources.kv.GraftFs.hadoopConf))
+      try {
+        val groups = r.getFooter.getBlocks
+        assert(groups.size === 1, s"$f: ${groups.size} row groups")
+        val st = groups.get(0).getColumns.toArray.toSeq
+          .map(_.asInstanceOf[org.apache.parquet.hadoop.metadata.ColumnChunkMetaData])
+          .find(_.getPath.toDotString == "ts").get.getStatistics
+        val lo = st.genericGetMin.asInstanceOf[java.lang.Long].longValue
+        val hi = st.genericGetMax.asInstanceOf[java.lang.Long].longValue
+        assert(lo === 1L && hi === 3L, s"$f: ts in [$lo, $hi]")
+      } finally r.close()
+    }
+    val ident = graft.sources.kv.KVSource.sqlName(spark, path)
+    val tt = spark.sql(s"SELECT key, value, ts FROM $ident VERSION AS OF 2")
+    assert(tt.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+      "time-travel scan is no longer columnar")
+    assert(tt.as[(Long, String, Long)].collect().toSet ===
+      Set((1L, "c1", 1L), (3L, "l1", 1L)))
+    assert(spark.sql(s"SELECT count(*) FROM $ident VERSION AS OF 2")
+      .head().getLong(0) === 2L)
   }
 
   test("SQL MERGE INTO / DELETE round-trip drives latest-wins + tombstones") {
@@ -640,9 +658,6 @@ class KVSourceSpec extends AnyFunSuite with SparkSpec {
     val ident = graft.sources.kv.KVSource.sqlName(spark,
       targetPath("graft_kv_test/dsv2_cellmeta"))
     val df = spark.sql(s"SELECT key, family, qualifier, ts, _cell FROM $ident")
-    // requesting the synthesized struct pins the scan row-wise (the
-    // vectorized readers cannot produce computed columns)
-    assert(!df.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     val rows = df.limit(50).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
