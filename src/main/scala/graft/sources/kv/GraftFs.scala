@@ -50,6 +50,16 @@ object GraftFs {
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
 
+  /** The active session's Hadoop conf snapshotted for executor-side
+    * parquet opens: the driver's filesystem settings (HDFS auth, buffer
+    * sizes, S3 credential providers) ride into every read task, where a
+    * bare `new Configuration(false)` would strip them. Off-session it
+    * falls back to [[hadoopConf]]. */
+  def readerConf(): org.apache.spark.util.SerializableConfiguration =
+    new org.apache.spark.util.SerializableConfiguration(
+      org.apache.spark.sql.SparkSession.getActiveSession
+        .map(_.sessionState.newHadoopConf()).getOrElse(hadoopConf))
+
   private[kv] def fsFor(p: Path): FileSystem = p.getFileSystem(hadoopConf) match {
     // raw local: java.io semantics, no .crc sibling pollution in the
     // table directories (Spark's own parquet commits write theirs via

@@ -190,43 +190,21 @@ class KVScan(path: String, layout: KVLayout, required: StructType,
   private def staticBuckets: Option[Set[Int]] =
     KVFilterEval.keyBuckets(pushed, layout.numBuckets)
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  override def planInputPartitions(): Array[InputPartition] =
     if (layout.bucketed) {
-      val allowed = (staticBuckets, runtimeBuckets) match {
-        case (Some(a), Some(b)) => a intersect b
-        case (Some(a), None) => a
-        case (None, Some(b)) => b
-        case _ => (0 until layout.numBuckets).toSet
-      }
-      (0 until layout.numBuckets).filter(allowed)
-        .map { b =>
-          val comp = layout.compactedByBucket.getOrElse(b, Seq.empty)
-          KVBucketPartition(b, layout.numBuckets, comp.toArray,
-            comp.map(layout.lenByPath).toArray,
-            layout.logFiles.toArray,
-            layout.logFiles.map(layout.lenByPath).toArray): InputPartition
-        }
-        .toArray
+      val allowed = Seq(staticBuckets, runtimeBuckets).flatten
+      layout.bucketPartitions(b => allowed.forall(_(b))).map(p => p: InputPartition)
     } else {
-      // log-only: one partition per file — appends are memstore-sized
+      // log-only: one partition per file — a plain scan has no resolve
+      // group to keep together, and appends are memstore-sized
       layout.logFiles
         .map(f => KVBucketPartition(-1, -1, Array.empty, Array.empty,
           Array(f), Array(layout.lenByPath(f))): InputPartition)
         .toArray
     }
-  }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val session = org.apache.spark.sql.SparkSession.getActiveSession
-    // snapshot the DRIVER's Hadoop conf for the executor-side parquet
-    // opens — a bare `new Configuration(false)` would strip the
-    // cluster's filesystem settings (HDFS auth, buffer sizes, S3
-    // credentials providers) from every read task
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      session.map(_.sessionState.newHadoopConf())
-        .getOrElse(GraftFs.hadoopConf))
-    new KVReaderFactory(required, pushed, tsMax, hconf)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    new KVReaderFactory(required, pushed, tsMax, GraftFs.readerConf())
 }
 
 /** One scan task: bucket `bucket`'s compacted files + the log rows

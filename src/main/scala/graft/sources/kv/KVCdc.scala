@@ -12,19 +12,25 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter, LessThanOrEqual}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** STREAMING change-data feed over a graft KV table — `changesBetween`
-  * (write/KVStore.scala) exposed as a rate-limited `readStream`
-  * source, with the version-log CUTOFF as the stream offset:
+/** Change-data feed over a graft KV table — `changesBetween`
+  * (write/KVStore.scala) as a DataSourceV2 source. Two reads share one
+  * bucket-local reader ([[KVCdcPartitionReader]]):
   *
   * {{{
+  *   // standing stream, the version-log CUTOFF as the offset
   *   spark.readStream.format("graft-cdc")
   *     .option("path", tablePath)
   *     .option("startTs", "1")   // initial cutoff (exclusive)
   *     .option("stepTs", "1")    // max cutoff advance per micro-batch
+  *     .load()
+  *   // batch walk over ascending cutoffs (KVTable.changeLog)
+  *   spark.read.format("graft-cdc")
+  *     .option("path", tablePath)
+  *     .option("cutoffs", "1,2,3,4")
   *     .load()
   * }}}
   *
@@ -33,18 +39,28 @@ import org.apache.spark.unsafe.types.UTF8String
   * cell whose live version changed, tagged insert/update/delete with
   * before/after values, exactly [[graft.write.KVTable.changesBetween]]'s
   * shape. A consumer folding each batch into derived state turns the
-  * m16 catch-up loop into a STANDING incremental-MV stream (st12).
+  * m16 catch-up loop into a STANDING incremental-MV stream (st12). The
+  * batch read emits the same diff for every adjacent cutoff pair,
+  * prefixed by `round` = the index of the later cutoff.
   *
   * Shape at scale: the diff is computed bucket-locally inside each
   * scan task — a (key,family,qualifier) group lives in exactly one
-  * bucket, so a single pass over the bucket's files replays both
-  * cutoff states in memory (2× the bucket's live cells, the same
-  * footprint class as the resolved scan) and no shuffle ever runs.
-  * Offset discovery reads parquet FOOTERS only (max `ts` column
-  * statistic per immutable file, cached), never data pages. `stepTs`
-  * is the rate limiter: a consumer catching up over a long history
-  * advances at most that many cutoff units per trigger, bounding
-  * per-batch work.
+  * bucket, so a single pass over the bucket's files replays every
+  * cutoff state in memory (one ts/value slot per cutoff and live cell,
+  * the same footprint class as the resolved scan) and no shuffle ever
+  * runs. A log-only table is one task, the memstore-sized contract the
+  * resolved scan relies on too. Offset discovery reads parquet FOOTERS
+  * only (max `ts` column statistic per immutable file, cached), never
+  * data pages. `stepTs` is the rate limiter: a consumer catching up
+  * over a long history advances at most that many cutoff units per
+  * trigger, bounding per-batch work.
+  *
+  * Consumption contract: a cutoff is consumed as soon as ANY file
+  * holding a cell at that ts is visible — the high-water offset is the
+  * newest footer ts. Writers must therefore commit each ts in one
+  * commit: a file landing later at an already-consumed ts (or below
+  * it) falls inside both cutoff states of every later window and is
+  * never delivered to a running stream.
   *
   * Replay/restart contract: offsets are plain cutoffs, so a replayed
   * `(start, end]` window recomputes the identical diff from the
@@ -57,17 +73,18 @@ import org.apache.spark.unsafe.types.UTF8String
 class KVCdcProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-cdc"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    KVCdc.SCHEMA
+    if (options.containsKey("cutoffs")) KVCdc.LOG_SCHEMA else KVCdc.SCHEMA
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table = {
-    val path = properties.get("path")
+    val opts = new CaseInsensitiveStringMap(properties)
+    val path = opts.get("path")
     require(path != null && path.nonEmpty,
       "graft-cdc needs .option(\"path\", <kv table path>)")
-    new KVCdcTable(path,
-      Option(properties.get("startts")).orElse(
-        Option(properties.get("startTs"))).map(_.toLong).getOrElse(0L),
-      Option(properties.get("stepts")).orElse(
-        Option(properties.get("stepTs"))).map(_.toLong).getOrElse(Long.MaxValue))
+    val cutoffs = Option(opts.get("cutoffs")).map(_.split(",").map(_.trim.toLong))
+    cutoffs.foreach(c => require(c.length >= 2 && c.sliding(2).forall(p => p(0) < p(1)),
+      s"graft-cdc needs >=2 strictly increasing cutoffs, got ${c.mkString(",")}"))
+    new KVCdcTable(path, opts.getLong("startTs", 0L),
+      opts.getLong("stepTs", Long.MaxValue), cutoffs)
   }
 }
 
@@ -75,22 +92,51 @@ object KVCdc {
   val SCHEMA: StructType = StructType.fromDDL(
     "key BIGINT, family STRING, qualifier STRING, change_type STRING, " +
       "old_value STRING, new_value STRING, old_ts BIGINT, new_ts BIGINT")
+
+  /** The batch walk's rows: `round` (index of the later cutoff), then
+    * [[SCHEMA]]. */
+  val LOG_SCHEMA: StructType =
+    StructType(StructField("round", IntegerType, nullable = false) +: SCHEMA.fields)
+
+  def readerFactory(withRound: Boolean): PartitionReaderFactory = {
+    val hconf = GraftFs.readerConf()
+    new PartitionReaderFactory {
+      override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+        val cp = p.asInstanceOf[KVCdcPartition]
+        new KVCdcPartitionReader(cp.inner, cp.cuts, withRound, hconf)
+      }
+    }
+  }
 }
 
-class KVCdcTable(path: String, startTs: Long, stepTs: Long)
+/** @param cutoffs set: a batch read of the walk over these ascending
+  *   cutoffs; unset: a micro-batch stream from `startTs`. */
+class KVCdcTable(path: String, startTs: Long, stepTs: Long,
+                 cutoffs: Option[Array[Long]])
     extends Table with SupportsRead {
   override def name(): String = s"graft-cdc `$path`"
-  override def schema(): StructType = KVCdc.SCHEMA
+  override def schema(): StructType =
+    if (cutoffs.isDefined) KVCdc.LOG_SCHEMA else KVCdc.SCHEMA
   override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
+    java.util.EnumSet.of(
+      if (cutoffs.isDefined) TableCapability.BATCH_READ
+      else TableCapability.MICRO_BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
       override def build(): Scan = new Scan {
-        override def readSchema(): StructType = KVCdc.SCHEMA
-        override def description(): String = s"graft-cdc path=$path"
+        override def readSchema(): StructType = schema()
+        override def description(): String =
+          s"graft-cdc path=$path" + cutoffs.fold("")(c => s" cutoffs=${c.mkString(",")}")
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
           new KVCdcMicroBatchStream(path, startTs, stepTs)
+        override def toBatch: Batch = new Batch {
+          override def planInputPartitions(): Array[InputPartition] =
+            KVLayout(path).bucketPartitions()
+              .map(KVCdcPartition(_, cutoffs.get): InputPartition)
+          override def createReaderFactory(): PartitionReaderFactory =
+            KVCdc.readerFactory(withRound = true)
+        }
       }
     }
 }
@@ -166,49 +212,29 @@ class KVCdcMicroBatchStream(path: String, startTs: Long, stepTs: Long)
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[KVCdcOffset].ts
     val to = end.asInstanceOf[KVCdcOffset].ts
-    if (from >= to) return Array.empty
-    val layout = KVLayout(path)
-    val buckets: Array[KVBucketPartition] =
-      if (layout.bucketed) {
-        (0 until layout.numBuckets).map { b =>
-          val comp = layout.compactedByBucket.getOrElse(b, Seq.empty)
-          KVBucketPartition(b, layout.numBuckets, comp.toArray,
-            comp.map(layout.lenByPath).toArray, layout.logFiles.toArray,
-            layout.logFiles.map(layout.lenByPath).toArray)
-        }.toArray
-      } else if (layout.logFiles.nonEmpty) {
-        Array(KVBucketPartition(-1, -1, Array.empty, Array.empty,
-          layout.logFiles.toArray,
-          layout.logFiles.map(layout.lenByPath).toArray))
-      } else Array.empty
-    buckets.map(KVCdcPartition(_, from, to): InputPartition)
+    if (from >= to) Array.empty
+    else KVLayout(path).bucketPartitions()
+      .map(KVCdcPartition(_, Array(from, to)): InputPartition)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val hc = new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.getActiveSession
-        .map(_.sessionState.newHadoopConf()).getOrElse(GraftFs.hadoopConf))
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-        val cp = p.asInstanceOf[KVCdcPartition]
-        new KVCdcPartitionReader(cp.inner, cp.fromTs, cp.toTs, hc)
-      }
-    }
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    KVCdc.readerFactory(withRound = false)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-case class KVCdcPartition(inner: KVBucketPartition, fromTs: Long, toTs: Long)
+case class KVCdcPartition(inner: KVBucketPartition, cuts: Array[Long])
     extends InputPartition
 
-/** Bucket-local DUAL-cutoff replay: one [[KVResolveKernel]] pass over
-  * the bucket's cells (ts ≤ `to` pushed to the parquet layer as a
-  * row-group filter) resolves the live state at both cutoffs — a row
-  * with ts ≤ `from` feeds both, a row in (from, to] feeds only the `to`
-  * state — then emits the net per-cell differences. */
-class KVCdcPartitionReader(p: KVBucketPartition, fromTs: Long, toTs: Long,
+/** Bucket-local multi-cutoff replay: one [[KVResolveKernel]] pass over
+  * the bucket's cells (ts ≤ the last cutoff pushed to the parquet layer
+  * as a row-group filter) resolves the live state at every cutoff — a
+  * row feeds every cutoff at or above its ts — then emits each adjacent
+  * pair's net per-cell differences, prefixed by `round` (the index of
+  * the later cutoff) when `withRound`. */
+class KVCdcPartitionReader(p: KVBucketPartition, cuts: Array[Long],
+                           withRound: Boolean,
                            hconf: org.apache.spark.util.SerializableConfiguration)
     extends PartitionReader[InternalRow] {
 
@@ -217,21 +243,25 @@ class KVCdcPartitionReader(p: KVBucketPartition, fromTs: Long, toTs: Long,
   private val T_DELETE = UTF8String.fromString("delete")
 
   private val iter: Iterator[InternalRow] = {
-    val k = KVResolveKernel.run(p, Array(fromTs, toTs),
-      Array(LessThanOrEqual("ts", toTs): Filter), hconf)
-    k.cells.flatMap { s =>
-      val bLive = k.isLive(s, 0); val aLive = k.isLive(s, 1)
-      val bt = k.ts(s, 0); val at = k.ts(s, 1)
+    val k = KVResolveKernel.run(p, cuts,
+      Array(LessThanOrEqual("ts", cuts.last): Filter), hconf)
+    k.cells.flatMap(s => Iterator.range(1, cuts.length).flatMap { r =>
+      val bLive = k.isLive(s, r - 1); val aLive = k.isLive(s, r)
+      val bt = k.ts(s, r - 1); val at = k.ts(s, r)
       if (!(bLive || aLive) ||
-          (bLive && aLive && bt == at && k.value(s, 0) == k.value(s, 1))) None
-      else Some(new GenericInternalRow(Array[Any](
-        k.key(s), k.family(s), k.qualifier(s),
-        if (!bLive) T_INSERT else if (!aLive) T_DELETE else T_UPDATE,
-        if (bLive) k.value(s, 0) else null,
-        if (aLive) k.value(s, 1) else null,
-        if (bLive) java.lang.Long.valueOf(bt) else null,
-        if (aLive) java.lang.Long.valueOf(at) else null)): InternalRow)
-    }
+          (bLive && aLive && bt == at && k.value(s, r - 1) == k.value(s, r))) None
+      else {
+        val diff = Array[Any](
+          k.key(s), k.family(s), k.qualifier(s),
+          if (!bLive) T_INSERT else if (!aLive) T_DELETE else T_UPDATE,
+          if (bLive) k.value(s, r - 1) else null,
+          if (aLive) k.value(s, r) else null,
+          if (bLive) java.lang.Long.valueOf(bt) else null,
+          if (aLive) java.lang.Long.valueOf(at) else null)
+        Some(new GenericInternalRow(
+          if (withRound) Integer.valueOf(r) +: diff else diff): InternalRow)
+      }
+    })
   }
 
   private var row: InternalRow = _

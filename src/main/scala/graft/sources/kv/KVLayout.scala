@@ -65,6 +65,26 @@ case class KVLayout(path: String) {
   def bucketed: Boolean = numBuckets > 0
   def exists: Boolean = bucketed || logFiles.nonEmpty
 
+  /** The resolve-group input partitions of this snapshot: one
+    * [[KVBucketPartition]] per `allowed` bucket (its compacted files
+    * plus the whole log, bucket-gated by the reader), or — on a
+    * log-only layout — ONE partition holding every log file, since a
+    * key's versions span files. Safe by the layout contract: an
+    * uncompacted table is memstore-sized; compaction is what buys
+    * distribution. */
+  def bucketPartitions(allowed: Int => Boolean = _ => true): Array[KVBucketPartition] = {
+    val logs = logFiles.toArray
+    val logLens = logs.map(lenByPath)
+    if (bucketed)
+      (0 until numBuckets).filter(allowed).map { b =>
+        val comp = compactedByBucket.getOrElse(b, Seq.empty).toArray
+        KVBucketPartition(b, numBuckets, comp, comp.map(lenByPath), logs, logLens)
+      }.toArray
+    else if (logs.nonEmpty)
+      Array(KVBucketPartition(-1, -1, Array.empty, Array.empty, logs, logLens))
+    else Array.empty
+  }
+
   def totalBytes: Long = (compactedEntries ++ logEntries).map(_.len).sum
 }
 

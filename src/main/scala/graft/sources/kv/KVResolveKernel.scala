@@ -9,14 +9,14 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Bucket-local latest-wins resolve at one or more ts cutoffs — the
   * executor-side copy of `KVTable.resolve` (write/KVStore.scala) that
   * both the resolved scan ([[KVResolvedPartitionReader]], one cutoff
-  * `Long.MaxValue`) and the CDC replay ([[KVCdcPartitionReader]], the
-  * window's two cutoffs) run on. Per (key, family, qualifier) and per
+  * `Long.MaxValue`) and the CDC replay ([[KVCdcPartitionReader]]: the
+  * stream window's two cutoffs, or `KVTable.changeLog`'s n) run on. Per (key, family, qualifier) and per
   * cutoff the max-(ts, value) non-tombstone cell at or below the cutoff
   * wins; row / family / cell tombstones at or below the cutoff mask
   * winners at or below their ts; null-ts rows never take part. A row
   * feeds every cutoff at or above its ts, so one pass over the bucket's
-  * cells builds every cutoff's state. The three resolve paths (this
-  * kernel, `KVTable.resolve`, `KVTable.changeLog`) must agree
+  * cells builds every cutoff's state. The two resolve paths (this
+  * kernel and the DataFrame reference `KVTable.resolve`) must agree
   * cell-for-cell.
   *
   * CPU shape: batches come straight from [[KVColumnarPartitionReader]];

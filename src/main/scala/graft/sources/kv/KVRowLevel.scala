@@ -239,36 +239,14 @@ class KVResolvedScan(path: String, layout: KVLayout,
         Array(Expressions.bucket(layout.numBuckets, "key")), layout.numBuckets)
     else new UnknownPartitioning(0)
 
-  override def planInputPartitions(): Array[InputPartition] =
-    if (layout.bucketed) {
-      val static = KVFilterEval.keyBuckets(pushed, layout.numBuckets)
-        .getOrElse((0 until layout.numBuckets).toSet)
-      val allowed = runtimeBuckets.fold(static)(static intersect _)
-      (0 until layout.numBuckets).filter(allowed)
-        .map { b =>
-          val comp = layout.compactedByBucket.getOrElse(b, Seq.empty)
-          KVBucketPartition(b, layout.numBuckets, comp.toArray,
-            comp.map(layout.lenByPath).toArray,
-            layout.logFiles.toArray,
-            layout.logFiles.map(layout.lenByPath).toArray): InputPartition
-        }
-        .toArray
-    } else if (layout.logFiles.nonEmpty) {
-      // log-only: the resolve group spans files, so ONE task reads them
-      // all — safe by the layout contract (an uncompacted table is
-      // memstore-sized; compaction is what buys distribution)
-      Array(KVBucketPartition(-1, -1, Array.empty, Array.empty,
-        layout.logFiles.toArray,
-        layout.logFiles.map(layout.lenByPath).toArray))
-    } else Array.empty
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val session = org.apache.spark.sql.SparkSession.getActiveSession
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      session.map(_.sessionState.newHadoopConf())
-        .getOrElse(GraftFs.hadoopConf))
-    new KVResolvedReaderFactory(required, pushed, hconf)
+  override def planInputPartitions(): Array[InputPartition] = {
+    val allowed =
+      Seq(KVFilterEval.keyBuckets(pushed, layout.numBuckets), runtimeBuckets).flatten
+    layout.bucketPartitions(b => allowed.forall(_(b))).map(p => p: InputPartition)
   }
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    new KVResolvedReaderFactory(required, pushed, GraftFs.readerConf())
 }
 
 class KVResolvedReaderFactory(required: StructType, pushed: Array[Filter],

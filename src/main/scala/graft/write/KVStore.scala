@@ -107,15 +107,9 @@ class KVTable(val spark: SparkSession, val path: String) {
     * preserve (it would re-shuffle the whole table). The pure-compacted
     * case stays on the V1 bucketed table (vectorized scan, already
     * partitioning-visible); the pure-log case is a plain scan with no
-    * partitioning to preserve. `graft.kv.dsv2=false` restores the
-    * union fallback. */
+    * partitioning to preserve. */
   def cells: DataFrame = (compactedExists, logExists) match {
-    case (true, true)
-        if spark.conf.getOption("graft.kv.dsv2").forall(_.toBoolean) =>
-      graft.sources.kv.KVSource.read(spark, path)
-    case (true, true) =>
-      spark.table(tableName)
-        .unionByName(spark.read.schema(CELL_SCHEMA_DDL).parquet(logDir))
+    case (true, true) => graft.sources.kv.KVSource.read(spark, path)
     case (true, false) => spark.table(tableName)
     case (false, true) => spark.read.schema(CELL_SCHEMA_DDL).parquet(logDir)
     case _ => emptyCells
@@ -232,83 +226,19 @@ class KVTable(val spark: SparkSession, val path: String) {
     * (v0, v1, …, vn) emits every [[changesBetweenStates]] row of every
     * adjacent pair, tagged with `round` = the index of the later
     * cutoff. Equivalent to n calls to [[changesBetween]] but the
-    * version log is read and shuffled ONCE — a key's whole history
-    * (versions + tombstones, memstore-bounded per key by the store's
-    * contract) groups to one task, which replays the latest-wins +
-    * tombstone-mask resolve at each cutoff in memory. This is the
-    * CDC-walk shape a derived-state consumer uses to catch up over
-    * several refresh points (`m16_cdc_apply`): O(one log scan), not
-    * O(cutoffs × log scans). [[changesBetween]] stays the declarative
-    * two-state form (Catalyst pushdown of the ts filter, one window
-    * pass per cutoff — the better plan when diffing exactly two
-    * cutoffs far apart). */
-  def changeLog(cutoffs: Seq[Long]): DataFrame = {
-    require(cutoffs.size >= 2 && cutoffs == cutoffs.sorted &&
-      cutoffs.distinct.size == cutoffs.size,
-      s"changeLog needs >=2 strictly increasing cutoffs, got $cutoffs")
-    import spark.implicits._
-    val cuts = cutoffs.toArray
-    val src = cells.select(col("key"), col("family"), col("qualifier"),
-        col("value"), col("ts"), col("tomb"))
-      .as[(Option[Long], Option[String], Option[String], Option[String],
-        Option[Long], Option[String])]
-    src.groupByKey(_._1)
-      .flatMapGroups { (key, it) =>
-        val rows = it.toArray
-        // resolved state of THIS key at cutoff v: (fam, qual) -> (ts, value)
-        def stateAt(v: Long): Map[(String, String), (Long, String)] = {
-          val in = rows.filter(_._5.exists(_ <= v))
-          val winners = scala.collection.mutable.HashMap
-            .empty[(String, String), (Long, String)]
-          var rowDel = Long.MinValue
-          val famDel = scala.collection.mutable.HashMap.empty[String, Long]
-          val cellDel =
-            scala.collection.mutable.HashMap.empty[(String, String), Long]
-          in.foreach { case (_, fam, qual, value, ts, tomb) =>
-            val t = ts.getOrElse(Long.MinValue)
-            tomb match {
-              case None =>
-                val ck = (fam.orNull, qual.orNull)
-                val v0 = value.orNull
-                winners.get(ck) match {
-                  case Some((bt, bv))
-                      if bt > t || (bt == t && KVTable.cmpUtf8(bv, v0) >= 0) => ()
-                  case _ => winners(ck) = (t, v0)
-                }
-              case Some("row") => if (t > rowDel) rowDel = t
-              case Some("family") =>
-                if (t > famDel.getOrElse(fam.orNull, Long.MinValue))
-                  famDel(fam.orNull) = t
-              case _ =>
-                val ck = (fam.orNull, qual.orNull)
-                if (t > cellDel.getOrElse(ck, Long.MinValue)) cellDel(ck) = t
-            }
-          }
-          winners.filter { case ((f, q), (t, _)) =>
-            t > rowDel && t > famDel.getOrElse(f, Long.MinValue) &&
-              t > cellDel.getOrElse((f, q), Long.MinValue)
-          }.toMap
-        }
-        val states = cuts.map(stateAt)
-        (1 until cuts.length).iterator.flatMap { r =>
-          val (b, a) = (states(r - 1), states(r))
-          (b.keySet ++ a.keySet).iterator.flatMap { ck =>
-            (b.get(ck), a.get(ck)) match {
-              case (Some((ot, ov)), Some((nt, nv)))
-                  if ot == nt && ov == nv => Iterator.empty
-              case (bo, ao) if bo.isEmpty && ao.isEmpty => Iterator.empty
-              case (bo, ao) =>
-                val tpe = if (bo.isEmpty) "insert"
-                  else if (ao.isEmpty) "delete" else "update"
-                Iterator((r, key, Option(ck._1), Option(ck._2), tpe,
-                  bo.map(_._2), ao.map(_._2), bo.map(_._1), ao.map(_._1)))
-            }
-          }
-        }
-      }
-      .toDF("round", "key", "family", "qualifier", "change_type",
-        "old_value", "new_value", "old_ts", "new_ts")
-  }
+    * version log is read ONCE and never shuffled: it is a batch read of
+    * the graft-cdc source (sources/kv/KVCdc.scala), whose bucket-local
+    * reader replays every cutoff state through the executor-side
+    * resolve kernel in one pass over each bucket's files (a log-only
+    * table is one task). This is the CDC-walk shape a derived-state
+    * consumer uses to catch up over several refresh points
+    * (`m16_cdc_apply`): O(one log scan), not O(cutoffs × log scans).
+    * [[changesBetween]] stays the declarative two-state form over the
+    * DataFrame resolve. Throws IllegalArgumentException unless there
+    * are >=2 strictly increasing cutoffs (the source checks). */
+  def changeLog(cutoffs: Seq[Long]): DataFrame =
+    spark.read.format("graft-cdc").option("path", path)
+      .option("cutoffs", cutoffs.mkString(",")).load()
 
   /** Data files of the log as of now — the compaction snapshot. Only
     * these files feed the rewrite, and only these are deleted after the
@@ -713,26 +643,6 @@ object KVTable {
       (if (df.columns.contains("tomb")) col("tomb") else lit(null))
         .cast("string").as("tomb"))
 
-  /** UTF-8 BINARY compare with nulls smallest — the same-ts tie-break
-    * order [[resolve]]'s `value desc_nulls_last` applies (Spark string
-    * comparison is UTF-8 byte order); `changeLog`'s in-memory replay
-    * must break ties identically or the two paths could disagree on
-    * supplementary-plane values. */
-  private[graft] def cmpUtf8(a: String, b: String): Int =
-    if (a == null && b == null) 0 else if (a == null) -1
-    else if (b == null) 1
-    else {
-      val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      var i = 0
-      while (i < x.length && i < y.length) {
-        val c = (x(i) & 0xff) - (y(i) & 0xff)
-        if (c != 0) return c
-        i += 1
-      }
-      x.length - y.length
-    }
-
   /** HBase read semantics: per (key,family,qualifier) the latest
     * non-tombstone cell wins, unless masked by a row/family/cell
     * tombstone at or above its ts (maxVersions=1 + delete markers).
@@ -746,9 +656,9 @@ object KVTable {
     * coordinate with null-safe (<=>) matching. Any tombstone marker
     * that is not 'row'/'family' masks at cell granularity, exactly like
     * the executor-side resolve kernel
-    * ([[graft.sources.kv.KVResolveKernel]], under the resolved scan and
-    * the graft-cdc replay) and [[KVTable.changeLog]]'s in-memory
-    * replay; the three paths must agree cell-for-cell. */
+    * ([[graft.sources.kv.KVResolveKernel]], under the resolved scan, the
+    * graft-cdc stream and [[KVTable.changeLog]]). This is the reference
+    * the kernel is tested against; the two must agree cell-for-cell. */
   def resolve(cells: DataFrame): DataFrame = {
     // live cells (NULL tomb) before tombstones, then ts desc + value
     // desc: a TOTAL order within the version group, so two cells written

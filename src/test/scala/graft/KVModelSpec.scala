@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+import org.apache.spark.sql.functions.{col, lit}
 import graft.sources.kv.{KVBatchTable, KVCdcMicroBatchStream, KVCdcOffset, KVLayout, KVResolvedScan}
 import graft.write.KVTable
 
@@ -104,6 +105,26 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
       s"graft-cdc ($from, $to] != changesBetween, $clue")
   }
 
+  /** `changeLog` at 3-4 random ascending cutoffs against the DataFrame
+    * reference: `changesBetween` per adjacent cutoff pair, tagged with
+    * the later cutoff's index. */
+  private def changeLogLeg(t: KVTable, seed: Long, clue: String): Unit = {
+    val n = Gen.choose(3, 4).pureApply(Gen.Parameters.default, Seed(seed))
+    val cuts = Gen.pick(n, 0L to 21L)
+      .pureApply(Gen.Parameters.default, Seed(seed + 1)).toSeq.sorted
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map { r =>
+      def str(i: Int) = if (r.isNullAt(i)) null else r.getString(i)
+      def lng(i: Int) = if (r.isNullAt(i)) null else Long.box(r.getLong(i))
+      (r.getInt(0), r.getLong(1), str(2), str(3), str(4), str(5), str(6),
+        lng(7), lng(8))
+    }.sortBy(_.toString)
+    val want = rows((1 until cuts.length).map { r =>
+      t.changesBetween(cuts(r - 1), cuts(r)).select(lit(r).as("round"), col("*"))
+    }.reduce(_ unionByName _))
+    assert(rows(t.changeLog(cuts)) === want,
+      s"changeLog(${cuts.mkString(",")}) != changesBetween per pair, $clue")
+  }
+
   test("resolve matches the naive model on random op sequences") {
     for (seed <- 1 to 8) {
       val ops = Gen.listOfN(40, genOp)
@@ -132,6 +153,7 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
         .as[(Long, String, String, String, Long)].collect().toSet
       assert(got === model(deduped), s"mismatch at seed=$seed")
       kernelLeg(t, model(deduped), 3000L + seed, s"seed=$seed")
+      changeLogLeg(t, 5000L + seed, s"log-only seed=$seed")
     }
   }
 
@@ -177,6 +199,7 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
         s"(compacted ${before.size} ops)"
       assert(got === model(deduped), s"mismatch at $clue")
       kernelLeg(t, model(deduped), 4000L + seed, clue)
+      changeLogLeg(t, 6000L + seed, clue)
     }
   }
 }

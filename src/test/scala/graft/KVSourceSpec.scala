@@ -98,11 +98,11 @@ class KVSourceSpec extends AnyFunSuite with SparkSpec {
   test("dsv2 merge agrees with the union fallback bit-for-bit") {
     val t = mkTable("e", "st", 1L)
     val viaDsv2 = t.resolved().orderBy($"key", $"family", $"qualifier").collect()
-    spark.conf.set("graft.kv.dsv2", "false")
-    try {
-      val viaUnion = t.resolved().orderBy($"key", $"family", $"qualifier").collect()
-      assert(viaDsv2.toSeq === viaUnion.toSeq)
-    } finally spark.conf.unset("graft.kv.dsv2")
+    // reference: the DataFrame union of the compacted table and the log
+    val viaUnion = KVTable.resolve(spark.table(t.tableName).unionByName(
+        spark.read.schema(KVTable.CELL_SCHEMA_DDL).parquet(s"${t.path}/log")))
+      .orderBy($"key", $"family", $"qualifier").collect()
+    assert(viaDsv2.toSeq === viaUnion.toSeq)
   }
 
   test("range predicates translate to parquet row-group filters and read right") {

@@ -106,7 +106,7 @@ class KVTableSpec extends AnyFunSuite with SparkSpec {
     // same-ts tie-break parity: the supplementary-plane 😀 (4-byte
     // UTF-8, but LOWER than U+FFFD in UTF-16 code units) must win the
     // tie on BOTH paths — Spark's resolve compares UTF-8 bytes, and
-    // changeLog's in-memory replay must agree
+    // changeLog (the executor-side kernel) must agree
     val t2 = fresh("cdclog_tie")
     t2.put(cells((1L, "F", "a", "😀", 1L), (1L, "F", "a", "�", 1L)))
     val sparkWinner = t2.resolved().select($"value").as[String].head()
@@ -114,6 +114,33 @@ class KVTableSpec extends AnyFunSuite with SparkSpec {
       .select($"new_value").as[String].head()
     assert(sparkWinner === "😀" && logWinner === sparkWinner)
     intercept[IllegalArgumentException](t2.changeLog(Seq(2L, 1L)))
+  }
+
+  test("changeLog over a bucketed compacted + log table plans zero " +
+      "shuffle Exchange") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val t = fresh("cdclog_noshuffle")
+    t.put(cells((1L, "F", "a", "v1", 1L), (2L, "F", "a", "v1", 1L),
+      (3L, "F", "b", "w1", 1L)))
+    t.compact(numBuckets = 4)
+    t.put(cells((1L, "F", "a", "v2", 2L), (4L, "F", "a", "new", 2L)))
+    t.delete(Seq((3L, Option.empty[String], Option.empty[String]))
+      .toDF("key", "family", "qualifier"), ts = 3L)
+    val walked = t.changeLog(Seq(1L, 2L, 3L))
+    val plan = walked.queryExecution.executedPlan
+    val shuffles = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case e: ShuffleExchangeExec => e }
+    assert(shuffles.isEmpty, s"changeLog shuffles:\n${plan.toString.take(3000)}")
+    assert(walked.schema === StructType(StructField("round", IntegerType,
+      nullable = false) +: graft.sources.kv.KVCdc.SCHEMA.fields))
+    assert(walked.select($"round", $"key", $"change_type", $"old_value",
+        $"new_value").as[(Int, Long, String, Option[String], Option[String])]
+      .collect().toSet === Set(
+        (1, 1L, "update", Some("v1"), Some("v2")),
+        (1, 4L, "insert", None, Some("new")),
+        (2, 3L, "delete", Some("w1"), None)))
   }
 
   test("null-coordinate cells and unknown tomb markers: resolve, " +
@@ -141,8 +168,8 @@ class KVTableSpec extends AnyFunSuite with SparkSpec {
       .select($"change_type").as[String].collect().toSeq === Seq("delete"))
 
     // an UNKNOWN tomb marker (conform passes arbitrary strings through
-    // put) masks at cell granularity on every path — library resolve,
-    // changeLog replay, and the DSv2 executor resolve already agreed
+    // put) masks at cell granularity on both paths — the library resolve
+    // and the executor-side kernel under changeLog
     val t2 = fresh("unknowntomb")
     t2.put(cells((7L, "F", "a", "v", 1L)))
     t2.put(Seq((7L, Option("F"), Option("a"), Option.empty[String], 2L,
@@ -318,11 +345,6 @@ class KVTableSpec extends AnyFunSuite with SparkSpec {
     assert(!planWithLog.contains("Exchange hashpartitioning"),
       s"live log re-shuffles the table:\n${planWithLog.take(2000)}")
     assert(t.resolved().count() === 3)
-    // the union fallback stays available behind the config gate
-    spark.conf.set("graft.kv.dsv2", "false")
-    try assert(t.resolved().queryExecution.executedPlan.toString.contains("Union"),
-      "union fallback gone")
-    finally spark.conf.unset("graft.kv.dsv2")
     // ...and the next compaction clears it again (full cycle)
     t.compact()
     val planAfter2 = t.resolved().queryExecution.executedPlan.toString
