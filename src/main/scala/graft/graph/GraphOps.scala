@@ -331,6 +331,36 @@ object GraphOps {
     }
   }
 
+  /** Spot-check of a `symmetric = true` claim, active only under
+    * `spark.graft.debug.validate=true`: a seeded Bernoulli sample of the
+    * `(src, dst)` edges must find every sampled edge's reverse in `pairs`,
+    * or the call FAILS LOUDLY.
+    *
+    * Coverage: each edge is drawn independently with probability
+    * f = min(1, 1000 / n), from EVERY partition in proportion to its
+    * size (a `limit` head would read only the first partitions), so a
+    * false claim with m reverse-less edges anywhere in the input escapes
+    * with probability (1 - f)^m. n is the optimizer's row bound — its
+    * row count, else its size estimate over the 24-byte (src, dst) row —
+    * and one count() when the plan has no usable estimate. An
+    * over-estimate shrinks the sample below ~1000; it never skips a
+    * partition. */
+  private def requireSymmetric(pairs: DataFrame, op: String, fix: String): Unit =
+    if (pairs.sparkSession.conf.getOption("spark.graft.debug.validate").contains("true")) {
+      val in = pairs.select(col("src"), col("dst"))
+      val stats = in.queryExecution.optimizedPlan.stats
+      val bound = stats.rowCount.getOrElse(stats.sizeInBytes / 24)
+      val n = if (bound < Int.MaxValue) bound.toLong else in.count()
+      val missing = in.sample(withReplacement = false,
+          math.min(1.0, 1000.0 / math.max(n, 1L)), seed = 42L)
+        .select(col("dst").as("src"), col("src").as("dst"))
+        .join(in, Seq("src", "dst"), "left_anti").limit(1).count()
+      if (missing > 0)
+        throw new IllegalArgumentException(
+          s"$op(symmetric = true) called on an edge list missing reverse " +
+            s"edges — the claim is false; drop the flag ($fix) or fix the input")
+    }
+
   /** The lazy plan + a cache-release handle — split out so PlanSpec can
     * pin the cached-edge-layout iteration shape before materialization
     * collapses it to a checkpoint scan. */
@@ -341,22 +371,9 @@ object GraphOps {
     import org.apache.spark.storage.StorageLevel
     // symmetric=true is the same opt-in discipline as kcoreFixpoint,
     // so it carries the same guard: a false claim here would silently
-    // drop dangling vertices from the result and leak their rank mass,
-    // so under spark.graft.debug.validate=true the claim is
-    // spot-checked (a bounded edge sample must find its reverse in the
-    // input) and misuse FAILS LOUDLY (RankingSpec pins it)
-    if (symmetric && pairs.sparkSession.conf
-        .getOption("spark.graft.debug.validate").contains("true")) {
-      val in = pairs.select(col("src"), col("dst"))
-      val missing = in.limit(1000)
-        .select(col("dst").as("src"), col("src").as("dst"))
-        .join(in, Seq("src", "dst"), "left_anti").limit(1).count()
-      if (missing > 0)
-        throw new IllegalArgumentException(
-          "pageRank(symmetric = true) called on an edge list missing " +
-            "reverse edges — the claim is false; drop the flag (the " +
-            "default detects sinks) or fix the input")
-    }
+    // drop dangling vertices from the result and leak their rank mass
+    // (RankingSpec pins the loud failure)
+    if (symmetric) requireSymmetric(pairs, "pageRank", "the default detects sinks")
     // The edge list is the immutable giant of the iteration: partition
     // it by the join key ONCE and cache that layout (the same
     // iterative-join discipline as [[bspIterateDeltaFrom]]) — otherwise
@@ -703,24 +720,14 @@ object GraphOps {
     * by construction) opt into skipping that shuffle with
     * `symmetric = true`; a false claim would peel an out-degree-based
     * (wrong) core, so under `spark.graft.debug.validate=true` the
-    * claim is spot-checked (a bounded edge sample must find its
-    * reverse in the input) and misuse FAILS LOUDLY instead
-    * (GraphOpsSpec pins it).
+    * claim is spot-checked ([[requireSymmetric]]: a seeded sample
+    * spread over every partition must find its reverses) and misuse
+    * FAILS LOUDLY instead (GraphOpsSpec pins it).
     */
   def kcoreFixpoint(pairs: DataFrame, k: Int, maxRounds: Int = 60,
       symmetric: Boolean = false): DataFrame = {
     val in = pairs.select(col("src"), col("dst"))
-    if (symmetric && pairs.sparkSession.conf
-        .getOption("spark.graft.debug.validate").contains("true")) {
-      val missing = in.limit(1000)
-        .select(col("dst").as("src"), col("src").as("dst"))
-        .join(in, Seq("src", "dst"), "left_anti").limit(1).count()
-      if (missing > 0)
-        throw new IllegalArgumentException(
-          "kcoreFixpoint(symmetric = true) called on an edge list " +
-            "missing reverse edges — the claim is false; drop the flag " +
-            "(the default symmetrizes) or fix the input")
-    }
+    if (symmetric) requireSymmetric(in, "kcoreFixpoint", "the default symmetrizes")
     // per-round edge counts ride each round's checkpoint job as an
     // `observe` metric instead of a second count() job per round
     // (guide §1.2: one pass, not two)

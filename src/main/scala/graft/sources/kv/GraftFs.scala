@@ -50,15 +50,21 @@ object GraftFs {
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
 
+  type ReaderConf = org.apache.spark.broadcast.Broadcast[
+    org.apache.spark.util.SerializableConfiguration]
+
   /** The active session's Hadoop conf snapshotted for executor-side
     * parquet opens: the driver's filesystem settings (HDFS auth, buffer
     * sizes, S3 credential providers) ride into every read task, where a
-    * bare `new Configuration(false)` would strip them. Off-session it
-    * falls back to [[hadoopConf]]. */
-  def readerConf(): org.apache.spark.util.SerializableConfiguration =
-    new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.getActiveSession
-        .map(_.sessionState.newHadoopConf()).getOrElse(hadoopConf))
+    * bare `new Configuration(false)` would strip them. Broadcast, the
+    * way Spark's own file scans ship it: an executor deserializes the
+    * whole conf once, not once per task. Called while planning a scan,
+    * so a session is active. */
+  def readerConf(): ReaderConf = {
+    val s = org.apache.spark.sql.SparkSession.active
+    s.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(s.sessionState.newHadoopConf()))
+  }
 
   private[kv] def fsFor(p: Path): FileSystem = p.getFileSystem(hadoopConf) match {
     // raw local: java.io semantics, no .crc sibling pollution in the

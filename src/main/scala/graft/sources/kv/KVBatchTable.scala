@@ -2,7 +2,6 @@ package graft.sources.kv
 
 import java.util.OptionalLong
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -104,11 +103,9 @@ class KVBatchTable(path: String, tsMax: Option[Long] = None)
     }
   }
 
-  override def partitioning(): Array[Transform] = {
-    val layout = KVLayout(path)
-    if (layout.bucketed) Array(Expressions.bucket(layout.numBuckets, "key"))
-    else Array.empty
-  }
+  override def partitioning(): Array[Transform] =
+    KVPointer.read(path).map { case (_, n) => Expressions.bucket(n, "key"): Transform }
+      .toArray
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new KVScanBuilder(path, tsMax)
@@ -195,12 +192,28 @@ class KVScan(path: String, layout: KVLayout, required: StructType,
       val allowed = Seq(staticBuckets, runtimeBuckets).flatten
       layout.bucketPartitions(b => allowed.forall(_(b))).map(p => p: InputPartition)
     } else {
-      // log-only: one partition per file — a plain scan has no resolve
-      // group to keep together, and appends are memstore-sized
-      layout.logFiles
-        .map(f => KVBucketPartition(-1, -1, Array.empty, Array.empty,
-          Array(f), Array(layout.lenByPath(f))): InputPartition)
-        .toArray
+      // log-only: a plain scan has no resolve group to keep together,
+      // so the files are packed into splits the way Spark's file source
+      // packs them (largest first, each costing its length plus the
+      // open cost, a split closed at max(open cost, bytes per core)
+      // capped by maxPartitionBytes) — one task per file would grow the
+      // task count with every append to a never-compacted table
+      val conf = org.apache.spark.sql.internal.SQLConf.get
+      val open = conf.filesOpenCostInBytes
+      val files = layout.logFiles.sortBy(f => -layout.lenByPath(f))
+      val perCore = files.map(layout.lenByPath(_) + open).sum /
+        org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism
+      val maxSplit = math.min(conf.filesMaxPartitionBytes, math.max(open, perCore))
+      val splits = scala.collection.mutable.ArrayBuffer.empty[Vector[String]]
+      var size = 0L
+      files.foreach { f =>
+        val len = layout.lenByPath(f)
+        if (splits.isEmpty || size + len > maxSplit) { splits += Vector.empty; size = 0L }
+        splits(splits.length - 1) :+= f
+        size += len + open
+      }
+      splits.map(fs => KVBucketPartition(-1, -1, Array.empty, Array.empty,
+        fs.toArray, fs.map(layout.lenByPath).toArray): InputPartition).toArray
     }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -233,7 +246,7 @@ case class KVBucketPartition(bucket: Int, numBuckets: Int,
   * OF` cutoff (scan-internal, nothing above re-applies it). */
 class KVReaderFactory(required: StructType, filters: Array[Filter],
                       tsMax: Option[Long],
-                      hconf: org.apache.spark.util.SerializableConfiguration)
+                      hconf: GraftFs.ReaderConf)
     extends PartitionReaderFactory {
   private val synthesized = required.fieldNames.exists(n =>
     n == KVCellIdColumn.NAME || n == KVBucketColumn.NAME)
@@ -325,12 +338,13 @@ private[kv] class KVCellRowReader(cols: KVColumnarPartitionReader,
   * resolves or aggregates per key. */
 class KVColumnarPartitionReader(p: KVBucketPartition, required: StructType,
                                 filters: Array[Filter], tsMax: Option[Long],
-                                hconf: org.apache.spark.util.SerializableConfiguration)
+                                hconf: GraftFs.ReaderConf)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
   import org.apache.spark.sql.types.StructField
+  import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 
   private val CAP = 4096
   private val rowGroupPredicate = KVParquetFilters.predicate(filters)
@@ -350,12 +364,14 @@ class KVColumnarPartitionReader(p: KVBucketPartition, required: StructType,
   private var vec: VectorizedParquetRecordReader = _
   private var batch: ColumnarBatch = _
 
-  private def openVectorized(f: String, fLen: Long,
-                             schema: StructType): VectorizedParquetRecordReader = {
-    // split length from the planning-time listing: these are qualified
-    // URIs (file:/..., hdfs://...) that java.io.File would stat as 0,
-    // and a zero-length split selects no row groups
-    val conf = new Configuration(hconf.value)
+  // one task context per leg, reused for every file of that leg: the
+  // context's JobConf is a copy of the whole Hadoop conf, which per file
+  // costs more than opening a small log file
+  private lazy val compCtx = readContext(compSchema)
+  private lazy val logCtx = readContext(logSchema)
+
+  private def readContext(schema: StructType): TaskAttemptContextImpl = {
+    val conf = new org.apache.hadoop.mapred.JobConf(hconf.value.value)
     conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
     conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
       classOf[ParquetReadSupport].getName)
@@ -372,12 +388,18 @@ class KVColumnarPartitionReader(p: KVBucketPartition, required: StructType,
     conf.setBoolean("spark.sql.parquet.fieldId.read.ignoreMissing", false)
     rowGroupPredicate.foreach(
       org.apache.parquet.hadoop.ParquetInputFormat.setFilterPredicate(conf, _))
+    new TaskAttemptContextImpl(conf, new org.apache.hadoop.mapreduce.TaskAttemptID(
+      "graft", 0, org.apache.hadoop.mapreduce.TaskType.MAP, 0, 0))
+  }
+
+  private def openVectorized(f: String, fLen: Long,
+                             ctx: TaskAttemptContextImpl): VectorizedParquetRecordReader = {
+    // split length from the planning-time listing: these are qualified
+    // URIs (file:/..., hdfs://...) that java.io.File would stat as 0,
+    // and a zero-length split selects no row groups
     // the mapred variant: Spark's reader base casts the split to it
     val split = new org.apache.hadoop.mapred.FileSplit(
       new HPath(f), 0, fLen, Array.empty[String])
-    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-      conf, new org.apache.hadoop.mapreduce.TaskAttemptID(
-        "graft", 0, org.apache.hadoop.mapreduce.TaskType.MAP, 0, 0))
     val r = new VectorizedParquetRecordReader(false, CAP)
     try {
       r.initialize(split, ctx)
@@ -393,7 +415,7 @@ class KVColumnarPartitionReader(p: KVBucketPartition, required: StructType,
         if (fileIdx >= files.length) return false
         inLog = fileIdx >= p.compactedFiles.length
         vec = openVectorized(files(fileIdx), lens(fileIdx),
-          if (inLog) logSchema else compSchema)
+          if (inLog) logCtx else compCtx)
         fileIdx += 1
       }
       if (!vec.nextKeyValue()) { vec.close(); vec = null }

@@ -235,7 +235,7 @@ case class KVCdcPartition(inner: KVBucketPartition, cuts: Array[Long])
   * the later cutoff) when `withRound`. */
 class KVCdcPartitionReader(p: KVBucketPartition, cuts: Array[Long],
                            withRound: Boolean,
-                           hconf: org.apache.spark.util.SerializableConfiguration)
+                           hconf: GraftFs.ReaderConf)
     extends PartitionReader[InternalRow] {
 
   private val T_INSERT = UTF8String.fromString("insert")

@@ -55,13 +55,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    against [[GraftBucket.of]] at write time — a placement drift
   *    fails the job loudly instead of corrupting the layout.
   *  - Two-phase commit: tasks write into a dot-prefixed inflight dir
-  *    (invisible to readers); job commit moves files into
-  *    `compacted/gen-<N+1>`, registers the bucketed catalog table over
-  *    that location, and runs the shared publish tail
-  *    (`KVTable.publishGeneration`): completeness marker → pointer
-  *    flip → snapshot log-file retirement → N-1 pruning. Appends
-  *    racing the rewrite survive exactly as they do under compaction —
-  *    only the scan snapshot's log files are retired.
+  *    (invisible to readers); job commit is the generation commit
+  *    compaction uses too ([[KVGeneration.commit]]): move the files into
+  *    `compacted/gen-<N+1>`, carry untouched buckets forward, then
+  *    completeness marker → pointer flip → snapshot log-file retirement
+  *    → N-1 pruning. Appends racing the rewrite survive exactly as they
+  *    do under compaction — only the scan snapshot's log files are
+  *    retired.
   */
 class KVCowBuilder(path: String, info: RowLevelOperationInfo)
     extends RowLevelOperationBuilder {
@@ -190,7 +190,7 @@ class KVCowWrite(path: String, layout: KVLayout, info: LogicalWriteInfo,
   private val declaredWidth = declared.length
 
   private val numBuckets = if (layout.bucketed) layout.numBuckets else 8
-  private val inflight = s"$path/compacted/.inflight-${info.queryId()}"
+  private val inflight = KVGeneration.inflightDir(path, info.queryId())
 
   override def toBatch: BatchWrite = this
   override def description(): String = s"graft-kv-cow-write `$path`"
@@ -206,59 +206,40 @@ class KVCowWrite(path: String, layout: KVLayout, info: LogicalWriteInfo,
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new KVCowWriterFactory(inflight, numBuckets, declaredWidth)
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val t = graft.write.KVTable(spark, path)
-    val newGen = t.nextGen
-    val genDir = s"$path/compacted/gen-$newGen"
-    // a crashed earlier attempt (moved some files, died before the
-    // pointer flip) leaves a non-empty unpublished gen-<N+1>; a retry
-    // recomputes the same nextGen, and moving fresh files NEXT TO the
-    // stale ones would publish duplicated rows. The dir is unpublished
-    // by construction (the pointer still names gen-N), so wiping it is
-    // safe — and a CONCURRENT compaction racing to the same generation
-    // loses at the pointer CAS, not here.
-    if (GraftFs.list(genDir).nonEmpty)
-      GraftFs.delete(genDir, recursive = true)
-    GraftFs.mkdirs(genDir)
-    messages.foreach {
-      case KVCowFile(name) if name.nonEmpty =>
-        GraftFs.move(s"$inflight/$name", s"$genDir/$name")
-      case _ => ()
-    }
-    GraftFs.delete(inflight, recursive = true)
-    // group-filtered rewrite: the scan — and so the replacement — was
-    // pruned to the touched buckets; every other bucket carries its
-    // current-generation file(s) forward by reference, and its PENDING
-    // log rows are re-appended so the snapshot retirement below cannot
-    // lose them. (Touched buckets' log rows are folded into the
-    // rewritten files and must NOT be re-appended — a deleted row
-    // would resurrect. A re-appended row duplicating a crashed earlier
-    // attempt's is harmless: latest-wins resolution is idempotent over
-    // identical versions.)
-    op.groupBuckets match {
-      case Some(touched) if layout.bucketed =>
-        val untouched = (0 until numBuckets).toSet -- touched
-        untouched.foreach { b =>
-          layout.compactedByBucket.getOrElse(b, Seq.empty).foreach { f =>
-            GraftFs.linkOrCopy(f, s"$genDir/${f.substring(f.lastIndexOf('/') + 1)}")
+  /** The shared generation commit ([[KVGeneration.commit]]); its
+    * carry-forward step is the group-filtered rewrite's: the scan — and
+    * so the replacement — was pruned to the touched buckets; every
+    * other bucket carries its current-generation file(s) forward by
+    * reference, and its PENDING log rows are re-appended so the
+    * snapshot retirement cannot lose them. (Touched buckets' log rows
+    * are folded into the rewritten files and must NOT be re-appended —
+    * a deleted row would resurrect. A re-appended row duplicating a
+    * crashed earlier attempt's is harmless: latest-wins resolution is
+    * idempotent over identical versions.) */
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    KVGeneration.commit(path, numBuckets, inflight, messages.toSeq,
+        layout.logFiles) { genDir =>
+      op.groupBuckets match {
+        case Some(touched) if layout.bucketed =>
+          val untouched = (0 until numBuckets).toSet -- touched
+          untouched.foreach { b =>
+            layout.compactedByBucket.getOrElse(b, Seq.empty).foreach { f =>
+              GraftFs.linkOrCopy(f, s"$genDir/${f.substring(f.lastIndexOf('/') + 1)}")
+            }
           }
-        }
-        if (layout.logFiles.nonEmpty && untouched.nonEmpty) {
-          import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-          spark.read.schema(graft.write.KVTable.CELL_SCHEMA_DDL)
-            .parquet(layout.logFiles: _*)
-            .filter(!pmod(hash(col("key")), lit(numBuckets))
-              .isin(touched.toSeq.map(Integer.valueOf): _*))
-            .coalesce(1)
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(s"$path/log")
-        }
-      case _ => () // no runtime group filter: full rewrite, nothing to carry
+          if (layout.logFiles.nonEmpty && untouched.nonEmpty) {
+            import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+            SparkSession.active.read.schema(graft.write.KVTable.CELL_SCHEMA_DDL)
+              .parquet(layout.logFiles: _*)
+              .filter(!pmod(hash(col("key")), lit(numBuckets))
+                .isin(touched.toSeq.map(Integer.valueOf): _*))
+              .coalesce(1)
+              .write.mode(org.apache.spark.sql.SaveMode.Append)
+              .parquet(s"$path/log")
+          }
+        case _ => () // no runtime group filter: full rewrite, nothing to carry
+      }
     }
-    t.registerGenerationTable(newGen, numBuckets)
-    t.publishGeneration(newGen, numBuckets, layout.logFiles)
-  }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     GraftFs.delete(inflight, recursive = true): Unit
@@ -276,8 +257,10 @@ class KVCowWriterFactory(inflight: String, numBuckets: Int,
 }
 
 /** One task = one bucket = one sorted parquet file, named with the
-  * Spark bucket-file suffix (`..._00003.c000...`) so both the bucketed
-  * catalog table and [[KVLayout]]'s listing attribute it to its bucket.
+  * Spark bucket-file suffix (`..._00003.c000...`) so [[KVLayout]]'s
+  * listing attributes it to its bucket. The only writer of
+  * `compacted/gen-*` files: compaction and the CoW rewrite both stage
+  * through it ([[KVGeneration]]).
   * Rows stream through parquet-mr in arrival (= required sort) order;
   * the writer is created lazily so empty buckets produce no file. */
 class KVCowDataWriter(inflight: String, numBuckets: Int,

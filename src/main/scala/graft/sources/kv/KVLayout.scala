@@ -42,6 +42,7 @@ case class KVLayout(path: String) {
   }
 
   val logFiles: Seq[String] = logEntries.map(_.path)
+  val compactedFiles: Seq[String] = compactedEntries.map(_.path)
 
   /** Current generation's compacted files keyed by the bucket id in
     * their Spark bucket-file name (`part-...-_00003.c000...`). */

@@ -117,9 +117,8 @@ object KVPointer {
 
   /** Pre-generational layout → `gen-0`, in place: move the bucket files
     * down, write the marker, flip the pointer, drop the legacy marker.
-    * Spark bucket-file names are preserved, so the migrated directory
-    * serves both the V1 bucketed-table registration and the DSv2 scan
-    * unchanged. */
+    * Spark bucket-file names are preserved, so [[KVLayout]] attributes
+    * the migrated files to their buckets unchanged. */
   private def migrateLegacy(tablePath: String): Option[(Int, Int)] = {
     val cd = s"$tablePath/compacted"
     val legacy = s"$cd/$LEGACY"

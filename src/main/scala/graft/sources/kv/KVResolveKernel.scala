@@ -231,7 +231,7 @@ object KVResolveKernel {
     * resolve-safe (never drop one row of a resolve group the caller
     * emits — a key predicate, or `ts <= cuts.last`). */
   def run(p: KVBucketPartition, cuts: Array[Long], filters: Array[Filter],
-          hconf: org.apache.spark.util.SerializableConfiguration): KVResolveKernel = {
+          hconf: GraftFs.ReaderConf): KVResolveKernel = {
     val k = new KVResolveKernel(cuts)
     val raw = new KVColumnarPartitionReader(p, KVBatchTable.CELL_SCHEMA,
       filters, None, hconf)

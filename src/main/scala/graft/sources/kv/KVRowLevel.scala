@@ -250,7 +250,7 @@ class KVResolvedScan(path: String, layout: KVLayout,
 }
 
 class KVResolvedReaderFactory(required: StructType, pushed: Array[Filter],
-                              hconf: org.apache.spark.util.SerializableConfiguration)
+                              hconf: GraftFs.ReaderConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new KVResolvedPartitionReader(
@@ -265,7 +265,7 @@ class KVResolvedReaderFactory(required: StructType, pushed: Array[Filter],
   * above the scan. */
 class KVResolvedPartitionReader(p: KVBucketPartition, required: StructType,
                                 pushed: Array[Filter],
-                                hconf: org.apache.spark.util.SerializableConfiguration)
+                                hconf: GraftFs.ReaderConf)
     extends PartitionReader[InternalRow] {
 
   private val iter: Iterator[InternalRow] = {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.kv.{KVGeneration, KVLayout, KVSource}
+
 /** Cell-level KV table with the reference's storage semantics
   * (HBaseTable.scala:100-352, HBaseRDD.scala:39-42) re-expressed on
   * parquet:
@@ -16,9 +18,13 @@ import org.apache.spark.sql.functions._
   *    delete semantics: a tombstone masks every cell at or below its ts
   *    (`tomb` = 'row' | 'family' | 'cell', HBaseTable.scala:181-212);
   *  - `compact()` is the bulk path (HBaseTable.scala:234-352): resolve,
-  *    range-partition + sort by key (repartitionByRange +
+  *    hash-partition into buckets + sort by key (repartition +
   *    sortWithinPartitions ≙ the HFile shuffle,
-  *    HBaseTable.scala:219-242), rewrite, swap.
+  *    HBaseTable.scala:219-242), write a new generation, swap.
+  *
+  * A table is its path: the layout under it ([[KVLayout]]) is the whole
+  * state, and every read and write addresses it by path alone — no
+  * catalog entry exists for it.
   *
   * Scale notes: appends are cheap (no read-modify-write at write time —
   * the reference's BufferedMutator analogue); resolution cost is one
@@ -32,35 +38,6 @@ class KVTable(val spark: SparkSession, val path: String) {
 
   private def logDir = s"$path/log"
 
-  /** Catalog identity stem of the compacted state — derived from the
-    * path so each table path owns its own catalog entries. The slug
-    * alone is not injective (it collapses case and non-alphanumerics,
-    * so `/kv-a` and `/kv_A` would share a catalog entry and clobber
-    * each other's compacted state) — a hash of the raw path
-    * disambiguates. Each compaction GENERATION gets its own catalog
-    * table (`<stem>_g<N>`), so a reader resolved against generation
-    * N-1 keeps a valid table entry while generation N swaps in. */
-  private val tableBase: String = {
-    val slug = path.replaceAll("[^A-Za-z0-9]+", "_")
-      .replaceAll("^_+|_+$", "").toLowerCase
-    val hash = java.security.MessageDigest.getInstance("MD5")
-      .digest(path.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    s"graft_kv_${slug}_$hash"
-  }
-
-  private def tableNameFor(gen: Int): String = s"${tableBase}_g$gen"
-
-  /** Current generation's catalog table name. */
-  def tableName: String = tableNameFor(currentGen.map(_._1).getOrElse(0))
-
-  /** True only when the log holds DATA files. Spark's parquet commit
-    * leaves `_SUCCESS` (+ `.crc`) markers behind, and compaction deletes
-    * only the snapshot's data files — a bare directory-exists check
-    * would see the surviving markers and union an empty log leg onto
-    * every post-compaction read, erasing the bucketed scan's
-    * hashpartitioning(key) and re-introducing a full shuffle. */
-  private def logExists: Boolean = listLogFiles().nonEmpty
-
   /** `(generation, numBuckets)` of the live compacted state, via the
     * shared pointer reader ([[graft.sources.kv.KVPointer]] — one parse
     * for the write path and the DSv2 scan path alike). Generations live
@@ -70,50 +47,33 @@ class KVTable(val spark: SparkSession, val path: String) {
   private[graft] def currentGen: Option[(Int, Int)] =
     graft.sources.kv.KVPointer.read(path)
 
-  /** The session catalog is in-memory: a compacted generation written
-    * by a previous session has files + the pointer on disk but no
-    * catalog entry — re-register it (CLUSTERED BY matching the layout)
-    * so its partitioning stays visible to Catalyst across sessions. */
-  private def compactedExists: Boolean = currentGen match {
-    case None => false
-    case Some((g, n)) =>
-      val t = tableNameFor(g)
-      if (!spark.catalog.tableExists(t))
-        spark.sql(
-          s"""CREATE TABLE $t ($CELL_SCHEMA_DDL) USING parquet
-             |CLUSTERED BY (key) SORTED BY (key, family, qualifier)
-             |INTO $n BUCKETS LOCATION '$path/compacted/gen-$g'""".stripMargin)
-      true
-  }
-
-  def exists: Boolean = logExists || compactedExists
+  /** The one existence rule, shared with [[graft.sources.kv.GraftCatalog]]:
+    * a published generation or a log holding DATA files (Spark's parquet
+    * commit leaves `_SUCCESS` markers behind, which do not count). */
+  def exists: Boolean = KVLayout(path).exists
 
   private def emptyCells: DataFrame = spark.createDataFrame(
     spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
     org.apache.spark.sql.types.StructType.fromDDL(CELL_SCHEMA_DDL))
 
-  /** Raw cell log: compacted bucketed table (key-clustered, key-sorted —
-    * Catalyst sees hashpartitioning(key) and plans key joins/groupBys
-    * downstream of `resolved()` with NO Exchange, the analogue of the
-    * reference advertising its RegionPartitioner, HBaseRDD.scala:26)
-    * merged with post-compaction appends (the memstore analogue).
-    *
-    * When BOTH legs exist, the merge goes through the DSv2 source
-    * (sources/kv/KVBatchTable.scala): each scan task reads its bucket's
-    * compacted file plus the log rows hashing to it, and the scan
-    * reports KeyGroupedPartitioning(bucket(n, key)) — so the merged
-    * read stays clustered by key and downstream resolve/join/groupBy
-    * plan with zero Exchange, a property a DataFrame-level union cannot
-    * preserve (it would re-shuffle the whole table). The pure-compacted
-    * case stays on the V1 bucketed table (vectorized scan, already
-    * partitioning-visible); the pure-log case is a plain scan with no
-    * partitioning to preserve. */
-  def cells: DataFrame = (compactedExists, logExists) match {
-    case (true, true) => graft.sources.kv.KVSource.read(spark, path)
-    case (true, false) => spark.table(tableName)
-    case (false, true) => spark.read.schema(CELL_SCHEMA_DDL).parquet(logDir)
-    case _ => emptyCells
-  }
+  /** Raw cell log, addressed by path through the DSv2 source
+    * (sources/kv/KVBatchTable.scala) for every layout. On a compacted
+    * table each scan task reads its bucket's compacted file(s) plus the
+    * log rows hashing to it, and the scan reports
+    * KeyGroupedPartitioning(bucket(n, key)) — so the read stays
+    * clustered by key with or without a log, and downstream
+    * resolve/join/groupBy plan with zero Exchange (the analogue of the
+    * reference advertising its RegionPartitioner, HBaseRDD.scala:26). A
+    * log-only table reads as size-packed file splits. The empty case stands
+    * apart only because the catalog refuses to load a table with no
+    * state (its existence check is the one rule [[exists]] uses, so it
+    * is not listed twice). */
+  def cells: DataFrame =
+    try KVSource.read(spark, path)
+    catch {
+      case e: org.apache.spark.sql.AnalysisException
+          if e.getCondition == "TABLE_OR_VIEW_NOT_FOUND" => emptyCells
+    }
 
   /** M1/M2 `update`/`put` (HBaseTable.scala:100-155): append new cells;
     * no read required (upsert-by-log). */
@@ -240,36 +200,37 @@ class KVTable(val spark: SparkSession, val path: String) {
     spark.read.format("graft-cdc").option("path", path)
       .option("cutoffs", cutoffs.mkString(",")).load()
 
-  /** Data files of the log as of now — the compaction snapshot. Only
-    * these files feed the rewrite, and only these are deleted after the
-    * swap: a put() landing while compaction runs adds NEW part files,
-    * which survive into the next log untouched (no lost-write race with
-    * [[compactAsync]]). Listed through the [[graft.sources.kv.GraftFs]]
-    * storage seam (local disk and HDFS alike). */
-  private def listLogFiles(): Seq[String] =
-    graft.sources.kv.GraftFs.dataFiles(logDir).map(_.path)
-
-  /** Cell view pinned to an explicit log-file snapshot (compaction's
-    * read side; `cells` itself re-lists the directory on every call). */
-  private def cellsFrom(logFiles: Seq[String]): DataFrame = {
-    val logDf =
-      if (logFiles.isEmpty) emptyCells
-      else spark.read.schema(CELL_SCHEMA_DDL).parquet(logFiles: _*)
-    if (compactedExists) spark.table(tableName).unionByName(logDf) else logDf
+  /** Compaction's read side: exactly one [[KVLayout]] snapshot's
+    * compacted and log files, read as plain parquet. Only these feed the
+    * rewrite, and only these log files are retired after the swap: a
+    * put() landing while compaction runs adds NEW part files, which
+    * survive into the next log untouched (no lost-write race with
+    * [[compactAsync]]). */
+  private def rewrite(numBuckets: Int)(newCells: DataFrame => DataFrame): Unit = {
+    val snap = KVLayout(path)
+    val files = snap.compactedFiles ++ snap.logFiles
+    val all =
+      if (files.isEmpty) emptyCells
+      else spark.read.schema(CELL_SCHEMA_DDL).parquet(files: _*)
+    KVGeneration.write(conform(newCells(all)), path, numBuckets, snap.logFiles)
   }
 
-  /** M5-M7 bulk path: resolve + bucketed, key-sorted rewrite as a
-    * catalog table + swap. One hash shuffle on the key, sorted output —
-    * the HFile-pipeline shape — and, crucially, a layout Catalyst can
-    * SEE: the bucketed scan reports hashpartitioning(key, numBuckets),
-    * so every downstream key join / groupBy / resolve-window plans with
+  /** M5-M7 bulk path: resolve + bucketed, key-sorted rewrite as a new
+    * generation + swap ([[KVGeneration.write]]). One hash shuffle on the
+    * key, sorted output — the HFile-pipeline shape — and a layout
+    * Catalyst can SEE: the scan reports bucket(numBuckets, key), so
+    * every downstream key join / groupBy / resolve-window plans with
     * zero Exchange (the reference's RegionPartitioner advertisement,
     * RegionPartitioner.scala:12-68). Two compacted tables with the same
-    * bucket count join co-located, shuffle-free on either side. */
-  def compact(numBuckets: Int = 8): Unit = {
-    val snapshot = listLogFiles()
-    writeCompacted(KVTable.resolve(cellsFrom(snapshot)), numBuckets, snapshot)
-  }
+    * bucket count join co-located, shuffle-free on either side.
+    *
+    * Each compaction writes a FRESH directory (`compacted/gen-<N+1>`)
+    * and then flips the pointer file: the state is written exactly
+    * once, and readers planned against gen-N keep working through the
+    * swap — its files survive (the HBase scanners-hold-HFiles
+    * analogue). Generation N-1 is pruned only at the NEXT compaction,
+    * giving in-flight scans one full compaction interval to drain. */
+  def compact(numBuckets: Int = 8): Unit = rewrite(numBuckets)(resolve)
 
   /** M22: RESTORE — roll the live state back to the `VERSION AS OF v`
     * view by compacting THAT view into a new generation (the lakehouse
@@ -279,12 +240,8 @@ class KVTable(val spark: SparkSession, val path: String) {
     * restore is re-restorable while the previous generation survives.
     * Subject to [[resolvedAsOf]]'s retention rule: a target older than
     * the last compaction restores what the store still retains. */
-  def restoreAsOf(v: Long, numBuckets: Int = 8): Unit = {
-    val snapshot = listLogFiles()
-    writeCompacted(
-      KVTable.resolve(cellsFrom(snapshot).filter(col("ts") <= v)),
-      numBuckets, snapshot)
-  }
+  def restoreAsOf(v: Long, numBuckets: Int = 8): Unit =
+    rewrite(numBuckets)(all => resolve(all.filter(col("ts") <= v)))
 
   /** M21: ZERO-COPY shallow clone (the lakehouse CLONE contract): the
     * clone is a NEW table whose gen-0 files are hard links to this
@@ -303,19 +260,16 @@ class KVTable(val spark: SparkSession, val path: String) {
     import graft.sources.kv.{GraftFs, KVPointer}
     require(destPath != path, "clone destination must differ from source")
     val dest = KVTable(spark, destPath, wipe = true)
-    currentGen.foreach { case (g, n) =>
-      val dstGenDir = s"$destPath/compacted/gen-0"
-      GraftFs.dataFiles(s"$path/compacted/gen-$g").foreach { f =>
-        GraftFs.linkOrCopy(f.path,
-          s"$dstGenDir/${f.path.substring(f.path.lastIndexOf('/') + 1)}")
-      }
-      KVPointer.writeGenMeta(destPath, 0, n)
-      KVPointer.publish(destPath, 0, n)
+    val snap = KVLayout(path)
+    def link(files: Seq[String], dir: String): Unit = files.foreach { f =>
+      GraftFs.linkOrCopy(f, s"$dir/${f.substring(f.lastIndexOf('/') + 1)}")
     }
-    listLogFiles().foreach { f =>
-      GraftFs.linkOrCopy(f,
-        s"$destPath/log/${f.substring(f.lastIndexOf('/') + 1)}")
+    if (snap.bucketed) {
+      link(snap.compactedFiles, s"$destPath/compacted/gen-0")
+      KVPointer.writeGenMeta(destPath, 0, snap.numBuckets)
+      KVPointer.publish(destPath, 0, snap.numBuckets)
     }
+    link(snap.logFiles, s"$destPath/log")
     dest
   }
 
@@ -334,111 +288,11 @@ class KVTable(val spark: SparkSession, val path: String) {
     * retention window (or HBase's KEEP_DELETED_CELLS + TTL pair).
     * Cost: the compacted files carry the horizon's churn extra rows —
     * O(churn since horizon), the price of the replayability. */
-  def compactRetaining(retainSince: Long, numBuckets: Int = 8): Unit = {
-    val snapshot = listLogFiles()
-    val all = cellsFrom(snapshot)
-    val base = KVTable.resolve(all.filter(col("ts") <= retainSince))
-      .withColumn("tomb", lit(null).cast("string"))
-    val recent = all.filter(col("ts") > retainSince)
-      .select(base.columns.map(col).toIndexedSeq: _*)
-    writeCompactedCells(base.unionByName(recent), numBuckets, snapshot)
-  }
-
-  /** Generational rewrite. Each compaction writes a FRESH directory
-    * (`compacted/gen-<N+1>`) under a FRESH catalog table
-    * (`<stem>_g<N+1>`) and then flips the pointer file:
-    *
-    *  - the state is written exactly ONCE (reading table gen-N while
-    *    creating table gen-N+1 is legal — no same-table overwrite, so
-    *    no staging hop and no double write, on first load AND every
-    *    re-compaction);
-    *  - readers planned against gen-N keep working through the swap —
-    *    their catalog entry and files both survive (the HBase
-    *    scanners-hold-HFiles analogue). Generation N-1 is pruned only
-    *    at the NEXT compaction, giving in-flight scans one full
-    *    compaction interval to drain;
-    *  - concurrent appends survive exactly as before: only the
-    *    snapshot's log files are deleted after the swap. */
-  private def writeCompacted(state: DataFrame, numBuckets: Int,
-                             snapshotLogFiles: Seq[String]): Unit =
-    writeCompactedCells(state.withColumn("tomb", lit(null).cast("string")),
-      numBuckets, snapshotLogFiles)
-
-  /** [[writeCompacted]] for CELL inputs that may legitimately carry
-    * versions and tombstones ([[compactRetaining]]'s retained tail) —
-    * every read path resolves tombstones wherever they live, so a
-    * compacted generation holding them is just more rows. */
-  private def writeCompactedCells(cells: DataFrame, numBuckets: Int,
-                                  snapshotLogFiles: Seq[String]): Unit = {
-    val newGen = currentGen.map(_._1 + 1).getOrElse(0)
-    cells
-      .repartition(numBuckets, col("key")) // align tasks with buckets: one file per bucket
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "key")
-      .sortBy("key", "family", "qualifier")
-      .option("path", s"$path/compacted/gen-$newGen")
-      .saveAsTable(tableNameFor(newGen))
-    publishGeneration(newGen, numBuckets, snapshotLogFiles)
-  }
-
-  /** The generation number a rewrite in flight right now would publish
-    * (CoW row-level commits compute their target dir from this). */
-  private[graft] def nextGen: Int = currentGen.map(_._1 + 1).getOrElse(0)
-
-  /** Registers the catalog entry for a generation whose FILES were
-    * written by an external (DSv2) writer — same bucketed external
-    * table that `saveAsTable` would have produced, so `spark.table`
-    * reads and downstream zero-Exchange key joins work identically. */
-  private[graft] def registerGenerationTable(gen: Int, numBuckets: Int): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${tableNameFor(gen)}")
-    spark.sql(
-      s"""CREATE TABLE ${tableNameFor(gen)} (
-         |  key BIGINT, family STRING, qualifier STRING,
-         |  value STRING, ts BIGINT, tomb STRING)
-         |USING parquet
-         |CLUSTERED BY (key) SORTED BY (key, family, qualifier)
-         |INTO $numBuckets BUCKETS
-         |LOCATION '$path/compacted/gen-$gen'""".stripMargin)
-  }
-
-  /** Publish + cleanup tail shared by [[compact]] and the CoW
-    * row-level rewrite (sources/kv/KVCow.scala): completeness marker,
-    * atomic pointer flip, snapshot log-file retirement, and pruning of
-    * the drained N-1 generation. A crash at any point leaves a
-    * readable table (old pointer, or marker-led recovery); appends
-    * racing the rewrite live as other part files in the log directory
-    * and must survive — only the SNAPSHOT's files are deleted. */
-  private[graft] def publishGeneration(newGen: Int, numBuckets: Int,
-                                       snapshotLogFiles: Seq[String]): Unit = {
-    import graft.sources.kv.GraftFs
-    graft.sources.kv.KVPointer.writeGenMeta(path, newGen, numBuckets)
-    graft.sources.kv.KVPointer.publish(path, newGen, numBuckets)
-    // delete ONLY the snapshot's files (plus their checksum siblings) —
-    // never the directory
-    snapshotLogFiles.foreach { f =>
-      val slash = f.lastIndexOf('/')
-      GraftFs.delete(
-        f.substring(0, slash + 1) + "." + f.substring(slash + 1) + ".crc",
-        recursive = false)
-      GraftFs.delete(f, recursive = false)
+  def compactRetaining(retainSince: Long, numBuckets: Int = 8): Unit =
+    rewrite(numBuckets) { all =>
+      resolve(all.filter(col("ts") <= retainSince))
+        .unionByName(all.filter(col("ts") > retainSince), allowMissingColumns = true)
     }
-    // prune commit markers + the directory itself when no append raced
-    // in — but ONLY the markers, never a data file written concurrently
-    if (GraftFs.exists(logDir) && listLogFiles().isEmpty) {
-      GraftFs.list(logDir).filter(e => !e.isDir &&
-        (e.name.startsWith("_") || e.name.startsWith(".")))
-        .foreach(e => GraftFs.delete(e.path, recursive = false))
-      // no-op (returns false) if a racing put re-created content
-      GraftFs.delete(logDir, recursive = false)
-    }
-    // retire generation N-1 (drained: it predates every scan planned
-    // since the previous pointer flip)
-    val retired = newGen - 2
-    if (retired >= 0) {
-      spark.sql(s"DROP TABLE IF EXISTS ${tableNameFor(retired)}")
-      GraftFs.delete(s"$path/compacted/gen-$retired", recursive = true)
-    }
-  }
 
   // --- CDC consumer registry (the operational half of the retention
   // horizon: compaction picks its horizon from the slowest registered
@@ -541,16 +395,15 @@ class KVTable(val spark: SparkSession, val path: String) {
     * HBaseTable.scala:316-344): compaction on a background thread so the
     * writer can continue appending to the log while the heavy rewrite
     * runs. Spark jobs are thread-safe per session; the returned future
-    * completes when the bucketed table is swapped in.
+    * completes when the new generation is swapped in.
     *
     * Concurrency contract: concurrent APPENDS are safe (the rewrite
     * deletes only its snapshot's log files; racing part files survive),
     * and concurrent READS are safe too — compaction writes a fresh
     * generation directory and flips a pointer, and the previous
-    * generation (files + catalog entry) survives until the NEXT
-    * compaction, so a scan planned before the swap keeps reading valid
-    * files (HBase's scanners-hold-HFiles semantics; see
-    * [[writeCompacted]]). */
+    * generation's files survive until the NEXT compaction, so a scan
+    * planned before the swap keeps reading valid files (HBase's
+    * scanners-hold-HFiles semantics; see [[compact]]). */
   def compactAsync(numBuckets: Int = 8)(
       implicit ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.global)
@@ -600,20 +453,11 @@ class KVTable(val spark: SparkSession, val path: String) {
 
   /** Compaction that also physically expires TTL'd cells (the
     * reference's major-compaction TTL semantics). */
-  def compactAt(nowTs: Long, numBuckets: Int = 8): Unit = {
-    val snapshot = listLogFiles()
-    writeCompacted(KVTable.resolve(ttlFilter(cellsFrom(snapshot), nowTs)),
-      numBuckets, snapshot)
-  }
+  def compactAt(nowTs: Long, numBuckets: Int = 8): Unit =
+    rewrite(numBuckets)(all => resolve(ttlFilter(all, nowTs)))
 
   /** Drop all state (log + every compacted generation + files). */
-  def drop(): Unit = {
-    graft.sources.kv.GraftFs.list(s"$path/compacted")
-      .filter(e => e.isDir && e.name.startsWith("gen-"))
-      .foreach(e => spark.sql(s"DROP TABLE IF EXISTS " +
-        tableNameFor(e.name.stripPrefix("gen-").toInt)))
-    KVTable.deleteRecursively(path)
-  }
+  def drop(): Unit = KVTable.deleteRecursively(path)
 }
 
 /** Per-family storage properties (HBaseAdminUtils.scala:86-103 parity).

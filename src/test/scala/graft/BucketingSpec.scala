@@ -62,7 +62,7 @@ class BucketingSpec extends AnyFunSuite with SparkSpec {
       lit(1L).as("ts")))
     a.compact()
     b.compact()
-    // the compacted bucketed scan reports hashpartitioning(key): the
+    // the compacted scan reports bucket(8, key) partitioning: the
     // resolve windows (partitioned by key and its prefixes) AND the
     // cross-table key join are all satisfied by it — no Exchange anywhere
     val joined = a.resolved().select($"key", $"value".as("status"))
@@ -72,7 +72,8 @@ class BucketingSpec extends AnyFunSuite with SparkSpec {
     val plan = joined.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning"),
       s"compacted KV join still shuffles:\n${plan.take(3000)}")
-    assert(plan.contains("Bucketed: true"), plan.take(2000))
+    assert(plan.linesIterator.exists(l =>
+      l.contains("BatchScan graft-kv") && l.contains("buckets=8")), plan.take(2000))
     assert(joined.count() === base.count())
   }
 }

@@ -297,6 +297,27 @@ class GraphOpsSpec extends AnyFunSuite with SparkSpec {
     } finally spark.conf.unset("spark.graft.debug.validate")
   }
 
+  test("symmetric=true spot-check samples every partition: reverse-less " +
+    "edges only in the last partition still fail pageRank and kcoreFixpoint") {
+    // 8 partitions of 2500 ids: ids below 17500 pair up both ways
+    // (id <-> id xor 1); every edge of the last partition lacks its
+    // reverse, so a head-of-input sample would see a symmetric graph
+    val edges = spark.range(0, 20000, 1, 8).select($"id".as("src"),
+      when($"id" < 17500, $"id".bitwiseXOR(1)).otherwise($"id" + 100000)
+        .as("dst"))
+    spark.conf.set("spark.graft.debug.validate", "true")
+    try {
+      val pr = intercept[IllegalArgumentException] {
+        GraphOps.pageRank(edges, iters = 1, symmetric = true).count()
+      }
+      assert(pr.getMessage.contains("missing reverse edges"))
+      val kc = intercept[IllegalArgumentException] {
+        GraphOps.kcoreFixpoint(edges, 2, symmetric = true).count()
+      }
+      assert(kc.getMessage.contains("missing reverse edges"))
+    } finally spark.conf.unset("spark.graft.debug.validate")
+  }
+
   test("kcoreFixpoint: two runs on one session from two threads over " +
     "the same input each match their sequential run") {
     import scala.concurrent.{Await, Future}

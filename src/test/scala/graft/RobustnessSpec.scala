@@ -16,9 +16,9 @@ class RobustnessSpec extends AnyFunSuite with SparkSpec {
     t.compact()
     val q = t.cells.filter($"key" >= 100L && $"key" < 200L)
     val scan = q.queryExecution.sparkPlan.collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
     }.get
-    val pushed = scan.metadata.getOrElse("PushedFilters", "")
+    val pushed = scan.scan.description()
     assert(pushed.contains("GreaterThanOrEqual(key,100)") &&
       pushed.contains("LessThan(key,200)"), pushed)
     assert(q.count() ===
