@@ -414,8 +414,15 @@ class KVColumnarPartitionReader(p: KVBucketPartition, required: StructType,
       if (vec == null) {
         if (fileIdx >= files.length) return false
         inLog = fileIdx >= p.compactedFiles.length
-        vec = openVectorized(files(fileIdx), lens(fileIdx),
-          if (inLog) logCtx else compCtx)
+        val ctx = if (inLog) logCtx else compCtx
+        // a log file a compaction retired after this scan was planned
+        // is kept, moved, until the next compaction (KVGeneration.commit)
+        vec = try openVectorized(files(fileIdx), lens(fileIdx), ctx)
+          catch {
+            case e: java.io.FileNotFoundException if inLog =>
+              openVectorized(KVGeneration.retiredLogFile(files(fileIdx))
+                .getOrElse(throw e), lens(fileIdx), ctx)
+          }
         fileIdx += 1
       }
       if (!vec.nextKeyValue()) { vec.close(); vec = null }

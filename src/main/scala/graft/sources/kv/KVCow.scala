@@ -56,12 +56,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    fails the job loudly instead of corrupting the layout.
   *  - Two-phase commit: tasks write into a dot-prefixed inflight dir
   *    (invisible to readers); job commit is the generation commit
-  *    compaction uses too ([[KVGeneration.commit]]): move the files into
-  *    `compacted/gen-<N+1>`, carry untouched buckets forward, then
-  *    completeness marker → pointer flip → snapshot log-file retirement
-  *    → N-1 pruning. Appends racing the rewrite survive exactly as they
-  *    do under compaction — only the scan snapshot's log files are
-  *    retired.
+  *    compaction uses too ([[KVGeneration.commit]]): refuse if the
+  *    pointer moved past the scan snapshot's generation N, move the
+  *    files into `compacted/gen-<N+1>`, carry untouched buckets
+  *    forward, then completeness marker → pointer flip → snapshot
+  *    log-file retirement → N-1 pruning. Appends racing the rewrite
+  *    survive exactly as they do under compaction — only the scan
+  *    snapshot's log files are retired.
   */
 class KVCowBuilder(path: String, info: RowLevelOperationInfo)
     extends RowLevelOperationBuilder {
@@ -190,7 +191,8 @@ class KVCowWrite(path: String, layout: KVLayout, info: LogicalWriteInfo,
   private val declaredWidth = declared.length
 
   private val numBuckets = if (layout.bucketed) layout.numBuckets else 8
-  private val inflight = KVGeneration.inflightDir(path, info.queryId())
+  private val inflight =
+    KVGeneration.inflightDir(path, layout.generation, info.queryId())
 
   override def toBatch: BatchWrite = this
   override def description(): String = s"graft-kv-cow-write `$path`"
@@ -217,8 +219,7 @@ class KVCowWrite(path: String, layout: KVLayout, info: LogicalWriteInfo,
     * crashed earlier attempt's is harmless: latest-wins resolution is
     * idempotent over identical versions.) */
   override def commit(messages: Array[WriterCommitMessage]): Unit =
-    KVGeneration.commit(path, numBuckets, inflight, messages.toSeq,
-        layout.logFiles) { genDir =>
+    KVGeneration.commit(layout, numBuckets, inflight, messages.toSeq) { genDir =>
       op.groupBuckets match {
         case Some(touched) if layout.bucketed =>
           val untouched = (0 until numBuckets).toSet -- touched

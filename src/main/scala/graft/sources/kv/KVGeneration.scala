@@ -1,55 +1,133 @@
 package graft.sources.kv
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.write.WriterCommitMessage
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.sources.{Filter, LessThanOrEqual}
 
 /** The one way a compacted generation comes into being — the paper's
   * bulk path: sorted per-region files from one writer, then adopted
   * atomically (`repartitionAndSortWithinPartitions(RegionPartitioner)`
-  * then `LoadIncrementalHFiles`, HBaseTable.scala:234-352). Compaction
-  * ([[write]]) and the copy-on-write row-level commit ([[KVCowWrite]])
-  * both stage one file per bucket through [[KVCowDataWriter]] into a
-  * dot-prefixed `compacted/.inflight-<id>` directory, which no reader
-  * lists ([[GraftFs.dataFiles]] skips hidden entries), and adopt it
+  * then `LoadIncrementalHFiles`, HBaseTable.scala:234-352). Every
+  * generation file is staged, one file per bucket, through
+  * [[KVCowDataWriter]], by one of three writers:
+  *  - [[writeResolved]], the steady-state compaction and restore: the
+  *    snapshot is already bucketed at the target count, so each task
+  *    resolves one bucket through the [[KVResolveKernel]] and rewrites
+  *    it — one stage, no shuffle, the paper's region-local compaction
+  *    where no data moves between regions;
+  *  - [[write]], the shuffle path, for every rewrite that is not that:
+  *    re-bucketing, the first compaction of a log-only table, and the
+  *    rewrites that keep or drop rows a plain resolve would not (TTL
+  *    expiry, a CDC retention horizon);
+  *  - the copy-on-write row-level commit ([[KVCowWrite]]).
+  * Each stages into a dot-prefixed `compacted/.inflight-g<N>-<id>`
+  * directory, N being the generation its snapshot read, which no reader
+  * lists ([[GraftFs.dataFiles]] skips hidden entries), and adopts it
   * through [[commit]]. A generation is a directory behind the pointer,
   * nothing else: there is no catalog entry to create, re-create or
   * drop, and a KV table is addressed by its path alone.
   */
 object KVGeneration {
-  def inflightDir(path: String, id: String): String =
-    s"$path/compacted/.inflight-$id"
+  /** Staging directory of a writer whose snapshot read generation
+    * `baseGen` (-1: never compacted). The tag lets a later commit
+    * sweep the staging dirs that can no longer commit. */
+  def inflightDir(path: String, baseGen: Int, id: String): String =
+    s"$path/compacted/.inflight-g$baseGen-$id"
+
+  private val Staged = """\.inflight-g(-?\d+)-.*""".r
+  private val Retired = """\.retired-g(\d+)""".r
+
+  /** Where log file `f`, listed by a scan planned before a commit
+    * retired it, is kept until the next commit: a reader that finds `f`
+    * gone opens this instead (None once it is deleted too). */
+  private[kv] def retiredLogFile(f: String): Option[String] = {
+    val slash = f.lastIndexOf('/')
+    GraftFs.list(f.substring(0, slash))
+      .collect { case e if e.isDir && Retired.matches(e.name) =>
+        s"${e.path}/${f.substring(slash + 1)}" }
+      .find(GraftFs.exists)
+  }
+
+  private def newInflight(snap: KVLayout): String =
+    inflightDir(snap.path, snap.generation, java.util.UUID.randomUUID.toString)
 
   /** Write `cells` (the six cell columns, in `CELL_SCHEMA` order) as
-    * the next generation of `path` and publish it, retiring
-    * `snapshotLogFiles`. Rows are clustered into `numBuckets`
-    * partitions by `repartition(n, key)` — Spark's hash placement
-    * `pmod(murmur3(key), n)`, i.e. [[GraftBucket]], so partition id ==
-    * bucket id — and sorted by (key, family, qualifier) inside each;
-    * the writer verifies every row's bucket. The write runs as one SQL
-    * execution, so listeners attribute its jobs to it. */
-  def write(cells: DataFrame, path: String, numBuckets: Int,
-            snapshotLogFiles: Seq[String]): Unit = {
-    val inflight = inflightDir(path, java.util.UUID.randomUUID.toString)
+    * the next generation over `snap` and publish it. Rows are clustered
+    * into `numBuckets` partitions by `repartition(n, key)` — Spark's
+    * hash placement `pmod(murmur3(key), n)`, i.e. [[GraftBucket]], so
+    * partition id == bucket id — and sorted by (key, family, qualifier)
+    * inside each; the writer verifies every row's bucket. The write
+    * runs as one SQL execution, so listeners attribute its jobs to it. */
+  def write(cells: DataFrame, snap: KVLayout, numBuckets: Int): Unit = {
+    val inflight = newInflight(snap)
     val qe = cells.repartition(numBuckets, col("key"))
       .sortWithinPartitions("key", "family", "qualifier").queryExecution
     val factory = new KVCowWriterFactory(inflight, numBuckets,
       KVBatchTable.CELL_SCHEMA.size)
     val files = try SQLExecution.withNewExecutionId(qe,
-        Some(s"graft-kv generation write `$path`")) {
+        Some(s"graft-kv generation write `${snap.path}`")) {
       qe.toRdd.mapPartitionsWithIndex { (bucket, rows) =>
         val w = factory.createWriter(bucket, TaskContext.get().taskAttemptId())
         try { rows.foreach(w.write); Iterator(w.commit()) }
         catch { case e: Throwable => w.abort(); throw e }
       }.collect()
     } catch { case e: Throwable => GraftFs.delete(inflight, recursive = true); throw e }
-    commit(path, numBuckets, inflight, files.toSeq, snapshotLogFiles)(_ => ())
+    commit(snap, numBuckets, inflight, files.toSeq)(_ => ())
   }
 
-  /** Adopt a staged generation and publish it:
+  /** Write the latest-wins view of bucketed snapshot `snap` at ts
+    * cutoff `cutoff` (`Long.MaxValue`: the live state) as its next
+    * generation, at the same bucket count, and publish it. One job of
+    * one stage: task b takes bucket b's partition of the SAME snapshot
+    * (its compacted files plus the bucket-gated log), resolves it
+    * through [[KVResolveKernel]] — `ts <= cutoff` pruning row groups,
+    * as the resolved scan's pushed filters do — and writes the live
+    * cells sorted by (key, family, qualifier) as bucket b's file. Nothing
+    * is exchanged: a resolve group lives in one bucket. The job runs on
+    * the caller's thread, under its local properties, with a job
+    * description naming the table. */
+  def writeResolved(snap: KVLayout, cutoff: Long): Unit = {
+    require(snap.bucketed, s"${snap.path} has no bucketed generation to rewrite")
+    val sc = SparkSession.active.sparkContext
+    val inflight = newInflight(snap)
+    val factory = new KVCowWriterFactory(inflight, snap.numBuckets,
+      KVBatchTable.CELL_SCHEMA.size)
+    val filters: Array[Filter] =
+      if (cutoff == Long.MaxValue) Array.empty else Array(LessThanOrEqual("ts", cutoff))
+    val hconf = GraftFs.readerConf()
+    val parts = snap.bucketPartitions()
+    val description = "spark.job.description"
+    val callerDescription = sc.getLocalProperty(description)
+    sc.setLocalProperty(description,
+      s"graft-kv bucket-local generation write `${snap.path}`")
+    val files = try sc.parallelize(parts.toSeq, parts.length).map { p =>
+      val k = KVResolveKernel.run(p, Array(cutoff), filters, hconf)
+      val w = factory.createWriter(p.bucket, TaskContext.get().taskAttemptId())
+      try {
+        k.liveSorted(0).foreach { s =>
+          w.write(new GenericInternalRow(Array[Any](k.key(s), k.family(s),
+            k.qualifier(s), k.value(s, 0), java.lang.Long.valueOf(k.ts(s, 0)), null)))
+        }
+        w.commit()
+      } catch { case e: Throwable => w.abort(); throw e }
+    }.collect()
+    catch { case e: Throwable => GraftFs.delete(inflight, recursive = true); throw e }
+    finally sc.setLocalProperty(description, callerDescription)
+    commit(snap, snap.numBuckets, inflight, files.toSeq)(_ => ())
+  }
+
+  /** Adopt a staged generation as the successor of the generation
+    * `snap` read, and publish it:
     *
+    *  0. refuse unless the pointer still names `snap.generation`: a
+    *     writer that read gen-N and publishes N+1 after another commit
+    *     already published N+1 (a CoW MERGE, say) would publish its
+    *     stale contents over that commit and lose it. The staging dir
+    *     is deleted and a `ConcurrentModificationException` thrown;
     *  1. wipe a stale unpublished `gen-<N+1>` — a crashed earlier
     *     attempt that moved some files and died before the pointer
     *     flip; a retry computes the same N+1, and moving fresh files
@@ -62,17 +140,30 @@ object KVGeneration {
     *     it);
     *  3. `carryForward(genDir)` — the CoW group-filtered rewrite links
     *     its untouched buckets in here;
-    *  4. completeness marker → atomic pointer flip → retirement of the
-    *     snapshot's log files → pruning of the drained N-1 generation.
+    *  4. completeness marker → atomic pointer flip → sweep of every
+    *     staging dir tagged with a generation at or below N (by step 0
+    *     none of them can ever commit: crashed or doomed writers) →
+    *     retirement of the snapshot's log files into
+    *     `log/.retired-g<N+1>` (readable by the scans planned before
+    *     the flip, deleted at the next commit) → pruning of the drained
+    *     N-1 generation.
     *
     * A crash at any point leaves a readable table (old pointer, or
     * marker-led recovery). Appends racing the rewrite live as other part
     * files in `log/` and survive: only the SNAPSHOT's files are
     * deleted. */
-  def commit(path: String, numBuckets: Int, inflight: String,
-             messages: Seq[WriterCommitMessage], snapshotLogFiles: Seq[String])(
+  def commit(snap: KVLayout, numBuckets: Int, inflight: String,
+             messages: Seq[WriterCommitMessage])(
              carryForward: String => Unit): Unit = {
-    val newGen = KVPointer.read(path).map(_._1 + 1).getOrElse(0)
+    val path = snap.path
+    val live = KVPointer.read(path).fold(-1)(_._1)
+    if (live != snap.generation) {
+      GraftFs.delete(inflight, recursive = true)
+      throw new java.util.ConcurrentModificationException(
+        s"$path: a rewrite of generation ${snap.generation} cannot commit, " +
+          s"the pointer already names generation $live")
+    }
+    val newGen = snap.generation + 1
     val genDir = s"$path/compacted/gen-$newGen"
     if (GraftFs.list(genDir).nonEmpty) GraftFs.delete(genDir, recursive = true)
     GraftFs.mkdirs(genDir)
@@ -85,24 +176,45 @@ object KVGeneration {
     carryForward(genDir)
     KVPointer.writeGenMeta(path, newGen, numBuckets)
     KVPointer.publish(path, newGen, numBuckets)
-    // delete ONLY the snapshot's files (plus their checksum siblings) —
-    // never the directory
-    snapshotLogFiles.foreach { f =>
-      val slash = f.lastIndexOf('/')
-      GraftFs.delete(
-        f.substring(0, slash + 1) + "." + f.substring(slash + 1) + ".crc",
-        recursive = false)
-      GraftFs.delete(f, recursive = false)
+    GraftFs.list(s"$path/compacted").foreach { e =>
+      e.name match {
+        case Staged(g) if e.isDir && g.toInt < newGen =>
+          GraftFs.delete(e.path, recursive = true)
+        case _ => ()
+      }
     }
-    // prune commit markers + the directory itself when no append raced
-    // in — but ONLY the markers, never a data file written concurrently
+    // retire ONLY the snapshot's log files, never a racing append's:
+    // each moves (one rename) into the hidden `log/.retired-g<N+1>`,
+    // out of every listing taken from now on, while a scan planned
+    // before the flip still finds it there ([[retiredLogFile]]). The
+    // files retired by earlier flips have drained, as gen N-1 has.
     val logDir = s"$path/log"
+    GraftFs.list(logDir).foreach { e =>
+      e.name match {
+        case Retired(g) if e.isDir && g.toInt < newGen =>
+          GraftFs.delete(e.path, recursive = true)
+        case _ => ()
+      }
+    }
+    if (snap.logFiles.nonEmpty) {
+      val retired = s"$logDir/.retired-g$newGen"
+      GraftFs.mkdirs(retired)
+      snap.logFiles.foreach { f =>
+        val slash = f.lastIndexOf('/')
+        GraftFs.delete(
+          f.substring(0, slash + 1) + "." + f.substring(slash + 1) + ".crc",
+          recursive = false)
+        if (GraftFs.exists(f)) GraftFs.move(f, s"$retired/${f.substring(slash + 1)}")
+      }
+    }
+    // prune commit markers when no append raced in — but ONLY the
+    // markers, never a data file written concurrently — and the
+    // directory itself once nothing is left in it
     if (GraftFs.exists(logDir) && GraftFs.dataFiles(logDir).isEmpty) {
       GraftFs.list(logDir).filter(e => !e.isDir &&
         (e.name.startsWith("_") || e.name.startsWith(".")))
         .foreach(e => GraftFs.delete(e.path, recursive = false))
-      // no-op (returns false) if a racing put re-created content
-      GraftFs.delete(logDir, recursive = false)
+      if (GraftFs.list(logDir).isEmpty) GraftFs.delete(logDir, recursive = false)
     }
     // retire generation N-1 (drained: it predates every scan planned
     // since the previous pointer flip)

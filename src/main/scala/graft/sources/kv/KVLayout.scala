@@ -30,6 +30,11 @@ case class KVLayout(path: String) {
     * through the swap. */
   private val current: Option[(Int, Int)] = KVPointer.read(path)
 
+  /** Generation this snapshot read, or -1 if never compacted. A writer
+    * that rewrites the snapshot publishes `generation + 1`, and only
+    * while the pointer still names `generation` ([[KVGeneration.commit]]). */
+  val generation: Int = current.map(_._1).getOrElse(-1)
+
   /** Bucket count of the compacted state, or -1 if never compacted. */
   val numBuckets: Int = current.map(_._2).getOrElse(-1)
 

@@ -8,16 +8,18 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Bucket-local latest-wins resolve at one or more ts cutoffs — the
   * executor-side copy of `KVTable.resolve` (write/KVStore.scala) that
-  * both the resolved scan ([[KVResolvedPartitionReader]], one cutoff
-  * `Long.MaxValue`) and the CDC replay ([[KVCdcPartitionReader]]: the
-  * stream window's two cutoffs, or `KVTable.changeLog`'s n) run on. Per (key, family, qualifier) and per
-  * cutoff the max-(ts, value) non-tombstone cell at or below the cutoff
-  * wins; row / family / cell tombstones at or below the cutoff mask
-  * winners at or below their ts; null-ts rows never take part. A row
-  * feeds every cutoff at or above its ts, so one pass over the bucket's
-  * cells builds every cutoff's state. The two resolve paths (this
-  * kernel and the DataFrame reference `KVTable.resolve`) must agree
-  * cell-for-cell.
+  * the resolved scan ([[KVResolvedPartitionReader]], one cutoff
+  * `Long.MaxValue`), the CDC replay ([[KVCdcPartitionReader]]: the
+  * stream window's two cutoffs, or `KVTable.changeLog`'s n) and the
+  * bucket-local compaction ([[KVGeneration.writeResolved]]: `compact`
+  * at `Long.MaxValue`, `restoreAsOf(v)` at `v`) run on. Per (key,
+  * family, qualifier) and per cutoff the max-(ts, value) non-tombstone
+  * cell at or below the cutoff wins; row / family / cell tombstones at
+  * or below the cutoff mask winners at or below their ts; null-ts rows
+  * never take part. A row feeds every cutoff at or above its ts, so one
+  * pass over the bucket's cells builds every cutoff's state. The two
+  * resolve paths (this kernel and the DataFrame reference
+  * `KVTable.resolve`) must agree cell-for-cell.
   *
   * CPU shape: batches come straight from [[KVColumnarPartitionReader]];
   * family/qualifier strings are interned to dense ids once per distinct
@@ -215,6 +217,34 @@ final class KVResolveKernel(cuts: Array[Long]) {
     val del = math.max(rowDel.tsOf(kn, k, 0L, c),
       math.max(famDel.tsOf(kn, k, cell >>> 32, c), cellDel.tsOf(kn, k, cell, c)))
     winners.ts(s * nc + c) > del
+  }
+
+  /** The cells live at cutoff `c`, ordered by (key, family, qualifier)
+    * ascending with NULLs first and strings in UTF-8 binary order —
+    * the order `sortWithinPartitions("key", "family", "qualifier")`
+    * gives Spark strings — so a file written in it is key-sorted for
+    * row-group range pruning. Names compare by their rank among the
+    * interned names, so the sort itself touches no string. */
+  def liveSorted(c: Int): Array[Int] = {
+    val rank = new Array[Int](names.size) // id 0 (NULL) keeps rank 0
+    (1 until names.size).sortWith((a, b) => names(a).compareTo(names(b)) < 0)
+      .zipWithIndex.foreach { case (id, r) => rank(id) = r + 1 }
+    def fam(s: Int) = rank((winners.kC(s) >>> 32).toInt)
+    def qual(s: Int) = rank(winners.kC(s).toInt)
+    cells.filter(isLive(_, c)).toArray.sorted(new Ordering[Int] {
+      def compare(a: Int, b: Int): Int = {
+        val an = winners.kNull(a); val bn = winners.kNull(b)
+        if (an != bn) (if (an) -1 else 1)
+        else {
+          val byKey = java.lang.Long.compare(winners.kL(a), winners.kL(b))
+          if (byKey != 0) byKey
+          else {
+            val byFam = Integer.compare(fam(a), fam(b))
+            if (byFam != 0) byFam else Integer.compare(qual(a), qual(b))
+          }
+        }
+      }
+    })
   }
 
   def key(s: Int): java.lang.Long =

@@ -17,10 +17,15 @@ import graft.sources.kv.{KVGeneration, KVLayout, KVSource}
   *    with `setMaxVersions(1)` semantics (HBaseRDD.scala:40) and HBase
   *    delete semantics: a tombstone masks every cell at or below its ts
   *    (`tomb` = 'row' | 'family' | 'cell', HBaseTable.scala:181-212);
-  *  - `compact()` is the bulk path (HBaseTable.scala:234-352): resolve,
-  *    hash-partition into buckets + sort by key (repartition +
-  *    sortWithinPartitions ≙ the HFile shuffle,
-  *    HBaseTable.scala:219-242), write a new generation, swap.
+  *  - `compact()` writes the resolved state as a new bucketed,
+  *    key-sorted generation and swaps it in. On a table already
+  *    bucketed at the target count it is region-local, like the
+  *    store's own compactions: each bucket is resolved and rewritten in
+  *    its own task, with no shuffle. Otherwise (re-bucketing, a
+  *    log-only table's first compaction) it is the bulk path
+  *    (HBaseTable.scala:234-352): resolve, hash-partition into buckets
+  *    + sort by key (repartition + sortWithinPartitions ≙ the HFile
+  *    shuffle, HBaseTable.scala:219-242), write, swap.
   *
   * A table is its path: the layout under it ([[KVLayout]]) is the whole
   * state, and every read and write addresses it by path alone — no
@@ -201,23 +206,46 @@ class KVTable(val spark: SparkSession, val path: String) {
       .option("cutoffs", cutoffs.mkString(",")).load()
 
   /** Compaction's read side: exactly one [[KVLayout]] snapshot's
-    * compacted and log files, read as plain parquet. Only these feed the
-    * rewrite, and only these log files are retired after the swap: a
-    * put() landing while compaction runs adds NEW part files, which
-    * survive into the next log untouched (no lost-write race with
-    * [[compactAsync]]). */
-  private def rewrite(numBuckets: Int)(newCells: DataFrame => DataFrame): Unit = {
+    * compacted and log files. Only these feed the rewrite, and only
+    * these log files are retired after the swap: a put() landing while
+    * compaction runs adds NEW part files, which survive into the next
+    * log untouched (no lost-write race with [[compactAsync]]).
+    *
+    * `asOf` is set when the new generation is exactly the resolved view
+    * at that ts cutoff ([[compact]], [[restoreAsOf]]). Then a snapshot
+    * already bucketed at `numBuckets` is rewritten bucket-locally
+    * ([[KVGeneration.writeResolved]]: one stage, no shuffle), since each
+    * resolve group already sits in its output bucket. Every other
+    * rewrite reads the files as plain parquet and shuffles
+    * ([[KVGeneration.write]]): re-bucketing moves rows between buckets;
+    * a log-only snapshot has no buckets to work in; and `newCells` of
+    * [[compactAt]] (TTL expiry before the resolve) and
+    * [[compactRetaining]] (raw rows above the horizon) is not a plain
+    * resolve. */
+  private def rewrite(numBuckets: Int, asOf: Option[Long] = None)(
+      newCells: DataFrame => DataFrame): Unit = {
     val snap = KVLayout(path)
-    val files = snap.compactedFiles ++ snap.logFiles
-    val all =
-      if (files.isEmpty) emptyCells
-      else spark.read.schema(CELL_SCHEMA_DDL).parquet(files: _*)
-    KVGeneration.write(conform(newCells(all)), path, numBuckets, snap.logFiles)
+    if (asOf.isDefined && snap.numBuckets == numBuckets)
+      KVGeneration.writeResolved(snap, asOf.get)
+    else {
+      val files = snap.compactedFiles ++ snap.logFiles
+      val all =
+        if (files.isEmpty) emptyCells
+        else spark.read.schema(CELL_SCHEMA_DDL).parquet(files: _*)
+      KVGeneration.write(conform(newCells(all)), snap, numBuckets)
+    }
   }
 
-  /** M5-M7 bulk path: resolve + bucketed, key-sorted rewrite as a new
-    * generation + swap ([[KVGeneration.write]]). One hash shuffle on the
-    * key, sorted output — the HFile-pipeline shape — and a layout
+  /** M5-M7: resolve + bucketed, key-sorted rewrite as a new
+    * generation + swap. On a table already bucketed at `numBuckets`
+    * (every compaction after the first at a fixed count) it runs one
+    * stage with no shuffle: each task resolves one bucket of the
+    * snapshot through the resolve kernel and writes that bucket's
+    * sorted file ([[KVGeneration.writeResolved]]) — the store's
+    * region-local compaction. Otherwise — a log-only table, or a
+    * change of bucket count — it is the bulk path
+    * ([[KVGeneration.write]]): one hash shuffle on the key, sorted
+    * output, the HFile-pipeline shape. Either way the output is a layout
     * Catalyst can SEE: the scan reports bucket(numBuckets, key), so
     * every downstream key join / groupBy / resolve-window plans with
     * zero Exchange (the reference's RegionPartitioner advertisement,
@@ -227,10 +255,12 @@ class KVTable(val spark: SparkSession, val path: String) {
     * Each compaction writes a FRESH directory (`compacted/gen-<N+1>`)
     * and then flips the pointer file: the state is written exactly
     * once, and readers planned against gen-N keep working through the
-    * swap — its files survive (the HBase scanners-hold-HFiles
-    * analogue). Generation N-1 is pruned only at the NEXT compaction,
-    * giving in-flight scans one full compaction interval to drain. */
-  def compact(numBuckets: Int = 8): Unit = rewrite(numBuckets)(resolve)
+    * swap — its files, and the log files the swap retired, survive
+    * (the HBase scanners-hold-HFiles analogue). Generation N-1 and
+    * those log files are deleted only at the NEXT compaction, giving
+    * in-flight scans one full compaction interval to drain. */
+  def compact(numBuckets: Int = 8): Unit =
+    rewrite(numBuckets, asOf = Some(Long.MaxValue))(resolve)
 
   /** M22: RESTORE — roll the live state back to the `VERSION AS OF v`
     * view by compacting THAT view into a new generation (the lakehouse
@@ -239,9 +269,12 @@ class KVTable(val spark: SparkSession, val path: String) {
     * because the restore is itself just a new generation, a wrong
     * restore is re-restorable while the previous generation survives.
     * Subject to [[resolvedAsOf]]'s retention rule: a target older than
-    * the last compaction restores what the store still retains. */
+    * the last compaction restores what the store still retains. Same
+    * two plans as [[compact]]: at an unchanged bucket count each bucket
+    * is resolved at cutoff `v` in its own task (`ts <= v` pruning row
+    * groups) with no shuffle; otherwise the shuffle path. */
   def restoreAsOf(v: Long, numBuckets: Int = 8): Unit =
-    rewrite(numBuckets)(all => resolve(all.filter(col("ts") <= v)))
+    rewrite(numBuckets, asOf = Some(v))(all => resolve(all.filter(col("ts") <= v)))
 
   /** M21: ZERO-COPY shallow clone (the lakehouse CLONE contract): the
     * clone is a NEW table whose gen-0 files are hard links to this
@@ -287,7 +320,9 @@ class KVTable(val spark: SparkSession, val path: String) {
     * consumer's committed cutoff, exactly like a changelog/CDF
     * retention window (or HBase's KEEP_DELETED_CELLS + TTL pair).
     * Cost: the compacted files carry the horizon's churn extra rows —
-    * O(churn since horizon), the price of the replayability. */
+    * O(churn since horizon), the price of the replayability. Always the
+    * shuffle path: the raw rows it keeps are not a resolved view, which
+    * is all the bucket-local rewrite emits. */
   def compactRetaining(retainSince: Long, numBuckets: Int = 8): Unit =
     rewrite(numBuckets) { all =>
       resolve(all.filter(col("ts") <= retainSince))
@@ -398,12 +433,13 @@ class KVTable(val spark: SparkSession, val path: String) {
     * completes when the new generation is swapped in.
     *
     * Concurrency contract: concurrent APPENDS are safe (the rewrite
-    * deletes only its snapshot's log files; racing part files survive),
+    * retires only its snapshot's log files; racing part files survive),
     * and concurrent READS are safe too — compaction writes a fresh
     * generation directory and flips a pointer, and the previous
-    * generation's files survive until the NEXT compaction, so a scan
-    * planned before the swap keeps reading valid files (HBase's
-    * scanners-hold-HFiles semantics; see [[compact]]). */
+    * generation's files and the log files the swap retired survive
+    * until the NEXT compaction, so a scan planned before the swap keeps
+    * reading valid files (HBase's scanners-hold-HFiles semantics; see
+    * [[compact]] and [[graft.sources.kv.KVGeneration.commit]]). */
   def compactAsync(numBuckets: Int = 8)(
       implicit ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.global)
@@ -452,7 +488,9 @@ class KVTable(val spark: SparkSession, val path: String) {
   def resolvedAt(nowTs: Long): DataFrame = resolve(ttlFilter(cells, nowTs))
 
   /** Compaction that also physically expires TTL'd cells (the
-    * reference's major-compaction TTL semantics). */
+    * reference's major-compaction TTL semantics). Always the shuffle
+    * path: the TTL filter runs before the resolve, which the
+    * bucket-local rewrite does not expose. */
   def compactAt(nowTs: Long, numBuckets: Int = 8): Unit =
     rewrite(numBuckets)(all => resolve(ttlFilter(all, nowTs)))
 

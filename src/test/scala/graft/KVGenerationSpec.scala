@@ -1,11 +1,19 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.GraftTestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.kv.{KVLayout, KVSource}
+import graft.sources.kv.{GraftFs, KVGeneration, KVLayout, KVResolvedScan, KVSource}
 import graft.write.KVTable
 
 /** A KV table is its path: generations are written by one staged
@@ -21,6 +29,55 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
 
   private def state(t: KVTable): Set[(Long, String)] =
     t.resolved().select($"key", $"value").as[(Long, String)].collect().toSet
+
+  /** The Spark jobs one call ran on this thread: their descriptions,
+    * their distinct stages, and the shuffle bytes those stages wrote.
+    * Jobs are matched by a local property set around `body`, which a
+    * job inherits only when it is submitted from this thread under the
+    * caller's local properties. */
+  private case class Shape(jobs: Seq[String], stages: Int, shuffleBytes: Long)
+
+  private def shape(body: => Unit): Shape = {
+    val sc = spark.sparkContext
+    val prop = "graft.test.shape"
+    val tag = java.util.UUID.randomUUID.toString
+    val jobs = new ConcurrentLinkedQueue[(String, Seq[Int])]()
+    val written = new ConcurrentHashMap[Int, java.lang.Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(prop) == tag)
+          jobs.add((e.properties.getProperty("spark.job.description"), e.stageIds))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        Option(e.stageInfo.taskMetrics).foreach(m => written.put(
+          e.stageInfo.stageId, m.shuffleWriteMetrics.bytesWritten))
+    }
+    GraftTestBus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(prop, tag)
+    try body
+    finally {
+      sc.setLocalProperty(prop, null)
+      GraftTestBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    val stages = jobs.asScala.toSeq.flatMap(_._2).distinct
+    Shape(jobs.asScala.toSeq.map(_._1), stages.size,
+      stages.map(s => Option(written.get(s)).fold(0L)(_.longValue)).sum)
+  }
+
+  private val cellSchema = StructType.fromDDL(KVTable.CELL_SCHEMA_DDL)
+
+  private def putRows(t: KVTable, rows: Row*): Unit =
+    t.put(spark.createDataFrame(rows.asJava, cellSchema))
+
+  private def marks(ids: (Long, String, String)*) =
+    ids.toDF("key", "family", "qualifier")
+
+  private def resolvedRows(t: KVTable): Set[Row] = t.resolved().collect().toSet
+
+  private def stagingDirs(path: String): Set[String] =
+    Option(new java.io.File(s"$path/compacted").list()).toSet.flatten
+      .filter(_.startsWith(".inflight"))
 
   private def shuffles(df: org.apache.spark.sql.DataFrame): Int =
     new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
@@ -95,6 +152,179 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
     assert(stored.length === want.size, "duplicated or extra rows published")
     assert(stored.toSet === want)
     assert(!listed.exists(_.contains(".inflight")), listed.mkString("\n"))
+    t.drop()
+  }
+
+  test("bucket-local compaction: compact and restoreAsOf at an unchanged " +
+    "bucket count run one stage with zero shuffle, write the snapshot's " +
+    "resolved cells key-sorted per file, and keep a put landing after " +
+    "the snapshot; the other rewrites keep their shuffle") {
+    val path = targetPath("graft_kv_test/bucketlocal")
+    val t = KVTable(spark, path, wipe = true)
+    putRows(t, (1L to 40L).flatMap(k => Seq(Row(k, "F", "a", s"a$k", 1L, null),
+      Row(k, "G", "b", s"b$k", 1L, null))) ++ Seq(
+      Row(null, "F", "a", "nullkey", 1L, null),
+      Row(41L, null, null, "nullfq", 1L, null),
+      Row(42L, "F", null, "nullq", 1L, null)): _*)
+    val first = shape(t.compact(numBuckets = 4))
+    assert(first.shuffleBytes > 0, s"a log-only table's first compaction: $first")
+
+    // a log with new versions, NULL coordinates, and row / family / cell
+    // tombstones
+    putRows(t, Row(1L, "F", "a", "a1v2", 2L, null),
+      Row(null, "F", "a", "nullkey2", 2L, null),
+      Row(41L, null, null, "nullfq2", 2L, null),
+      Row(42L, "F", null, "nullq2", 2L, null),
+      Row(43L, "H", "z", "new", 2L, null))
+    t.delete(marks((2L, null, null), (3L, "F", null), (4L, "G", "b")), ts = 3L)
+    val snap = KVLayout(path)
+    assert(snap.numBuckets === 4 && snap.logFiles.nonEmpty)
+    val want = KVTable.resolve(spark.read.schema(KVTable.CELL_SCHEMA_DDL)
+      .parquet(snap.compactedFiles ++ snap.logFiles: _*)).collect().toSet
+
+    val local = shape(t.compact(numBuckets = 4))
+    assert(local.jobs.size === 1 && local.stages === 1 &&
+      local.shuffleBytes === 0L, local.toString)
+    assert(local.jobs.head.contains(path), local.toString)
+    val compacted = KVLayout(path)
+    assert(compacted.generation === snap.generation + 1)
+    assert(compacted.logFiles.isEmpty)
+    val stored = compacted.compactedFiles.flatMap { f =>
+      val rows = spark.read.parquet(f)
+        .select("key", "family", "qualifier", "value", "ts").collect().toSeq
+      val order = rows.map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
+        Option(r.getString(1)), Option(r.getString(2))))
+      assert(order === order.sorted, s"$f is not sorted by (key, family, qualifier)")
+      rows
+    }
+    assert(stored.size === want.size, "duplicated or extra rows published")
+    assert(stored.toSet === want)
+    assert(stored.exists(_.isNullAt(0)) && stored.exists(_.isNullAt(1)))
+
+    putRows(t, Row(5L, "F", "a", "a5v4", 4L, null))
+    t.delete(marks((6L, null, null)), ts = 5L)
+    val asOf3 = t.resolvedAsOf(3L).collect().toSet
+    val restore = shape(t.restoreAsOf(3L, numBuckets = 4))
+    assert(restore.jobs.size === 1 && restore.stages === 1 &&
+      restore.shuffleBytes === 0L, restore.toString)
+    assert(resolvedRows(t) === asOf3)
+
+    putRows(t, Row(7L, "F", "a", "a7v6", 6L, null))
+    val before = KVLayout(path)
+    val wantBefore = resolvedRows(t)
+    putRows(t, Row(8L, "F", "a", "late", 7L, null)) // after the snapshot
+    KVGeneration.writeResolved(before, Long.MaxValue)
+    val left = KVLayout(path).logFiles
+    assert(left.size === 1 && !before.logFiles.contains(left.head), left.toString)
+    assert(spark.read.parquet(left: _*).select("value").as[String].collect()
+      .toSeq === Seq("late"))
+    val withLate = wantBefore.filterNot(r => r.get(0) == 8L && r.get(1) == "F") +
+      Row(8L, "F", "a", "late", 7L)
+    assert(resolvedRows(t) === withLate)
+
+    val rebucket = shape(t.compact(numBuckets = 8))
+    assert(rebucket.shuffleBytes > 0, s"re-bucketing: $rebucket")
+    assert(t.currentGen.map(_._2) === Some(8))
+    putRows(t, Row(9L, "F", "a", "a9v8", 8L, null))
+    val ttl = shape(t.compactAt(100L, numBuckets = 8))
+    assert(ttl.shuffleBytes > 0, s"compactAt: $ttl")
+    putRows(t, Row(10L, "F", "a", "a10v9", 9L, null))
+    val retaining = shape(t.compactRetaining(8L, numBuckets = 8))
+    assert(retaining.shuffleBytes > 0, s"compactRetaining: $retaining")
+    assert(resolvedRows(t) === withLate
+      .filterNot(r => r.get(0) == 9L && r.get(1) == "F" || r.get(0) == 10L && r.get(1) == "F") +
+      Row(9L, "F", "a", "a9v8", 8L) + Row(10L, "F", "a", "a10v9", 9L))
+    t.drop()
+  }
+
+  test("a generation commit over a stale snapshot throws, and the CoW " +
+    "MERGE published since stays visible") {
+    val path = targetPath("graft_kv_test/stalecommit")
+    val t = KVTable(spark, path, wipe = true)
+    t.put(cells((1L to 40L).map(k => k -> s"v$k"), 1L))
+    t.compact(numBuckets = 4) // gen-0, empty log
+    val stale = KVLayout(path)
+    Seq((5L, "m5"), (500L, "m500")).toDF("key", "value")
+      .createOrReplaceTempView("kvgen_stale_updates")
+    spark.conf.set("spark.graft.kv.rowlevel", "cow")
+    try spark.sql(
+      s"""MERGE INTO ${KVSource.sqlName(spark, path)} t USING kvgen_stale_updates u
+         |ON t.key = u.key AND t.family = 'F' AND t.qualifier = 'q'
+         |WHEN MATCHED THEN UPDATE SET value = u.value, ts = 2
+         |WHEN NOT MATCHED THEN
+         |  INSERT (key, family, qualifier, value, ts, tomb)
+         |  VALUES (u.key, 'F', 'q', u.value, 2, null)""".stripMargin)
+    finally spark.conf.unset("spark.graft.kv.rowlevel")
+    assert(t.currentGen.map(_._1) === Some(1), "CoW MERGE published gen-1")
+    val want = (1L to 40L).map(k => k -> s"v$k").toMap
+      .updated(5L, "m5").updated(500L, "m500").toSet
+
+    intercept[java.util.ConcurrentModificationException](
+      KVGeneration.writeResolved(stale, Long.MaxValue))
+    assert(t.currentGen.map(_._1) === Some(1))
+    assert(state(t) === want)
+    assert(stagingDirs(path).isEmpty, stagingDirs(path).toString)
+    t.drop()
+  }
+
+  test("a commit sweeps the staging dirs tagged with a generation at or " +
+    "below its snapshot's, and publishes exactly the resolved rows") {
+    val path = targetPath("graft_kv_test/sweep")
+    val t = KVTable(spark, path, wipe = true)
+    t.put(cells((1L to 50L).map(k => k -> s"a$k"), 1L))
+    t.compact(numBuckets = 4) // gen-0
+    t.put(cells((1L to 50L by 5).map(k => k -> s"b$k"), 2L))
+    val want = state(t)
+    // doomed writers' leftovers (snapshots of gen-0 and of the empty
+    // table) holding a cell file, and a dir of a writer that read gen-1
+    val doomed = Seq(".inflight-g0-crashed", ".inflight-g-1-older")
+    doomed.foreach { d =>
+      cells(Seq(999L -> "stale"), 9L).withColumn("tomb", lit(null).cast("string"))
+        .coalesce(1).write.parquet(s"$path/compacted/$d")
+    }
+    new java.io.File(s"$path/compacted/.inflight-g1-running").mkdirs()
+    assert(stagingDirs(path) === doomed.toSet + ".inflight-g1-running")
+
+    t.compact(numBuckets = 4) // publishes gen-1
+    assert(stagingDirs(path) === Set(".inflight-g1-running"))
+    assert(state(t) === want)
+    val stored = t.cells.select($"key", $"value").as[(Long, String)].collect()
+    assert(stored.length === want.size, "duplicated or extra rows published")
+    assert(stored.toSet === want)
+    t.drop()
+  }
+
+  test("a scan planned before a compaction still reads the log files the " +
+    "compaction retired, until the next compaction deletes them") {
+    val path = targetPath("graft_kv_test/retiredlog")
+    val t = KVTable(spark, path, wipe = true)
+    t.put(cells((1L to 30L).map(k => k -> s"a$k"), 1L))
+    t.compact(numBuckets = 4) // gen-0
+    t.put(cells((1L to 30L by 3).map(k => k -> s"b$k"), 2L))
+    val want = state(t)
+    def drain(scan: KVResolvedScan): Set[(Long, String)] = {
+      val factory = scan.createReaderFactory()
+      scan.planInputPartitions().toSeq.flatMap { p =>
+        val r = factory.createReader(p)
+        try Iterator.continually(r).takeWhile(_.next())
+          .map(rr => (rr.get().getLong(0), rr.get().getUTF8String(1).toString)).toList
+        finally r.close()
+      }.toSet
+    }
+    def planned() = new KVResolvedScan(path, KVLayout(path),
+      StructType.fromDDL("key BIGINT, value STRING"), Array.empty)
+    val early = planned()
+    t.compact(numBuckets = 4) // gen-1 retires the log
+    assert(GraftFs.dataFiles(s"$path/log").isEmpty)
+    assert(drain(early) === want)
+    assert(drain(planned()) === want)
+    val late = planned()
+    t.put(cells(Seq(1L -> "c1"), 3L))
+    t.compact(numBuckets = 4) // gen-2 deletes what gen-1 retired
+    assert(drain(late) === want)
+    assert(state(t) === want + (1L -> "c1") - (1L -> "b1"))
+    assert(Option(new java.io.File(s"$path/log").list()).toSeq.flatten
+      .forall(_ == ".retired-g2"))
     t.drop()
   }
 }

@@ -200,6 +200,23 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
       assert(got === model(deduped), s"mismatch at $clue")
       kernelLeg(t, model(deduped), 4000L + seed, clue)
       changeLogLeg(t, 6000L + seed, clue)
+
+      // the bucket-local rewrites: the table is bucketed at numBuckets
+      // and its log holds the later ops' versions and tombstones. The
+      // restore runs on a clone of this state, because after the full
+      // compaction the versions superseded above `cut` are gone (the
+      // retention rule) and a restore could not reach them.
+      val clone = t.cloneTo(
+        targetPath(s"graft_kv_test/modelc_${numBuckets}_${seed}_clone"))
+      t.compact(numBuckets = numBuckets)
+      assert(t.resolved().as[Cell].collect().toSet === model(deduped),
+        s"recompaction mismatch at $clue")
+      kernelLeg(t, model(deduped), 7000L + seed, s"recompacted, $clue")
+      changeLogLeg(t, 8000L + seed, s"recompacted, $clue")
+      clone.restoreAsOf(cut, numBuckets = numBuckets)
+      assert(clone.resolved().as[Cell].collect().toSet === model(before),
+        s"restoreAsOf($cut) mismatch at $clue")
+      clone.drop()
     }
   }
 }
