@@ -37,8 +37,10 @@ class GraftCatalog extends TableCatalog with FunctionCatalog {
     * root (the KVLayout existence check — a bare directory without KV
     * state does not count). */
   private def pathOf(ident: Identifier): String = {
-    val joined = (ident.namespace() :+ ident.name()).mkString("/")
-    root match {
+    val parts = ident.namespace() :+ ident.name()
+    val joined = parts.mkString("/")
+    if (KVSource.isUriRoot(parts.head)) joined // a URI names its own root
+    else root match {
       case Some(r) if KVLayout(s"$r/$joined").exists => s"$r/$joined"
       case Some(r) if !KVLayout("/" + joined).exists => s"$r/$joined"
       case _ => "/" + joined
@@ -125,18 +127,36 @@ object GraftBucketFunction extends ScalarFunction[Int] {
 object KVSource {
   val CATALOG = "graft"
 
+  /** Read option carrying a ts cutoff: the read is the latest-wins view
+    * as of it, resolved inside the scan ([[KVResolvedScan]]). */
+  val RESOLVED_AS_OF = "resolvedAsOf"
+
+  /** `scheme:` or `scheme://authority` — a URI path's root, kept as the
+    * identifier's first part. */
+  private val UriRoot = "([a-zA-Z][a-zA-Z0-9+.-]*:(?://[^/]*)?)(/.*)?".r
+
+  private[kv] def isUriRoot(part: String): Boolean =
+    UriRoot.unapplySeq(part).exists(_(1) == null)
+
   /** Registers the catalog (idempotent) and returns the SQL identifier
     * for a KV path — usable anywhere SQL takes a table name, including
-    * `MERGE INTO` / `DELETE FROM`. */
+    * `MERGE INTO` / `DELETE FROM`. A local path becomes its absolute
+    * path's segments; a URI (`s3a://b/t`, `file:/t`) keeps its root as
+    * the first part, so [[GraftCatalog]] resolves the same URI back. */
   def sqlName(spark: SparkSession, path: String): String = {
     if (!spark.conf.getOption(s"spark.sql.catalog.$CATALOG").isDefined)
       spark.conf.set(s"spark.sql.catalog.$CATALOG", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    val parts = new java.io.File(path).getAbsolutePath
-      .split("/").filter(_.nonEmpty)
+    val parts = path match {
+      case UriRoot(uriRoot, rest) =>
+        uriRoot +: Option(rest).toSeq.flatMap(_.split("/")).filter(_.nonEmpty)
+      case _ => new java.io.File(path).getAbsolutePath
+        .split("/").filter(_.nonEmpty).toSeq
+    }
     CATALOG + "." + parts.map(s => s"`$s`").mkString(".")
   }
 
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.table(sqlName(spark, path))
+  def read(spark: SparkSession, path: String,
+           options: Map[String, String] = Map.empty): DataFrame =
+    spark.read.options(options).table(sqlName(spark, path))
 }

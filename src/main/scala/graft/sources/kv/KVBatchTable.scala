@@ -1,7 +1,5 @@
 package graft.sources.kv
 
-import java.util.OptionalLong
-
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -107,8 +105,16 @@ class KVBatchTable(path: String, tsMax: Option[Long] = None)
     KVPointer.read(path).map { case (_, n) => Expressions.bucket(n, "key"): Transform }
       .toArray
 
+  /** The raw cell scan, or — when the read option
+    * [[KVSource.RESOLVED_AS_OF]] carries a ts cutoff — the latest-wins
+    * view as of that cutoff, resolved inside the scan
+    * ([[KVResolvedScan]]). */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new KVScanBuilder(path, tsMax)
+    Option(options.get(KVSource.RESOLVED_AS_OF)) match {
+      case Some(v) =>
+        new KVResolvedScanBuilder(path, math.min(v.toLong, tsMax.getOrElse(Long.MaxValue)))
+      case None => new KVScanBuilder(path, tsMax)
+    }
 }
 
 object KVBatchTable {
@@ -171,10 +177,7 @@ class KVScan(path: String, layout: KVLayout, required: StructType,
         Array(Expressions.bucket(layout.numBuckets, "key")), layout.numBuckets)
     else new UnknownPartitioning(0)
 
-  override def estimateStatistics(): Statistics = new Statistics {
-    override def sizeInBytes(): OptionalLong = OptionalLong.of(layout.totalBytes)
-    override def numRows(): OptionalLong = OptionalLong.empty()
-  }
+  override def estimateStatistics(): Statistics = layout.statistics
 
   // DPP-style lookup: an In(key, ...) produced by a runtime filter
   // prunes to just the buckets holding those keys — the multi-get path.

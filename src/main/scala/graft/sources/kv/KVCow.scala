@@ -119,12 +119,12 @@ class KVCowScanBuilder(path: String, layout: KVLayout, op: KVCowOperation)
 }
 
 /** The CoW operation's read side: the resolved scan, accepting the
-  * runtime GROUP filter on `_bucket` (whole-bucket pruning only — row
-  * predicates are never pushed below a replacement scan). */
+  * runtime GROUP filter on `_bucket` in place of the resolved scan's
+  * key filter (whole-bucket pruning only — row predicates are never
+  * pushed below a replacement scan). */
 class KVCowScan(path: String, layout: KVLayout, required: StructType,
                 op: KVCowOperation)
-    extends KVResolvedScan(path, layout, required, Array.empty[Filter])
-    with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
+    extends KVResolvedScan(path, layout, required, Array.empty[Filter]) {
   import org.apache.spark.sql.connector.expressions.filter.Predicate
 
   override def filterAttributes(): Array[NamedReference] =

@@ -8,11 +8,13 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Bucket-local latest-wins resolve at one or more ts cutoffs — the
   * executor-side copy of `KVTable.resolve` (write/KVStore.scala) that
-  * the resolved scan ([[KVResolvedPartitionReader]], one cutoff
-  * `Long.MaxValue`), the CDC replay ([[KVCdcPartitionReader]]: the
-  * stream window's two cutoffs, or `KVTable.changeLog`'s n) and the
-  * bucket-local compaction ([[KVGeneration.writeResolved]]: `compact`
-  * at `Long.MaxValue`, `restoreAsOf(v)` at `v`) run on. Per (key,
+  * the resolved scan ([[KVResolvedPartitionReader]], one cutoff: every
+  * `KVTable.resolved()` / `resolvedAsOf(v)` / `resolvedAt` read and the
+  * MERGE / UPDATE / DELETE read side), the CDC replay
+  * ([[KVCdcPartitionReader]]: the stream window's two cutoffs, or
+  * `KVTable.changeLog`'s n) and the bucket-local compaction
+  * ([[KVGeneration.writeResolved]]: `compact` at `Long.MaxValue`,
+  * `restoreAsOf(v)` at `v`) run on. Per (key,
   * family, qualifier) and per cutoff the max-(ts, value) non-tombstone
   * cell at or below the cutoff wins; row / family / cell tombstones at
   * or below the cutoff mask winners at or below their ts; null-ts rows

@@ -6,7 +6,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, 
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.sources.{Filter, LessThanOrEqual}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -191,7 +191,9 @@ class KVDeltaDataWriter(inflight: String, partitionId: Int, taskId: Long)
 
 // --- read side: the resolved (latest-wins) scan ----------------------
 
-class KVResolvedScanBuilder(path: String)
+/** @param asOf the resolve's ts cutoff (inclusive): `Long.MaxValue` for
+  *   the live view, `v` for `resolvedAsOf(v)`. */
+class KVResolvedScanBuilder(path: String, asOf: Long = Long.MaxValue)
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
   private var pushed: Array[Filter] = Array.empty
@@ -216,15 +218,30 @@ class KVResolvedScanBuilder(path: String)
     required = requiredSchema
 
   override def build(): Scan =
-    new KVResolvedScan(path, KVLayout(path), required, pushed)
+    new KVResolvedScan(path, KVLayout(path), required, pushed, asOf)
 }
 
+/** The latest-wins view as of `asOf`, resolved inside the scan tasks.
+  *
+  * Sized like the raw scan (`sizeInBytes` = the snapshot's bytes), so a
+  * small resolved side plans as a static broadcast. Runtime (DPP-style)
+  * `key IN (…)` filters prune buckets — resolve-safe, because a key's
+  * whole resolve group lives in one bucket; the CoW scan replaces them
+  * with its `_bucket` group filter ([[KVCowScan]]). */
 class KVResolvedScan(path: String, layout: KVLayout,
-                     required: StructType, pushed: Array[Filter])
-    extends Scan with Batch with SupportsReportPartitioning {
+                     required: StructType, keyFilters: Array[Filter],
+                     asOf: Long = Long.MaxValue)
+    extends Scan with Batch with SupportsReportPartitioning
+    with SupportsReportStatistics with SupportsRuntimeFiltering {
 
-  /** Buckets injected at RUNTIME (the CoW group filter, [[KVCowScan]]);
-    * None = no runtime restriction. */
+  /** Row-group pruning only: the key predicates plus, below
+    * `Long.MaxValue`, `ts <= asOf` (the kernel itself ignores every
+    * row above its cutoff). */
+  private val pushed: Array[Filter] = keyFilters ++
+    (if (asOf == Long.MaxValue) None else Some(LessThanOrEqual("ts", asOf)))
+
+  /** Buckets injected at RUNTIME (a DPP key filter, or the CoW group
+    * filter); None = no runtime restriction. */
   @volatile protected var runtimeBuckets: Option[Set[Int]] = None
 
   override def readSchema(): StructType = required
@@ -239,6 +256,13 @@ class KVResolvedScan(path: String, layout: KVLayout,
         Array(Expressions.bucket(layout.numBuckets, "key")), layout.numBuckets)
     else new UnknownPartitioning(0)
 
+  override def estimateStatistics(): Statistics = layout.statistics
+
+  override def filterAttributes(): Array[NamedReference] =
+    if (layout.bucketed) Array(Expressions.column("key")) else Array.empty
+  override def filter(filters: Array[Filter]): Unit =
+    runtimeBuckets = KVFilterEval.keyBuckets(filters, layout.numBuckets)
+
   override def planInputPartitions(): Array[InputPartition] = {
     val allowed =
       Seq(KVFilterEval.keyBuckets(pushed, layout.numBuckets), runtimeBuckets).flatten
@@ -246,30 +270,31 @@ class KVResolvedScan(path: String, layout: KVLayout,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new KVResolvedReaderFactory(required, pushed, GraftFs.readerConf())
+    new KVResolvedReaderFactory(required, pushed, asOf, GraftFs.readerConf())
 }
 
 class KVResolvedReaderFactory(required: StructType, pushed: Array[Filter],
-                              hconf: GraftFs.ReaderConf)
+                              asOf: Long, hconf: GraftFs.ReaderConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new KVResolvedPartitionReader(
-      partition.asInstanceOf[KVBucketPartition], required, pushed, hconf)
+      partition.asInstanceOf[KVBucketPartition], required, pushed, asOf, hconf)
 }
 
 /** Bucket-local latest-wins resolve: the live cells of one
-  * [[KVResolveKernel]] pass at cutoff `Long.MaxValue`, projected onto
-  * the required columns plus the `_cell` / `_bucket` metadata. The
-  * pushed key predicates prune row groups only — resolve-safe, since a
-  * key's whole resolve group carries the key — and Spark re-checks them
-  * above the scan. */
+  * [[KVResolveKernel]] pass at cutoff `asOf`, projected onto the
+  * required columns plus the `_cell` / `_bucket` metadata. The pushed
+  * filters prune row groups only — resolve-safe, since a key's whole
+  * resolve group carries the key and the kernel drops every row above
+  * `asOf` itself — and Spark re-checks the key predicates above the
+  * scan. */
 class KVResolvedPartitionReader(p: KVBucketPartition, required: StructType,
-                                pushed: Array[Filter],
+                                pushed: Array[Filter], asOf: Long,
                                 hconf: GraftFs.ReaderConf)
     extends PartitionReader[InternalRow] {
 
   private val iter: Iterator[InternalRow] = {
-    val k = KVResolveKernel.run(p, Array(Long.MaxValue), pushed, hconf)
+    val k = KVResolveKernel.run(p, Array(asOf), pushed, hconf)
     val proj = new KVCellProjection(required, p)
     k.cells.filter(k.isLive(_, 0)).map(s => proj(Array[Any](
       k.key(s), k.family(s), k.qualifier(s), k.value(s, 0),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.kv.{KVGeneration, KVLayout, KVSource}
+import graft.sources.kv.{GraftFs, KVGeneration, KVLayout, KVSource}
 
 /** Cell-level KV table with the reference's storage semantics
   * (HBaseTable.scala:100-352, HBaseRDD.scala:39-42) re-expressed on
@@ -32,11 +32,14 @@ import graft.sources.kv.{KVGeneration, KVLayout, KVSource}
   * catalog entry exists for it.
   *
   * Scale notes: appends are cheap (no read-modify-write at write time —
-  * the reference's BufferedMutator analogue); resolution cost is one
-  * key-partitioned window sort ([[KVTable.resolve]]), so periodic
-  * compaction bounds read amplification exactly like HBase memstore
-  * flush + compaction does. At 100 TB the compacted form is key-sorted
-  * parquet → merge-joinable and range-prunable.
+  * the reference's BufferedMutator analogue); a resolved read is
+  * resolved inside the region scan, like the store's `setMaxVersions(1)`
+  * scan: each scan task runs the resolve kernel over one bucket's
+  * compacted files plus the log rows hashing to it, with no shuffle,
+  * sort or window ([[resolvedAsOf]]). Read cost is therefore the log a
+  * bucket re-reads, and periodic compaction bounds it exactly like
+  * HBase memstore flush + compaction does. At 100 TB the compacted form
+  * is key-sorted parquet → merge-joinable and range-prunable.
   */
 class KVTable(val spark: SparkSession, val path: String) {
   import KVTable._
@@ -73,8 +76,10 @@ class KVTable(val spark: SparkSession, val path: String) {
     * apart only because the catalog refuses to load a table with no
     * state (its existence check is the one rule [[exists]] uses, so it
     * is not listed twice). */
-  def cells: DataFrame =
-    try KVSource.read(spark, path)
+  def cells: DataFrame = read(Map.empty)
+
+  private def read(options: Map[String, String]): DataFrame =
+    try KVSource.read(spark, path, options)
     catch {
       case e: org.apache.spark.sql.AnalysisException
           if e.getCondition == "TABLE_OR_VIEW_NOT_FOUND" => emptyCells
@@ -115,14 +120,26 @@ class KVTable(val spark: SparkSession, val path: String) {
     put(merged)
   }
 
-  /** Latest-wins live-cell view (the read path every query sees). */
-  def resolved(): DataFrame = resolve(cells)
+  /** Latest-wins live-cell view (the read path every query sees): the
+    * [[resolvedAsOf]] read at cutoff `Long.MaxValue`. */
+  def resolved(): DataFrame = resolvedAsOf(Long.MaxValue)
 
   /** Latest-wins view as of cell-timestamp `v` (HBase timestamped
     * read / SQL `VERSION AS OF v` on the DSv2 table): cells written
-    * after v — including later tombstones — are invisible. The ts
-    * cutoff is a plain pushed predicate, so it prunes parquet row
-    * groups on both the compacted and log legs.
+    * after v — including later tombstones — are invisible.
+    *
+    * Shape: one scan stage, no Exchange, Sort or Window. The read goes
+    * through the catalog like [[cells]], with the cutoff as a read
+    * option, so each task of the resolved scan
+    * ([[graft.sources.kv.KVResolvedScan]]) runs the resolve kernel at
+    * cutoff `v` over its bucket (`ts <= v` prunes parquet row groups on
+    * both legs). A bucketed layout keeps reporting
+    * KeyGroupedPartitioning(bucket(n, key)), so key joins against it
+    * stay storage-partitioned; the scan is sized by the snapshot's
+    * bytes, so a small table broadcasts; and a runtime key filter (DPP)
+    * prunes its buckets. The one exception is a never-compacted table
+    * whose log outgrows one split (see `resolvesInScan`): it takes the
+    * shuffle-parallel reference [[KVTable.resolve]] instead.
     *
     * Retention rule (maxVersions=1, HBase major-compaction parity):
     * the view reaches only versions the store still RETAINS — a
@@ -131,7 +148,22 @@ class KVTable(val spark: SparkSession, val path: String) {
     * as-of read older than that sees the cell as absent, exactly as a
     * timestamped HBase scan does after a major compaction. */
   def resolvedAsOf(v: Long): DataFrame =
-    resolve(cells.filter(col("ts") <= v))
+    if (resolvesInScan)
+      read(Map(KVSource.RESOLVED_AS_OF -> v.toString))
+        .select(col("key"), col("family"), col("qualifier"), col("value"), col("ts"))
+    else resolve(cells.filter(col("ts") <= v))
+
+  /** Whether a resolved read runs the resolve kernel inside the scan
+    * ([[graft.sources.kv.KVResolvedScan]]). A bucketed layout always
+    * does: each bucket is one task, so the kernel's memory is one
+    * bucket's cells. A log-only layout is ONE kernel task holding every
+    * cell of the table, so it takes the kernel only while the whole log
+    * fits one split (`spark.sql.files.maxPartitionBytes`); a larger
+    * never-compacted table keeps the shuffle-parallel [[KVTable.resolve]]. */
+  private def resolvesInScan: Boolean =
+    GraftFs.dataFiles(logDir).map(_.len).sum <=
+      org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes ||
+      currentGen.isDefined
 
   /** Change-data feed: the NET difference between the live state as of
     * `from` and as of `to` (both inclusive cutoffs, `from < to`) — one
@@ -142,11 +174,11 @@ class KVTable(val spark: SparkSession, val path: String) {
     * consumers refresh derived state from the diff instead of
     * re-reading the full table.
     *
-    * Shape at scale: both cutoff states come from the same bucketed
-    * scan with a pushed `ts` predicate (row-group pruning), each
-    * resolve is one window pass that shuffles at most once, on key
-    * (not at all off the bucketed layout), and the final full-outer
-    * join is keyed by (key,family,qualifier). Net-change semantics mean
+    * Shape at scale: both cutoff states are [[resolvedAsOf]] reads,
+    * each resolved inside its scan with `ts` pruning row groups and no
+    * shuffle, and the final full-outer join is keyed by
+    * (key,family,qualifier) — co-located off a bucketed layout, a
+    * broadcast off a small one. Net-change semantics mean
     * a cell written and superseded entirely inside (from, to] emits only
     * the net row, and the same retention rule as [[resolvedAsOf]]
     * applies to `from` cutoffs older than the last compaction. */
@@ -198,8 +230,8 @@ class KVTable(val spark: SparkSession, val path: String) {
     * table is one task). This is the CDC-walk shape a derived-state
     * consumer uses to catch up over several refresh points
     * (`m16_cdc_apply`): O(one log scan), not O(cutoffs × log scans).
-    * [[changesBetween]] stays the declarative two-state form over the
-    * DataFrame resolve. Throws IllegalArgumentException unless there
+    * [[changesBetween]] stays the declarative two-state form over two
+    * resolved reads. Throws IllegalArgumentException unless there
     * are >=2 strictly increasing cutoffs (the source checks). */
   def changeLog(cutoffs: Seq[Long]): DataFrame =
     spark.read.format("graft-cdc").option("path", path)
@@ -290,7 +322,7 @@ class KVTable(val spark: SparkSession, val path: String) {
     * names them (KVCloneSpec pins divergence both ways across a
     * source compaction that retires the linked generation). */
   def cloneTo(destPath: String): KVTable = {
-    import graft.sources.kv.{GraftFs, KVPointer}
+    import graft.sources.kv.KVPointer
     require(destPath != path, "clone destination must differ from source")
     val dest = KVTable(spark, destPath, wipe = true)
     val snap = KVLayout(path)
@@ -472,7 +504,7 @@ class KVTable(val spark: SparkSession, val path: String) {
   /** TTL mask: cells of a TTL'd family older than (now - ttl) are dead.
     * Applied as a read filter (HBase masks expired cells at read time
     * too); compactAt() drops them physically. */
-  private def ttlFilter(df: DataFrame, nowTs: Long): DataFrame = {
+  private[graft] def ttlFilter(df: DataFrame, nowTs: Long): DataFrame = {
     val ttls = families.filter(_.ttlSeconds != Long.MaxValue)
     if (ttls.isEmpty) df
     else {
@@ -484,8 +516,13 @@ class KVTable(val spark: SparkSession, val path: String) {
     }
   }
 
-  /** Latest-wins view with TTL enforcement as of `nowTs`. */
-  def resolvedAt(nowTs: Long): DataFrame = resolve(ttlFilter(cells, nowTs))
+  /** Latest-wins view with TTL enforcement as of `nowTs`: the
+    * [[resolved]] read with the TTL predicate applied after the
+    * resolve. That equals expiring first and resolving after, because a
+    * version or tombstone at or below its family's TTL cutoff can only
+    * mask versions that are themselves expired (row tombstones carry no
+    * family and never expire). */
+  def resolvedAt(nowTs: Long): DataFrame = ttlFilter(resolved(), nowTs)
 
   /** Compaction that also physically expires TTL'd cells (the
     * reference's major-compaction TTL semantics). Always the shuffle
@@ -538,9 +575,13 @@ object KVTable {
     * coordinate with null-safe (<=>) matching. Any tombstone marker
     * that is not 'row'/'family' masks at cell granularity, exactly like
     * the executor-side resolve kernel
-    * ([[graft.sources.kv.KVResolveKernel]], under the resolved scan, the
-    * graft-cdc stream and [[KVTable.changeLog]]). This is the reference
-    * the kernel is tested against; the two must agree cell-for-cell. */
+    * ([[graft.sources.kv.KVResolveKernel]], under [[KVTable.resolvedAsOf]],
+    * MERGE, the graft-cdc stream, [[KVTable.changeLog]] and the
+    * bucket-local compaction). This is the reference the kernel is
+    * tested against — the two must agree cell-for-cell — and the resolve
+    * of the rewrites that shuffle (a first compaction, re-bucketing,
+    * [[KVTable.compactAt]], [[KVTable.compactRetaining]]) and of an
+    * over-split log-only read. */
   def resolve(cells: DataFrame): DataFrame = {
     // live cells (NULL tomb) before tombstones, then ts desc + value
     // desc: a TOTAL order within the version group, so two cells written

@@ -327,4 +327,87 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
       .forall(_ == ".retired-g2"))
     t.drop()
   }
+
+  private def planned(df: org.apache.spark.sql.DataFrame)(
+      pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, Unit]): Int =
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan)(pf).size
+
+  private def isResolvedScan(p: org.apache.spark.sql.execution.SparkPlan) =
+    p.isInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] &&
+      p.asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
+        .scan.isInstanceOf[KVResolvedScan]
+
+  test("a resolved read is one scan stage: resolved() runs 1 job, 1 stage " +
+    "and 0 shuffle bytes on a log-only and on a bucketed compacted + log layout") {
+    val path = targetPath("graft_kv_test/resolvedshape")
+    val t = KVTable(spark, path, wipe = true)
+    putRows(t, (1L to 30L).map(k => Row(k, "F", "a", s"a$k", 1L, null)) ++ Seq(
+      Row(null, "F", "a", "nullkey", 1L, null),
+      Row(31L, null, null, "nullfq", 1L, null)): _*)
+    putRows(t, Row(1L, "F", "a", "a1v2", 2L, null), Row(2L, null, null, null, 2L, "row"))
+    t.delete(marks((3L, "F", null), (4L, "F", "a")), ts = 3L)
+    for (layout <- Seq("log-only", "bucketed")) {
+      if (layout == "bucketed") {
+        t.compact(numBuckets = 4)
+        putRows(t, Row(5L, "F", "a", "a5v4", 4L, null), Row(6L, null, null, null, 4L, "row"))
+      }
+      val want = KVTable.resolve(t.cells).collect().toSet
+      var got = Set.empty[Row]
+      val read = shape { got = t.resolved().collect().toSet }
+      assert(read.jobs.size === 1 && read.stages === 1 && read.shuffleBytes === 0L,
+        s"$layout: $read")
+      assert(got === want, layout)
+      val asOf = shape { got = t.resolvedAsOf(2L).collect().toSet }
+      assert(asOf.jobs.size === 1 && asOf.stages === 1 && asOf.shuffleBytes === 0L,
+        s"$layout as of 2: $asOf")
+      assert(got === KVTable.resolve(t.cells.filter($"ts" <= 2L)).collect().toSet,
+        s"$layout as of 2")
+    }
+    t.drop()
+  }
+
+  test("the fold shape: resolvedAsOf(v) left-joined to a small aggregate " +
+    "broadcasts the resolved scan and plans no Window") {
+    val t = KVTable(spark, targetPath("graft_kv_test/foldshape"), wipe = true)
+    t.put(cells((0L until 10L).map(k => k -> s"${k * 10}"), 1L))
+    t.put(cells(Seq(3L -> "31", 4L -> "41"), 2L))
+    val delta = Seq(2L, 3L, 4L, 11L).toDF("key")
+      .groupBy($"key").agg(count(lit(1)).as("n"))
+    val fold = delta.join(t.resolvedAsOf(1L).select($"key", $"value"), Seq("key"), "left_outer")
+    val plan = fold.queryExecution.executedPlan.toString.take(3000)
+    assert(planned(fold) {
+      case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+          if b.exists(isResolvedScan) =>
+    } === 1, plan)
+    assert(planned(fold) { case _: org.apache.spark.sql.execution.window.WindowExec => } === 0, plan)
+    assert(fold.select($"key", $"value").as[(Long, Option[String])].collect().toSet ===
+      Set((2L, Some("20")), (3L, Some("30")), (4L, Some("40")), (11L, None)))
+    t.drop()
+  }
+
+  test("a log-only table larger than one split resolves with the " +
+    "shuffle-parallel DataFrame resolve, to the kernel's rows") {
+    val t = KVTable(spark, targetPath("graft_kv_test/oversplit"), wipe = true)
+    (1L to 4L).foreach(ts => t.put(cells((1L to 20L).map(k => k -> s"v$k@$ts"), ts)))
+    t.delete(marks((1L, null, null), (2L, "F", "q")), ts = 4L)
+    val kernel = t.resolved()
+    val want = kernel.collect().toSet
+    val wantAsOf = t.resolvedAsOf(2L).collect().toSet
+    assert(shuffles(kernel) === 0)
+    val logBytes = KVLayout(t.path).totalBytes
+    val conf = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(conf)
+    spark.conf.set(conf, (logBytes - 1).toString)
+    try {
+      for ((df, rows) <- Seq(t.resolved() -> want, t.resolvedAsOf(2L) -> wantAsOf)) {
+        val plan = df.queryExecution.executedPlan.toString.take(3000)
+        assert(shuffles(df) === 1, plan)
+        assert(planned(df) { case _: org.apache.spark.sql.execution.window.WindowExec => } > 0, plan)
+        assert(planned(df) { case p if isResolvedScan(p) => } === 0, plan)
+        assert(df.collect().toSet === rows)
+      }
+    } finally prev.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+    assert(want.size === 18 && wantAsOf.size === 20)
+    t.drop()
+  }
 }

@@ -105,6 +105,23 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
       s"graft-cdc ($from, $to] != changesBetween, $clue")
   }
 
+  /** The two resolves against the model, live and as of `cut`: the
+    * library reads (the kernel inside the scan) and the DataFrame
+    * reference [[KVTable.resolve]] over the raw cells. `ops` must all
+    * still be retained at `cut` (no compaction folded a version above
+    * it). */
+  private def referenceLeg(t: KVTable, ops: List[Op], cut: Long,
+                           clue: String): Unit = {
+    def cellsOf(df: org.apache.spark.sql.DataFrame) = df.as[Cell].collect().toSet
+    val now = model(ops)
+    val asOf = model(ops.filter(_.ts <= cut))
+    assert(cellsOf(t.resolved()) === now, s"resolved() != model, $clue")
+    assert(cellsOf(KVTable.resolve(t.cells)) === now, s"resolve(cells) != model, $clue")
+    assert(cellsOf(t.resolvedAsOf(cut)) === asOf, s"resolvedAsOf($cut) != model, $clue")
+    assert(cellsOf(KVTable.resolve(t.cells.filter(col("ts") <= cut))) === asOf,
+      s"resolve(cells as of $cut) != model, $clue")
+  }
+
   /** `changeLog` at 3-4 random ascending cutoffs against the DataFrame
     * reference: `changesBetween` per adjacent cutoff pair, tagged with
     * the later cutoff's index. */
@@ -152,6 +169,8 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
       val got = t.resolved()
         .as[(Long, String, String, String, Long)].collect().toSet
       assert(got === model(deduped), s"mismatch at seed=$seed")
+      referenceLeg(t, deduped, Gen.choose(1L, 20L)
+        .pureApply(Gen.Parameters.default, Seed(9000L + seed)), s"log-only seed=$seed")
       kernelLeg(t, model(deduped), 3000L + seed, s"seed=$seed")
       changeLogLeg(t, 5000L + seed, s"log-only seed=$seed")
     }
@@ -198,6 +217,9 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
       val clue = s"buckets=$numBuckets seed=$seed cut=$cut " +
         s"(compacted ${before.size} ops)"
       assert(got === model(deduped), s"mismatch at $clue")
+      // every op at or below `cut` went into the compaction, so the view
+      // as of `cut` is exactly their model
+      referenceLeg(t, deduped, cut, clue)
       kernelLeg(t, model(deduped), 4000L + seed, clue)
       changeLogLeg(t, 6000L + seed, clue)
 

@@ -704,4 +704,36 @@ class KVSourceSpec extends AnyFunSuite with SparkSpec {
         s"key $k in file-bucket $bucket but GraftBucket says ${GraftBucket.of(k, 8)}"))
     }
   }
+
+  test("a table at a file: URI reads back through its identifier: put, " +
+    "resolved() and SQL MERGE INTO return the exact rows") {
+    val abs = new java.io.File(targetPath("graft_kv_test/dsv2_uri")).getAbsolutePath
+    val uri = "file:" + abs
+    val t = KVTable(spark, uri, wipe = true)
+    t.put(Seq((1L, "F", "q", "a", 1L), (2L, "F", "q", "b", 1L))
+      .toDF("key", "family", "qualifier", "value", "ts"))
+    t.put(Seq((2L, "F", "q", "b2", 2L)).toDF("key", "family", "qualifier", "value", "ts"))
+    val ident = graft.sources.kv.KVSource.sqlName(spark, uri)
+    assert(ident === "graft.`file:`." +
+      abs.split("/").filter(_.nonEmpty).map(p => s"`$p`").mkString("."))
+    assert(t.cells.count() === 3L)
+    def live = t.resolved().select($"key", $"value").as[(Long, String)].collect().toSet
+    assert(live === Set(1L -> "a", 2L -> "b2"))
+    Seq((2L, "b3"), (3L, "c")).toDF("key", "value")
+      .createOrReplaceTempView("kvspec_uri_updates")
+    spark.sql(
+      s"""MERGE INTO $ident t USING kvspec_uri_updates u
+         |ON t.key = u.key AND t.family = 'F' AND t.qualifier = 'q'
+         |WHEN MATCHED THEN UPDATE SET value = u.value, ts = 3
+         |WHEN NOT MATCHED THEN
+         |  INSERT (key, family, qualifier, value, ts, tomb)
+         |  VALUES (u.key, 'F', 'q', u.value, 3, null)""".stripMargin)
+    assert(live === Set(1L -> "a", 2L -> "b3", 3L -> "c"))
+    t.compact(numBuckets = 2)
+    assert(live === Set(1L -> "a", 2L -> "b3", 3L -> "c"))
+    // a local absolute path keeps its plain segment identifier
+    assert(graft.sources.kv.KVSource.sqlName(spark, abs) ===
+      "graft." + abs.split("/").filter(_.nonEmpty).map(p => s"`$p`").mkString("."))
+    t.drop()
+  }
 }

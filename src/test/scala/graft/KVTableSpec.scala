@@ -187,6 +187,7 @@ class KVTableSpec extends AnyFunSuite with SparkSpec {
     import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
     val t = fresh("oneexchange")
     val F = Option("F")
     val none = Option.empty[String]
@@ -217,13 +218,23 @@ class KVTableSpec extends AnyFunSuite with SparkSpec {
       df.as[(Long, Option[String], Option[String], String, Long)].collect().toSet
     val now = t.resolved()
     val asOf = t.resolvedAsOf(2L)
-    // every window shares one order: one shuffle on key, one sort
-    for ((name, df) <- Seq("resolved" -> now, "resolvedAsOf" -> asOf)) {
+    // the reference: every window shares one order, so one shuffle on
+    // key and one sort
+    for ((name, df) <- Seq("resolve" -> KVTable.resolve(t.cells),
+        "resolve as of 2" -> KVTable.resolve(t.cells.filter($"ts" <= 2L)))) {
       val plan = df.queryExecution.executedPlan.toString.take(3000)
       assert(count(df) { case _: ShuffleExchangeExec => } === 1,
         s"$name shuffles more than once:\n$plan")
       assert(count(df) { case _: SortExec => } === 1,
         s"$name sorts more than once:\n$plan")
+      assert(live(df) === live(if (name == "resolve") now else asOf), name)
+    }
+    // the library reads resolve inside the scan: no shuffle, sort or window
+    for ((name, df) <- Seq("resolved" -> now, "resolvedAsOf" -> asOf)) {
+      val plan = df.queryExecution.executedPlan.toString.take(3000)
+      assert(count(df) { case _: ShuffleExchangeExec => } === 0, s"$name:\n$plan")
+      assert(count(df) { case _: SortExec => } === 0, s"$name:\n$plan")
+      assert(count(df) { case _: WindowExec => } === 0, s"$name:\n$plan")
     }
     assert(live(now) === Set((1L, F, Some("a"), "v2", 3L),
       (1L, Some("T"), Some("c"), "t", 1L), (2L, F, Some("b"), "z", 3L),
@@ -285,6 +296,50 @@ class KVTableSpec extends AnyFunSuite with SparkSpec {
     assert(live === Set((1L, "old"), (3L, "eternal")))
     // untimed view still sees everything (TTL is an explicit read choice)
     assert(t.resolved().count() === 3)
+  }
+
+  test("resolvedAt resolves in the scan and equals expiring before the " +
+      "resolve: expired newer versions, TTL'd family and cell tombstones, " +
+      "row tombstones") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    val t = fresh("ttlkernel")
+    t.setFamilies(Seq(write.FamilyDescriptor("F", ttlSeconds = 10L)))
+    val F = Option("F")
+    val T = Option("T")
+    val none = Option.empty[String]
+    def q(s: String) = Option(s)
+    t.put(Seq[(Long, Option[String], Option[String], Option[String], Long,
+        Option[String])](
+      (1L, F, q("a"), q("old"), 90L, none), (1L, F, q("a"), q("new"), 100L, none),
+      // the newer version expired too: no older version resurfaces
+      (2L, F, q("a"), q("e1"), 96L, none), (2L, F, q("a"), q("e2"), 97L, none),
+      (2L, F, q("b"), q("b2"), 99L, none),
+      // a live family tombstone masks; an expired one masks only expired cells
+      (3L, F, q("a"), q("x"), 99L, none), (3L, F, none, none, 99L, q("family")),
+      (4L, F, q("a"), q("y"), 95L, none), (4L, F, none, none, 96L, q("family")),
+      (4L, F, q("c"), q("c4"), 100L, none),
+      // a live cell tombstone masks; an expired one masks nothing live
+      (5L, F, q("a"), q("z"), 100L, none), (5L, F, q("a"), none, 101L, q("cell")),
+      (5L, F, q("b"), q("b5"), 98L, none), (5L, F, q("b"), none, 96L, q("cell")),
+      // row tombstones carry no family and never expire
+      (6L, none, none, none, 100L, q("row")), (6L, F, q("a"), q("r"), 99L, none),
+      (6L, T, q("a"), q("t6"), 101L, none), (6L, T, q("b"), q("old6"), 50L, none),
+      (7L, none, none, none, 50L, q("row")), (7L, T, q("a"), q("m"), 40L, none),
+      (7L, F, q("a"), q("f7"), 99L, none),
+      (8L, T, q("a"), q("eternal"), 1L, none))
+      .toDF("key", "family", "qualifier", "value", "ts", "tomb"))
+    def live(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Option[String], Option[String], String, Long)].collect().toSet
+    val got = t.resolvedAt(107L)
+    val want = live(KVTable.resolve(t.ttlFilter(t.cells, 107L)))
+    assert(live(got) === want)
+    assert(want === Set((1L, F, q("a"), "new", 100L), (2L, F, q("b"), "b2", 99L),
+      (4L, F, q("c"), "c4", 100L), (5L, F, q("b"), "b5", 98L),
+      (6L, T, q("a"), "t6", 101L), (7L, F, q("a"), "f7", 99L),
+      (8L, T, q("a"), "eternal", 1L)))
+    assert(new AdaptiveSparkPlanHelper {}.collect(got.queryExecution.executedPlan) {
+      case w: WindowExec => w }.isEmpty)
   }
 
   test("compactAt physically drops TTL-expired cells; compact keeps them") {
