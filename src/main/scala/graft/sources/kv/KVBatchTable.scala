@@ -1,5 +1,7 @@
 package graft.sources.kv
 
+import java.util.OptionalLong
+
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -111,8 +113,13 @@ class KVBatchTable(path: String, tsMax: Option[Long] = None)
     * ([[KVResolvedScan]]). */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     Option(options.get(KVSource.RESOLVED_AS_OF)) match {
-      case Some(v) =>
-        new KVResolvedScanBuilder(path, math.min(v.toLong, tsMax.getOrElse(Long.MaxValue)))
+      case Some(text) =>
+        val v = try text.toLong catch {
+          case _: NumberFormatException => throw new IllegalArgumentException(
+            s"graft KV read option '${KVSource.RESOLVED_AS_OF}' takes a " +
+              s"cell-timestamp long, got '$text'")
+        }
+        new KVResolvedScanBuilder(path, math.min(v, tsMax.getOrElse(Long.MaxValue)))
       case None => new KVScanBuilder(path, tsMax)
     }
 }
@@ -147,21 +154,49 @@ class KVScanBuilder(path: String, tsMax: Option[Long] = None)
     pushed, tsMax)
 }
 
+/** What a scan of one KV snapshot reports to the planner, shared by the
+  * raw ([[KVScan]]) and the resolved ([[KVResolvedScan]]) scan: its
+  * bytes on disk as its size (a small table, raw or resolved, plans as
+  * a broadcast), `KeyGroupedPartitioning(bucket(n, key))` on a bucketed
+  * layout, and DPP-style bucket pruning — a runtime `key IN (…)` filter
+  * restricts the scan to the buckets holding those keys (the multi-get
+  * path; resolve-safe, because a key's whole resolve group lives in one
+  * bucket). */
+trait KVSnapshotScan extends SupportsReportPartitioning
+    with SupportsReportStatistics with SupportsRuntimeFiltering {
+  protected def layout: KVLayout
+
+  /** Buckets injected at RUNTIME; None = no runtime restriction. */
+  @volatile protected var runtimeBuckets: Option[Set[Int]] = None
+
+  override def outputPartitioning(): Partitioning =
+    if (layout.bucketed)
+      new KeyGroupedPartitioning(
+        Array(Expressions.bucket(layout.numBuckets, "key")), layout.numBuckets)
+    else new UnknownPartitioning(0)
+
+  override def estimateStatistics(): Statistics = new Statistics {
+    override def sizeInBytes(): OptionalLong = OptionalLong.of(layout.totalBytes)
+    override def numRows(): OptionalLong = OptionalLong.empty()
+  }
+
+  override def filterAttributes(): Array[NamedReference] =
+    if (layout.bucketed) Array(Expressions.column("key")) else Array.empty
+  override def filter(filters: Array[Filter]): Unit =
+    runtimeBuckets = KVFilterEval.keyBuckets(filters, layout.numBuckets)
+}
+
 /** @param tsMax kept SEPARATE from `pushed`: Spark re-checks pushed
   *   filters above the scan (they are all returned as residual), but
   *   the time-travel cutoff is scan-internal — nothing re-applies it —
   *   so the reader gates rows on it exactly (see
   *   [[KVColumnarPartitionReader]]). */
-class KVScan(path: String, layout: KVLayout, required: StructType,
+class KVScan(path: String, protected val layout: KVLayout, required: StructType,
              sparkPushed: Array[Filter], tsMax: Option[Long] = None)
-    extends Scan with Batch
-    with SupportsReportPartitioning with SupportsReportStatistics
-    with SupportsRuntimeFiltering {
+    extends Scan with Batch with KVSnapshotScan {
 
   val pushed: Array[Filter] =
     sparkPushed ++ tsMax.map(v => LessThanOrEqual("ts", v): Filter)
-
-  @volatile private var runtimeBuckets: Option[Set[Int]] = None
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -170,21 +205,6 @@ class KVScan(path: String, layout: KVLayout, required: StructType,
     s"graft-kv path=$path buckets=${layout.numBuckets} " +
       s"PushedFilters: [${pushed.mkString(", ")}], " +
       s"ReadSchema: ${required.catalogString}"
-
-  override def outputPartitioning(): Partitioning =
-    if (layout.bucketed)
-      new KeyGroupedPartitioning(
-        Array(Expressions.bucket(layout.numBuckets, "key")), layout.numBuckets)
-    else new UnknownPartitioning(0)
-
-  override def estimateStatistics(): Statistics = layout.statistics
-
-  // DPP-style lookup: an In(key, ...) produced by a runtime filter
-  // prunes to just the buckets holding those keys — the multi-get path.
-  override def filterAttributes(): Array[NamedReference] =
-    if (layout.bucketed) Array(Expressions.column("key")) else Array.empty
-  override def filter(filters: Array[Filter]): Unit =
-    runtimeBuckets = KVFilterEval.keyBuckets(filters, layout.numBuckets)
 
   /** Buckets statically reachable given the pushed key predicates. */
   private def staticBuckets: Option[Set[Int]] =

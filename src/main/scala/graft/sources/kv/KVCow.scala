@@ -122,9 +122,9 @@ class KVCowScanBuilder(path: String, layout: KVLayout, op: KVCowOperation)
   * runtime GROUP filter on `_bucket` in place of the resolved scan's
   * key filter (whole-bucket pruning only — row predicates are never
   * pushed below a replacement scan). */
-class KVCowScan(path: String, layout: KVLayout, required: StructType,
+class KVCowScan(path: String, snapshot: KVLayout, required: StructType,
                 op: KVCowOperation)
-    extends KVResolvedScan(path, layout, required, Array.empty[Filter]) {
+    extends KVResolvedScan(path, snapshot, required, Array.empty[Filter]) {
   import org.apache.spark.sql.connector.expressions.filter.Predicate
 
   override def filterAttributes(): Array[NamedReference] =

@@ -1,9 +1,6 @@
 package graft.sources.kv
 
-import java.util.OptionalLong
-
 import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
-import org.apache.spark.sql.connector.read.Statistics
 import org.apache.spark.sql.types.LongType
 
 /** On-disk layout of a graft KV table (the engine's HBase-table
@@ -78,11 +75,10 @@ case class KVLayout(path: String) {
     * [[KVBucketPartition]] per `allowed` bucket (its compacted files
     * plus the whole log, bucket-gated by the reader), or — on a
     * log-only layout — ONE partition holding every log file, since a
-    * key's versions span files. The resolved scan, graft-cdc, MERGE and
-    * `changeLog` run one kernel task per partition. A library resolved
-    * read takes the single log-only task only while the whole log fits
-    * one split (`spark.sql.files.maxPartitionBytes`, see
-    * `KVTable.resolvedAsOf`); compaction is what buys distribution. */
+    * key's versions span files. The resolved scan (every library
+    * resolved read), graft-cdc, MERGE and `changeLog` run one kernel
+    * task per partition. Safe by the layout contract: an uncompacted
+    * table is memstore-sized; compaction is what buys distribution. */
   def bucketPartitions(allowed: Int => Boolean = _ => true): Array[KVBucketPartition] = {
     val logs = logFiles.toArray
     val logLens = logs.map(lenByPath)
@@ -97,13 +93,6 @@ case class KVLayout(path: String) {
   }
 
   def totalBytes: Long = (compactedEntries ++ logEntries).map(_.len).sum
-
-  /** What a scan of this snapshot reports to the planner: its bytes on
-    * disk, so a small table (raw or resolved) plans as a broadcast. */
-  def statistics: Statistics = new Statistics {
-    override def sizeInBytes(): OptionalLong = OptionalLong.of(totalBytes)
-    override def numRows(): OptionalLong = OptionalLong.empty()
-  }
 }
 
 /** The bucket-assignment function of the compacted layout. MUST agree

@@ -4,7 +4,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.{Filter, LessThanOrEqual}
 import org.apache.spark.sql.types.StructType
@@ -222,17 +221,13 @@ class KVResolvedScanBuilder(path: String, asOf: Long = Long.MaxValue)
 }
 
 /** The latest-wins view as of `asOf`, resolved inside the scan tasks.
-  *
-  * Sized like the raw scan (`sizeInBytes` = the snapshot's bytes), so a
-  * small resolved side plans as a static broadcast. Runtime (DPP-style)
-  * `key IN (…)` filters prune buckets — resolve-safe, because a key's
-  * whole resolve group lives in one bucket; the CoW scan replaces them
+  * Sized, partitioned and bucket-pruned at runtime like the raw scan
+  * ([[KVSnapshotScan]]); the CoW scan replaces the runtime key filter
   * with its `_bucket` group filter ([[KVCowScan]]). */
-class KVResolvedScan(path: String, layout: KVLayout,
+class KVResolvedScan(path: String, protected val layout: KVLayout,
                      required: StructType, keyFilters: Array[Filter],
                      asOf: Long = Long.MaxValue)
-    extends Scan with Batch with SupportsReportPartitioning
-    with SupportsReportStatistics with SupportsRuntimeFiltering {
+    extends Scan with Batch with KVSnapshotScan {
 
   /** Row-group pruning only: the key predicates plus, below
     * `Long.MaxValue`, `ts <= asOf` (the kernel itself ignores every
@@ -240,28 +235,11 @@ class KVResolvedScan(path: String, layout: KVLayout,
   private val pushed: Array[Filter] = keyFilters ++
     (if (asOf == Long.MaxValue) None else Some(LessThanOrEqual("ts", asOf)))
 
-  /** Buckets injected at RUNTIME (a DPP key filter, or the CoW group
-    * filter); None = no runtime restriction. */
-  @volatile protected var runtimeBuckets: Option[Set[Int]] = None
-
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
     s"graft-kv-resolved path=$path buckets=${layout.numBuckets} " +
       s"PushedFilters: [${pushed.mkString(", ")}]"
-
-  override def outputPartitioning(): Partitioning =
-    if (layout.bucketed)
-      new KeyGroupedPartitioning(
-        Array(Expressions.bucket(layout.numBuckets, "key")), layout.numBuckets)
-    else new UnknownPartitioning(0)
-
-  override def estimateStatistics(): Statistics = layout.statistics
-
-  override def filterAttributes(): Array[NamedReference] =
-    if (layout.bucketed) Array(Expressions.column("key")) else Array.empty
-  override def filter(filters: Array[Filter]): Unit =
-    runtimeBuckets = KVFilterEval.keyBuckets(filters, layout.numBuckets)
 
   override def planInputPartitions(): Array[InputPartition] = {
     val allowed =

@@ -137,9 +137,9 @@ class KVTable(val spark: SparkSession, val path: String) {
     * KeyGroupedPartitioning(bucket(n, key)), so key joins against it
     * stay storage-partitioned; the scan is sized by the snapshot's
     * bytes, so a small table broadcasts; and a runtime key filter (DPP)
-    * prunes its buckets. The one exception is a never-compacted table
-    * whose log outgrows one split (see `resolvesInScan`): it takes the
-    * shuffle-parallel reference [[KVTable.resolve]] instead.
+    * prunes its buckets. A never-compacted (log-only) table is ONE
+    * kernel task, the contract MERGE, graft-cdc and [[changeLog]] run
+    * on too; compaction is what buys read parallelism.
     *
     * Retention rule (maxVersions=1, HBase major-compaction parity):
     * the view reaches only versions the store still RETAINS — a
@@ -148,22 +148,8 @@ class KVTable(val spark: SparkSession, val path: String) {
     * as-of read older than that sees the cell as absent, exactly as a
     * timestamped HBase scan does after a major compaction. */
   def resolvedAsOf(v: Long): DataFrame =
-    if (resolvesInScan)
-      read(Map(KVSource.RESOLVED_AS_OF -> v.toString))
-        .select(col("key"), col("family"), col("qualifier"), col("value"), col("ts"))
-    else resolve(cells.filter(col("ts") <= v))
-
-  /** Whether a resolved read runs the resolve kernel inside the scan
-    * ([[graft.sources.kv.KVResolvedScan]]). A bucketed layout always
-    * does: each bucket is one task, so the kernel's memory is one
-    * bucket's cells. A log-only layout is ONE kernel task holding every
-    * cell of the table, so it takes the kernel only while the whole log
-    * fits one split (`spark.sql.files.maxPartitionBytes`); a larger
-    * never-compacted table keeps the shuffle-parallel [[KVTable.resolve]]. */
-  private def resolvesInScan: Boolean =
-    GraftFs.dataFiles(logDir).map(_.len).sum <=
-      org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes ||
-      currentGen.isDefined
+    read(Map(KVSource.RESOLVED_AS_OF -> v.toString))
+      .select(col("key"), col("family"), col("qualifier"), col("value"), col("ts"))
 
   /** Change-data feed: the NET difference between the live state as of
     * `from` and as of `to` (both inclusive cutoffs, `from < to`) — one
@@ -580,8 +566,7 @@ object KVTable {
     * bucket-local compaction). This is the reference the kernel is
     * tested against — the two must agree cell-for-cell — and the resolve
     * of the rewrites that shuffle (a first compaction, re-bucketing,
-    * [[KVTable.compactAt]], [[KVTable.compactRetaining]]) and of an
-    * over-split log-only read. */
+    * [[KVTable.compactAt]], [[KVTable.compactRetaining]]). */
   def resolve(cells: DataFrame): DataFrame = {
     // live cells (NULL tomb) before tombstones, then ts desc + value
     // desc: a TOTAL order within the version group, so two cells written

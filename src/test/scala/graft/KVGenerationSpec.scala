@@ -384,30 +384,4 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
       Set((2L, Some("20")), (3L, Some("30")), (4L, Some("40")), (11L, None)))
     t.drop()
   }
-
-  test("a log-only table larger than one split resolves with the " +
-    "shuffle-parallel DataFrame resolve, to the kernel's rows") {
-    val t = KVTable(spark, targetPath("graft_kv_test/oversplit"), wipe = true)
-    (1L to 4L).foreach(ts => t.put(cells((1L to 20L).map(k => k -> s"v$k@$ts"), ts)))
-    t.delete(marks((1L, null, null), (2L, "F", "q")), ts = 4L)
-    val kernel = t.resolved()
-    val want = kernel.collect().toSet
-    val wantAsOf = t.resolvedAsOf(2L).collect().toSet
-    assert(shuffles(kernel) === 0)
-    val logBytes = KVLayout(t.path).totalBytes
-    val conf = "spark.sql.files.maxPartitionBytes"
-    val prev = spark.conf.getOption(conf)
-    spark.conf.set(conf, (logBytes - 1).toString)
-    try {
-      for ((df, rows) <- Seq(t.resolved() -> want, t.resolvedAsOf(2L) -> wantAsOf)) {
-        val plan = df.queryExecution.executedPlan.toString.take(3000)
-        assert(shuffles(df) === 1, plan)
-        assert(planned(df) { case _: org.apache.spark.sql.execution.window.WindowExec => } > 0, plan)
-        assert(planned(df) { case p if isResolvedScan(p) => } === 0, plan)
-        assert(df.collect().toSet === rows)
-      }
-    } finally prev.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
-    assert(want.size === 18 && wantAsOf.size === 20)
-    t.drop()
-  }
 }

@@ -736,4 +736,19 @@ class KVSourceSpec extends AnyFunSuite with SparkSpec {
       "graft." + abs.split("/").filter(_.nonEmpty).map(p => s"`$p`").mkString("."))
     t.drop()
   }
+
+  test("a non-numeric resolvedAsOf read option fails naming the option") {
+    val t = KVTable(spark, targetPath("graft_kv_test/dsv2_badasof"), wipe = true)
+    t.put(Seq((1L, "F", "q", "a", 1L)).toDF("key", "family", "qualifier", "value", "ts"))
+    val ident = graft.sources.kv.KVSource.sqlName(spark, t.path)
+    val e = intercept[Exception] {
+      spark.read.option("resolvedAsOf", "yesterday").table(ident).collect()
+    }
+    def messages(x: Throwable): Seq[String] =
+      Option(x).toSeq.flatMap(c => Option(c.getMessage).toSeq ++ messages(c.getCause))
+    assert(messages(e).exists(m => m.contains("'resolvedAsOf'") && m.contains("'yesterday'")),
+      messages(e).mkString(" | "))
+    assert(spark.read.option("resolvedAsOf", "1").table(ident).count() === 1L)
+    t.drop()
+  }
 }

@@ -8,8 +8,9 @@ perfbench itself on its first run):
       --seeds 101-110 --seconds 5 --out pairs.jsonl
 
 Every run is `python3 perfbench/run.py --workload W --seed N --seconds S
---trace 0` in that side's directory, one at a time; the parent runs first
-on even seeds and the change first on odd ones. Each result line is
+--trace 0` in that side's directory, one at a time; the side that runs
+first alternates from pair to pair (the parent first in the 1st, 3rd, …
+pair of the set, the change first in the 2nd, 4th, …). Each result line is
 appended to the JSONL file as it lands, so an interrupted set keeps its
 finished runs. Re-print the table of a set without running anything:
   python3 tools/ab_pairs.py --summarize pairs.jsonl
@@ -17,10 +18,14 @@ finished runs. Re-print the table of a set without running anything:
 For each end-to-end metric (name, unit, direction, bound) the table gives
 each side's median and quartiles, the pairs the change wins (ties count
 for neither side), the claim rule — a gain needs >= 9/10 of the pairs
-won and a median difference larger than the parent's interquartile
-range — and the bound check: the change's median may be worse than the
-parent's by at most `bound` of the parent's median, and each side's
-spread (IQR / median) must be within `bound` for the comparison to tell.
+won, a median difference larger than the parent's interquartile range,
+and no larger share of failed operations than the parent's — and the
+bound check. The bound check reads `unresolved` when either side's
+spread (IQR / median) is wider than `bound`, unless every change run is
+better than every parent run; otherwise `FAIL` when the change's median
+is worse than the parent's by more than `bound` of the parent's median,
+and `ok` else. Each workload also reports both sides' share of failed
+operations, `FAIL` when the change's is larger.
 """
 import argparse
 import json
@@ -48,9 +53,15 @@ def parse_seeds(text):
     return sorted(seeds)
 
 
-def order(seed):
-    """Which side runs first for a seed: the parent on even seeds."""
-    return ("parent", "change") if seed % 2 == 0 else ("change", "parent")
+def order(index):
+    """Which side runs first in the pair at `index` (0-based) of a set:
+    the parent in even pairs, the change in odd ones."""
+    return ("parent", "change") if index % 2 == 0 else ("change", "parent")
+
+
+def schedule(seeds):
+    """The runs of a set in order: [(seed, side)], alternating per pair."""
+    return [(seed, side) for i, seed in enumerate(seeds) for side in order(i)]
 
 
 def quantile(xs, q):
@@ -80,8 +91,22 @@ def gain(parent_median, change_median, better):
     return d if better == "lower" else -d
 
 
-def verdict(parent, change, better, bound):
-    """One metric's comparison over matched runs `parent[i]`/`change[i]`."""
+def all_better(parent, change, better):
+    """Whether every change run beats every parent run."""
+    if better == "lower":
+        return max(change) < min(parent)
+    return min(change) > max(parent)
+
+
+def failed_share(results):
+    """Failed operations over attempted ones, across a side's runs."""
+    attempted = sum(r.get("attempted") or 0 for r in results)
+    return sum(r.get("failed") or 0 for r in results) / attempted if attempted else 0.0
+
+
+def verdict(parent, change, better, bound, more_failed=False):
+    """One metric's comparison over matched runs `parent[i]`/`change[i]`;
+    `more_failed`: the change failed a larger share of its operations."""
     p25, p50, p75 = quartiles(parent)
     c25, c50, c75 = quartiles(change)
     n = len(parent)
@@ -90,18 +115,22 @@ def verdict(parent, change, better, bound):
     iqr = p75 - p25
     worse = -delta / p50 if p50 else 0.0
     spread = max((p75 - p25) / p50 if p50 else 0.0, (c75 - c25) / c50 if c50 else 0.0)
+    if spread > bound and not all_better(parent, change, better):
+        status = "unresolved"
+    else:
+        status = "FAIL" if worse > bound else "ok"
     return {
         "parent": (p25, p50, p75), "change": (c25, c50, c75), "pairs": n,
         "wins": won, "gain": delta, "parent_iqr": iqr,
-        "claim": n > 0 and won * 10 >= 9 * n and delta > iqr,
-        "worse_share": worse, "spread": spread,
-        "within_bound": worse <= bound and spread <= bound,
+        "claim": n > 0 and won * 10 >= 9 * n and delta > iqr and not more_failed,
+        "worse_share": worse, "spread": spread, "bound": status,
     }
 
 
 def paired(records, workload):
-    """{seed: {side: result}} for the workload's correct runs, and the
-    seeds with both sides present."""
+    """{seed: {side: result}} for every run of the workload — incorrect
+    runs and runs with failed operations included (`table` lists them) —
+    and the seeds with both sides present."""
     by_seed = {}
     for r in records:
         if r["workload"] == workload:
@@ -120,6 +149,11 @@ def table(records, workload, metrics):
                      f"failed={r.get('failed')}/{r.get('attempted')}")
     if not seeds:
         return "\n".join(lines)
+    shares = {side: failed_share([by_seed[s][side] for s in seeds])
+              for side in ("parent", "change")}
+    more_failed = shares["change"] > shares["parent"]
+    lines.append(f"   failed ops: parent {shares['parent']:.1%}, change {shares['change']:.1%}"
+                 f"  {'FAIL' if more_failed else 'ok'}")
     fmt = "{:.3f}/{:.3f}/{:.3f}"
     lines.append(f"   {'metric':<16}{'unit':<5}{'better':<7}{'parent q1/med/q3':<24}"
                  f"{'change q1/med/q3':<24}{'wins':<7}{'gain':>8}{'p.IQR':>8}"
@@ -127,12 +161,12 @@ def table(records, workload, metrics):
     for name, unit, better, bound in metrics:
         p = [by_seed[s]["parent"]["metrics"][name]["value"] for s in seeds]
         c = [by_seed[s]["change"]["metrics"][name]["value"] for s in seeds]
-        v = verdict(p, c, better, bound)
+        v = verdict(p, c, better, bound, more_failed)
         lines.append(
             f"   {name:<16}{unit:<5}{better:<7}{fmt.format(*v['parent']):<24}"
             f"{fmt.format(*v['change']):<24}{v['wins']:>2}/{v['pairs']:<4}"
             f"{v['gain']:>8.3f}{v['parent_iqr']:>8.3f}  {'yes' if v['claim'] else 'no ':<5}  "
-            f"{'ok' if v['within_bound'] else 'FAIL'} (worse {v['worse_share']:+.1%}, "
+            f"{v['bound']} (worse {v['worse_share']:+.1%}, "
             f"spread {v['spread']:.2f} of {bound})")
     return "\n".join(lines)
 
@@ -174,16 +208,15 @@ def main(argv=None):
     if not (a.parent and a.change and a.out):
         ap.error("running pairs needs --parent, --change and --out")
     dirs = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
-    for seed in parse_seeds(a.seeds):
-        for side in order(seed):
-            result = run_one(dirs[side], a.workload, seed, a.seconds)
-            with open(a.out, "a") as fh:
-                fh.write(json.dumps({"workload": a.workload, "seed": seed, "side": side,
-                                     "result": result}) + "\n")
-            print(f"[ab_pairs] {a.workload} seed {seed} {side}: "
-                  + " ".join(f"{m}={result['metrics'][m]['value']:.3f}"
-                             for m, _, _, _ in metrics),
-                  file=sys.stderr, flush=True)
+    for seed, side in schedule(parse_seeds(a.seeds)):
+        result = run_one(dirs[side], a.workload, seed, a.seconds)
+        with open(a.out, "a") as fh:
+            fh.write(json.dumps({"workload": a.workload, "seed": seed, "side": side,
+                                 "result": result}) + "\n")
+        print(f"[ab_pairs] {a.workload} seed {seed} {side}: "
+              + " ".join(f"{m}={result['metrics'][m]['value']:.3f}"
+                         for m, _, _, _ in metrics),
+              file=sys.stderr, flush=True)
     print(summarize(a.out, metrics))
 
 

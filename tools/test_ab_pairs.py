@@ -20,8 +20,14 @@ class ArithmeticTest(unittest.TestCase):
 
     def test_seeds_and_order(self):
         self.assertEqual(ab_pairs.parse_seeds("101-103,7,102"), [7, 101, 102, 103])
-        self.assertEqual(ab_pairs.order(4), ("parent", "change"))
-        self.assertEqual(ab_pairs.order(5), ("change", "parent"))
+        self.assertEqual(ab_pairs.order(0), ("parent", "change"))
+        self.assertEqual(ab_pairs.order(1), ("change", "parent"))
+
+    def test_first_side_alternates_by_pair_not_by_seed_parity(self):
+        # odd seeds only: the side that runs first still alternates
+        self.assertEqual(ab_pairs.schedule([1, 3, 5, 7]), [
+            (1, "parent"), (1, "change"), (3, "change"), (3, "parent"),
+            (5, "parent"), (5, "change"), (7, "change"), (7, "parent")])
 
     def test_wins_count_ties_for_neither(self):
         pairs = [(3.0, 2.0), (3.0, 3.0), (2.0, 3.0)]
@@ -36,7 +42,10 @@ class ArithmeticTest(unittest.TestCase):
         self.assertAlmostEqual(v["gain"], 0.6)
         self.assertAlmostEqual(v["parent_iqr"], 0.45)
         self.assertTrue(v["claim"])
-        self.assertTrue(v["within_bound"])
+        self.assertEqual(v["bound"], "ok")
+        # the same runs with more failed operations on the change side
+        v = ab_pairs.verdict(parent, faster, "lower", 0.25, more_failed=True)
+        self.assertFalse(v["claim"])
         # every pair won, but by less than the parent's own spread
         v = ab_pairs.verdict(parent, [p - 0.3 for p in parent], "lower", 0.25)
         self.assertEqual(v["wins"], 10)
@@ -54,20 +63,39 @@ class ArithmeticTest(unittest.TestCase):
         self.assertTrue(v["claim"])
         v = ab_pairs.verdict(parent, [0.7] * 10, "higher", 0.25)
         self.assertAlmostEqual(v["worse_share"], 0.3)
-        self.assertFalse(v["within_bound"])
+        self.assertEqual(v["bound"], "FAIL")
 
     def test_bound_counts_worsening_and_spread(self):
         parent = [2.0] * 10
         v = ab_pairs.verdict(parent, [2.4] * 10, "lower", 0.25)
         self.assertAlmostEqual(v["worse_share"], 0.2)
-        self.assertTrue(v["within_bound"])
+        self.assertEqual(v["bound"], "ok")
         v = ab_pairs.verdict(parent, [2.6] * 10, "lower", 0.25)
-        self.assertFalse(v["within_bound"])
-        # a side whose quartiles spread wider than the bound cannot tell
+        self.assertEqual(v["bound"], "FAIL")
+
+    def test_a_spread_wider_than_the_bound_is_unresolved_not_a_fail(self):
+        parent = [2.0] * 10
+        # a side whose quartiles spread wider than the bound cannot tell,
+        # whichever way its median moved
         wide = [1.0, 1.0, 1.0, 1.5, 2.0, 2.0, 2.5, 3.0, 3.0, 3.0]
         v = ab_pairs.verdict(parent, wide, "lower", 0.25)
         self.assertGreater(v["spread"], 0.25)
-        self.assertFalse(v["within_bound"])
+        self.assertEqual(v["bound"], "unresolved")
+        v = ab_pairs.verdict(parent, [x + 1.0 for x in wide], "lower", 0.25)
+        self.assertEqual(v["bound"], "unresolved")
+        # ... unless every change run beats every parent run
+        wide_parent = [3.5, 3.5, 3.5, 4.0, 5.0, 5.0, 6.0, 7.0, 7.0, 7.0]
+        v = ab_pairs.verdict(wide_parent, wide, "lower", 0.25)
+        self.assertGreater(v["spread"], 0.25)
+        self.assertEqual(v["bound"], "ok")
+        v = ab_pairs.verdict([1.0] * 10, [1.2, 1.2, 1.2, 2.0, 2.0, 2.0, 2.0, 3.0, 3.0, 3.0],
+                             "higher", 0.25)
+        self.assertEqual(v["bound"], "ok")
+
+    def test_failed_share_sums_over_runs(self):
+        runs = [{"attempted": 10, "failed": 1}, {"attempted": 30, "failed": 0}]
+        self.assertAlmostEqual(ab_pairs.failed_share(runs), 0.025)
+        self.assertEqual(ab_pairs.failed_share([{"attempted": 0, "failed": 0}]), 0.0)
 
     def test_summarize_pairs_by_seed_and_reads_the_bounds(self):
         metrics = ab_pairs.load_metrics()
@@ -93,6 +121,28 @@ class ArithmeticTest(unittest.TestCase):
         row = next(line for line in text.splitlines() if line.strip().startswith("op_p50_s"))
         self.assertIn(" 2/2 ", row)
         self.assertIn("yes", row)
+        self.assertIn("failed ops: parent 0.0%, change 0.0%  ok", text)
+
+    def test_summarize_denies_the_claim_when_the_change_fails_more_ops(self):
+        metrics = ab_pairs.load_metrics()
+        names = [m[0] for m in metrics]
+
+        def result(value, failed):
+            return {"correct": True, "attempted": 4, "failed": failed,
+                    "metrics": {n: {"value": value, "unit": "s"} for n in names}}
+        with tempfile.NamedTemporaryFile("w", suffix=".jsonl", delete=False) as fh:
+            for seed in range(1, 11):
+                for side, value, failed in (("parent", 2.0, 0), ("change", 1.0, 1)):
+                    fh.write(json.dumps({"workload": "stream_cdc", "seed": seed,
+                                         "side": side, "result": result(value, failed)}) + "\n")
+        try:
+            text = ab_pairs.summarize(fh.name, metrics)
+        finally:
+            os.unlink(fh.name)
+        self.assertIn("failed ops: parent 0.0%, change 25.0%  FAIL", text)
+        row = next(line for line in text.splitlines() if line.strip().startswith("op_p50_s"))
+        self.assertIn("10/10", row)
+        self.assertNotIn("yes", row)
 
 
 if __name__ == "__main__":
