@@ -483,10 +483,7 @@ object GraphOps {
     } finally { p.unpersist(false): Unit }
   }
 
-  /** One label-propagation round over the dst-partitioned edge cache —
-    * exposed (package-private) so PlanDump can commit the REAL round
-    * plan as evidence; the loop above checkpoints each round, so the
-    * query's own explain only shows a final-state read.
+  /** One label-propagation round over the dst-partitioned edge cache.
     *
     * Round shape: ONE exchange, not two. The joined rows are projected
     * to (src,label) and hash-partitioned by src; hash(src) satisfies
@@ -498,7 +495,7 @@ object GraphOps {
     * neighbors are spread across dst partitions, so pre-exchange
     * (src,label) duplicates were rare — the second exchange cost more
     * than the partial agg saved. */
-  private[graft] def lpRound(p: DataFrame, labels: DataFrame): DataFrame =
+  private def lpRound(p: DataFrame, labels: DataFrame): DataFrame =
     p.join(labels.withColumnRenamed("vertex", "dst"), "dst")
       .select(col("src"), col("label"))
       .repartition(col("src"))

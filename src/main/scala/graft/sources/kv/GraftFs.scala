@@ -16,8 +16,8 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, 
   *
   * Scheme notes:
   *  - `file:` resolves to the RAW local filesystem (no client-side
-  *    checksum siblings — parquet files written by Spark already carry
-  *    their own integrity metadata, and the KV control files are tiny
+  *    checksum siblings — parquet files already carry their own
+  *    integrity metadata, and the KV control files are tiny
   *    and atomically swapped);
   *  - `hdfs:` gets real semantics for free: `rename` is atomic in the
   *    namenode, so [[atomicReplace]] maps onto
@@ -68,8 +68,8 @@ object GraftFs {
 
   private[kv] def fsFor(p: Path): FileSystem = p.getFileSystem(hadoopConf) match {
     // raw local: java.io semantics, no .crc sibling pollution in the
-    // table directories (Spark's own parquet commits write theirs via
-    // the same raw fs)
+    // table directories (the staged writers' checksum siblings stay in
+    // their inflight dirs, which every commit deletes)
     case l: LocalFileSystem => l.getRawFileSystem
     case other => other
   }
@@ -88,7 +88,8 @@ object GraftFs {
 
   /** Data files of `dir`: non-hidden plain files, path-sorted — the
     * listing every scan snapshot and compaction snapshot is built
-    * from. */
+    * from. `_`-prefixed names are skipped too: logs written before the
+    * staged log writer still hold Spark's `_SUCCESS` markers. */
   def dataFiles(dir: String): Seq[FileEntry] =
     list(dir).filter(e => !e.isDir &&
       !e.name.startsWith(".") && !e.name.startsWith("_")).sortBy(_.path)
@@ -205,9 +206,9 @@ object GraftFs {
     }
   }
 
-  /** Move `src` over `dst` (overwrite). Used only inside the legacy
-    * migration, which runs under the pointer lock — no reader races
-    * this. */
+  /** Move `src` over `dst` (overwrite): the staged commits' renames
+    * out of their inflight dirs, whose file names are unique per write,
+    * and the legacy migration, which runs under the pointer lock. */
   def move(src: String, dst: String): Unit = {
     val s = new Path(src); val d = new Path(dst); val fs = fsFor(s)
     if (fs.exists(d)) fs.delete(d, false)

@@ -230,13 +230,12 @@ class KVCowWrite(path: String, layout: KVLayout, info: LogicalWriteInfo,
           }
           if (layout.logFiles.nonEmpty && untouched.nonEmpty) {
             import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-            SparkSession.active.read.schema(graft.write.KVTable.CELL_SCHEMA_DDL)
-              .parquet(layout.logFiles: _*)
-              .filter(!pmod(hash(col("key")), lit(numBuckets))
-                .isin(touched.toSeq.map(Integer.valueOf): _*))
-              .coalesce(1)
-              .write.mode(org.apache.spark.sql.SaveMode.Append)
-              .parquet(s"$path/log")
+            KVLogWrite.append(path,
+              SparkSession.active.read.schema(graft.write.KVTable.CELL_SCHEMA_DDL)
+                .parquet(layout.logFiles: _*)
+                .filter(!pmod(hash(col("key")), lit(numBuckets))
+                  .isin(touched.toSeq.map(Integer.valueOf): _*))
+                .coalesce(1))
           }
         case _ => () // no runtime group filter: full rewrite, nothing to carry
       }

@@ -1,10 +1,9 @@
 package graft.sources.kv
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.write.WriterCommitMessage
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.{Filter, LessThanOrEqual}
 
@@ -64,19 +63,12 @@ object KVGeneration {
     * runs as one SQL execution, so listeners attribute its jobs to it. */
   def write(cells: DataFrame, snap: KVLayout, numBuckets: Int): Unit = {
     val inflight = newInflight(snap)
-    val qe = cells.repartition(numBuckets, col("key"))
-      .sortWithinPartitions("key", "family", "qualifier").queryExecution
-    val factory = new KVCowWriterFactory(inflight, numBuckets,
-      KVBatchTable.CELL_SCHEMA.size)
-    val files = try SQLExecution.withNewExecutionId(qe,
-        Some(s"graft-kv generation write `${snap.path}`")) {
-      qe.toRdd.mapPartitionsWithIndex { (bucket, rows) =>
-        val w = factory.createWriter(bucket, TaskContext.get().taskAttemptId())
-        try { rows.foreach(w.write); Iterator(w.commit()) }
-        catch { case e: Throwable => w.abort(); throw e }
-      }.collect()
-    } catch { case e: Throwable => GraftFs.delete(inflight, recursive = true); throw e }
-    commit(snap, numBuckets, inflight, files.toSeq)(_ => ())
+    val files = KVStagedWrite.run(
+      cells.repartition(numBuckets, col("key"))
+        .sortWithinPartitions("key", "family", "qualifier"),
+      new KVCowWriterFactory(inflight, numBuckets, KVBatchTable.CELL_SCHEMA.size),
+      inflight, s"graft-kv generation write `${snap.path}`")
+    commit(snap, numBuckets, inflight, files)(_ => ())
   }
 
   /** Write the latest-wins view of bucketed snapshot `snap` at ts
@@ -92,32 +84,23 @@ object KVGeneration {
     * description naming the table. */
   def writeResolved(snap: KVLayout, cutoff: Long): Unit = {
     require(snap.bucketed, s"${snap.path} has no bucketed generation to rewrite")
-    val sc = SparkSession.active.sparkContext
     val inflight = newInflight(snap)
-    val factory = new KVCowWriterFactory(inflight, snap.numBuckets,
-      KVBatchTable.CELL_SCHEMA.size)
     val filters: Array[Filter] =
       if (cutoff == Long.MaxValue) Array.empty else Array(LessThanOrEqual("ts", cutoff))
     val hconf = GraftFs.readerConf()
+    // every bucket in order, one per partition: partition id == bucket id
     val parts = snap.bucketPartitions()
-    val description = "spark.job.description"
-    val callerDescription = sc.getLocalProperty(description)
-    sc.setLocalProperty(description,
-      s"graft-kv bucket-local generation write `${snap.path}`")
-    val files = try sc.parallelize(parts.toSeq, parts.length).map { p =>
-      val k = KVResolveKernel.run(p, Array(cutoff), filters, hconf)
-      val w = factory.createWriter(p.bucket, TaskContext.get().taskAttemptId())
-      try {
-        k.liveSorted(0).foreach { s =>
-          w.write(new GenericInternalRow(Array[Any](k.key(s), k.family(s),
-            k.qualifier(s), k.value(s, 0), java.lang.Long.valueOf(k.ts(s, 0)), null)))
-        }
-        w.commit()
-      } catch { case e: Throwable => w.abort(); throw e }
-    }.collect()
-    catch { case e: Throwable => GraftFs.delete(inflight, recursive = true); throw e }
-    finally sc.setLocalProperty(description, callerDescription)
-    commit(snap, snap.numBuckets, inflight, files.toSeq)(_ => ())
+    val rows = SparkSession.active.sparkContext
+      .parallelize(parts.toSeq, parts.length).flatMap { p =>
+        val k = KVResolveKernel.run(p, Array(cutoff), filters, hconf)
+        k.liveSorted(0).iterator.map(s => new GenericInternalRow(Array[Any](k.key(s),
+          k.family(s), k.qualifier(s), k.value(s, 0),
+          java.lang.Long.valueOf(k.ts(s, 0)), null)): InternalRow)
+      }
+    val files = KVStagedWrite.run(rows,
+      new KVCowWriterFactory(inflight, snap.numBuckets, KVBatchTable.CELL_SCHEMA.size),
+      inflight, s"graft-kv bucket-local generation write `${snap.path}`")
+    commit(snap, snap.numBuckets, inflight, files)(_ => ())
   }
 
   /** Adopt a staged generation as the successor of the generation
@@ -200,21 +183,9 @@ object KVGeneration {
       val retired = s"$logDir/.retired-g$newGen"
       GraftFs.mkdirs(retired)
       snap.logFiles.foreach { f =>
-        val slash = f.lastIndexOf('/')
-        GraftFs.delete(
-          f.substring(0, slash + 1) + "." + f.substring(slash + 1) + ".crc",
-          recursive = false)
-        if (GraftFs.exists(f)) GraftFs.move(f, s"$retired/${f.substring(slash + 1)}")
+        if (GraftFs.exists(f))
+          GraftFs.move(f, s"$retired/${f.substring(f.lastIndexOf('/') + 1)}")
       }
-    }
-    // prune commit markers when no append raced in — but ONLY the
-    // markers, never a data file written concurrently — and the
-    // directory itself once nothing is left in it
-    if (GraftFs.exists(logDir) && GraftFs.dataFiles(logDir).isEmpty) {
-      GraftFs.list(logDir).filter(e => !e.isDir &&
-        (e.name.startsWith("_") || e.name.startsWith(".")))
-        .foreach(e => GraftFs.delete(e.path, recursive = false))
-      if (GraftFs.list(logDir).isEmpty) GraftFs.delete(logDir, recursive = false)
     }
     // retire generation N-1 (drained: it predates every scan planned
     // since the previous pointer flip)

@@ -7,28 +7,35 @@ import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSuppor
 import org.apache.parquet.schema.{MessageType, PrimitiveType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.parquet.schema.LogicalTypeAnnotation.stringType
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.SQLExecution
 
-/** DataSourceV2 batch APPEND for a graft KV table: SQL
-  * `INSERT INTO graft.(...)` lands rows in the table's append log —
-  * exactly the `put` semantics (write/KVStore.scala:126, the
-  * reference's buffered-mutator upsert, HBaseTable.scala:100-155) —
-  * so catalog-resolved tables are writable without going around the
-  * catalog to the library API.
+/** The one writer of a graft KV table's append log `log/`. Every cell
+  * append lands through it: the library `KVTable.put` (and so `delete`
+  * and `increment`) and the copy-on-write commit's carry-forward
+  * through [[KVLogWrite.append]]; SQL `INSERT INTO graft.(...)` and the
+  * delta MERGE through Spark's DataSourceV2 batch write. This is the
+  * reference's one mutation sink, per-partition buffered puts with
+  * empty puts skipped (HBaseTable.scala:100-155).
   *
-  * Commit protocol (the same two-phase shape as Spark's file sources):
-  * every task writes its own parquet file under a dot-prefixed
-  * inflight directory — invisible to readers, which list only
-  * non-hidden plain files ([[GraftFs.dataFiles]]) — and job commit
-  * moves the committed tasks' files into `log/` one rename each.
-  * A reader racing the commit sees a prefix of the files (each is a
+  * Commit protocol: every task writes at most one parquet file — none
+  * when it has no rows — under the dot-prefixed inflight directory
+  * `log/.inflight-<queryId>`, invisible to readers, which list only
+  * non-hidden plain files ([[GraftFs.dataFiles]]), and job commit
+  * moves the committed tasks' files into `log/` one rename each. A
+  * reader racing the commit sees a prefix of the files (each is a
   * complete parquet file, and cell appends are order-independent —
   * latest-wins resolves on `ts`, not file order); failed or
   * speculative task attempts die in the inflight dir and are removed
-  * by commit/abort cleanup. On HDFS the renames are namenode-atomic;
-  * the S3 story is the same one the pointer protocol documents
-  * ([[GraftFs]] scheme notes).
+  * by commit/abort cleanup. File names carry the write's query id, so
+  * two writes whose tasks share `(partitionId, taskId)` — task ids
+  * restart in every SparkContext — never land on the same name. On
+  * HDFS the renames are namenode-atomic; the S3 story is the same one
+  * the pointer protocol documents ([[GraftFs]] scheme notes).
   */
 class KVWriteBuilder(path: String, info: LogicalWriteInfo) extends WriteBuilder {
   override def build(): Write = new KVLogWrite(path, info.queryId())
@@ -37,54 +44,106 @@ class KVWriteBuilder(path: String, info: LogicalWriteInfo) extends WriteBuilder 
 class KVLogWrite(path: String, queryId: String) extends Write with BatchWrite {
   private val logDir = s"$path/log"
   protected val inflightDir: String = s"$logDir/.inflight-$queryId"
-  private def inflight = inflightDir
 
   override def toBatch: BatchWrite = this
   override def description(): String = s"graft-kv append `$path`"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new KVLogWriterFactory(inflight)
+    new KVLogWriterFactory(inflightDir, queryId)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    GraftFs.mkdirs(logDir)
-    messages.foreach { case KVLogFile(name) =>
-      GraftFs.move(s"$inflight/$name", s"$logDir/$name")
-    }
-    GraftFs.delete(inflight, recursive = true)
+    val names = messages.collect { case KVLogFile(name) if name.nonEmpty => name }
+    if (names.nonEmpty) GraftFs.mkdirs(logDir)
+    names.foreach(name => GraftFs.move(s"$inflightDir/$name", s"$logDir/$name"))
+    GraftFs.delete(inflightDir, recursive = true)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    GraftFs.delete(inflight, recursive = true): Unit
+    GraftFs.delete(inflightDir, recursive = true): Unit
+  }
+}
+
+object KVLogWrite {
+  /** Append `cells` (the six cell columns, in `CELL_SCHEMA` order) to
+    * the log of the table at `path`: one log-writer task per partition
+    * of `cells`, run as one SQL execution, then [[KVLogWrite.commit]]. */
+  private[graft] def append(path: String, cells: DataFrame): Unit = {
+    val queryId = java.util.UUID.randomUUID.toString
+    val write = new KVLogWrite(path, queryId)
+    write.commit(KVStagedWrite.run(cells,
+      new KVLogWriterFactory(write.inflightDir, queryId),
+      write.inflightDir, write.description()).toArray)
+  }
+}
+
+/** The one driver-side task loop of the KV writers that run their own
+  * job: the log append ([[KVLogWrite.append]]) and both generation
+  * writers ([[KVGeneration.write]], [[KVGeneration.writeResolved]]).
+  * Partition i's rows go to the writer `factory` creates for partition
+  * i; a task that throws aborts its writer, and a job that fails
+  * deletes `inflight`, so nothing it staged survives. Returns the
+  * committed tasks' messages, in partition order, for the caller's
+  * job commit. */
+private[kv] object KVStagedWrite {
+  private val Description = "spark.job.description"
+
+  /** Stage `rows` as one SQL execution, so listeners attribute its
+    * jobs to it. */
+  def run(rows: DataFrame, factory: DataWriterFactory, inflight: String,
+          description: String): Seq[WriterCommitMessage] = {
+    val qe = rows.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(description))(
+      run(qe.toRdd, factory, inflight, description))
+  }
+
+  /** Stage `rows` on the caller's thread, under its local properties,
+    * with `description` as the job description. */
+  def run(rows: => RDD[InternalRow], factory: DataWriterFactory,
+          inflight: String, description: String): Seq[WriterCommitMessage] = {
+    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    val callerDescription = sc.getLocalProperty(Description)
+    sc.setLocalProperty(Description, description)
+    try rows.mapPartitionsWithIndex { (id, it) =>
+      val w = factory.createWriter(id, TaskContext.get().taskAttemptId())
+      try { it.foreach(w.write); Iterator(w.commit()) }
+      catch { case e: Throwable => w.abort(); throw e }
+      finally w.close()
+    }.collect().toSeq
+    catch { case e: Throwable => GraftFs.delete(inflight, recursive = true); throw e }
+    finally sc.setLocalProperty(Description, callerDescription)
   }
 }
 
 case class KVLogFile(name: String) extends WriterCommitMessage
 
-class KVLogWriterFactory(inflight: String) extends DataWriterFactory {
+class KVLogWriterFactory(inflight: String, queryId: String) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new KVLogDataWriter(inflight, partitionId, taskId)
+    new KVLogDataWriter(inflight, queryId, partitionId, taskId)
 }
 
-/** One task = one parquet file of cells, written row-wise through
-  * parquet-mr (appends are memstore-sized by contract — the bulk path
-  * is compaction, which writes through Spark's own vectorized parquet
-  * sink). The file schema matches what `KVTable.put` produces via
-  * Spark's parquet writer (optional int64 / UTF8 binary), so both
-  * readers decode log files identically regardless of which write
-  * path appended them. */
-class KVLogDataWriter(inflight: String, partitionId: Int, taskId: Long)
+/** One task = at most one parquet file of cells, written row-wise
+  * through parquet-mr (appends are memstore-sized by contract — the
+  * bulk path is compaction). The file is opened on the first row, so a
+  * task with no rows lands no file and commits an empty name. */
+class KVLogDataWriter(inflight: String, queryId: String, partitionId: Int,
+                      taskId: Long)
     extends DataWriter[InternalRow] {
   import KVLogDataWriter._
 
-  private val name = f"part-$partitionId%05d-$taskId.parquet"
-  private val writer = openCellWriter(s"$inflight/$name")
-  private val groups = new SimpleGroupFactory(CELL_TYPE)
+  private val name = f"part-$partitionId%05d-$taskId-$queryId.parquet"
+  private var writer: org.apache.parquet.hadoop.ParquetWriter[
+    org.apache.parquet.example.data.Group] = _
+  private lazy val groups = new SimpleGroupFactory(CELL_TYPE)
 
-  override def write(row: InternalRow): Unit =
+  override def write(row: InternalRow): Unit = {
+    if (writer == null) writer = openCellWriter(s"$inflight/$name")
     writer.write(cellGroup(groups, row, 0))
+  }
 
-  override def commit(): WriterCommitMessage = { writer.close(); KVLogFile(name) }
-  override def abort(): Unit = writer.close()
+  override def commit(): WriterCommitMessage =
+    if (writer == null) KVLogFile("")
+    else { writer.close(); KVLogFile(name) }
+  override def abort(): Unit = if (writer != null) writer.close()
   override def close(): Unit = ()
 }
 
@@ -99,9 +158,7 @@ object KVLogDataWriter {
     i64("key"), str("family"), str("qualifier"), str("value"),
     i64("ts"), str("tomb"))
 
-  /** Open a parquet-mr writer over [[CELL_TYPE]] — snappy, the codec
-    * Spark's parquet sink defaults to, so cell files read identically
-    * whichever write path produced them. */
+  /** Open a snappy-compressed parquet-mr writer over [[CELL_TYPE]]. */
   private[kv] def openCellWriter(
       file: String): org.apache.parquet.hadoop.ParquetWriter[
         org.apache.parquet.example.data.Group] = {

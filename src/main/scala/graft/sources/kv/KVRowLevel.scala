@@ -114,21 +114,22 @@ class KVDeltaWrite(path: String, queryId: String)
   override def toBatch: DeltaBatchWrite = this
   override def description(): String = s"graft-kv delta `$path`"
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
-    new KVDeltaWriterFactory(inflightDir)
+    new KVDeltaWriterFactory(inflightDir, queryId)
 }
 
-class KVDeltaWriterFactory(inflight: String) extends DeltaWriterFactory {
+class KVDeltaWriterFactory(inflight: String, queryId: String) extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new KVDeltaDataWriter(inflight, partitionId, taskId)
+    new KVDeltaDataWriter(inflight, queryId, partitionId, taskId)
 }
 
 /** Translates delta ops to cells in one task-local parquet file:
   * insert/update append the (full-schema) row as-is; delete appends a
   * tombstone derived from the row id `(key, family, qualifier, ts)` —
   * granularity by null pattern, as in `KVTable.delete`. */
-class KVDeltaDataWriter(inflight: String, partitionId: Int, taskId: Long)
+class KVDeltaDataWriter(inflight: String, queryId: String, partitionId: Int,
+                        taskId: Long)
     extends DeltaWriter[InternalRow] {
-  private val inner = new KVLogDataWriter(inflight, partitionId, taskId)
+  private val inner = new KVLogDataWriter(inflight, queryId, partitionId, taskId)
 
   override def insert(row: InternalRow): Unit = inner.write(row)
 

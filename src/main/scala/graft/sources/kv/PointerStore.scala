@@ -191,19 +191,24 @@ object CasPointerStore extends PointerStore {
     won
   }
 
-  override def readLatest(tablePath: String): Option[(Int, Int)] = {
-    val candidates = GraftFs.list(ptrDir(tablePath))
-      .flatMap(e => e.name match {
-        case Name(g) => Some((g.toInt, e.path))
-        case _ => None // partial-upload tmp junk, foreign files: ignored
-      })
-      .sortBy(-_._1)
-    // objects are immutable, but a racing retirement may delete an old
-    // candidate between list and read — skip to the next newest
-    candidates.iterator
-      .flatMap { case (_, p) =>
-        GraftFs.readString(p).flatMap(PointerStore.parsePair)
+  override def readLatest(tablePath: String): Option[(Int, Int)] =
+    latest(() => GraftFs.list(ptrDir(tablePath)).flatMap(e => e.name match {
+      case Name(g) => Some((g.toInt, e.path))
+      case _ => None // partial-upload tmp junk, foreign files: ignored
+    }))
+
+  /** Read the max-numbered pointer of `listing()`. Objects are
+    * immutable, but a publish of `g+2` or later retires `g` — the max
+    * of a stale listing — between list and read. Then a newer pointer
+    * exists, so list again; an older entry of the stale listing could
+    * name a generation that is already pruned. */
+  @annotation.tailrec
+  private[graft] def latest(listing: () => Seq[(Int, String)]): Option[(Int, Int)] =
+    listing().maxByOption(_._1) match {
+      case None => None
+      case Some((_, p)) => GraftFs.readString(p) match {
+        case Some(s) => PointerStore.parsePair(s)
+        case None => latest(listing)
       }
-      .buffered.headOption
-  }
+    }
 }

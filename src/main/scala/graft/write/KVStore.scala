@@ -1,10 +1,10 @@
 package graft.write
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.kv.{GraftFs, KVGeneration, KVLayout, KVSource}
+import graft.sources.kv.{GraftFs, KVGeneration, KVLayout, KVLogWrite, KVSource}
 
 /** Cell-level KV table with the reference's storage semantics
   * (HBaseTable.scala:100-352, HBaseRDD.scala:39-42) re-expressed on
@@ -32,19 +32,20 @@ import graft.sources.kv.{GraftFs, KVGeneration, KVLayout, KVSource}
   * catalog entry exists for it.
   *
   * Scale notes: appends are cheap (no read-modify-write at write time —
-  * the reference's BufferedMutator analogue); a resolved read is
-  * resolved inside the region scan, like the store's `setMaxVersions(1)`
-  * scan: each scan task runs the resolve kernel over one bucket's
-  * compacted files plus the log rows hashing to it, with no shuffle,
-  * sort or window ([[resolvedAsOf]]). Read cost is therefore the log a
-  * bucket re-reads, and periodic compaction bounds it exactly like
-  * HBase memstore flush + compaction does. At 100 TB the compacted form
-  * is key-sorted parquet → merge-joinable and range-prunable.
+  * the reference's BufferedMutator analogue) and all land through one
+  * staged log writer ([[graft.sources.kv.KVLogWrite]]): [[put]],
+  * [[delete]], [[increment]], SQL INSERT and the delta MERGE alike. A
+  * resolved read is resolved inside the region scan, like the store's
+  * `setMaxVersions(1)` scan: each scan task runs the resolve kernel
+  * over one bucket's compacted files plus the log rows hashing to it,
+  * with no shuffle, sort or window ([[resolvedAsOf]]). Read cost is
+  * therefore the log a bucket re-reads, and periodic compaction bounds
+  * it exactly like HBase memstore flush + compaction does. At 100 TB
+  * the compacted form is key-sorted parquet → merge-joinable and
+  * range-prunable.
   */
 class KVTable(val spark: SparkSession, val path: String) {
   import KVTable._
-
-  private def logDir = s"$path/log"
 
   /** `(generation, numBuckets)` of the live compacted state, via the
     * shared pointer reader ([[graft.sources.kv.KVPointer]] — one parse
@@ -56,8 +57,7 @@ class KVTable(val spark: SparkSession, val path: String) {
     graft.sources.kv.KVPointer.read(path)
 
   /** The one existence rule, shared with [[graft.sources.kv.GraftCatalog]]:
-    * a published generation or a log holding DATA files (Spark's parquet
-    * commit leaves `_SUCCESS` markers behind, which do not count). */
+    * a published generation or a log holding data files. */
   def exists: Boolean = KVLayout(path).exists
 
   private def emptyCells: DataFrame = spark.createDataFrame(
@@ -86,9 +86,9 @@ class KVTable(val spark: SparkSession, val path: String) {
     }
 
   /** M1/M2 `update`/`put` (HBaseTable.scala:100-155): append new cells;
-    * no read required (upsert-by-log). */
-  def put(newCells: DataFrame): Unit =
-    conform(newCells).write.mode(SaveMode.Append).parquet(logDir)
+    * no read required (upsert-by-log). One staged file per non-empty
+    * partition of `newCells`, renamed into `log/` on commit. */
+  def put(newCells: DataFrame): Unit = KVLogWrite.append(path, conform(newCells))
 
   /** M4 `delete` (HBaseTable.scala:181-212): row / family / cell
     * granularity tombstones. Pass qualifier=null+family=null for whole

@@ -128,6 +128,26 @@ class PointerStoreSpec extends AnyFunSuite with SparkSpec {
     assert((0 until gens).forall(winners.containsKey))
   }
 
+  test("CAS: a listing whose newest pointer is gone before it is read " +
+    "lists again instead of falling back to an older entry") {
+    val t = fresh("relist")
+    assert(CasPointerStore.publish(t, 3, 103))
+    assert(CasPointerStore.publish(t, 5, 105))
+    val dir = CasPointerStore.ptrDir(t)
+    def live = GraftFs.list(dir).map(e =>
+      (e.name.stripPrefix("ptr-").stripSuffix(".txt").toInt, e.path))
+    // the first listing was taken while ptr-4 was the newest; a publish
+    // retired it before the read, and ptr-5 landed meanwhile
+    var listings = 0
+    val got = CasPointerStore.latest { () =>
+      listings += 1
+      if (listings == 1) Seq((3, s"$dir/ptr-0000000003.txt"), (4, s"$dir/ptr-0000000004.txt"))
+      else live
+    }
+    assert(got === Some((5, 105)))
+    assert(listings === 2)
+  }
+
   test("CAS conditional-create probe: only an incapable s3 store is rejected") {
     import graft.sources.kv.CasPointerStore.conditionalCreateUnsupported
     // s3 without the Hadoop 3.4.1+ conditional-create path capability =
