@@ -570,7 +570,8 @@ object GraphOps {
     * contraction (Kiveris et al., "Connected Components in MapReduce
     * and Beyond", SoCC 2014) — the O(log n)-round algorithm for
     * HIGH-DIAMETER graphs, where per-step label propagation
-    * ([[bspIterateDelta]], Dedup.clusters) needs O(diameter) rounds.
+    * ([[bspIterateDelta]]) needs O(diameter) rounds. Dedup.clusters
+    * runs it on a pair graph over its driver union-find's edge cap.
     * Each round is two groupBy-min passes over the shrinking edge set:
     *
     *  - large-star: every vertex u computes m = min(N(u) ∪ u) and

@@ -427,8 +427,9 @@ object GraphQueries {
 
     // G12 (extra): connected components by large-star/small-star
     // contraction (Kiveris et al. SoCC 2014) — the O(log n)-round CC
-    // for high-diameter graphs, vs the O(diameter) label propagation
-    // Dedup.clusters runs on shallow near-dup graphs. Input: a
+    // for high-diameter graphs, and Dedup.clusters' over-cap path
+    // (which no gated pair graph reaches, so this query is how the
+    // oracle covers star contraction). Input: a
     // deterministic 1-in-20 hash sample of the canonical pair list
     // (keeps the oracle's transitive closure quadratic-in-component,
     // components stay small by subcritical branching). Output: one row

@@ -182,14 +182,34 @@ object Dedup {
     spread(docs).select(col("doc_id"),
       explode(shingles(words(col("text")), k)).as("s"))
 
-  /** Exact n-gram Jaccard similar pairs (shingle-join; at scale run it
-    * on LSH candidates only — see `minHashLsh`).
-    *
-    * `maxShingleDocFreq`: a shingle appearing in more than this many
-    * documents ("stop-shingle") is excluded from the candidate join —
-    * at corpus scale hot shingles dominate join fan-out quadratically
-    * while contributing almost nothing to high-Jaccard pairs. 0 = off
-    * (exact semantics, the oracle-checked default). */
+  /** The shingle side both shingle-join pair finders build: the cached
+    * per-doc distinct-shingle arrays `arr` (unpersist after use), the
+    * exploded (doc_id, s) rows minus stop-shingles `sh`, and the per-doc
+    * shingle count `cnt` (doc_id, n) the similarity divides by. A
+    * shingle in more than `maxShingleDocFreq` documents is a
+    * stop-shingle (0 = off, exact semantics). */
+  private def shingleSide(docs: DataFrame, k: Int, maxShingleDocFreq: Long)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val arr = spread(docs)
+      .select(col("doc_id"), shingles(words(col("text")), k).as("sh"))
+      .cache()
+    val all = arr.select(col("doc_id"), explode(col("sh")).as("s"))
+    val sh =
+      if (maxShingleDocFreq <= 0) all
+      else {
+        val hot = all.groupBy(col("s")).agg(count(lit(1)).as("df"))
+          .filter(col("df") > maxShingleDocFreq).select(col("s"))
+        all.join(hot, Seq("s"), "left_anti").cache()
+      }
+    // exact path: per-doc count = array size (no shuffle aggregate);
+    // hot-filtered path: must count the FILTERED shingles
+    val cnt =
+      if (maxShingleDocFreq <= 0)
+        arr.select(col("doc_id"), size(col("sh")).cast("long").as("n"))
+      else sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    (arr, sh, cnt)
+  }
+
   /** Near-SUBSET duplicate pairs by n-gram CONTAINMENT,
     * C(a → b) = |sh(a) ∩ sh(b)| / |sh(a)| — the quote/benchmark-leak
     * detector where Jaccard goes blind: a 50-word passage copied into
@@ -208,23 +228,7 @@ object Dedup {
     * oracle-checked default). */
   def containment(docs: DataFrame, threshold: Double,
                   k: Int = 3, maxShingleDocFreq: Long = 0L): DataFrame = {
-    val arr = spread(docs)
-      .select(col("doc_id"), shingles(words(col("text")), k).as("sh"))
-      .cache()
-    val all = arr.select(col("doc_id"), explode(col("sh")).as("s"))
-    val sh =
-      if (maxShingleDocFreq <= 0) all
-      else {
-        val hot = all.groupBy(col("s")).agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxShingleDocFreq).select(col("s"))
-        all.join(hot, Seq("s"), "left_anti").cache()
-      }
-    // exact path: denominator = array size (no shuffle aggregate);
-    // hot-filtered path: must count the FILTERED shingles per doc
-    val cnt =
-      if (maxShingleDocFreq <= 0)
-        arr.select(col("doc_id"), size(col("sh")).cast("long").as("n"))
-      else sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    val (arr, sh, cnt) = shingleSide(docs, k, maxShingleDocFreq)
     val pairs = sh.as("a").join(sh.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") =!= col("b.doc_id"))
       .groupBy(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
@@ -236,25 +240,17 @@ object Dedup {
     barrier(pairs, arr, sh)
   }
 
+  /** Exact n-gram Jaccard similar pairs (shingle-join; at scale run it
+    * on LSH candidates only — see `minHashLsh`).
+    *
+    * `maxShingleDocFreq`: a shingle appearing in more than this many
+    * documents ("stop-shingle") is excluded from the candidate join —
+    * at corpus scale hot shingles dominate join fan-out quadratically
+    * while contributing almost nothing to high-Jaccard pairs. 0 = off
+    * (exact semantics, the oracle-checked default). */
   def ngramJaccard(docs: DataFrame, threshold: Double, k: Int = 3,
                    maxShingleDocFreq: Long = 0L): DataFrame = {
-    val arr = spread(docs)
-      .select(col("doc_id"), shingles(words(col("text")), k).as("sh"))
-      .cache()
-    val all = arr.select(col("doc_id"), explode(col("sh")).as("s"))
-    val sh =
-      if (maxShingleDocFreq <= 0) all
-      else {
-        val hot = all.groupBy(col("s")).agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxShingleDocFreq).select(col("s"))
-        all.join(hot, Seq("s"), "left_anti").cache()
-      }
-    // exact path: per-doc count = array size (no shuffle aggregate);
-    // hot-filtered path: must count the FILTERED shingles
-    val cnt =
-      if (maxShingleDocFreq <= 0)
-        arr.select(col("doc_id"), size(col("sh")).cast("long").as("n"))
-      else sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    val (arr, sh, cnt) = shingleSide(docs, k, maxShingleDocFreq)
     val common = sh.as("a").join(sh.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
@@ -394,124 +390,61 @@ object Dedup {
   /** Dedup CLUSTERS from near-dup pairs: what a pipeline actually acts
     * on is not the pair list but a cluster id per document (keep one
     * representative per cluster, drop the rest). Connected components
-    * over the pair graph by iterative min-label propagation; each
-    * document's cluster id is the smallest doc id reachable from it.
+    * over the pair graph; each document's cluster id is the smallest
+    * doc id in its component, and docs in no pair get
+    * `cluster = doc_id` by the final left join.
     *
-    * Scale shape: the iteration runs ONLY over vertices that appear in
-    * some pair — the near-dup graph, orders of magnitude smaller than
-    * the corpus — and each round shuffles the (shrinking-label) vertex
-    * set once plus the edge set once; docs in no pair never enter the
-    * loop and get `cluster = doc_id` by a final left join. Components
-    * here are near-dup groups, so their diameter is small and the loop
-    * converges in a handful of rounds; `maxIter` is the backstop, and
-    * `localCheckpoint` keeps lineage flat across rounds (same pattern
-    * as the BSP loop, graph/GraphOps.scala). */
-  def clusters(docs: DataFrame, pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val fwd = pairs.select(col("da").as("v"), col("db").as("w"))
-    val und = fwd.unionByName(fwd.select(col("w").as("v"), col("v").as("w")))
-      .distinct().localCheckpoint(eager = true)
-    var lab = und.select(col("v")).distinct()
-      .select(col("v"), col("v").as("label")).localCheckpoint(eager = true)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // one round = one edge-join shuffle + one min-agg; the PREVIOUS
-      // label rides along into the checkpoint so convergence is a local
-      // filter over the materialized round, not another shuffle join
-      val prop = und.join(lab, Seq("v")).select(col("w").as("v"), col("label"))
-      val next = lab.withColumnRenamed("label", "old")
-        .join(prop.groupBy(col("v")).agg(min(col("label")).as("p")),
-          Seq("v"), "left_outer")
-        .select(col("v"), col("old"),
-          least(col("old"), col("p")).as("label")) // least skips null p
-        .localCheckpoint(eager = true)
-      converged = next.filter(col("label") < col("old")).isEmpty
-      lab = next.select(col("v"), col("label"))
-      i += 1
-    }
-    // a non-converged exit would silently hand back labels that split
-    // real components — fail fast instead (the connectedComponentsStar
-    // discipline); a pair graph needing more than maxIter rounds has
-    // diameter > maxIter and should run clustersViaStar (O(log²) rounds)
-    if (!converged)
-      throw new IllegalStateException(
-        s"Dedup.clusters did not converge in $maxIter rounds — the pair " +
-          "graph's diameter exceeds maxIter; raise it or use the " +
-          "star-contraction path (clustersBounded falls back to it)")
+    * Scale shape: ONE job collects the pair edges with `limit(cap + 1)`,
+    * which both bounds driver memory and answers the over-cap question.
+    * At or under `cap` edges an exact driver union-find labels the
+    * pair vertices — independent of component diameter — and the
+    * labels broadcast-join back to `docs` (the same
+    * collect-under-cap-else-distributed discipline as the a13 cutoff,
+    * graph/GraphOps.scala). The pair graph is the near-dup graph,
+    * orders of magnitude smaller than the corpus. Over `cap` it runs
+    * star contraction ([[graft.graph.GraphOps.connectedComponentsStar]]:
+    * O(log² n) rounds on any diameter). */
+  def clusters(docs: DataFrame, pairs: DataFrame,
+               cap: Int = 2000000): DataFrame = {
+    // duplicate/undirected edges need no distinct — union-find is
+    // idempotent over them
+    val edges = pairs.select(col("da").as("v"), col("db").as("w"))
+      .limit(cap + 1).collect().map(r => (r.getLong(0), r.getLong(1)))
+    val labels =
+      if (edges.length > cap)
+        graft.graph.GraphOps.connectedComponentsStar(
+            pairs.select(col("da").as("src"), col("db").as("dst")))
+          .select(col("vertex").as("doc_id"), col("cluster").as("label"))
+      else {
+        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+          var c = x
+          while (parent.getOrElse(c, c) != c) {
+            val nx = parent.getOrElse(c, c); parent(c) = r; c = nx
+          }
+          r
+        }
+        edges.foreach { case (a, b) =>
+          val (ra, rb) = (find(a), find(b))
+          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+        }
+        val verts = edges.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
+        val lab = verts.iterator.map(v => (v, find(v))).toSeq
+        import docs.sparkSession.implicits._
+        broadcast(docs.sparkSession.createDataset(lab).toDF("doc_id", "label"))
+      }
     docs.select(col("doc_id"))
-      .join(lab.withColumnRenamed("v", "doc_id"), Seq("doc_id"), "left_outer")
+      .join(labels, Seq("doc_id"), "left_outer")
       .select(col("doc_id"),
         coalesce(col("label"), col("doc_id")).as("cluster"))
       .withColumn("keep", (col("cluster") === col("doc_id")).cast("boolean"))
   }
 
-  /** [[clusters]] semantics (cluster = component-min doc id, isolated
-    * docs self-labeled) through GraphOps.connectedComponentsStar —
-    * star contraction converges in O(log²) rounds regardless of
-    * component diameter, so it is the safe distributed path when the
-    * pair graph's shape is unknown (clustersBounded's over-cap leg). */
-  def clustersViaStar(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val cc = graft.graph.GraphOps.connectedComponentsStar(
-      pairs.select(col("da").as("src"), col("db").as("dst")))
-    docs.select(col("doc_id"))
-      .join(cc.withColumnRenamed("vertex", "doc_id"), Seq("doc_id"),
-        "left_outer")
-      .select(col("doc_id"),
-        coalesce(col("cluster"), col("doc_id")).as("cluster"))
-      .withColumn("keep", (col("cluster") === col("doc_id")).cast("boolean"))
-  }
-
-  /** [[clusters]] for a pair graph BOUNDED BY CONSTRUCTION — an ingest
-    * micro-batch's verified near-dup pairs, sized by the trigger, not
-    * the corpus. The distributed fixpoint pays 2 blocking jobs per
-    * propagation round; for a trigger-sized graph an exact driver
-    * union-find is ONE job (a cap-bounded limit+collect) independent
-    * of component diameter, the same collect-under-cap-else-distributed
-    * discipline as the a13 cutoff (graph/GraphOps.scala). Labels are
-    * the component-min doc id — identical to the fixpoint's answer —
-    * and anything over `cap` edges falls back to [[clustersViaStar]]
-    * (star contraction: O(log²) rounds on ANY diameter, unlike the
-    * O(diameter) label-prop loop, which a single adversarial chain
-    * component would stall past its maxIter backstop). */
-  def clustersBounded(docs: DataFrame, pairs: DataFrame,
-                      cap: Int = 2000000): DataFrame = {
-    // ONE job: limit(cap+1) bounds driver memory AND answers the
-    // over-cap question; duplicate/undirected edges need no distinct —
-    // union-find is idempotent over them
-    val edges = pairs.select(col("da").as("v"), col("db").as("w"))
-      .limit(cap + 1).collect().map(r => (r.getLong(0), r.getLong(1)))
-    if (edges.length > cap) clustersViaStar(docs, pairs)
-    else {
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val nx = parent.getOrElse(c, c); parent(c) = r; c = nx
-        }
-        r
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val verts = edges.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
-      val lab = verts.iterator.map(v => (v, find(v))).toSeq
-      import docs.sparkSession.implicits._
-      val labDf = docs.sparkSession.createDataset(lab)
-        .toDF("doc_id", "label")
-      docs.select(col("doc_id"))
-        .join(broadcast(labDf), Seq("doc_id"), "left_outer")
-        .select(col("doc_id"),
-          coalesce(col("label"), col("doc_id")).as("cluster"))
-        .withColumn("keep", (col("cluster") === col("doc_id")).cast("boolean"))
-    }
-  }
-
   /** Incremental CLUSTER ASSIGNMENT of an ingest batch against a
     * standing corpus — the missing piece between the incremental pair
-    * probe ([[minHashLshIncremental]]) and the batch component loop
+    * probe ([[minHashLshIncremental]]) and the batch components
     * ([[clusters]]): a pipeline at 100 TB re-clusters neither the
     * corpus nor its labels on ingest.
     *
@@ -574,12 +507,12 @@ object Dedup {
         >= threshold)
       .select(col("da"), col("db"), col("nn"))
     // lazy cache, not an eager barrier: the whole verify pipeline
-    // materializes as part of the component loop's first job (one fewer
+    // materializes as part of the components' edge collect (one fewer
     // synchronous round-trip — these batch-sized stages are fixed-
     // overhead-bound), and the nc leg then reads the cache
     val verified = pairs.cache()
-    // batch-local components: trigger-sized graph → bounded fast path
-    val comp = clustersBounded(batch, verified.filter(col("nn")))
+    // batch-local components over a trigger-sized pair graph
+    val comp = clusters(batch, verified.filter(col("nn")))
       .select(col("doc_id"), col("cluster").as("comp"))
     val seeds = verified.filter(!col("nn"))
       .join(corpusLabels.select(col("doc_id").as("da"),
@@ -601,7 +534,7 @@ object Dedup {
 
   /** Quality-aware keeper election over PRECOMPUTED cluster labels —
     * the library seam pipeline users compose with [[clusters]] so the
-    * LSH pass and the component loop run ONCE per corpus, not once per
+    * LSH pass and the components run ONCE per corpus, not once per
     * downstream policy (llm_dedup_clusters and llm_dedup_keep_best are
     * both one call deep from here). `clusterLabels` is (doc_id,
     * cluster) — persist/checkpoint it to share physically. Election is

@@ -35,10 +35,10 @@ object LlmQueries {
 
   /** Near-dup cluster labels (doc_id, cluster) MATERIALIZED once per
     * dataset — the physical form of the clusters→policies composition:
-    * the LSH pass and component loop run once, every downstream policy
+    * the LSH pass and components run once, every downstream policy
     * (keep-best here; splits/leakage audits in a real pipeline) reads
     * the labels. llm_dedup_clusters keeps computing them live — the
-    * component loop IS its operator under test. Marker = dataset +
+    * components ARE its operator under test. Marker = dataset +
     * recipe version; mismatch rebuilds (same discipline as
     * GraphQueries.pairs2 and the s10/m11 KV setup). */
   private def clusterLabels(s: SparkSession, d: String): DataFrame = {
@@ -181,7 +181,7 @@ object LlmQueries {
 
     // Dedup clustering: connected components over the minhash-LSH pair
     // graph — cluster id per doc (min reachable doc_id) plus the keep
-    // flag a pipeline filters on. The component loop runs only over
+    // flag a pipeline filters on. The components are computed only over
     // docs appearing in some pair, never the whole corpus.
     "llm_dedup_clusters" -> ((s, d) => {
       import s.implicits._
@@ -195,14 +195,14 @@ object LlmQueries {
     // HIGHEST-QUALITY document (lexical diversity score), not the
     // smallest id — the production dedup policy (C4 keeps one "best"
     // member per cluster). Scale shape: cluster labels come from the
-    // pair-graph loop (corpus never enters it); the keeper election is
+    // pair graph (corpus never enters it); the keeper election is
     // a partial-agg'd max(struct(quality, -doc_id)) per cluster —
     // never a per-cluster window over the corpus; the 6-dp-rounded
     // score + id tie-break make the winner engine-portable.
     "llm_dedup_keep_best" -> ((s, d) => {
       import s.implicits._
       // Dedup.keepBest composes over PRECOMPUTED labels: the LSH pass +
-      // component loop run once per corpus (materialized below, shared
+      // components run once per corpus (materialized below, shared
       // with any other policy) and the registered query measures the
       // keeper ELECTION — the pipeline composition the library seam
       // exists for (DedupSpec pins the zero-re-derivation plan)

@@ -41,8 +41,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog {
     val joined = parts.mkString("/")
     if (KVSource.isUriRoot(parts.head)) joined // a URI names its own root
     else root match {
-      case Some(r) if KVLayout(s"$r/$joined").exists => s"$r/$joined"
-      case Some(r) if !KVLayout("/" + joined).exists => s"$r/$joined"
+      case Some(r) if KVLayout.exists(s"$r/$joined") => s"$r/$joined"
+      case Some(r) if !KVLayout.exists("/" + joined) => s"$r/$joined"
       case _ => "/" + joined
     }
   }
@@ -52,12 +52,12 @@ class GraftCatalog extends TableCatalog with FunctionCatalog {
 
   override def loadTable(ident: Identifier): Table = {
     val path = pathOf(ident)
-    if (!KVLayout(path).exists) throw new NoSuchTableException(ident)
+    if (!KVLayout.exists(path)) throw new NoSuchTableException(ident)
     new KVBatchTable(path)
   }
 
   override def tableExists(ident: Identifier): Boolean =
-    KVLayout(pathOf(ident)).exists
+    KVLayout.exists(pathOf(ident))
 
   /** SQL time travel: `VERSION AS OF v` pins the read to cells with
     * `ts <= v` — HBase's timestamped-scan semantics over the cell log
@@ -66,7 +66,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog {
     * latest-wins view as of v). */
   override def loadTable(ident: Identifier, version: String): Table = {
     val path = pathOf(ident)
-    if (!KVLayout(path).exists) throw new NoSuchTableException(ident)
+    if (!KVLayout.exists(path)) throw new NoSuchTableException(ident)
     val v = try version.toLong catch {
       case _: NumberFormatException => throw new UnsupportedOperationException(
         s"graft KV VERSION AS OF takes a cell-timestamp long, got '$version'")

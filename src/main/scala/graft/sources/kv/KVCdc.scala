@@ -150,8 +150,12 @@ class KVCdcMicroBatchStream(path: String, startTs: Long, stepTs: Long)
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
-  // footer max-ts per immutable data file — read once, ever
+  // footer max-ts per immutable data file — read once while the file is
+  // listed; entries for files a compaction retired are dropped
   private val footerMax = new ConcurrentHashMap[String, java.lang.Long]()
+
+  /** Files whose footer max-ts is cached. */
+  private[graft] def cachedFooters: Int = footerMax.size
 
   private def hconf = GraftFs.hadoopConf
 
@@ -179,6 +183,7 @@ class KVCdcMicroBatchStream(path: String, startTs: Long, stepTs: Long)
   private def maxTsAvailable(): Long = {
     val layout = KVLayout(path)
     val files = layout.logFiles ++ layout.compactedByBucket.values.flatten
+    footerMax.keySet.retainAll(files.toSet.asJava)
     files.foldLeft(startTs)((acc, f) => math.max(acc, footerMaxTs(f)))
   }
 

@@ -69,7 +69,6 @@ case class KVLayout(path: String) {
     (compactedEntries ++ logEntries).map(e => e.path -> e.len).toMap
 
   def bucketed: Boolean = numBuckets > 0
-  def exists: Boolean = bucketed || logFiles.nonEmpty
 
   /** The resolve-group input partitions of this snapshot: one
     * [[KVBucketPartition]] per `allowed` bucket (its compacted files
@@ -93,6 +92,15 @@ case class KVLayout(path: String) {
   }
 
   def totalBytes: Long = (compactedEntries ++ logEntries).map(_.len).sum
+}
+
+object KVLayout {
+  /** The one existence rule: the pointer names buckets, or `log/` holds
+    * a data file. Unlike a full [[KVLayout]] snapshot it lists `log/`
+    * only when there is no pointer, and never a generation's files. */
+  def exists(path: String): Boolean =
+    KVPointer.read(path).exists(_._2 > 0) ||
+      GraftFs.dataFiles(s"$path/log").nonEmpty
 }
 
 /** The bucket-assignment function of the compacted layout. MUST agree

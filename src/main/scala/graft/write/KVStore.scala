@@ -58,7 +58,7 @@ class KVTable(val spark: SparkSession, val path: String) {
 
   /** The one existence rule, shared with [[graft.sources.kv.GraftCatalog]]:
     * a published generation or a log holding data files. */
-  def exists: Boolean = KVLayout(path).exists
+  def exists: Boolean = KVLayout.exists(path)
 
   private def emptyCells: DataFrame = spark.createDataFrame(
     spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

@@ -55,8 +55,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
       .as[(Long, Long, Boolean)].collect().toSet
     assert(got === Set((1L, 1L, true), (2L, 2L, true), (3L, 2L, false),
       (4L, 2L, false), (5L, 5L, true)))
-    // a 10-node chain needs the label to travel 9 hops — pins the loop's
-    // convergence detection, not just a single propagation round
+    // a 10-node chain: the min id labels every doc 9 hops away
     val ten = (1L to 10L).toDF("doc_id")
     val chain = (1L to 9L).map(i => (i, i + 1, 0.9)).toDF("da", "db", "jacc")
     val labs = Dedup.clusters(ten, chain)
@@ -64,21 +63,35 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     assert(labs === Set(1L))
   }
 
-  test("clustersBounded equals the distributed fixpoint on both paths") {
+  test("clusters returns the component-min labels on both paths") {
     // random-ish graph: chains, a triangle, reversed edges, duplicates
     val docs = (1L to 30L).toDF("doc_id")
     val pairs = (Seq((2L, 3L), (3L, 4L), (10L, 9L), (9L, 8L), (20L, 21L),
       (21L, 22L), (22L, 20L), (2L, 3L), (15L, 14L)))
       .toDF("da", "db").withColumn("jacc", lit(0.9))
-    val want = Dedup.clusters(docs, pairs)
-      .as[(Long, Long, Boolean)].collect().toSet
-    val fast = Dedup.clustersBounded(docs, pairs)
+    // components {2,3,4} {8,9,10} {14,15} {20,21,22}; the rest singletons
+    val label = Map(3L -> 2L, 4L -> 2L, 9L -> 8L, 10L -> 8L, 15L -> 14L,
+      21L -> 20L, 22L -> 20L)
+    val want = (1L to 30L).map { d =>
+      val c = label.getOrElse(d, d); (d, c, c == d)
+    }.toSet
+    val fast = Dedup.clusters(docs, pairs)
       .as[(Long, Long, Boolean)].collect().toSet
     assert(fast === want)
-    // cap=0 forces the distributed fallback through the same entrypoint
-    val fallback = Dedup.clustersBounded(docs, pairs, cap = 0)
+    // cap=0 forces the star-contraction fallback through the same entrypoint
+    val fallback = Dedup.clusters(docs, pairs, cap = 0)
       .as[(Long, Long, Boolean)].collect().toSet
     assert(fallback === want)
+  }
+
+  test("clusters: a 64-doc chain is one cluster") {
+    // the label needs 63 hops end to end — past any per-hop round
+    // budget; union-find has no diameter limit
+    val docs = (1L to 64L).toDF("doc_id")
+    val chain = (1L to 63L).map(i => (i + 1, i, 0.9)).toDF("da", "db", "jacc")
+    val got = Dedup.clusters(docs, chain)
+      .as[(Long, Long, Boolean)].collect().toSet
+    assert(got === (1L to 64L).map(d => (d, 1L, d == 1L)).toSet)
   }
 
   test("dedup clusters on the corpus agree with the LSH pair graph") {
@@ -381,18 +394,18 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
 
   test("keepBest composes over precomputed clusters: ONE LSH pass total") {
     val docs = Tables.documents(spark, sf)
-    // the shared pass: LSH + component loop run here (and are consumed
-    // into clusters()' internal checkpoints)...
+    // the shared pass: LSH + components run here (the pair edges are
+    // collected into clusters()' driver-built label relation)...
     val labels = Dedup.clusters(docs, Dedup.minHashLsh(docs, 0.8))
     // ...so the composed keeper election must plan with ZERO signature
     // re-derivation: no md5 (the shared LSH hash) anywhere — the labels
-    // arrive as materialized checkpoints, the quality score is plain
-    // word algebra
+    // arrive as a local relation, the quality score is plain word
+    // algebra
     val kb = Dedup.keepBest(docs, labels)
     val plan = kb.queryExecution.executedPlan.toString
     assert(!plan.contains("md5"),
       s"keepBest re-derived the LSH subtree:\n${plan.take(2000)}")
-    assert(plan.contains("ExistingRDD"), plan.take(2000))
+    assert(plan.contains("LocalTableScan"), plan.take(2000))
     // and the policy is sane: every SINGLETON cluster keeps its only
     // member, and every cluster keeps exactly one
     val sizes = kb.groupBy($"cluster")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.sources.kv.{KVCdcMicroBatchStream, KVCdcOffset}
+import graft.sources.kv.{KVCdcMicroBatchStream, KVCdcOffset, KVLayout}
 import graft.streaming.IdempotentSink
 import graft.write.KVTable
 
@@ -329,6 +329,28 @@ class KVCdcSpec extends AnyFunSuite with SparkSpec {
     assert(o3 === KVCdcOffset(3L), s"high-water cutoff: $o3")
     assert(limited.latestOffset(o3, limited.getDefaultReadLimit)
       === KVCdcOffset(3L), "offset must not advance past available data")
+  }
+
+  test("the stream's footer cache holds only the files the table lists") {
+    val path = targetPath("graft_kv_test/cdc_footers")
+    val t = KVTable(spark, path, wipe = true)
+    val stream = new KVCdcMicroBatchStream(path, 0L, Long.MaxValue)
+    def check(ts: Long): Unit = {
+      assert(stream.reportLatestOffset() === KVCdcOffset(ts))
+      val l = KVLayout(path)
+      val files = l.logFiles.size + l.compactedFiles.size
+      assert(stream.cachedFooters <= files,
+        s"${stream.cachedFooters} cached footers for $files data files")
+    }
+    def put(ts: Long): Unit = {
+      t.put(Seq((ts, "F", "q", s"v$ts", ts))
+        .toDF("key", "family", "qualifier", "value", "ts"))
+      check(ts)
+    }
+    (1L to 3L).foreach(put)
+    t.compact(); check(3L)
+    (4L to 6L).foreach(put)
+    t.compact(); check(6L)
   }
 
   private type Change = (java.lang.Long, String, String, String, String,

@@ -122,16 +122,16 @@ class SkewKnobSpec extends AnyFunSuite with SparkSpec {
     // histCap+1 collected histogram rows; the fallback's is two scalars
   }
 
-  test("clustersBounded cap: a giant single component over the cap " +
-    "falls back to the distributed fixpoint with identical labels") {
+  test("clusters cap: a giant single component over the cap " +
+    "falls back to star contraction with identical labels") {
     // one 400-edge chain = one component; cap=100 < edges forces the
     // distributed path; driver collect is bounded at cap+1 rows by
     // construction on the fast path either way
     val docs = (1L to 401L).map(i => (i, s"d$i")).toDF("doc_id", "text")
     val pairs = (1L to 400L).map(i => (i, i + 1)).toDF("da", "db")
-    val fast = Dedup.clustersBounded(docs, pairs, cap = 2000000)
+    val fast = Dedup.clusters(docs, pairs, cap = 2000000)
       .select($"doc_id", $"cluster").as[(Long, Long)].collect().toMap
-    val fallback = Dedup.clustersBounded(docs, pairs, cap = 100)
+    val fallback = Dedup.clusters(docs, pairs, cap = 100)
       .select($"doc_id", $"cluster").as[(Long, Long)].collect().toMap
     assert(fallback === fast)
     assert(fast.values.toSet.size === 1, "chain must collapse to one cluster")
