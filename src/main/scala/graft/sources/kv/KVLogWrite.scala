@@ -77,8 +77,8 @@ object KVLogWrite {
 }
 
 /** The one driver-side task loop of the KV writers that run their own
-  * job: the log append ([[KVLogWrite.append]]) and both generation
-  * writers ([[KVGeneration.write]], [[KVGeneration.writeResolved]]).
+  * job: the log append ([[KVLogWrite.append]]) and the compaction
+  * rewrite ([[KVGeneration.writeResolved]]).
   * Partition i's rows go to the writer `factory` creates for partition
   * i; a task that throws aborts its writer, and a job that fails
   * deletes `inflight`, so nothing it staged survives. Returns the
@@ -87,13 +87,15 @@ object KVLogWrite {
 private[kv] object KVStagedWrite {
   private val Description = "spark.job.description"
 
-  /** Stage `rows` as one SQL execution, so listeners attribute its
-    * jobs to it. */
+  /** Stage `rows`, each partition passed through `task`, as one SQL
+    * execution, so listeners attribute its jobs to it. */
   def run(rows: DataFrame, factory: DataWriterFactory, inflight: String,
-          description: String): Seq[WriterCommitMessage] = {
+          description: String,
+          task: Iterator[InternalRow] => Iterator[InternalRow] = identity)
+      : Seq[WriterCommitMessage] = {
     val qe = rows.queryExecution
     SQLExecution.withNewExecutionId(qe, Some(description))(
-      run(qe.toRdd, factory, inflight, description))
+      run(qe.toRdd.mapPartitions(task), factory, inflight, description))
   }
 
   /** Stage `rows` on the caller's thread, under its local properties,

@@ -7,21 +7,22 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Bucket-local latest-wins resolve at one or more ts cutoffs — the
-  * executor-side copy of `KVTable.resolve` (write/KVStore.scala) that
-  * the resolved scan ([[KVResolvedPartitionReader]], one cutoff: every
+  * engine's one resolve (the reference's `KeyValueOrdering` with
+  * `setMaxVersions(1)` and delete markers, HBaseTable.scala:181-232).
+  * Everything that resolves runs on it: the resolved scan
+  * ([[KVResolvedPartitionReader]], one cutoff: every
   * `KVTable.resolved()` / `resolvedAsOf(v)` / `resolvedAt` read and the
   * MERGE / UPDATE / DELETE read side), the CDC replay
   * ([[KVCdcPartitionReader]]: the stream window's two cutoffs, or
-  * `KVTable.changeLog`'s n) and the bucket-local compaction
-  * ([[KVGeneration.writeResolved]]: `compact` at `Long.MaxValue`,
-  * `restoreAsOf(v)` at `v`) run on. Per (key,
+  * `KVTable.changeLog`'s n) and every compaction rewrite
+  * ([[KVGeneration.writeResolved]]: `compact` and `compactAt` at
+  * `Long.MaxValue`, `restoreAsOf(v)` at `v`, `compactRetaining(h)` at
+  * `h`). Per (key,
   * family, qualifier) and per cutoff the max-(ts, value) non-tombstone
   * cell at or below the cutoff wins; row / family / cell tombstones at
   * or below the cutoff mask winners at or below their ts; null-ts rows
   * never take part. A row feeds every cutoff at or above its ts, so one
-  * pass over the bucket's cells builds every cutoff's state. The two
-  * resolve paths (this kernel and the DataFrame reference
-  * `KVTable.resolve`) must agree cell-for-cell.
+  * pass over the bucket's cells builds every cutoff's state.
   *
   * CPU shape: batches come straight from [[KVColumnarPartitionReader]];
   * family/qualifier strings are interned to dense ids once per distinct
@@ -132,8 +133,8 @@ final class KVResolveKernel(cuts: Array[Long]) {
   }
 
   // winner table keyed by cellId; tombstone tables keyed by 0 / famId /
-  // cellId — exactly the row/family/cell mask granularities of
-  // `KVTable.resolve`
+  // cellId — the row/family/cell mask granularities of HBase's delete
+  // markers (any marker that is not 'row' or 'family' masks one cell)
   private val winners = new Slots(13, withVals = true)
   private val rowDel = new Slots(10, withVals = false)
   private val famDel = new Slots(10, withVals = false)
@@ -143,10 +144,11 @@ final class KVResolveKernel(cuts: Array[Long]) {
   private val TOMB_FAMILY = UTF8String.fromString("family")
 
   /** Same-ts tie-break on VALUE in UTF-8 BINARY order, nulls smallest —
-    * byte-identical to the library resolve's `value desc_nulls_last`
-    * over Spark strings (write/KVStore.scala). Java String.compareTo
-    * would order by UTF-16 code units, which disagrees on
-    * supplementary-plane characters. */
+    * byte-identical to `value desc_nulls_last` over Spark strings, so
+    * two cells written at the same (key, family, qualifier, ts) resolve
+    * to one stable winner (the reference's `KeyValueOrdering` is total
+    * for the same reason). Java String.compareTo would order by UTF-16
+    * code units, which disagrees on supplementary-plane characters. */
   private def cmpValue(a: UTF8String, b: UTF8String): Int =
     if (a == null && b == null) 0 else if (a == null) -1
     else if (b == null) 1 else a.compareTo(b)
@@ -265,9 +267,16 @@ object KVResolveKernel {
   def run(p: KVBucketPartition, cuts: Array[Long], filters: Array[Filter],
           hconf: GraftFs.ReaderConf): KVResolveKernel = {
     val k = new KVResolveKernel(cuts)
+    scan(p, filters, hconf)(k.feed)
+    k
+  }
+
+  /** Hands bucket partition `p`'s cell batches, in `CELL_SCHEMA` column
+    * order, to `f`, one at a time; a batch is valid only inside `f`. */
+  def scan(p: KVBucketPartition, filters: Array[Filter],
+           hconf: GraftFs.ReaderConf)(f: ColumnarBatch => Unit): Unit = {
     val raw = new KVColumnarPartitionReader(p, KVBatchTable.CELL_SCHEMA,
       filters, None, hconf)
-    try while (raw.next()) k.feed(raw.get()) finally raw.close()
-    k
+    try while (raw.next()) f(raw.get()) finally raw.close()
   }
 }

@@ -1,7 +1,6 @@
 package graft.write
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.kv.{GraftFs, KVGeneration, KVLayout, KVLogWrite, KVSource}
@@ -18,14 +17,13 @@ import graft.sources.kv.{GraftFs, KVGeneration, KVLayout, KVLogWrite, KVSource}
   *    delete semantics: a tombstone masks every cell at or below its ts
   *    (`tomb` = 'row' | 'family' | 'cell', HBaseTable.scala:181-212);
   *  - `compact()` writes the resolved state as a new bucketed,
-  *    key-sorted generation and swaps it in. On a table already
-  *    bucketed at the target count it is region-local, like the
-  *    store's own compactions: each bucket is resolved and rewritten in
-  *    its own task, with no shuffle. Otherwise (re-bucketing, a
-  *    log-only table's first compaction) it is the bulk path
-  *    (HBaseTable.scala:234-352): resolve, hash-partition into buckets
-  *    + sort by key (repartition + sortWithinPartitions ≙ the HFile
-  *    shuffle, HBaseTable.scala:219-242), write, swap.
+  *    key-sorted generation and swaps it in, resolving each bucket in
+  *    its own task. On a table already bucketed at the target count it
+  *    is region-local, like the store's own compactions: no shuffle.
+  *    Otherwise (re-bucketing, a log-only table's first compaction) it
+  *    is the bulk path (HBaseTable.scala:234-352): hash-partition the
+  *    raw cells into buckets (≙ the HFile shuffle,
+  *    HBaseTable.scala:219-242), resolve, write sorted, swap.
   *
   * A table is its path: the layout under it ([[KVLayout]]) is the whole
   * state, and every read and write addresses it by path alone — no
@@ -128,7 +126,7 @@ class KVTable(val spark: SparkSession, val path: String) {
     * read / SQL `VERSION AS OF v` on the DSv2 table): cells written
     * after v — including later tombstones — are invisible.
     *
-    * Shape: one scan stage, no Exchange, Sort or Window. The read goes
+    * Shape: one scan stage, no Exchange, sort or window. The read goes
     * through the catalog like [[cells]], with the cutoff as a read
     * option, so each task of the resolved scan
     * ([[graft.sources.kv.KVResolvedScan]]) runs the resolve kernel at
@@ -223,37 +221,6 @@ class KVTable(val spark: SparkSession, val path: String) {
     spark.read.format("graft-cdc").option("path", path)
       .option("cutoffs", cutoffs.mkString(",")).load()
 
-  /** Compaction's read side: exactly one [[KVLayout]] snapshot's
-    * compacted and log files. Only these feed the rewrite, and only
-    * these log files are retired after the swap: a put() landing while
-    * compaction runs adds NEW part files, which survive into the next
-    * log untouched (no lost-write race with [[compactAsync]]).
-    *
-    * `asOf` is set when the new generation is exactly the resolved view
-    * at that ts cutoff ([[compact]], [[restoreAsOf]]). Then a snapshot
-    * already bucketed at `numBuckets` is rewritten bucket-locally
-    * ([[KVGeneration.writeResolved]]: one stage, no shuffle), since each
-    * resolve group already sits in its output bucket. Every other
-    * rewrite reads the files as plain parquet and shuffles
-    * ([[KVGeneration.write]]): re-bucketing moves rows between buckets;
-    * a log-only snapshot has no buckets to work in; and `newCells` of
-    * [[compactAt]] (TTL expiry before the resolve) and
-    * [[compactRetaining]] (raw rows above the horizon) is not a plain
-    * resolve. */
-  private def rewrite(numBuckets: Int, asOf: Option[Long] = None)(
-      newCells: DataFrame => DataFrame): Unit = {
-    val snap = KVLayout(path)
-    if (asOf.isDefined && snap.numBuckets == numBuckets)
-      KVGeneration.writeResolved(snap, asOf.get)
-    else {
-      val files = snap.compactedFiles ++ snap.logFiles
-      val all =
-        if (files.isEmpty) emptyCells
-        else spark.read.schema(CELL_SCHEMA_DDL).parquet(files: _*)
-      KVGeneration.write(conform(newCells(all)), snap, numBuckets)
-    }
-  }
-
   /** M5-M7: resolve + bucketed, key-sorted rewrite as a new
     * generation + swap. On a table already bucketed at `numBuckets`
     * (every compaction after the first at a fixed count) it runs one
@@ -261,11 +228,11 @@ class KVTable(val spark: SparkSession, val path: String) {
     * snapshot through the resolve kernel and writes that bucket's
     * sorted file ([[KVGeneration.writeResolved]]) — the store's
     * region-local compaction. Otherwise — a log-only table, or a
-    * change of bucket count — it is the bulk path
-    * ([[KVGeneration.write]]): one hash shuffle on the key, sorted
-    * output, the HFile-pipeline shape. Either way the output is a layout
+    * change of bucket count — it is the bulk path: one hash shuffle of
+    * the raw cells on the key before the same per-bucket task, the
+    * HFile-pipeline shape. Either way the output is a layout
     * Catalyst can SEE: the scan reports bucket(numBuckets, key), so
-    * every downstream key join / groupBy / resolve-window plans with
+    * every downstream key join / groupBy plans with
     * zero Exchange (the reference's RegionPartitioner advertisement,
     * RegionPartitioner.scala:12-68). Two compacted tables with the same
     * bucket count join co-located, shuffle-free on either side.
@@ -278,7 +245,7 @@ class KVTable(val spark: SparkSession, val path: String) {
     * those log files are deleted only at the NEXT compaction, giving
     * in-flight scans one full compaction interval to drain. */
   def compact(numBuckets: Int = 8): Unit =
-    rewrite(numBuckets, asOf = Some(Long.MaxValue))(resolve)
+    KVGeneration.writeResolved(KVLayout(path), numBuckets, Long.MaxValue)
 
   /** M22: RESTORE — roll the live state back to the `VERSION AS OF v`
     * view by compacting THAT view into a new generation (the lakehouse
@@ -288,11 +255,10 @@ class KVTable(val spark: SparkSession, val path: String) {
     * restore is re-restorable while the previous generation survives.
     * Subject to [[resolvedAsOf]]'s retention rule: a target older than
     * the last compaction restores what the store still retains. Same
-    * two plans as [[compact]]: at an unchanged bucket count each bucket
-    * is resolved at cutoff `v` in its own task (`ts <= v` pruning row
-    * groups) with no shuffle; otherwise the shuffle path. */
+    * two plans as [[compact]], each bucket resolved at cutoff `v`
+    * (`ts <= v` pruning row groups, or rows before the shuffle). */
   def restoreAsOf(v: Long, numBuckets: Int = 8): Unit =
-    rewrite(numBuckets, asOf = Some(v))(all => resolve(all.filter(col("ts") <= v)))
+    KVGeneration.writeResolved(KVLayout(path), numBuckets, v)
 
   /** M21: ZERO-COPY shallow clone (the lakehouse CLONE contract): the
     * clone is a NEW table whose gen-0 files are hard links to this
@@ -338,14 +304,12 @@ class KVTable(val spark: SparkSession, val path: String) {
     * consumer's committed cutoff, exactly like a changelog/CDF
     * retention window (or HBase's KEEP_DELETED_CELLS + TTL pair).
     * Cost: the compacted files carry the horizon's churn extra rows —
-    * O(churn since horizon), the price of the replayability. Always the
-    * shuffle path: the raw rows it keeps are not a resolved view, which
-    * is all the bucket-local rewrite emits. */
+    * O(churn since horizon), the price of the replayability, which a
+    * rewrite task also holds on the heap. Same two plans as
+    * [[compact]]. */
   def compactRetaining(retainSince: Long, numBuckets: Int = 8): Unit =
-    rewrite(numBuckets) { all =>
-      resolve(all.filter(col("ts") <= retainSince))
-        .unionByName(all.filter(col("ts") > retainSince), allowMissingColumns = true)
-    }
+    KVGeneration.writeResolved(KVLayout(path), numBuckets, retainSince,
+      keepAbove = true)
 
   // --- CDC consumer registry (the operational half of the retention
   // horizon: compaction picks its horizon from the slowest registered
@@ -362,14 +326,18 @@ class KVTable(val spark: SparkSession, val path: String) {
     graft.sources.kv.GraftFs.atomicReplace(
       s"$consumersDir/$name.txt", cutoff.toString)
 
-  /** Registered consumers' committed cutoffs. */
+  /** Registered consumers' committed cutoffs. A file that does not
+    * parse throws, naming it: skipping it would let [[compactSafely]]
+    * fold history that consumer still needs. */
   def cdcCutoffs: Map[String, Long] =
     graft.sources.kv.GraftFs.list(consumersDir)
       .filter(e => !e.isDir && e.name.endsWith(".txt"))
       .flatMap { e =>
-        graft.sources.kv.GraftFs.readString(e.path)
-          .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
-          .map(e.name.stripSuffix(".txt") -> _)
+        graft.sources.kv.GraftFs.readString(e.path).map { s =>
+          e.name.stripSuffix(".txt") -> s.trim.toLongOption.getOrElse(
+            throw new IllegalStateException(
+              s"unparseable CDC consumer cutoff in ${e.path}: '${s.take(64)}'"))
+        }
       }.toMap
 
   /** Deregister a retired consumer so it stops pinning history. */
@@ -473,9 +441,10 @@ class KVTable(val spark: SparkSession, val path: String) {
     * read path (setMaxVersions(1) parity); compression/bloom are
     * recorded as intent (parquet brings its own codec + min/max
     * pruning); ttlSeconds is enforced: expired cells are masked at read
-    * time and physically dropped at compaction. */
+    * time and physically dropped at compaction. Replaced atomically: a
+    * racing [[compactAt]] never reads a cut-off TTL. */
   def setFamilies(descs: Seq[FamilyDescriptor]): Unit =
-    graft.sources.kv.GraftFs.writeString(familyMeta,
+    graft.sources.kv.GraftFs.atomicReplace(familyMeta,
       descs.map(fd =>
         s"${fd.family}\t${fd.ttlSeconds}\t${fd.compression}\t${fd.bloom}\n")
         .mkString)
@@ -487,19 +456,20 @@ class KVTable(val spark: SparkSession, val path: String) {
         FamilyDescriptor(f(0), f(1).toLong, f(2), f(3).toBoolean)
       }
 
+  /** Per TTL'd family, the ts at or below which its cells are dead. */
+  private def ttlCutoffs(nowTs: Long): Map[String, Long] =
+    families.filter(_.ttlSeconds != Long.MaxValue)
+      .map(fd => fd.family -> (nowTs - fd.ttlSeconds)).toMap
+
   /** TTL mask: cells of a TTL'd family older than (now - ttl) are dead.
     * Applied as a read filter (HBase masks expired cells at read time
     * too); compactAt() drops them physically. */
   private[graft] def ttlFilter(df: DataFrame, nowTs: Long): DataFrame = {
-    val ttls = families.filter(_.ttlSeconds != Long.MaxValue)
+    val ttls = ttlCutoffs(nowTs)
     if (ttls.isEmpty) df
-    else {
-      val cutoffs = ttls.map(fd => fd.family -> (nowTs - fd.ttlSeconds))
-        .foldLeft(lit(Long.MinValue)) { case (acc, (fam, cut)) =>
-          when(col("family") === fam, lit(cut)).otherwise(acc)
-        }
-      df.filter(col("ts") > cutoffs)
-    }
+    else df.filter(col("ts") > ttls.foldLeft(lit(Long.MinValue)) {
+      case (acc, (fam, cut)) => when(col("family") === fam, lit(cut)).otherwise(acc)
+    })
   }
 
   /** Latest-wins view with TTL enforcement as of `nowTs`: the
@@ -511,11 +481,12 @@ class KVTable(val spark: SparkSession, val path: String) {
   def resolvedAt(nowTs: Long): DataFrame = ttlFilter(resolved(), nowTs)
 
   /** Compaction that also physically expires TTL'd cells (the
-    * reference's major-compaction TTL semantics). Always the shuffle
-    * path: the TTL filter runs before the resolve, which the
-    * bucket-local rewrite does not expose. */
+    * reference's major-compaction TTL semantics, run per region). Same
+    * two plans as [[compact]]; each task drops the expired winners,
+    * which equals expiring before the resolve ([[resolvedAt]]). */
   def compactAt(nowTs: Long, numBuckets: Int = 8): Unit =
-    rewrite(numBuckets)(all => resolve(ttlFilter(all, nowTs)))
+    KVGeneration.writeResolved(KVLayout(path), numBuckets, Long.MaxValue,
+      expiry = ttlCutoffs(nowTs))
 
   /** Drop all state (log + every compacted generation + files). */
   def drop(): Unit = KVTable.deleteRecursively(path)
@@ -548,48 +519,4 @@ object KVTable {
       (if (df.columns.contains("tomb")) col("tomb") else lit(null))
         .cast("string").as("tomb"))
 
-  /** HBase read semantics: per (key,family,qualifier) the latest
-    * non-tombstone cell wins, unless masked by a row/family/cell
-    * tombstone at or above its ts (maxVersions=1 + delete markers).
-    *
-    * One window pass over the cells: every window is partitioned by a
-    * prefix of (key, family, qualifier) and ordered by the rest of one
-    * shared order, so the plan is a single hashpartitioning(key)
-    * Exchange (none on a bucketed or key-grouped scan) and one Sort.
-    * The masks are whole-partition maxima. `partitionBy` groups NULL
-    * family/qualifier values as equal, so a NULL is a real cell
-    * coordinate with null-safe (<=>) matching. Any tombstone marker
-    * that is not 'row'/'family' masks at cell granularity, exactly like
-    * the executor-side resolve kernel
-    * ([[graft.sources.kv.KVResolveKernel]], under [[KVTable.resolvedAsOf]],
-    * MERGE, the graft-cdc stream, [[KVTable.changeLog]] and the
-    * bucket-local compaction). This is the reference the kernel is
-    * tested against — the two must agree cell-for-cell — and the resolve
-    * of the rewrites that shuffle (a first compaction, re-bucketing,
-    * [[KVTable.compactAt]], [[KVTable.compactRetaining]]). */
-  def resolve(cells: DataFrame): DataFrame = {
-    // live cells (NULL tomb) before tombstones, then ts desc + value
-    // desc: a TOTAL order within the version group, so two cells written
-    // at the same (key,family,qualifier,ts) resolve to a stable winner
-    // across runs (the reference's KeyValueOrdering is total for the
-    // same reason, HBaseTable.scala:219-232). Plain columns only, so all
-    // four windows share one sort.
-    val order = Seq(col("family"), col("qualifier"), col("tomb").asc_nulls_first,
-      col("ts").desc, col("value").desc_nulls_last)
-    def over(depth: Int) = Window.partitionBy(col("key") +: order.take(depth): _*)
-      .orderBy(order.drop(depth): _*)
-    def whole(depth: Int) =
-      over(depth).rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    def maskTs(tomb: Column, depth: Int) =
-      coalesce(max(when(tomb, col("ts"))).over(whole(depth)), lit(Long.MinValue))
-    val t = col("tomb")
-    cells
-      .withColumn("row_del_ts", maskTs(t === "row", 0))
-      .withColumn("fam_del_ts", maskTs(t === "family", 1))
-      .withColumn("cell_del_ts", maskTs(t =!= "row" && t =!= "family", 2))
-      .withColumn("rn", row_number().over(over(2)))
-      .filter(col("rn") === 1 && t.isNull && col("ts") > col("row_del_ts") &&
-        col("ts") > col("fam_del_ts") && col("ts") > col("cell_del_ts"))
-      .select(col("key"), col("family"), col("qualifier"), col("value"), col("ts"))
-  }
 }

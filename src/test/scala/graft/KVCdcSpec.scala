@@ -215,6 +215,29 @@ class KVCdcSpec extends AnyFunSuite with SparkSpec {
       "horizon-3 safe compaction left pre-horizon duplicate versions")
   }
 
+  test("a registered consumer whose cutoff file does not parse makes " +
+    "compactSafely throw, naming the file, and leaves the generation unchanged") {
+    val path = targetPath("graft_kv_test/cdc_badconsumer")
+    val t = seed(path)
+    mutate(t)
+    t.commitCdcCutoff("slow", 2L)
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$path/_cdc_consumers/x.txt"), "garbage")
+    val layout = KVLayout(path)
+    val live = t.resolved().select($"key", $"value")
+      .as[(Long, String)].collect().toSeq.sorted
+    val e = intercept[IllegalStateException](t.compactSafely())
+    assert(e.getMessage.contains("x.txt"), e.getMessage)
+    val after = KVLayout(path)
+    assert(after.generation === layout.generation)
+    assert(after.logFiles === layout.logFiles)
+    assert(t.resolved().select($"key", $"value")
+      .as[(Long, String)].collect().toSeq.sorted === live)
+    // a released consumer's file is gone from the listing and is no error
+    t.releaseCdcConsumer("x")
+    assert(t.cdcCutoffs === Map("slow" -> 2L))
+  }
+
   test("dual-cutoff replay matches changesBetween on family/cell " +
       "tombstones, null coordinates and equal-ts value ties") {
     // exercises every CutState granularity the round-18 primitive-map

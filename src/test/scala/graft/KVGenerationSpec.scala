@@ -5,8 +5,9 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftTestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
@@ -31,25 +32,37 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
     t.resolved().select($"key", $"value").as[(Long, String)].collect().toSet
 
   /** The Spark jobs one call ran on this thread: their descriptions,
-    * their distinct stages, and the shuffle bytes those stages wrote.
-    * Jobs are matched by a local property set around `body`, which a
-    * job inherits only when it is submitted from this thread under the
+    * their distinct stages, the shuffle bytes those stages wrote, and
+    * the physical operator names of the SQL executions they ran in
+    * (every plan of an execution, adaptive re-plans included). Jobs are
+    * matched by a local property set around `body`, which a job
+    * inherits only when it is submitted from this thread under the
     * caller's local properties. */
-  private case class Shape(jobs: Seq[String], stages: Int, shuffleBytes: Long)
+  private case class Shape(jobs: Seq[String], stages: Int, shuffleBytes: Long,
+                           operators: Set[String])
 
   private def shape(body: => Unit): Shape = {
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
     val sc = spark.sparkContext
     val prop = "graft.test.shape"
     val tag = java.util.UUID.randomUUID.toString
-    val jobs = new ConcurrentLinkedQueue[(String, Seq[Int])]()
+    val jobs = new ConcurrentLinkedQueue[(String, Seq[Int], Option[Long])]()
     val written = new ConcurrentHashMap[Int, java.lang.Long]()
+    val plans = new ConcurrentLinkedQueue[(Long, SparkPlanInfo)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty(prop) == tag)
-          jobs.add((e.properties.getProperty("spark.job.description"), e.stageIds))
+          jobs.add((e.properties.getProperty("spark.job.description"), e.stageIds,
+            Option(e.properties.getProperty("spark.sql.execution.id")).map(_.toLong)))
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         Option(e.stageInfo.taskMetrics).foreach(m => written.put(
           e.stageInfo.stageId, m.shuffleWriteMetrics.bytesWritten))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add((s.executionId, s.sparkPlanInfo))
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          plans.add((u.executionId, u.sparkPlanInfo))
+        case _ => ()
+      }
     }
     GraftTestBus.drain(sc)
     sc.addSparkListener(listener)
@@ -61,9 +74,34 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
       sc.removeSparkListener(listener)
     }
     val stages = jobs.asScala.toSeq.flatMap(_._2).distinct
+    val executions = jobs.asScala.flatMap(_._3).toSet
+    def names(p: SparkPlanInfo): Seq[String] = p.nodeName +: p.children.flatMap(names)
     Shape(jobs.asScala.toSeq.map(_._1), stages.size,
-      stages.map(s => Option(written.get(s)).fold(0L)(_.longValue)).sum)
+      stages.map(s => Option(written.get(s)).fold(0L)(_.longValue)).sum,
+      plans.asScala.filter(p => executions(p._1)).flatMap(p => names(p._2)).toSet)
   }
+
+  /** One job of one stage that shuffles nothing: a bucket-local rewrite. */
+  private def bucketLocal(s: Shape): Boolean =
+    s.jobs.size == 1 && s.stages == 1 && s.shuffleBytes == 0L
+
+  /** The shuffle leg: the raw cells are exchanged once, and each
+    * bucket is resolved by the kernel, with no Sort or Window operator. */
+  private def kernelShuffle(s: Shape): Boolean =
+    s.shuffleBytes > 0 && s.operators.contains("Exchange") &&
+      !s.operators.exists(n => n == "Sort" || n == "Window")
+
+  /** Every file of the table's current generation, each checked to be
+    * sorted by (key, family, qualifier); their cells, tomb included. */
+  private def sortedFiles(path: String): Seq[Row] =
+    KVLayout(path).compactedFiles.flatMap { f =>
+      val rows = spark.read.parquet(f)
+        .select("key", "family", "qualifier", "value", "ts", "tomb").collect().toSeq
+      val order = rows.map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
+        Option(r.getString(1)), Option(r.getString(2))))
+      assert(order === order.sorted, s"$f is not sorted by (key, family, qualifier)")
+      rows
+    }
 
   private val cellSchema = StructType.fromDDL(KVTable.CELL_SCHEMA_DDL)
 
@@ -159,6 +197,8 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
     "bucket count run one stage with zero shuffle, write the snapshot's " +
     "resolved cells key-sorted per file, and keep a put landing after " +
     "the snapshot; the other rewrites keep their shuffle") {
+    // the other rewrites: a first compaction and a re-bucketing, each
+    // one shuffle of the raw cells with no Sort or Window
     val path = targetPath("graft_kv_test/bucketlocal")
     val t = KVTable(spark, path, wipe = true)
     putRows(t, (1L to 40L).flatMap(k => Seq(Row(k, "F", "a", s"a$k", 1L, null),
@@ -167,7 +207,8 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
       Row(41L, null, null, "nullfq", 1L, null),
       Row(42L, "F", null, "nullq", 1L, null)): _*)
     val first = shape(t.compact(numBuckets = 4))
-    assert(first.shuffleBytes > 0, s"a log-only table's first compaction: $first")
+    assert(kernelShuffle(first), s"a log-only table's first compaction: $first")
+    sortedFiles(path)
 
     // a log with new versions, NULL coordinates, and row / family / cell
     // tombstones
@@ -179,24 +220,16 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
     t.delete(marks((2L, null, null), (3L, "F", null), (4L, "G", "b")), ts = 3L)
     val snap = KVLayout(path)
     assert(snap.numBuckets === 4 && snap.logFiles.nonEmpty)
-    val want = KVTable.resolve(spark.read.schema(KVTable.CELL_SCHEMA_DDL)
+    val want = KVReference.resolve(spark.read.schema(KVTable.CELL_SCHEMA_DDL)
       .parquet(snap.compactedFiles ++ snap.logFiles: _*)).collect().toSet
 
     val local = shape(t.compact(numBuckets = 4))
-    assert(local.jobs.size === 1 && local.stages === 1 &&
-      local.shuffleBytes === 0L, local.toString)
+    assert(bucketLocal(local), local.toString)
     assert(local.jobs.head.contains(path), local.toString)
     val compacted = KVLayout(path)
     assert(compacted.generation === snap.generation + 1)
     assert(compacted.logFiles.isEmpty)
-    val stored = compacted.compactedFiles.flatMap { f =>
-      val rows = spark.read.parquet(f)
-        .select("key", "family", "qualifier", "value", "ts").collect().toSeq
-      val order = rows.map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
-        Option(r.getString(1)), Option(r.getString(2))))
-      assert(order === order.sorted, s"$f is not sorted by (key, family, qualifier)")
-      rows
-    }
+    val stored = sortedFiles(path).map(r => Row(r.get(0), r.get(1), r.get(2), r.get(3), r.get(4)))
     assert(stored.size === want.size, "duplicated or extra rows published")
     assert(stored.toSet === want)
     assert(stored.exists(_.isNullAt(0)) && stored.exists(_.isNullAt(1)))
@@ -205,15 +238,15 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
     t.delete(marks((6L, null, null)), ts = 5L)
     val asOf3 = t.resolvedAsOf(3L).collect().toSet
     val restore = shape(t.restoreAsOf(3L, numBuckets = 4))
-    assert(restore.jobs.size === 1 && restore.stages === 1 &&
-      restore.shuffleBytes === 0L, restore.toString)
+    assert(bucketLocal(restore), restore.toString)
+    sortedFiles(path)
     assert(resolvedRows(t) === asOf3)
 
     putRows(t, Row(7L, "F", "a", "a7v6", 6L, null))
     val before = KVLayout(path)
     val wantBefore = resolvedRows(t)
     putRows(t, Row(8L, "F", "a", "late", 7L, null)) // after the snapshot
-    KVGeneration.writeResolved(before, Long.MaxValue)
+    KVGeneration.writeResolved(before, before.numBuckets, Long.MaxValue)
     val left = KVLayout(path).logFiles
     assert(left.size === 1 && !before.logFiles.contains(left.head), left.toString)
     assert(spark.read.parquet(left: _*).select("value").as[String].collect()
@@ -223,17 +256,45 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
     assert(resolvedRows(t) === withLate)
 
     val rebucket = shape(t.compact(numBuckets = 8))
-    assert(rebucket.shuffleBytes > 0, s"re-bucketing: $rebucket")
+    assert(kernelShuffle(rebucket), s"re-bucketing: $rebucket")
+    sortedFiles(path)
     assert(t.currentGen.map(_._2) === Some(8))
-    putRows(t, Row(9L, "F", "a", "a9v8", 8L, null))
-    val ttl = shape(t.compactAt(100L, numBuckets = 8))
-    assert(ttl.shuffleBytes > 0, s"compactAt: $ttl")
-    putRows(t, Row(10L, "F", "a", "a10v9", 9L, null))
-    val retaining = shape(t.compactRetaining(8L, numBuckets = 8))
-    assert(retaining.shuffleBytes > 0, s"compactRetaining: $retaining")
-    assert(resolvedRows(t) === withLate
-      .filterNot(r => r.get(0) == 9L && r.get(1) == "F" || r.get(0) == 10L && r.get(1) == "F") +
-      Row(9L, "F", "a", "a9v8", 8L) + Row(10L, "F", "a", "a10v9", 9L))
+    assert(resolvedRows(t) === withLate)
+    t.drop()
+  }
+
+  test("compactAt and compactRetaining at an unchanged bucket count run " +
+    "one stage with zero shuffle: expired winners dropped, rows above the " +
+    "horizon kept verbatim, files key-sorted") {
+    val path = targetPath("graft_kv_test/bucketlocalttl")
+    val t = KVTable(spark, path, wipe = true)
+    t.setFamilies(Seq(write.FamilyDescriptor("T", ttlSeconds = 10L)))
+    putRows(t, (1L to 40L).flatMap(k => Seq(Row(k, "F", "a", s"a$k", 1L, null),
+      Row(k, "T", "b", s"b$k", 1L, null))) ++ Seq(
+      Row(null, "F", "a", "nullkey", 1L, null), Row(41L, null, null, "nullfq", 1L, null)): _*)
+    t.compact(numBuckets = 4)
+    putRows(t, Row(1L, "T", "b", "b1v95", 95L, null), Row(2L, "F", "a", "a2v2", 2L, null))
+    t.delete(marks((3L, "T", null)), ts = 96L)
+    val want = t.resolvedAt(100L).collect().toSet
+    assert(want.contains(Row(1L, "T", "b", "b1v95", 95L)) &&
+      !want.exists(r => r.get(0) == 2L && r.get(1) == "T"))
+    val ttl = shape(t.compactAt(100L, numBuckets = 4))
+    assert(bucketLocal(ttl), s"compactAt: $ttl")
+    assert(sortedFiles(path).map(r => Row(r.get(0), r.get(1), r.get(2), r.get(3), r.get(4)))
+      .toSet === want, "compactAt must store exactly the unexpired winners")
+
+    // horizon 3: the versions and the tombstone above it stay verbatim
+    putRows(t, Row(4L, "F", "a", "a4v2", 2L, null), Row(4L, "F", "a", "a4v4", 4L, null))
+    t.delete(marks((5L, "F", "a")), ts = 5L)
+    val live = resolvedRows(t)
+    val asOf = (3L to 5L).map(v => v -> t.resolvedAsOf(v).collect().toSet).toMap
+    val retaining = shape(t.compactRetaining(3L, numBuckets = 4))
+    assert(bucketLocal(retaining), s"compactRetaining: $retaining")
+    val kept = sortedFiles(path)
+    assert(kept.filter(r => r.get(0) == 4L).map(_.getString(3)).toSet === Set("a4v2", "a4v4"))
+    assert(kept.exists(r => r.get(0) == 5L && r.get(5) == "cell" && r.get(4) == 5L))
+    assert(resolvedRows(t) === live)
+    (3L to 5L).foreach(v => assert(t.resolvedAsOf(v).collect().toSet === asOf(v), s"as of $v"))
     t.drop()
   }
 
@@ -260,7 +321,7 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
       .updated(5L, "m5").updated(500L, "m500").toSet
 
     intercept[java.util.ConcurrentModificationException](
-      KVGeneration.writeResolved(stale, Long.MaxValue))
+      KVGeneration.writeResolved(stale, stale.numBuckets, Long.MaxValue))
     assert(t.currentGen.map(_._1) === Some(1))
     assert(state(t) === want)
     assert(stagingDirs(path).isEmpty, stagingDirs(path).toString)
@@ -351,7 +412,7 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
         t.compact(numBuckets = 4)
         putRows(t, Row(5L, "F", "a", "a5v4", 4L, null), Row(6L, null, null, null, 4L, "row"))
       }
-      val want = KVTable.resolve(t.cells).collect().toSet
+      val want = KVReference.resolve(t.cells).collect().toSet
       var got = Set.empty[Row]
       val read = shape { got = t.resolved().collect().toSet }
       assert(read.jobs.size === 1 && read.stages === 1 && read.shuffleBytes === 0L,
@@ -360,7 +421,7 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
       val asOf = shape { got = t.resolvedAsOf(2L).collect().toSet }
       assert(asOf.jobs.size === 1 && asOf.stages === 1 && asOf.shuffleBytes === 0L,
         s"$layout as of 2: $asOf")
-      assert(got === KVTable.resolve(t.cells.filter($"ts" <= 2L)).collect().toSet,
+      assert(got === KVReference.resolve(t.cells.filter($"ts" <= 2L)).collect().toSet,
         s"$layout as of 2")
     }
     t.drop()

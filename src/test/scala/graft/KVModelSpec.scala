@@ -53,6 +53,32 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
 
   private type Cell = (Long, String, String, String, Long)
 
+  /** 40 random ops of `seed`; duplicate (key,fam,qual,ts,tomb) ops are
+    * ambiguous (which value wins), so later duplicates are dropped like
+    * HBase overwrites identical ts cells. */
+  private def randomOps(seed: Long): List[Op] =
+    Gen.listOfN(40, genOp).pureApply(Gen.Parameters.default, Seed(seed))
+      .zipWithIndex
+      .groupBy(o => (o._1.key, o._1.family, o._1.qualifier, o._1.ts, o._1.tomb))
+      .map(_._2.head).toList.sortBy(_._2).map(_._1)
+
+  /** Writes `batch` to `t`: one put of its versions, one delete per
+    * tombstone ts. */
+  private def load(t: KVTable, batch: List[Op]): Unit = {
+    val puts = batch.filter(_.tomb.isEmpty)
+      .map(o => (o.key, o.family, o.qualifier, s"v${o.key}_${o.ts}", o.ts))
+    if (puts.nonEmpty)
+      t.put(puts.toDF("key", "family", "qualifier", "value", "ts"))
+    batch.filter(_.tomb.nonEmpty).groupBy(_.ts).foreach { case (ts, dels) =>
+      t.delete(dels.map {
+        case Op(k, _, _, _, Some("row")) => (k, None, None)
+        case Op(k, f, _, _, Some("family")) => (k, Some(f), None)
+        case Op(k, f, q, _, Some("cell")) => (k, Some(f), Some(q))
+        case o => throw new IllegalStateException(o.toString)
+      }.toDF("key", "family", "qualifier"), ts)
+    }
+  }
+
   private def str(row: org.apache.spark.sql.catalyst.InternalRow, i: Int) =
     if (row.isNullAt(i)) null else row.getUTF8String(i).toString
 
@@ -107,7 +133,7 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
 
   /** The two resolves against the model, live and as of `cut`: the
     * library reads (the kernel inside the scan) and the DataFrame
-    * reference [[KVTable.resolve]] over the raw cells. `ops` must all
+    * reference [[KVReference.resolve]] over the raw cells. `ops` must all
     * still be retained at `cut` (no compaction folded a version above
     * it). */
   private def referenceLeg(t: KVTable, ops: List[Op], cut: Long,
@@ -116,9 +142,9 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
     val now = model(ops)
     val asOf = model(ops.filter(_.ts <= cut))
     assert(cellsOf(t.resolved()) === now, s"resolved() != model, $clue")
-    assert(cellsOf(KVTable.resolve(t.cells)) === now, s"resolve(cells) != model, $clue")
+    assert(cellsOf(KVReference.resolve(t.cells)) === now, s"resolve(cells) != model, $clue")
     assert(cellsOf(t.resolvedAsOf(cut)) === asOf, s"resolvedAsOf($cut) != model, $clue")
-    assert(cellsOf(KVTable.resolve(t.cells.filter(col("ts") <= cut))) === asOf,
+    assert(cellsOf(KVReference.resolve(t.cells.filter(col("ts") <= cut))) === asOf,
       s"resolve(cells as of $cut) != model, $clue")
   }
 
@@ -144,28 +170,11 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
 
   test("resolve matches the naive model on random op sequences") {
     for (seed <- 1 to 8) {
-      val ops = Gen.listOfN(40, genOp)
-        .pureApply(Gen.Parameters.default, Seed(seed.toLong))
-      // duplicate (key,fam,qual,ts) puts are ambiguous (which value wins)
-      // — drop later duplicates like HBase overwrites identical ts cells
-      val deduped = ops.zipWithIndex
-        .groupBy(o => (o._1.key, o._1.family, o._1.qualifier, o._1.ts, o._1.tomb))
-        .map(_._2.head).toList.sortBy(_._2).map(_._1)
+      val deduped = randomOps(seed.toLong)
       val t = KVTable(spark,
         targetPath(s"graft_kv_test/model_${deduped.hashCode.abs}"),
         wipe = true)
-      val puts = deduped.filter(_.tomb.isEmpty)
-        .map(o => (o.key, o.family, o.qualifier, s"v${o.key}_${o.ts}", o.ts))
-      if (puts.nonEmpty)
-        t.put(puts.toDF("key", "family", "qualifier", "value", "ts"))
-      deduped.filter(_.tomb.nonEmpty).groupBy(_.ts).foreach { case (ts, dels) =>
-        t.delete(dels.map {
-          case Op(k, f, q, _, Some("row")) => (k, None, None)
-          case Op(k, f, _, _, Some("family")) => (k, Some(f), None)
-          case Op(k, f, q, _, Some("cell")) => (k, Some(f), Some(q))
-          case o => throw new IllegalStateException(o.toString)
-        }.toDF("key", "family", "qualifier"), ts)
-      }
+      load(t, deduped)
       val got = t.resolved()
         .as[(Long, String, String, String, Long)].collect().toSet
       assert(got === model(deduped), s"mismatch at seed=$seed")
@@ -185,33 +194,15 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
     // legitimately resurrects (documented in resolvedAsOf's scaladoc)
     // and a log-only replay would diverge by design.
     for (numBuckets <- Seq(1, 4); seed <- 1 to 6) {
-      val ops = Gen.listOfN(40, genOp)
-        .pureApply(Gen.Parameters.default, Seed(1000L + seed))
-      val deduped = ops.zipWithIndex
-        .groupBy(o => (o._1.key, o._1.family, o._1.qualifier, o._1.ts, o._1.tomb))
-        .map(_._2.head).toList.sortBy(_._2).map(_._1)
+      val deduped = randomOps(1000L + seed)
       val cut = Gen.choose(1L, 20L)
         .pureApply(Gen.Parameters.default, Seed(2000L + seed))
       val t = KVTable(spark,
         targetPath(s"graft_kv_test/modelc_${numBuckets}_$seed"), wipe = true)
-      def apply(batch: List[Op]): Unit = {
-        val puts = batch.filter(_.tomb.isEmpty)
-          .map(o => (o.key, o.family, o.qualifier, s"v${o.key}_${o.ts}", o.ts))
-        if (puts.nonEmpty)
-          t.put(puts.toDF("key", "family", "qualifier", "value", "ts"))
-        batch.filter(_.tomb.nonEmpty).groupBy(_.ts).foreach { case (ts, dels) =>
-          t.delete(dels.map {
-            case Op(k, _, _, _, Some("row")) => (k, None, None)
-            case Op(k, f, _, _, Some("family")) => (k, Some(f), None)
-            case Op(k, f, q, _, Some("cell")) => (k, Some(f), Some(q))
-            case o => throw new IllegalStateException(o.toString)
-          }.toDF("key", "family", "qualifier"), ts)
-        }
-      }
       val (before, after) = deduped.partition(_.ts <= cut)
-      apply(before)
+      load(t, before)
       t.compact(numBuckets = numBuckets)
-      apply(after)
+      load(t, after)
       val got = t.resolved()
         .as[(Long, String, String, String, Long)].collect().toSet
       val clue = s"buckets=$numBuckets seed=$seed cut=$cut " +
@@ -239,6 +230,76 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
       assert(clone.resolved().as[Cell].collect().toSet === model(before),
         s"restoreAsOf($cut) mismatch at $clue")
       clone.drop()
+    }
+  }
+
+  test("every compaction rewrite matches the model on log-only, 1-bucket " +
+    "and 4-bucket tables: compactAt, compactRetaining, and compact and " +
+    "restoreAsOf as a first compaction or across a re-bucketing") {
+    // family T expires 10 ts units before `now`; row tombstones carry no
+    // family and never expire
+    def unexpired(ops: List[Op], now: Long) = ops.filterNot(o =>
+      o.family == "T" && !o.tomb.contains("row") && o.ts <= now - 10L)
+    def state(t: KVTable) = t.resolved().as[Cell].collect().toSet
+    def asOf(t: KVTable, v: Long) = t.resolvedAsOf(v).as[Cell].collect().toSet
+    def pick(lo: Long, hi: Long, seed: Long) =
+      Gen.choose(lo, hi).pureApply(Gen.Parameters.default, Seed(seed))
+    for (layout <- Seq(0, 1, 4); seed <- 1 to 3) {
+      val ops = randomOps(10000L + seed)
+      // a bucketed table compacted the ops at or below `split` (so every
+      // version above it is retained) and holds the rest in its log
+      val split = if (layout == 0) 0L else pick(1L, 10L, 11000L + seed)
+      val base = KVTable(spark,
+        targetPath(s"graft_kv_test/modelr_${layout}_$seed"), wipe = true)
+      val (before, after) = ops.partition(_.ts <= split)
+      load(base, before)
+      if (layout > 0) base.compact(numBuckets = layout)
+      load(base, after)
+      // the rewrites' bucket counts: unchanged on a bucketed table, the
+      // other of 1 and 4 for the re-bucketing, 4 for a first compaction
+      val same = if (layout == 0) 4 else layout
+      val other = if (layout == 4) 1 else 4
+      val clue = s"layout=$layout seed=$seed split=$split"
+      def fresh(name: String): KVTable = {
+        val c = base.cloneTo(targetPath(s"graft_kv_test/modelr_${layout}_${seed}_$name"))
+        assert(state(c) === model(ops), s"clone $name, $clue")
+        c
+      }
+
+      val now = pick(10L, 30L, 12000L + seed)
+      val ttl = fresh("ttl")
+      ttl.setFamilies(Seq(write.FamilyDescriptor("T", ttlSeconds = 10L)))
+      assert(ttl.resolvedAt(now).as[Cell].collect().toSet === model(unexpired(ops, now)),
+        s"resolvedAt($now), $clue")
+      ttl.compactAt(now, numBuckets = same)
+      assert(state(ttl) === model(unexpired(ops, now)), s"compactAt($now), $clue")
+      assert(ttl.cells.filter(col("family") === "T" && col("ts") <= now - 10L).count() === 0,
+        s"compactAt($now) kept an expired cell, $clue")
+      ttl.drop()
+
+      val h = pick(split.max(1L), 20L, 13000L + seed)
+      val retain = fresh("retain")
+      retain.compactRetaining(h, numBuckets = same)
+      assert(state(retain) === model(ops), s"compactRetaining($h), $clue")
+      for (v <- h to 20L)
+        assert(asOf(retain, v) === model(ops.filter(_.ts <= v)),
+          s"compactRetaining($h) then resolvedAsOf($v), $clue")
+      retain.drop()
+
+      val v = pick(split.max(1L), 20L, 14000L + seed)
+      for (n <- Seq(same, other).distinct) {
+        val compacted = fresh(s"compact$n")
+        compacted.compact(numBuckets = n)
+        assert(compacted.currentGen.map(_._2) === Some(n))
+        assert(state(compacted) === model(ops), s"compact($n), $clue")
+        compacted.drop()
+        val restored = fresh(s"restore$n")
+        restored.restoreAsOf(v, numBuckets = n)
+        assert(state(restored) === model(ops.filter(_.ts <= v)),
+          s"restoreAsOf($v, $n), $clue")
+        restored.drop()
+      }
+      base.drop()
     }
   }
 }

@@ -116,7 +116,7 @@ class KVSourceSpec extends AnyFunSuite with SparkSpec {
     val gen = t.currentGen.get._1
     def plain(dir: String) =
       spark.read.schema(KVTable.CELL_SCHEMA_DDL).parquet(s"${t.path}/$dir")
-    val viaUnion = KVTable.resolve(plain(s"compacted/gen-$gen").unionByName(plain("log")))
+    val viaUnion = KVReference.resolve(plain(s"compacted/gen-$gen").unionByName(plain("log")))
       .orderBy($"key", $"family", $"qualifier").collect()
     assert(viaDsv2.toSeq === viaUnion.toSeq)
   }

@@ -220,8 +220,8 @@ class KVTableSpec extends AnyFunSuite with SparkSpec {
     val asOf = t.resolvedAsOf(2L)
     // the reference: every window shares one order, so one shuffle on
     // key and one sort
-    for ((name, df) <- Seq("resolve" -> KVTable.resolve(t.cells),
-        "resolve as of 2" -> KVTable.resolve(t.cells.filter($"ts" <= 2L)))) {
+    for ((name, df) <- Seq("resolve" -> KVReference.resolve(t.cells),
+        "resolve as of 2" -> KVReference.resolve(t.cells.filter($"ts" <= 2L)))) {
       val plan = df.queryExecution.executedPlan.toString.take(3000)
       assert(count(df) { case _: ShuffleExchangeExec => } === 1,
         s"$name shuffles more than once:\n$plan")
@@ -332,7 +332,7 @@ class KVTableSpec extends AnyFunSuite with SparkSpec {
     def live(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Option[String], Option[String], String, Long)].collect().toSet
     val got = t.resolvedAt(107L)
-    val want = live(KVTable.resolve(t.ttlFilter(t.cells, 107L)))
+    val want = live(KVReference.resolve(t.ttlFilter(t.cells, 107L)))
     assert(live(got) === want)
     assert(want === Set((1L, F, q("a"), "new", 100L), (2L, F, q("b"), "b2", 99L),
       (4L, F, q("c"), "c4", 100L), (5L, F, q("b"), "b5", 98L),
