@@ -1,22 +1,63 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
-  * All engine queries read these via `spark.read.parquet` — Catalyst gives
-  * predicate pushdown, column pruning and partition coalescing for free,
-  * which at 100 TB means the scan only materializes the (columns × row
-  * groups) a query actually touches. Equivalent of the reference's
-  * server-side scan pushdown (HBaseRDD.scala:39-56).
+  * All engine queries read these, and the parquet artifacts the engine
+  * stages itself, through [[parquet]] — Catalyst gives predicate
+  * pushdown, column pruning and partition coalescing for free, which at
+  * 100 TB means the scan only materializes the (columns × row groups) a
+  * query actually touches. Equivalent of the reference's server-side
+  * scan pushdown (HBaseRDD.scala:39-56).
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Session confs that change how parquet types map to Spark types. */
+  private val typeConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled", "spark.sql.caseSensitive")
+
+  /** path -> (key, schema): one entry per path, schemas only. */
+  private val schemas = new ConcurrentHashMap[String, (String, StructType)]()
+
+  /** Read a parquet path the engine knows, inferring its schema (a
+    * Spark job over the footers) only on a path's first read. The entry
+    * is reused while the path's [[Staging.fingerprint]] and the
+    * session's type-mapping confs are unchanged; a change infers again
+    * and replaces the path's one entry. Spark still lists the path on
+    * every read. Inference runs under no lock: concurrent first reads
+    * may each infer the same schema. The fingerprint is taken first,
+    * so a rewrite during inference leaves a key that never matches. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val fp = Staging.fingerprint(path)
+    // a missing path or a glob has no fingerprint to key on
+    if (fp == "absent") spark.read.parquet(path)
+    else {
+      val key = (fp +: typeConfs.map(k => spark.conf.getOption(k).orNull))
+        .mkString("|")
+      val hit = Option(schemas.get(path)).collect { case (`key`, st) => st }
+      val schema = hit.getOrElse {
+        val st = spark.read.parquet(path).schema
+        schemas.put(path, (key, st))
+        st
+      }
+      spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** The number of paths [[parquet]] holds a schema for. */
+  private[graft] def cachedSchemas: Int = schemas.size
+
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame     = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = apply(s, d, "nation")

@@ -802,7 +802,8 @@ object GraphOps {
     * association-free in any engine), the frontier is delta-only
     * (messages are generated from newly-accepted rows, never from
     * standing state against itself), the standing state is partitioned
-    * by vertex once and cached, and every per-round result is an eager
+    * by vertex (bucketed on disk, or repartitioned and cached once when
+    * it is not), and every per-round result is an eager
     * localCheckpoint (the bspIterateDelta lineage discipline).
     * `minProbPpm` drops messages whose probability attenuated below
     * the floor — the natural 100 TB fan-out bound: hop k carries
@@ -847,19 +848,23 @@ object GraphOps {
       .select($"vertex", $"peer", $"m.vendor".as("vendor"),
         $"m.prob_ppm".as("prob_ppm"), $"m.ts".as("ts"))
     // the existing side never contributes vendor (messages carry the
-    // NEW edge's vendor, the reference's ehe.vendorCode) — cache the
+    // NEW edge's vendor, the reference's ehe.vendorCode) — keep the
     // slim 4-column layout, partitioned by the message-join key.
     // `stateColocated`: the caller's state is ALREADY clustered by
-    // vertex (a Staging bucketed table) — skip the repartition and let
-    // every superstep join plan against the storage partitioning
-    // (cache and project both preserve it); the batch/delta side pays
-    // the only Exchange. At 100 TB the standing state is the table an
-    // ingest cannot afford to re-shuffle per run.
+    // vertex on disk (a Staging bucketed table) — neither repartition
+    // nor cache it: every superstep join re-reads the buckets and plans
+    // against the storage partitioning; the batch/delta side pays the
+    // only Exchange. At 100 TB the standing state is the table an
+    // ingest can neither re-shuffle nor hold in memory per run.
     val slim = state.select(col("vertex"), col("peer"), col("prob_ppm"),
       col("ts"))
-    val st = (if (stateColocated) slim
-              else slim.repartition(col("vertex"))).cache()
-    st.count() // materialize once; every superstep reuses the layout
+    val st =
+      if (stateColocated) slim
+      else {
+        val cached = slim.repartition(col("vertex")).cache()
+        cached.count() // materialize once; every superstep reuses it
+        cached
+      }
     // pending starts ABSENT, not as an empty relation: unioning a
     // statically-empty LocalRelation trips Catalyst's union constraint
     // rewrite (AttributeMap lookup on the pruned side), so the first
@@ -935,7 +940,7 @@ object GraphOps {
           best(p.unionByName(delta)).localCheckpoint(true)))
       step += 1
     }
-    st.unpersist(false)
+    if (!stateColocated) st.unpersist(false)
     pending.getOrElse(
       Seq.empty[(Long, Long, Long, Long, Long)].toDF(cols: _*))
   }

@@ -311,7 +311,7 @@ object GraphQueries {
         fromPairs(feedA(s, d))
           .repartitionByRange(8, $"src").sortWithinPartitions($"src")
           .write.mode("overwrite").parquet(path))
-      val net = s.read.parquet(path)
+      val net = Tables.parquet(s, path)
       net.select($"src",
           filter($"edges", e => pmod(e("dst"), lit(3)) === 1).as("es"))
         .filter(size($"es") > 0)

@@ -88,7 +88,8 @@ object LlmQueries {
       Dedup.minHashBandIndex(corpus)
         .write.mode("overwrite").parquet(s"$path/index")
     }
-    (corpus, s.read.parquet(s"$path/labels"), s.read.parquet(s"$path/index"))
+    (corpus, Tables.parquet(s, s"$path/labels"),
+      Tables.parquet(s, s"$path/index"))
   }
 
   val queries: Map[String, Q] = Map(

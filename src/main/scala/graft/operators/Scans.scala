@@ -64,6 +64,7 @@ object Scans {
       val path = RepoPaths.target("graft_snapshots/s5")
       Tables.documents(s, d).select($"doc_id", $"lang", $"n_chars")
         .write.mode("overwrite").parquet(path)
+      // plain read: the write-and-read-back round trip is under test
       s.read.parquet(path).orderBy($"doc_id")
     }),
 
@@ -103,6 +104,7 @@ object Scans {
         }
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
+      // plain read: the stream sink's output files are under test
       s.read.parquet(out).orderBy($"event_type")
     }),
 
@@ -117,6 +119,7 @@ object Scans {
       val path = RepoPaths.target("graft_bulk/s11")
       ZOrder.writeZOrdered(Tables.lineitem(s, d),
         "l_orderkey", "l_partkey", path, numFiles = 8)
+      // plain read: the scan's pruning of the z-ordered files is under test
       s.read.parquet(path)
         .filter($"l_partkey" < 100)
         .select($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_quantity")
@@ -214,6 +217,7 @@ object Scans {
       // dim is the broadcast side BY HINT: at test scale the planner
       // would otherwise broadcast the (tiny) fact itself, and DPP only
       // prunes the probe side; at 100 TB this is the only shape anyway
+      // plain read: partition discovery and pruning are under test
       s.read.parquet(dir).join(broadcast(dim), "o_orderstatus")
         .groupBy($"o_orderstatus")
         .agg(count(lit(1)).as("n"),
@@ -245,6 +249,7 @@ object Scans {
           .select($"o_orderkey", $"o_totalprice", $"o_orderstatus")
           .write.mode("overwrite").parquet(s"$dir/data/gen=2")
       }
+      // plain read: merging the two generations' schemas is under test
       s.read.option("mergeSchema", "true").parquet(s"$dir/data")
         .groupBy(coalesce($"o_orderstatus", lit("__pre_evolution__"))
           .as("status"))
