@@ -15,7 +15,11 @@ import graft.sources.kv.GraftFs
   * the Exchange (if any) lands on the probe/batch side only and a
   * corpus-sized artifact never re-shuffles per use. At 100 TB this is
   * the difference between an ingest batch costing O(batch) and costing
-  * O(standing state) per trigger.
+  * O(standing state) per trigger. The bucket count is fixed at write
+  * time; at read time [[graft.plans.CoalesceBucketedScans]] groups the
+  * N buckets into k (the smallest divisor of N at or above the shuffle
+  * parallelism), so with few cores each read is k tasks, not N, and
+  * the scan still reports a hash partitioning the other side can match.
   *
   * Session metadata: Spark's in-memory catalog forgets tables across
   * JVMs, but bucketed FILES are self-describing (the writer embeds the

@@ -36,6 +36,11 @@ import org.apache.spark.sql.functions._
   *    nation-key columns are NOT shifted: region/nation stay fixed
   *    across sf in TPC-H too, and every copy's dims point at them.
   *
+  * Build-once: the output dir carries a [[Staging.ensureFlat]] marker
+  * tagged with the recipe version, the copy count and the source's
+  * [[Staging.fingerprint]], written after the last table. A run whose
+  * tag matches rewrites nothing and sweeps nothing.
+  *
   * Regeneration staleness: every marker-guarded per-dataset artifact
   * staged FROM a previous generation of this dir (KV bases, stream
   * landing dirs, format fixtures — the flat tags carry no content
@@ -63,12 +68,26 @@ object SynthGen {
     }
   }
 
+  /** Bump when the replication recipe changes: a new tag regenerates. */
+  private val Recipe = "synthgen v1"
+
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.drop(1).headOption
       .getOrElse(RepoPaths.target("synth/sf1.0"))
     val copies = args.drop(2).headOption.map(_.toInt).getOrElse(10)
     val spark = GraftSession.local()
+    generate(spark, src, out, copies)
+    spark.stop()
+  }
+
+  /** Writes the `copies`× replication of `src` to `out` and drops the
+    * staged artifacts of any previous generation — unless `out` already
+    * holds this generation (same recipe, copy count and source
+    * fingerprint), in which case it touches nothing. */
+  def generate(spark: SparkSession, src: String, out: String,
+      copies: Int): Unit = Staging.ensureFlat(out,
+      s"$Recipe copies=$copies src=$src fp=${Staging.fingerprint(src)}") {
     def write(name: String, df: DataFrame): Unit = {
       df.drop("_c").write.mode("overwrite")
         .parquet(s"$out/$name.parquet")
@@ -141,6 +160,5 @@ object SynthGen {
         }
       } finally fams.close()
     }
-    spark.stop()
-  }
+  }: Unit
 }

@@ -9,9 +9,13 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * `.withExtensions(new GraftExtensions)` (or
   * `spark.sql.extensions=graft.functions.GraftExtensions`) — no
   * imperative register() call needed — and injects the engine's
-  * optimizer rules (currently [[graft.plans.NanosRangeRewrite]], which
-  * turns epoch-nanos time-range predicates over TIMESTAMP_NTZ sources
-  * back into pushdown-able scan ranges).
+  * planner rules:
+  *  - [[graft.plans.NanosRangeRewrite]] (optimizer): turns epoch-nanos
+  *    time-range predicates over TIMESTAMP_NTZ sources back into
+  *    pushdown-able scan ranges;
+  *  - [[graft.plans.CoalesceBucketedScans]] (post-planner, adaptive
+  *    plans only): scans an N-bucket file table as k bucket groups,
+  *    k sized to the session's shuffle parallelism.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -20,5 +24,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft.functions.GraftExpressions", name), b))
     }
     e.injectOptimizerRule(_ => graft.plans.NanosRangeRewrite)
+    e.injectQueryPostPlannerStrategyRule(_ => graft.plans.CoalesceBucketedScans)
   }
 }

@@ -803,8 +803,9 @@ object GraphOps {
     * (messages are generated from newly-accepted rows, never from
     * standing state against itself), the standing state is partitioned
     * by vertex (bucketed on disk, or repartitioned and cached once when
-    * it is not), and every per-round result is an eager
-    * localCheckpoint (the bspIterateDelta lineage discipline).
+    * it is not), and each superstep materializes ONE eager
+    * localCheckpoint — the next pending set, its newly accepted rows
+    * flagged as the delta (the bspIterateDelta lineage discipline).
     * `minProbPpm` drops messages whose probability attenuated below
     * the floor — the natural 100 TB fan-out bound: hop k carries
     * p^(k+1), so the frontier starves geometrically instead of
@@ -882,19 +883,27 @@ object GraphOps {
           $"c.peer" === $"s.peer", "left")
         .filter($"s.prob_ppm".isNull || $"c.prob_ppm" > $"s.prob_ppm")
         .select($"c.vertex", $"c.peer", $"c.vendor", $"c.prob_ppm", $"c.ts")
-      // the drained probe rides the delta's checkpoint job as an
-      // `observe` count instead of a separate limit-1 job per superstep
+      // ONE checkpoint per superstep: the next pending set, with each
+      // row flagged `fresh` when it is a candidate that strictly beats
+      // pending (or has no pending row). Candidates and pending are
+      // each unique per (vertex, peer), and a fresh candidate's strictly
+      // greater prob decides the (prob, ts, vendor) struct max, so the
+      // merge equals best(pending ∪ delta) and delta = the fresh rows.
+      // The drained probe rides the same job as an `observe` count.
       val deltaObs = org.apache.spark.sql.Observation(
         s"g16_delta_${step}_$obsScope")
-      val delta = pending.fold(vsState) { p =>
+      val merged = pending.fold(vsState.withColumn("fresh", lit(true))) { p =>
+        val fresh = $"c.vertex".isNotNull &&
+          ($"p.vertex".isNull || $"c.prob_ppm" > $"p.prob_ppm")
         vsState.as("c")
           .join(p.as("p"), $"c.vertex" === $"p.vertex" &&
-            $"c.peer" === $"p.peer", "left")
-          .filter($"p.prob_ppm".isNull || $"c.prob_ppm" > $"p.prob_ppm")
-          .select($"c.vertex", $"c.peer", $"c.vendor", $"c.prob_ppm",
-            $"c.ts")
-      }.observe(deltaObs, count(lit(1)).as("n")).localCheckpoint(true)
+            $"c.peer" === $"p.peer", "full_outer")
+          .select(cols.map(c => when(fresh, col(s"c.$c"))
+            .otherwise(col(s"p.$c")).as(c)) :+ fresh.as("fresh"): _*)
+      }.observe(deltaObs, count_if($"fresh").as("n"))
+        .localCheckpoint(true)
       drained = deltaObs.get("n").asInstanceOf[Long] == 0L
+      val delta = merged.filter($"fresh").drop("fresh")
       // propagate the delta against the PRE-MERGE existing connections.
       // Join the state leg and the pending leg SEPARATELY, then union
       // the pairs: join distributes over union, and a union node would
@@ -922,8 +931,8 @@ object GraphOps {
         // explode(array(struct, struct)) — the same row multiset as the
         // former two-select union, without materializing the join to an
         // eager checkpoint first (one fewer blocking job + checkpoint
-        // write per superstep; lineage stays bounded because delta and
-        // pending are still checkpointed each round)
+        // write per superstep; lineage stays bounded because the merged
+        // pending set is still checkpointed each round)
         inbox = paired.select(explode(array(
             struct($"e_peer".as("vertex"), $"d_peer".as("peer"),
               $"d_vendor".as("vendor"), $"pp".as("prob_ppm"),
@@ -935,9 +944,7 @@ object GraphOps {
             $"m.vendor".as("vendor"), $"m.prob_ppm".as("prob_ppm"),
             $"m.ts".as("ts"))
       }
-      if (!drained)
-        pending = Some(pending.fold(delta)(p =>
-          best(p.unionByName(delta)).localCheckpoint(true)))
+      if (!drained) pending = Some(merged.drop("fresh"))
       step += 1
     }
     if (!stateColocated) st.unpersist(false)

@@ -382,6 +382,67 @@ class GraphOpsSpec extends AnyFunSuite with SparkSpec {
       (2L, 1L, 99L, 600000L, 300L)))
   }
 
+  private def bsp(state: Seq[(Long, Long, Long, Long, Long)],
+      batch: Seq[(Long, Long, Long, Long, Long)], supersteps: Int,
+      colocated: Boolean): Set[(Long, Long, Long, Long, Long)] =
+    GraphOps.probBspIncremental(probDf(symm(state)), probDf(symm(batch)),
+        supersteps, stateColocated = colocated)
+      .as[(Long, Long, Long, Long, Long)].collect().toSet
+
+  test("probBsp: one materialization per superstep — 3 supersteps run, " +
+    "3 localCheckpoint jobs") {
+    // the chain fixture above: evidence reaches a new hop at every
+    // superstep, so none of the 3 drains
+    val state = probDf(symm(Seq((1L, 2L, 10L, 500000L, 100L),
+      (2L, 3L, 11L, 400000L, 200L))))
+    val batch = probDf(symm(Seq((3L, 4L, 99L, 800000L, 300L))))
+    Seq(true, false).foreach { colocated =>
+      var rows = 0L
+      val calls = jobCallSites {
+        rows = GraphOps.probBspIncremental(state, batch, supersteps = 3,
+          stateColocated = colocated).count()
+      }
+      assert(rows === 6L)
+      assert(calls.count(_.startsWith("localCheckpoint at")) === 3,
+        s"colocated=$colocated: $calls")
+    }
+  }
+
+  // step-2 inbox of this fixture (the delta of step 1 paired with the
+  // state): (1,3) and (3,1) TIE their pending prob at a later ts and
+  // another vendor, (2,3)/(3,2) lose to pending, (1,4)/(4,1)/(2,4)/(4,2)
+  // are new keys, and pending (5,6)/(6,5) receive no message at all
+  private val tieState = Seq((1L, 2L, 10L, 500000L, 900L),
+    (3L, 4L, 11L, 500000L, 100L))
+  private val tieBatch = Seq((2L, 3L, 20L, 800000L, 500L),
+    (1L, 3L, 30L, 400000L, 300L))
+  private val stepOnePending = symm(tieBatch).toSet
+
+  test("probBsp merge: a candidate that ties pending is not fresh, and a " +
+    "pending key the superstep never touches survives") {
+    val isolated = Seq((5L, 6L, 40L, 900000L, 700L))
+    Seq(true, false).foreach { colocated =>
+      val got = bsp(tieState, tieBatch ++ isolated, 2, colocated)
+      val expect = stepOnePending ++ symm(isolated) ++ Set(
+        (4L, 2L, 20L, 400000L, 500L), (2L, 4L, 20L, 400000L, 100L),
+        (4L, 1L, 30L, 200000L, 300L), (1L, 4L, 30L, 200000L, 100L))
+      assert(got === expect, s"colocated=$colocated")
+    }
+  }
+
+  test("probBsp merge: a drain at step 2 returns step 1's pending exactly") {
+    // without the 3-4 state edge every step-2 candidate ties or loses
+    Seq(true, false).foreach { colocated =>
+      var got = Set.empty[(Long, Long, Long, Long, Long)]
+      val calls = jobCallSites {
+        got = bsp(tieState.take(1), tieBatch, 3, colocated)
+      }
+      assert(got === stepOnePending, s"colocated=$colocated")
+      assert(calls.count(_.startsWith("localCheckpoint at")) === 2,
+        s"colocated=$colocated: $calls")
+    }
+  }
+
   test("probBsp: fewer supersteps is a prefix — every k-step suggestion " +
     "key survives at k+1 with prob no lower, on the g16 fixture") {
     import graft.llm.TextOps

@@ -26,6 +26,12 @@ better than every parent run; otherwise `FAIL` when the change's median
 is worse than the parent's by more than `bound` of the parent's median,
 and `ok` else. Each workload also reports both sides' share of failed
 operations, `FAIL` when the change's is larger.
+
+Each record also carries the run's per-op median latency (`op_medians`,
+from the run's full record `perfbench/results/<workload>-seed<N>-trace0.json`,
+warm-up and failed ops left out), and the summary ends with a per-op
+table: each side's median over its runs of those medians, the change in
+per cent, and the pairs the change wins.
 """
 import argparse
 import json
@@ -127,15 +133,49 @@ def verdict(parent, change, better, bound, more_failed=False):
     }
 
 
-def paired(records, workload):
-    """{seed: {side: result}} for every run of the workload — incorrect
-    runs and runs with failed operations included (`table` lists them) —
-    and the seeds with both sides present."""
+def paired(records, workload, field="result"):
+    """{seed: {side: record[field]}} for every run of the workload that has
+    the field — incorrect runs and runs with failed operations included
+    (`table` lists them) — and the seeds with both sides present."""
     by_seed = {}
     for r in records:
-        if r["workload"] == workload:
-            by_seed.setdefault(r["seed"], {})[r["side"]] = r["result"]
+        if r["workload"] == workload and r.get(field):
+            by_seed.setdefault(r["seed"], {})[r["side"]] = r[field]
     return by_seed, sorted(s for s, v in by_seed.items() if len(v) == 2)
+
+
+def op_medians(directory, workload, seed):
+    """{op name: median latency (s)} of a run's timed, successful ops,
+    read from its full record; {} when the record is missing."""
+    path = os.path.join(directory, "perfbench", "results", f"{workload}-seed{seed}-trace0.json")
+    try:
+        with open(path) as fh:
+            ops = json.load(fh)["ops"]
+    except (OSError, ValueError, KeyError):
+        return {}
+    lat = {}
+    for o in ops:
+        if o.get("phase") != "warmup" and o.get("ok"):
+            lat.setdefault(o["name"], []).append(o["latency_s"])
+    return {name: quantile(xs, 0.5) for name, xs in sorted(lat.items())}
+
+
+def op_table(records, workload):
+    """Per-op lines over the pairs whose both runs carry op medians."""
+    by_seed, seeds = paired(records, workload, "op_medians")
+    if not seeds:
+        return []
+    names = sorted(set.intersection(*(set(m) for s in seeds for m in by_seed[s].values())))
+    lines = [f"   per-op median latency (s), median over {len(seeds)} pairs:",
+             f"   {'op':<26}{'parent':>9}{'change':>9}{'delta':>9}  wins"]
+    for name in names:
+        p = [by_seed[s]["parent"][name] for s in seeds]
+        c = [by_seed[s]["change"][name] for s in seeds]
+        pm, cm = quantile(p, 0.5), quantile(c, 0.5)
+        rel = f"{cm / pm - 1:+.1%}" if pm else "n/a"
+        lines.append(f"   {name:<26}{pm:>9.3f}{cm:>9.3f}{rel:>9}  "
+                     f"{wins(list(zip(p, c)), 'lower')}/{len(seeds)}")
+    return lines
 
 
 def table(records, workload, metrics):
@@ -168,7 +208,7 @@ def table(records, workload, metrics):
             f"{v['gain']:>8.3f}{v['parent_iqr']:>8.3f}  {'yes' if v['claim'] else 'no ':<5}  "
             f"{v['bound']} (worse {v['worse_share']:+.1%}, "
             f"spread {v['spread']:.2f} of {bound})")
-    return "\n".join(lines)
+    return "\n".join(lines + op_table(records, workload))
 
 
 def summarize(path, metrics):
@@ -212,7 +252,9 @@ def main(argv=None):
         result = run_one(dirs[side], a.workload, seed, a.seconds)
         with open(a.out, "a") as fh:
             fh.write(json.dumps({"workload": a.workload, "seed": seed, "side": side,
-                                 "result": result}) + "\n")
+                                 "result": result,
+                                 "op_medians": op_medians(dirs[side], a.workload, seed)})
+                     + "\n")
         print(f"[ab_pairs] {a.workload} seed {seed} {side}: "
               + " ".join(f"{m}={result['metrics'][m]['value']:.3f}"
                          for m, _, _, _ in metrics),

@@ -144,6 +144,47 @@ class ArithmeticTest(unittest.TestCase):
         self.assertIn("10/10", row)
         self.assertNotIn("yes", row)
 
+    def test_op_medians_read_the_runs_full_record(self):
+        ops = [{"name": "q1", "phase": "warmup", "latency_s": 9.0, "ok": True},
+               {"name": "q1", "phase": "untraced", "latency_s": 1.0, "ok": True},
+               {"name": "q1", "phase": "untraced", "latency_s": 3.0, "ok": True},
+               {"name": "q1", "phase": "untraced", "latency_s": 2.0, "ok": True},
+               {"name": "q2", "phase": "untraced", "latency_s": 0.5, "ok": True},
+               {"name": "q2", "phase": "untraced", "latency_s": 7.0, "ok": False}]
+        with tempfile.TemporaryDirectory() as d:
+            os.makedirs(os.path.join(d, "perfbench", "results"))
+            with open(os.path.join(d, "perfbench", "results",
+                                   "analytics-seed5-trace0.json"), "w") as fh:
+                json.dump({"ops": ops}, fh)
+            self.assertEqual(ab_pairs.op_medians(d, "analytics", 5), {"q1": 2.0, "q2": 0.5})
+            self.assertEqual(ab_pairs.op_medians(d, "analytics", 6), {})
+
+    def test_summarize_prints_a_per_op_table(self):
+        metrics = ab_pairs.load_metrics()
+        names = [m[0] for m in metrics]
+        result = {"correct": True, "attempted": 3, "failed": 0,
+                  "metrics": {n: {"value": 1.0, "unit": "s"} for n in names}}
+        with tempfile.NamedTemporaryFile("w", suffix=".jsonl", delete=False) as fh:
+            for seed, (pg16, cg16) in zip((1, 2, 3), ((0.8, 0.7), (0.9, 0.6), (0.7, 0.75))):
+                for side, g16 in (("parent", pg16), ("change", cg16)):
+                    fh.write(json.dumps({"workload": "analytics", "seed": seed, "side": side,
+                                         "result": result,
+                                         "op_medians": {"g16": g16, "q6": 0.04}}) + "\n")
+            # a record from before op medians were kept joins no per-op pair
+            fh.write(json.dumps({"workload": "analytics", "seed": 4, "side": "parent",
+                                 "result": result}) + "\n")
+            fh.write(json.dumps({"workload": "analytics", "seed": 4, "side": "change",
+                                 "result": result}) + "\n")
+        try:
+            text = ab_pairs.summarize(fh.name, metrics)
+        finally:
+            os.unlink(fh.name)
+        self.assertIn("per-op median latency (s), median over 3 pairs", text)
+        g16 = next(line for line in text.splitlines() if line.strip().startswith("g16"))
+        self.assertEqual(g16.split(), ["g16", "0.800", "0.700", "-12.5%", "2/3"])
+        q6 = next(line for line in text.splitlines() if line.strip().startswith("q6"))
+        self.assertEqual(q6.split(), ["q6", "0.040", "0.040", "+0.0%", "0/3"])
+
 
 if __name__ == "__main__":
     unittest.main()
