@@ -4,7 +4,10 @@ import java.nio.file.{Files, Paths}
 
 /** Dev utility: dump `.explain("formatted")` for flagship queries into
   * PLANS.md so plan shape (pushdown, pruning, broadcasts, TakeOrdered)
-  * is reviewable and diffable across rounds.
+  * is reviewable and diffable across rounds. Tokens that shift with
+  * whatever the JVM ran before a plan, or with an edit to the code
+  * that built it, are written without their numbers ([[normalize]]),
+  * so a diff of two dumps shows only plan changes.
   *
   * Usage: sbt "runMain graft.ExplainDump [sfDir]"
   */
@@ -97,6 +100,23 @@ object ExplainDump {
     // their shapes live in GraphOps scaladoc + GraphOpsSpec
     "llm_ann_ivf_incr")
 
+  /** Drops what a plan string borrows from JVM-global counters, object
+    * identities, code positions and the checkout location: expression
+    * ids (`l_orderkey#123L` → `l_orderkey#L`), exchange `plan_id`s,
+    * lambda-variable suffixes (`lambda x_26#` → `lambda x#`), lambda
+    * class names, identity hashes (`CombineEdge$@121fe002`), an RDD's
+    * id and creation site (`MapPartitionsRDD[85] at localCheckpoint at
+    * Materialize.scala:39` → `MapPartitionsRDD at localCheckpoint`),
+    * and the working directory prefix of checkout-relative paths. */
+  private def normalize(plan: String): String =
+    plan.replace(System.getProperty("user.dir") + "/", "")
+      .replaceAll("#\\d+", "#")
+      .replaceAll("plan_id=\\d+", "plan_id=")
+      .replaceAll("(lambda \\w+?)_\\d+#", "$1#")
+      .replaceAll("\\$\\$Lambda[^\\s,]*", "\\$\\$Lambda")
+      .replaceAll("@[0-9a-f]{1,8}\\b", "")
+      .replaceAll("(\\w+RDD)\\[\\d+\\] at (\\w+) at [^,\\s]+", "$1 at $2")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = GraftSession.local()
@@ -109,8 +129,8 @@ object ExplainDump {
     sb.append("spans covering the hot operators.\n")
     FLAGSHIPS.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
-      val full = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val full = normalize(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
       // iterative plans (BSP) recursively print every cached relation's
       // stored plan — hundreds of KB that drown the document; the
       // reviewable shape is the head of the tree

@@ -62,11 +62,8 @@ object GraftSession {
     * (and race any concurrent planner on that shared session). The
     * clone is confined to the running micro-batch, which is what makes
     * the set/restore safe there. */
-  def withMicroBatchPlanning[T](s: SparkSession)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try body finally s.conf.set("spark.sql.adaptive.enabled", prev)
-  }
+  def withMicroBatchPlanning[T](s: SparkSession)(body: => T): T =
+    withConf(s, "spark.sql.adaptive.enabled" -> "false")(body)
 
   /** Scoped planning profile for BOUNDED stream replays — AvailableNow
     * runs over staged files whose final emission is forced by explicit
@@ -83,10 +80,21 @@ object GraftSession {
     * (Sessionize.eventTimeIdle, session_window merges) NEED the
     * no-data batch — SessionizeSpec/StreamWindowSpec pin that
     * semantic, and library users keep it. */
-  def withBoundedReplay[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "false")
-    try body finally s.conf.set(key, prev)
+  def withBoundedReplay[T](s: SparkSession)(body: => T): T =
+    withConf(s, "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(body)
+
+  /** Runs `body` with each `(key -> value)` set on `s`, then restores
+    * every key to its previous value, or unsets it if it was unset.
+    * Session confs are shared by every thread on `s`: scope only work
+    * that runs eagerly inside `body` on a session no concurrent planner
+    * uses (see [[withMicroBatchPlanning]]). */
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
   }
 }

@@ -219,10 +219,9 @@ object StreamBench {
     // trigger-sized state commits dominate: match the st* queries'
     // reduced shuffle-partition discipline so the measured floor is
     // the engine's, not an oversized-partition artifact
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      math.max(prev.toInt / 4, 1).toString)
-    val sec = try timed {
+    val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val sec = GraftSession.withConf(s,
+        "spark.sql.shuffle.partitions" -> math.max(parts / 4, 1).toString) { timed {
       val q = joined.writeStream.outputMode("append")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           graft.streaming.IdempotentSink.parquet(out)(
@@ -233,7 +232,7 @@ object StreamBench {
         }
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    } }
     (rows, sec)
   }
 

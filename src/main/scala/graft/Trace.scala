@@ -2,7 +2,9 @@ package graft
 
 /** Always-on per-phase wall-clock recorder for the iterative graph
   * loops (pageRank / star-CC / label propagation), feeding the bench
-  * artifact's per-sample phase breakdown.
+  * artifact's per-sample phase breakdown. [[phase]] is the one way a
+  * loop times a phase; nothing is printed, the buffer is the only
+  * output.
   *
   * Motivation (BENCH_r14 / VERDICT r14 demand #1): g11_pagerank reads
   * 8-9 s min-of-4 in the DRIVER's full bench pass across two rounds,
@@ -24,9 +26,13 @@ object Trace {
   private val buf =
     new java.util.concurrent.ArrayBlockingQueue[(String, Double)](4096)
 
-  /** Record one completed phase; silently dropped when the buffer is
-    * full (nothing is draining — not a bench run). */
-  def record(name: String, sec: Double): Unit = { buf.offer((name, sec)); () }
+  /** Runs `body` and records `(name, seconds)` for it, also when it
+    * throws; the record is silently dropped when the buffer is full
+    * (nothing is draining — not a bench run). */
+  def phase[T](name: String)(body: => T): T = {
+    val t0 = System.nanoTime()
+    try body finally { buf.offer((name, (System.nanoTime() - t0) / 1e9)); () }
+  }
 
   /** Remove and return everything recorded since the last drain, in
     * record order. */

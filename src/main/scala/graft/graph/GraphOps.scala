@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
+import graft.{Materialize, Trace}
 
 /** Property-graph dataflow operators (SURVEY.md §2.9, AGraph.scala:30-326
   * in the reference).
@@ -19,13 +20,6 @@ import org.apache.spark.sql.functions._
   * probability quantized to /255, `vendor` code, cell timestamp `ts`.
   */
 object GraphOps {
-
-  /** Process-wide sequence that scopes `observe` metric names per run:
-    * names must be unique among the session's ACTIVE observations, and
-    * two runs on one session (even over the same input DataFrame, from
-    * different threads) must never share one. */
-  private val obsSeq = new java.util.concurrent.atomic.AtomicLong()
-  private def nextObsScope(): Long = obsSeq.incrementAndGet()
 
   /** EP edge payload (EP.scala:12-30); pb = round(probability*255). */
   case class Edge(src: Long, dst: Long, version: Long, pb: Long,
@@ -104,35 +98,17 @@ object GraphOps {
       .groupBy(col("vertex")).agg(max(col("label")).as("label"))
   }
 
-  /** G4 iterative BSP (HGraphTable.scala:143-228 semantics): n supersteps
-    * with lineage cut each round — at scale this is checkpoint cadence;
-    * localCheckpoint keeps the loop's plan from growing exponentially. */
-  def bspIterate(labels0: DataFrame, pairs: DataFrame, steps: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    // pairs is re-joined every superstep — materialize it once
-    val p = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = labels0
-    for (_ <- 1 to steps) {
-      labels = bspStep(labels, p).localCheckpoint(eager = true)
-    }
-    p.unpersist()
-    labels
-  }
-
-  /** Delta-frontier BSP: identical fixpoint trajectory to `bspIterate`,
-    * but each superstep only pushes labels that CHANGED in the previous
-    * one — the incremental-join pattern (SURVEY §7.4 risk 4, the
-    * reference's fill-style memoization). On real graphs the frontier
-    * collapses after a few supersteps, so late iterations join a small
-    * delta against the network instead of every vertex. */
-  def bspIterateDelta(labels0: DataFrame, pairs: DataFrame, steps: Int): DataFrame =
-    bspIterateDeltaFrom(pairs, steps)(_ => labels0)
-
-  /** [[bspIterateDelta]] with the initial labels derived FROM the cached
-    * network layout: `init` receives the persisted, dst-partitioned
-    * pairs, so a labels0 like "distinct vertices" reads the cache
-    * instead of recomputing the network's whole upstream plan (dedup,
-    * reverse, scan) a second time. */
+  /** G4 delta-frontier BSP (HGraphTable.scala:143-228 semantics): n
+    * supersteps of [[bspStep]]'s max-label trajectory, but each
+    * superstep only pushes labels that CHANGED in the previous one —
+    * the incremental-join pattern (SURVEY §7.4 risk 4, the reference's
+    * fill-style memoization). On real graphs the frontier collapses
+    * after a few supersteps, so late iterations join a small delta
+    * against the network instead of every vertex. The initial labels
+    * are derived FROM the cached network layout: `init` receives the
+    * persisted, dst-partitioned pairs, so a labels0 like "distinct
+    * vertices" reads the cache instead of recomputing the network's
+    * whole upstream plan (dedup, reverse, scan) a second time. */
   def bspIterateDeltaFrom(pairs: DataFrame, steps: Int)
       (init: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.storage.StorageLevel
@@ -178,7 +154,7 @@ object GraphOps {
           (coalesce(col("nlabel"), lit(Long.MinValue)) > col("label"))
             .as("changed"))
       next =
-        if (step % 4 == 0) next.localCheckpoint(eager = true)
+        if (step % 4 == 0) Materialize.cut(next)
         else {
           val n = next.persist(StorageLevel.MEMORY_AND_DISK)
           // materialize the cache in one pass; count() scans every
@@ -187,7 +163,7 @@ object GraphOps {
           n.count()
           n
         }
-      prev.foreach(_.unpersist(false))
+      prev.foreach(Materialize.release)
       prev = Some(next)
       frontier = next.filter(col("changed")).select(col("vertex"), col("label"))
       labels = next.select(col("vertex"), col("label"))
@@ -308,27 +284,8 @@ object GraphOps {
   def pageRank(pairs: DataFrame, iters: Int, damp: Double = 0.85,
                symmetric: Boolean = false): DataFrame = {
     val (result, cleanup) = pageRankStaged(pairs, iters, damp, symmetric)
-    try traced(result.sparkSession, "pr_final_checkpoint")(
-      result.localCheckpoint(true)) finally cleanup()
-  }
-
-  /** Per-phase wall-clock tracing for the bench bimodality diagnosis
-    * (the g11 demand): every eager phase of an iterative loop is
-    * ALWAYS recorded to [[graft.Trace]] (two nanoTime calls + one
-    * bounded-queue offer — invisible at phase scale; graft.Bench
-    * drains it per sample into the artifact, so the anomalous
-    * environment reports its own breakdown). Additionally, under
-    * `spark.graft.bench.trace=true`, prints `[trace] <name> <sec>` to
-    * stderr for interactive runs. */
-  private def traced[T](s: org.apache.spark.sql.SparkSession,
-      name: String)(body: => T): T = {
-    val t0 = System.nanoTime()
-    try body finally {
-      val sec = (System.nanoTime() - t0) / 1e9
-      graft.Trace.record(name, sec)
-      if (s.conf.getOption("spark.graft.bench.trace").contains("true"))
-        System.err.println(f"[trace] $name $sec%.3f")
-    }
+    try Trace.phase("pr_final_checkpoint")(Materialize.cut(result))
+    finally cleanup()
   }
 
   /** Spot-check of a `symmetric = true` claim, active only under
@@ -405,7 +362,7 @@ object GraphOps {
     // aggregate + broadcast-exchange pair (two scheduler round-trips
     // per superstep) with the number itself — same double, same plan
     // arithmetic (1.0/n is computed identically either way).
-    val nVal = traced(pairs.sparkSession, "pr_stage_edges_deg")(deg.count())
+    val nVal = Trace.phase("pr_stage_edges_deg")(deg.count())
     def step(pr: DataFrame): DataFrame = {
       val contrib = p
         .join(pr.filter(col("degree") > 0).withColumnRenamed("vertex", "src"),
@@ -436,13 +393,12 @@ object GraphOps {
       .select(col("vertex"), col("degree"), lit(1.0 / nVal).as("pr"))
     // each step references pr TWICE (contribution join + dangling sum),
     // so a lazy fold would double the plan tree per round — materialize
-    // between rounds (vertex-sized, the bspIterateDelta discipline) and
+    // between rounds (vertex-sized, the bspIterateDeltaFrom discipline) and
     // leave only the final round lazy for the caller/PlanSpec
     val result = (1 to iters).foldLeft(pr0) { (pr, i) =>
       val next = step(pr)
       if (i < iters)
-        traced(pairs.sparkSession, s"pr_iter${i}_checkpoint")(
-          next.localCheckpoint(true))
+        Trace.phase(s"pr_iter${i}_checkpoint")(Materialize.cut(next))
       else next
     }
     (result, () => { p.unpersist(false); deg.unpersist(false): Unit })
@@ -470,14 +426,11 @@ object GraphOps {
       .repartition(col("dst")).sortWithinPartitions(col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val s = pairs.sparkSession
-      var labels = traced(s, "lp_stage")(
+      var labels = Trace.phase("lp_stage")(Materialize.cut(
         p.select(col("src").as("vertex")).distinct()
-          .withColumn("label", col("vertex"))
-          .localCheckpoint(eager = true))
+          .withColumn("label", col("vertex"))))
       for (i <- 1 to iters) {
-        labels = traced(s, s"lp_round$i")(
-          lpRound(p, labels).localCheckpoint(eager = true))
+        labels = Trace.phase(s"lp_round$i")(Materialize.cut(lpRound(p, labels)))
       }
       labels
     } finally { p.unpersist(false): Unit }
@@ -520,16 +473,16 @@ object GraphOps {
       .repartition(col("src")).sortWithinPartitions(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      var visited = sources.select(col("vertex"), lit(0L).as("dist"))
-        .localCheckpoint(eager = true)
+      var visited = Materialize.cut(
+        sources.select(col("vertex"), lit(0L).as("dist")))
       var frontier = visited.select(col("vertex"))
       for (hop <- 1 to maxHops) {
-        val next = p.join(frontier.withColumnRenamed("vertex", "src"), "src")
-          .select(col("dst").as("vertex")).distinct()
-          .join(visited.select(col("vertex")), Seq("vertex"), "left_anti")
-          .withColumn("dist", lit(hop.toLong))
-          .localCheckpoint(eager = true)
-        visited = visited.unionByName(next).localCheckpoint(eager = true)
+        val next = Materialize.cut(
+          p.join(frontier.withColumnRenamed("vertex", "src"), "src")
+            .select(col("dst").as("vertex")).distinct()
+            .join(visited.select(col("vertex")), Seq("vertex"), "left_anti")
+            .withColumn("dist", lit(hop.toLong)))
+        visited = Materialize.cut(visited.unionByName(next))
         frontier = next.select(col("vertex"))
       }
       visited
@@ -570,7 +523,7 @@ object GraphOps {
     * contraction (Kiveris et al., "Connected Components in MapReduce
     * and Beyond", SoCC 2014) — the O(log n)-round algorithm for
     * HIGH-DIAMETER graphs, where per-step label propagation
-    * ([[bspIterateDelta]]) needs O(diameter) rounds. Dedup.clusters
+    * ([[bspIterateDeltaFrom]]) needs O(diameter) rounds. Dedup.clusters
     * runs it on a pair graph over its driver union-find's edge cap.
     * Each round is two groupBy-min passes over the shrinking edge set:
     *
@@ -608,28 +561,21 @@ object GraphOps {
     // exact probe runs one extra time — it stays authoritative.
     // The signature rides the round's own checkpoint-materialization
     // job as an `observe` metric instead of a second full-pass
-    // aggregation job per round (guide §1.2: one pass, not two).
-    val obsScope = nextObsScope()
-    def sigObs(name: String): org.apache.spark.sql.Observation =
-      org.apache.spark.sql.Observation(s"${name}_$obsScope")
-    def withSig(d: DataFrame, o: org.apache.spark.sql.Observation): DataFrame =
-      d.observe(o, count(lit(1)).as("n"),
+    // aggregation job per round (guide §1.2: one pass, not two); the
+    // sum of an empty edge set is null, read as 0.
+    def cutWithSig(d: DataFrame): (DataFrame, (Long, Long)) = {
+      val (out, m) = Materialize.cut(d, count(lit(1)).as("n"),
         sum(hash($"a", $"b").cast("long")).as("h"))
-    def sigOf(o: org.apache.spark.sql.Observation): (Long, Long) = {
-      val m = o.get
-      (m("n").asInstanceOf[Long],
-        Option(m("h")).map(_.asInstanceOf[Long]).getOrElse(0L))
+      (out, (m("n").asInstanceOf[Long],
+        Option(m("h")).map(_.asInstanceOf[Long]).getOrElse(0L)))
     }
-    val obs0 = sigObs("cc_sig_stage")
-    var e = traced(s, "cc_stage")(withSig(pairs
+    var (e, eSig) = Trace.phase("cc_stage")(cutWithSig(pairs
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct(), obs0)
-      .localCheckpoint(true))
-    var eSig = sigOf(obs0)
+      .filter(col("a") =!= col("b")).distinct()))
     var round = 0
     var converged = false
-    while (!converged && round < maxRounds) { traced(s, s"cc_round$round") {
+    while (!converged && round < maxRounds) { Trace.phase(s"cc_round$round") {
       // large-star over the symmetric view: m(u) = min(N(u) ∪ {u}),
       // emit (m, v) for neighbors v > u (canonical: m < u < v)
       val sym = e.select($"a".as("u"), $"b".as("v"))
@@ -643,17 +589,14 @@ object GraphOps {
       // endpoint b: m = min smaller-neighbor; emit (m, other smaller
       // neighbors) and (m, b)
       val mS = large.groupBy($"b").agg(min($"a").as("m"))
-      val obsR = sigObs(s"cc_sig_$round")
-      val small = withSig(large.join(mS, "b")
+      val (small, smallSig) = cutWithSig(large.join(mS, "b")
         .select($"m".as("a"), $"a".as("b"))
         .unionByName(mS.select($"m".as("a"), $"b"))
-        .filter($"a" =!= $"b").distinct(), obsR)
-        .localCheckpoint(true)
+        .filter($"a" =!= $"b").distinct())
       // cheap monotone pre-check first (signature observed during the
       // checkpoint job above — no extra job); exact fixpoint probe
       // (≤1 row collected; both directions of the symmetric difference
       // in ONE job) only when the signatures say convergence is possible
-      val smallSig = sigOf(obsR)
       converged = smallSig == eSig &&
         small.except(e).unionByName(e.except(small)).limit(1).isEmpty
       e = small
@@ -729,31 +672,23 @@ object GraphOps {
     // per-round edge counts ride each round's checkpoint job as an
     // `observe` metric instead of a second count() job per round
     // (guide §1.2: one pass, not two)
-    def counted(d: DataFrame, name: String): (DataFrame, () => Long) = {
-      val o = org.apache.spark.sql.Observation(name)
-      (d.observe(o, count(lit(1)).as("n")),
-        () => o.get("n").asInstanceOf[Long])
+    def cutCounted(d: DataFrame): (DataFrame, Long) = {
+      val (out, m) = Materialize.cut(d, count(lit(1)).as("n"))
+      (out, m("n").asInstanceOf[Long])
     }
-    val obsScope = nextObsScope()
-    val sym = if (symmetric) in else reverse(in).distinct()
-    val (sym0, n0) = counted(sym, s"kcore_n_stage_$obsScope")
-    var edges = sym0.localCheckpoint(true)
-    var n = n0()
+    var (edges, n) = cutCounted(if (symmetric) in else reverse(in).distinct())
     var round = 0
     var converged = false
     while (!converged && round < maxRounds) {
       val keep = edges.groupBy(col("src").as("vertex"))
         .agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("vertex"))
-      val (nextObs, m0) = counted(edges
+      val (next, m) = cutCounted(edges
         .join(keep.withColumnRenamed("vertex", "src"), Seq("src"),
           "left_semi")
         .join(keep.withColumnRenamed("vertex", "dst"), Seq("dst"),
           "left_semi")
-        .select(col("src"), col("dst")),
-        s"kcore_n_${round}_$obsScope")
-      val next = nextObs.localCheckpoint(true)
-      val m = m0()
+        .select(col("src"), col("dst")))
       converged = m == n
       edges = next
       n = m
@@ -805,7 +740,7 @@ object GraphOps {
     * by vertex (bucketed on disk, or repartitioned and cached once when
     * it is not), and each superstep materializes ONE eager
     * localCheckpoint — the next pending set, its newly accepted rows
-    * flagged as the delta (the bspIterateDelta lineage discipline).
+    * flagged as the delta (the bspIterateDeltaFrom lineage discipline).
     * `minProbPpm` drops messages whose probability attenuated below
     * the floor — the natural 100 TB fan-out bound: hop k carries
     * p^(k+1), so the frontier starves geometrically instead of
@@ -825,13 +760,12 @@ object GraphOps {
     // this conf allows it — without it EnsureRequirements re-shuffles
     // the full standing state by (vertex, peer) EVERY superstep.
     // Scoped set/restore is sound because the whole loop executes
-    // eagerly (localCheckpoint/count) inside this function.
-    val coPartKey = "spark.sql.requireAllClusterKeysForCoPartition"
-    val coPartPrev = s.conf.get(coPartKey)
-    s.conf.set(coPartKey, "false")
-    try probBspIncrementalRun(state, batch, supersteps, minProbPpm,
-      stateColocated)
-    finally s.conf.set(coPartKey, coPartPrev)
+    // eagerly (checkpoint/count) inside this function.
+    graft.GraftSession.withConf(s,
+        "spark.sql.requireAllClusterKeysForCoPartition" -> "false") {
+      probBspIncrementalRun(state, batch, supersteps, minProbPpm,
+        stateColocated)
+    }
   }
 
   private def probBspIncrementalRun(state: DataFrame, batch: DataFrame,
@@ -871,7 +805,6 @@ object GraphOps {
     // rewrite (AttributeMap lookup on the pruned side), so the first
     // superstep's delta BECOMES the pending set instead
     var pending: Option[DataFrame] = None
-    val obsScope = nextObsScope()
     var inbox = canon(batch)
     var step = 1
     var drained = false
@@ -890,19 +823,17 @@ object GraphOps {
       // greater prob decides the (prob, ts, vendor) struct max, so the
       // merge equals best(pending ∪ delta) and delta = the fresh rows.
       // The drained probe rides the same job as an `observe` count.
-      val deltaObs = org.apache.spark.sql.Observation(
-        s"g16_delta_${step}_$obsScope")
-      val merged = pending.fold(vsState.withColumn("fresh", lit(true))) { p =>
-        val fresh = $"c.vertex".isNotNull &&
-          ($"p.vertex".isNull || $"c.prob_ppm" > $"p.prob_ppm")
-        vsState.as("c")
-          .join(p.as("p"), $"c.vertex" === $"p.vertex" &&
-            $"c.peer" === $"p.peer", "full_outer")
-          .select(cols.map(c => when(fresh, col(s"c.$c"))
-            .otherwise(col(s"p.$c")).as(c)) :+ fresh.as("fresh"): _*)
-      }.observe(deltaObs, count_if($"fresh").as("n"))
-        .localCheckpoint(true)
-      drained = deltaObs.get("n").asInstanceOf[Long] == 0L
+      val (merged, m) = Materialize.cut(
+        pending.fold(vsState.withColumn("fresh", lit(true))) { p =>
+          val fresh = $"c.vertex".isNotNull &&
+            ($"p.vertex".isNull || $"c.prob_ppm" > $"p.prob_ppm")
+          vsState.as("c")
+            .join(p.as("p"), $"c.vertex" === $"p.vertex" &&
+              $"c.peer" === $"p.peer", "full_outer")
+            .select(cols.map(c => when(fresh, col(s"c.$c"))
+              .otherwise(col(s"p.$c")).as(c)) :+ fresh.as("fresh"): _*)
+        }, count_if($"fresh").as("n"))
+      drained = m("n").asInstanceOf[Long] == 0L
       val delta = merged.filter($"fresh").drop("fresh")
       // propagate the delta against the PRE-MERGE existing connections.
       // Join the state leg and the pending leg SEPARATELY, then union

@@ -489,13 +489,12 @@ object GraphQueries {
         val keep = edges.groupBy($"src".as("vertex"))
           .agg(count(lit(1)).as("deg"))
           .filter($"deg" >= 3).select($"vertex")
-        edges = edges
+        edges = graft.Materialize.cut(edges
           .join(keep.withColumnRenamed("vertex", "src"),
             Seq("src"), "left_semi")
           .join(keep.withColumnRenamed("vertex", "dst"),
             Seq("dst"), "left_semi")
-          .select($"src", $"dst")
-          .localCheckpoint(eager = true)
+          .select($"src", $"dst"))
       }
       edges.groupBy($"src".as("vertex")).agg(count(lit(1)).as("deg"))
         .orderBy($"vertex")

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Byte-pair-encoding merge learning — the subword-tokenizer training
   * pass of an LLM data pipeline (reference-free; brief-mandated).
@@ -69,10 +70,9 @@ object Bpe {
     // trap PageRank's per-round checkpoint exists for, GraphOps). The
     // eager local checkpoint pins the vocab-sized result and CUTS the
     // plan, so round cost is flat at any merge depth.
-    var enc = words
+    var enc = Materialize.cut(words
       .select(regexp_replace(col("word"), "(.)", " $1 ").as("enc"),
-        col("freq"))
-      .localCheckpoint(true)
+        col("freq")))
     val merges = Seq.newBuilder[Merge]
     try {
       for (round <- 1 to rounds) {
@@ -93,14 +93,13 @@ object Bpe {
         // Column-API replace with lit() args: learned symbols never pass
         // through the SQL parser, so quotes/backslashes in real-corpus
         // tokens (apostrophes survive whitespace tokenization) are safe.
-        val next = enc.withColumn("enc",
-          replace(col("enc"), lit(s" $l  $r "), lit(s" $l$r ")))
-          .localCheckpoint(true)
-        enc.unpersist()
+        val next = Materialize.cut(enc.withColumn("enc",
+          replace(col("enc"), lit(s" $l  $r "), lit(s" $l$r "))))
+        Materialize.release(enc)
         enc = next
       }
       merges.result()
-    } finally { enc.unpersist(); () }
+    } finally Materialize.release(enc)
   }
 
   /** [[learn]] at production depth: one driver round-trip learns a
@@ -153,10 +152,9 @@ object Bpe {
       : (Seq[Merge], Int) = {
     // localCheckpoint per round, as in [[learn]]: flat round cost at
     // production merge depth (chained caches go super-linear ~20 deep)
-    var enc = words
+    var enc = Materialize.cut(words
       .select(regexp_replace(col("word"), "(.)", " $1 ").as("enc"),
-        col("freq"))
-      .localCheckpoint(true)
+        col("freq")))
     val merges = Seq.newBuilder[Merge]
     var learned = 0
     var trips = 0
@@ -205,14 +203,14 @@ object Bpe {
         }
         merges ++= batch
         learned += n
-        val next = enc.withColumn("enc",
+        val next = Materialize.cut(enc.withColumn("enc",
           batch.foldLeft(col("enc")) { (e, m) =>
             replace(e, lit(s" ${m.lhs}  ${m.rhs} "), lit(s" ${m.lhs}${m.rhs} "))
-          }).localCheckpoint(true)
-        enc.unpersist()
+          }))
+        Materialize.release(enc)
         enc = next
       }
       (merges.result(), trips)
-    } finally { enc.unpersist(); () }
+    } finally Materialize.release(enc)
   }
 }

@@ -172,7 +172,7 @@ object Dedup {
     * lineage-free DataFrame and the session keeps no leaked blocks from
     * this job (the barrier's own blocks are the bounded result set). */
   private def barrier(result: DataFrame, temps: DataFrame*): DataFrame = {
-    val out = result.localCheckpoint(eager = true)
+    val out = graft.Materialize.cut(result)
     temps.foreach(_.unpersist(false))
     out
   }

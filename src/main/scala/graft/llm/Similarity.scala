@@ -153,7 +153,7 @@ object Similarity {
     * loses all members keeps its previous centroid (no dropouts, k is
     * stable). */
   def kmeansCentroids(emb: DataFrame, stride: Int, iters: Int): DataFrame = {
-    var cents = ivfCentroids(emb, stride).localCheckpoint(eager = true)
+    var cents = graft.Materialize.cut(ivfCentroids(emb, stride))
     val corpus = prepared(emb, "vec_id")
     for (_ <- 1 to iters) {
       val assigned = ivfAssign(corpus, "vec_id", 1, cents)
@@ -165,12 +165,12 @@ object Similarity {
         .select(col("cent_id"), transform(col("jm"), _.getField("m")).as("ec"))
         .withColumn("nc", expr("graft_vec_norm(ec)"))
       // empty clusters keep their previous centroid
-      cents = cents.select(col("cent_id"), col("ec").as("ec0"), col("nc").as("nc0"))
-        .join(means, Seq("cent_id"), "left_outer")
-        .select(col("cent_id"),
-          coalesce(col("ec"), col("ec0")).as("ec"),
-          coalesce(col("nc"), col("nc0")).as("nc"))
-        .localCheckpoint(eager = true)
+      cents = graft.Materialize.cut(
+        cents.select(col("cent_id"), col("ec").as("ec0"), col("nc").as("nc0"))
+          .join(means, Seq("cent_id"), "left_outer")
+          .select(col("cent_id"),
+            coalesce(col("ec"), col("ec0")).as("ec"),
+            coalesce(col("nc"), col("nc0")).as("nc")))
     }
     cents
   }

@@ -342,18 +342,10 @@ object Joins {
     * InjectRuntimeFilter skips any join it predicts will broadcast
     * (canBroadcastBySize) — at production scale neither side
     * broadcasts, so both knobs model that, scoped and restored. */
-  private[graft] def withBloomThreshold[T](s: SparkSession)(body: => T): T = {
-    val ks = Seq(
+  private[graft] def withBloomThreshold[T](s: SparkSession)(body: => T): T =
+    graft.GraftSession.withConf(s,
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = ks.map { case (k, _) => k -> s.conf.getOption(k) }
-    ks.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   /** The persisted SCD2 feature dimension j14 trains against: one KV
     * cell per (entity, change instant) — key = user, qualifier = the

@@ -401,13 +401,10 @@ class KVTable(val spark: SparkSession, val path: String) {
       val groupFilterConf =
         "spark.sql.optimizer.runtime.rowLevelOperationGroupFilter.enabled"
       val skipGroupFilter = decided == "cow" && touched >= n * 95L / 100L
-      val prevGf = spark.conf.get(groupFilterConf, "true")
-      spark.conf.set("spark.graft.kv.rowlevel", decided)
-      if (skipGroupFilter) spark.conf.set(groupFilterConf, "false")
-      try (body, decided)
-      finally {
-        spark.conf.set("spark.graft.kv.rowlevel", "auto")
-        spark.conf.set(groupFilterConf, prevGf)
+      graft.GraftSession.withConf(spark,
+          Seq("spark.graft.kv.rowlevel" -> decided) ++
+            Option.when(skipGroupFilter)(groupFilterConf -> "false"): _*) {
+        (body, decided)
       }
     }
   }

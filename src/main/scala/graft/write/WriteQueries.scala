@@ -45,15 +45,15 @@ object WriteQueries {
     * sizing decision, exactly as at 100 TB where it would instead be
     * set HIGHER than the default. */
   private def withBoundedStreamRun[T](s: SparkSession)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      math.max(prev.toInt / 4, 1).toString)
+    val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
     // these registry runs are sentinel-flushed bounded replays — the
     // trailing no-data micro-batch is one full commit cycle of pure
     // overhead (GraftSession.withBoundedReplay scaladoc); harmless
     // no-op for the wrapped batch/stateless sites
-    try graft.GraftSession.withBoundedReplay(s)(body)
-    finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    graft.GraftSession.withConf(s,
+        "spark.sql.shuffle.partitions" -> math.max(parts / 4, 1).toString) {
+      graft.GraftSession.withBoundedReplay(s)(body)
+    }
   }
 
   /** Build-once table setup for READ-operator queries (s10, m11): the
@@ -322,9 +322,7 @@ object WriteQueries {
           .select(($"c_custkey" + 1000000L).as("key"), lit("42").as("value"))
           .filter($"key" % 5 === 1))
         .createOrReplaceTempView("m15_updates")
-      val prevRowLevel = s.conf.getOption("spark.graft.kv.rowlevel")
-      s.conf.set("spark.graft.kv.rowlevel", "cow")
-      try {
+      graft.GraftSession.withConf(s, "spark.graft.kv.rowlevel" -> "cow") {
         s.sql(
           s"""MERGE INTO $ident t USING m15_updates u
              |ON t.key = u.key AND t.family = 'F' AND t.qualifier = 'bal'
@@ -333,9 +331,6 @@ object WriteQueries {
              |  INSERT (key, family, qualifier, value, ts, tomb)
              |  VALUES (u.key, 'F', 'bal', u.value, 2, null)""".stripMargin)
         s.sql(s"DELETE FROM $ident WHERE key % 10 = 3")
-      } finally prevRowLevel match {
-        case Some(v) => s.conf.set("spark.graft.kv.rowlevel", v)
-        case None => s.conf.unset("spark.graft.kv.rowlevel")
       }
       t.resolved()
         .select($"key", $"value".cast("long").as("cents"))
@@ -357,9 +352,7 @@ object WriteQueries {
       t.compact()
       val ident = graft.sources.kv.KVSource.sqlName(s, base("m17"))
       val cust = Tables.customer(s, d)
-      val prev = s.conf.getOption("spark.graft.kv.rowlevel")
-      s.conf.set("spark.graft.kv.rowlevel", "auto")
-      try {
+      graft.GraftSession.withConf(s, "spark.graft.kv.rowlevel" -> "auto") {
         val big = cust.select($"c_custkey".as("key"),
           (round($"c_acctbal" * 100).cast("long") + 50L).cast("string")
             .as("value"))
@@ -381,9 +374,6 @@ object WriteQueries {
                |ON t.key = u.key AND t.family = 'F' AND t.qualifier = 'bal'
                |WHEN MATCHED THEN UPDATE SET value = u.value, ts = 3""".stripMargin)
         }
-      } finally prev match {
-        case Some(v) => s.conf.set("spark.graft.kv.rowlevel", v)
-        case None => s.conf.unset("spark.graft.kv.rowlevel")
       }
       t.resolved()
         .select($"key", $"value".cast("long").as("cents"))
@@ -1299,8 +1289,7 @@ object WriteQueries {
       KVTable.deleteRecursively(out)
       val emb = Tables.embeddings(s, d)
       val corpus = emb.filter($"vec_id" % 25 =!= 0)
-      val cents = Similarity.ivfCentroids(corpus, 40)
-        .localCheckpoint(eager = true)
+      val cents = graft.Materialize.cut(Similarity.ivfCentroids(corpus, 40))
       val index = AnnStore.ivfIndex(s, d, corpus, cents)
       val batchAll = emb.filter($"vec_id" % 25 === 0)
       val stage = stageOnce(s, "st17", d, version = 1) { dir =>

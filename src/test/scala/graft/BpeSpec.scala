@@ -126,4 +126,17 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
     assert(Bpe.learnBatched(spark, words, rounds = 4) ===
       Bpe.learn(spark, words, rounds = 4))
   }
+
+  test("learning leaves no persisted round behind") {
+    // each round's encoding is a checkpoint, whose blocks belong to the
+    // RDD under its plan: Dataset.unpersist would free nothing there
+    val sc = spark.sparkContext
+    val words = Seq(("abcabc", 4L), ("aaaa", 3L), ("bcd", 5L))
+      .toDF("word", "freq")
+    val before = sc.getPersistentRDDs.keySet
+    assert(Bpe.learn(spark, words, rounds = 5).size === 5)
+    val after = sc.getPersistentRDDs.keySet
+    assert((after -- before).isEmpty,
+      s"persisted RDDs left behind: ${after -- before}")
+  }
 }

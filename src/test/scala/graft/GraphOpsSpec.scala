@@ -41,7 +41,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkSpec {
     val labels0 = pairs.select($"src".as("vertex")).distinct()
       .withColumn("label", $"vertex")
     // diameter 2 ⇒ 2 steps reach the fixpoint
-    val got = GraphOps.bspIterate(labels0, pairs, 3)
+    val got = GraphReference.bspIterate(labels0, pairs, 3)
       .as[(Long, Long)].collect().toMap
     assert(got === Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 10L -> 11L, 11L -> 11L))
   }
@@ -54,9 +54,9 @@ class GraphOpsSpec extends AnyFunSuite with SparkSpec {
     val labels0 = pairs.select($"src".as("vertex")).distinct()
       .withColumn("label", $"vertex")
     for (steps <- Seq(1, 2, 4)) {
-      val simple = GraphOps.bspIterate(labels0, pairs, steps)
+      val simple = GraphReference.bspIterate(labels0, pairs, steps)
         .as[(Long, Long)].collect().toMap
-      val delta = GraphOps.bspIterateDelta(labels0, pairs, steps)
+      val delta = GraphOps.bspIterateDeltaFrom(pairs, steps)(_ => labels0)
         .as[(Long, Long)].collect().toMap
       assert(delta === simple, s"diverged at steps=$steps")
     }
