@@ -71,13 +71,6 @@ object DemoApp {
     kv.resolvedAsOf(1L).filter($"qualifier" === "size")
       .orderBy($"key").show(5, truncate = false)
 
-    // --- durability: pointer torn-write recovery ----------------------
-    println("== generation pointer truncated (simulated crash) — reads self-heal ==")
-    val ptr = new java.io.File(graft.RepoPaths.target("graft_demo/simple"),
-      "compacted/_graft_current.txt")
-    new java.io.PrintWriter(ptr).close() // torn write: empty pointer
-    println(s"rows after recovery: ${kv.resolved().count()}")
-
     // --- multimodal: real header decode -------------------------------
     println("== multimodal blobs: PNG/BMP/GIF headers parsed for real ==")
     llm.Multimodal.decode(llm.Multimodal.blobTable(

@@ -357,7 +357,7 @@ object Joins {
     // flat: the KV store owns this dir's layout (the setupOnce case)
     val path =
       graft.RepoPaths.target(s"graft_kv/j14_dim_${graft.Staging.slug(d)}")
-    graft.Staging.ensureFlat(path, s"j14_dim v1 $d") {
+    graft.Staging.ensureFlat(path, s"j14_dim v2 $d") {
       val t = graft.write.KVTable(s, path)
       t.put(Analytics.scd2Changes(s, d).select(
         col("user_id").as("key"), lit("F").as("family"),

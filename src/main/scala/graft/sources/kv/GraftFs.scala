@@ -6,35 +6,23 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, Path}
 
 /** The KV layer's single seam onto storage. Every byte the KV table
-  * reads or writes outside a Spark job — the generation pointer, the
-  * completeness markers, log-file listings, family descriptors,
-  * compaction's snapshot deletes — goes through the Hadoop
-  * `FileSystem` API here, so the same layout works on the local disk
-  * the sandbox tests on and on the HDFS a 100 TB deployment lives on
-  * (the reference's bulk path writes through the same abstraction:
-  * HBaseTable.scala:296-312, temp HDFS dir + LoadIncrementalHFiles).
+  * reads or writes outside a Spark job — commit records, family
+  * descriptors, CDC consumer cutoffs, a rewrite's deletes — goes
+  * through the Hadoop `FileSystem` API here, so the same layout works
+  * on the local disk the sandbox tests on and on the HDFS a 100 TB
+  * deployment lives on (the reference's bulk path writes through the
+  * same abstraction: HBaseTable.scala:296-312, temp HDFS dir +
+  * LoadIncrementalHFiles).
   *
   * Scheme notes:
   *  - `file:` resolves to the RAW local filesystem (no client-side
   *    checksum siblings — parquet files already carry their own
-  *    integrity metadata, and the KV control files are tiny
-  *    and atomically swapped);
-  *  - `hdfs:` gets real semantics for free: `rename` is atomic in the
-  *    namenode, so [[atomicReplace]] maps onto
-  *    `FileContext.rename(OVERWRITE)` — same crash guarantee as the
-  *    local NIO `ATOMIC_MOVE`;
-  *  - `s3a:` has NO atomic rename — a rename is copy+delete. The
-  *    pointer protocol survives because it never requires readers to
-  *    see a half-rename (the tmp file is dot-prefixed and ignored, the
-  *    destination is either the old pointer bytes or the new), but two
-  *    RACING publishers could interleave copy+delete. The production
-  *    design for S3 is a conditional put (`If-Match` on the pointer
-  *    object's ETag, or S3 object versioning with
-  *    read-newest-complete), which slots in behind [[atomicReplace]]
-  *    without touching any caller — that is the point of this seam.
-  *    Compaction already tolerates a lost-race publisher: generations
-  *    are self-describing (`_graft_meta.txt`) and recovery reads the
-  *    newest complete one.
+  *    integrity metadata, and the KV control files are tiny);
+  *  - a table commits through one primitive, [[createExclusive]]
+  *    (put-if-absent of a complete file), which every scheme provides
+  *    its own way: a hard link locally, a no-overwrite rename on
+  *    HDFS-like stores, a conditional PUT on S3-class stores, which have
+  *    no atomic rename.
   *
   * Configuration comes from the active Spark session's Hadoop conf
   * when one exists (driver side), else from the classpath defaults
@@ -68,8 +56,7 @@ object GraftFs {
 
   private[kv] def fsFor(p: Path): FileSystem = p.getFileSystem(hadoopConf) match {
     // raw local: java.io semantics, no .crc sibling pollution in the
-    // table directories (the staged writers' checksum siblings stay in
-    // their inflight dirs, which every commit deletes)
+    // table directories
     case l: LocalFileSystem => l.getRawFileSystem
     case other => other
   }
@@ -86,20 +73,17 @@ object GraftFs {
       st.getPath.getName, st.getLen, st.isDirectory)).toSeq
   }
 
-  /** Data files of `dir`: non-hidden plain files, path-sorted — the
-    * listing every scan snapshot and compaction snapshot is built
-    * from. `_`-prefixed names are skipped too: logs written before the
-    * staged log writer still hold Spark's `_SUCCESS` markers. */
+  /** Data files of `dir`: non-hidden plain files, path-sorted.
+    * `_`-prefixed names (Spark's `_SUCCESS` markers) are skipped too. */
   def dataFiles(dir: String): Seq[FileEntry] =
     list(dir).filter(e => !e.isDir &&
       !e.name.startsWith(".") && !e.name.startsWith("_")).sortBy(_.path)
 
-  /** Small-file read (pointer, markers, descriptors): full content as
-    * UTF-8, or None when the file does not exist. Absence is the ONLY
-    * condition mapped to None — a transient read error (flaky HDFS
-    * datanode, S3 throttle) propagates instead of masquerading as
-    * "pointer absent", which would send pointer readers into the
-    * recovery/republish path for no reason. */
+  /** Small-file read (commit records, markers, descriptors): full
+    * content as UTF-8, or None when the file does not exist. Absence is
+    * the ONLY condition mapped to None — a transient read error (flaky
+    * HDFS datanode, S3 throttle) propagates instead of masquerading as
+    * an absent file. */
   def readString(path: String): Option[String] = {
     val p = new Path(path); val fs = fsFor(p)
     try {
@@ -115,7 +99,7 @@ object GraftFs {
         } finally in.close()
       }
     } catch {
-      // exists→open race (e.g. a concurrent legacy-pointer cleanup)
+      // exists→open race (a concurrent delete)
       case _: java.io.FileNotFoundException => None
     }
   }
@@ -138,7 +122,8 @@ object GraftFs {
     *    delete-then-rename, which has a visible gap, so the local leg
     *    keeps the kernel-atomic move;
     *  - everything else: `FileContext.rename(OVERWRITE)` — atomic on
-    *    HDFS; see the class doc for the S3 conditional-put design. */
+    *    HDFS, a copy + delete on S3-class stores (a small mutable file
+    *    there: family descriptors, CDC consumer cutoffs). */
   def atomicReplace(path: String, content: String): Unit = {
     val dst = new Path(path); val fs = fsFor(dst)
     fs.mkdirs(dst.getParent)
@@ -162,32 +147,36 @@ object GraftFs {
     }
   }
 
+  /** Schemes with no atomic rename: put-if-absent is a conditional PUT. */
+  private val NoRenameSchemes: Set[String] =
+    Set("s3", "s3a", "s3n", "gs", "oss", "cos", "wasb", "abfs")
+
   /** Put-if-absent: create `path` with `content` ONLY if it does not
-    * exist. Returns false (and writes nothing) if another writer got
-    * there first. This is the local/HDFS emulation of S3's conditional
-    * PUT (`If-None-Match: *`) — the primitive [[CasPointerStore]]
-    * builds its no-rename pointer protocol on.
+    * exist, atomically WITH its content — a reader sees the complete
+    * file or no file, never a created-but-unwritten one. Returns false
+    * (and leaves nothing) if another writer got there first. The commit
+    * primitive of every KV table ([[KVCommit]]).
     *
-    *  - local: NIO `CREATE_NEW` — a kernel-atomic exclusive create
-    *    (O_CREAT|O_EXCL), no tmp file, no window;
-    *  - HDFS: `create(overwrite = false)` is namenode-atomic;
-    *  - S3A (Hadoop 3.4.1+): `fs.s3a.create.conditional.enabled` maps
-    *    the same call onto the real conditional PUT. */
+    *  - local: stage the bytes in a private tmp file, then hard-LINK it
+    *    into place (link(2) is atomic and fails if the name exists);
+    *  - S3-class ([[NoRenameSchemes]]): `create(overwrite = false)`,
+    *    which S3A (Hadoop 3.4.1+, `fs.s3a.create.conditional.enabled`)
+    *    maps onto the conditional PUT (`If-None-Match: *`), atomic with
+    *    its content; [[probeConditionalCreate]] refuses a client that
+    *    would degrade it to exists-then-PUT;
+    *  - anything else (HDFS): a complete tmp file renamed into place;
+    *    `FileSystem.rename` fails when the destination exists. */
   def createExclusive(path: String, content: String): Boolean = {
     val p = new Path(path); val fs = fsFor(p)
+    val bytes = content.getBytes(StandardCharsets.UTF_8)
+    val scheme = Option(fs.getUri.getScheme).getOrElse("file")
     fs.mkdirs(p.getParent)
-    if (Option(fs.getUri.getScheme).forall(_ == "file")) {
-      // S3's conditional PUT is atomic WITH its content — emulate that
-      // exactly: stage the bytes in a private tmp file, then hard-LINK
-      // it into place (link(2) is atomic and fails if the name exists),
-      // so a racing reader sees the full object or nothing, never a
-      // created-but-unwritten file
+    if (scheme == "file") {
       val nio = java.nio.file.Paths.get(fs.makeQualified(p).toUri.getPath)
       val tmp = nio.resolveSibling(
         s".${nio.getFileName}.${java.util.UUID.randomUUID()}.tmp")
       try {
-        java.nio.file.Files.write(tmp,
-          content.getBytes(StandardCharsets.UTF_8))
+        java.nio.file.Files.write(tmp, bytes)
         java.nio.file.Files.createLink(nio, tmp)
         true
       } catch {
@@ -196,30 +185,95 @@ object GraftFs {
         try java.nio.file.Files.deleteIfExists(tmp)
         catch { case _: Exception => () }
       }
-    } else {
+    } else if (NoRenameSchemes(scheme)) {
+      probeConditionalCreate(fs, p)
       try {
         val out = fs.create(p, false)
-        try out.write(content.getBytes(StandardCharsets.UTF_8))
-        finally out.close()
+        try out.write(bytes) finally out.close()
         true
       } catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
+    } else {
+      val tmp = new Path(p.getParent, s".${p.getName}.${java.util.UUID.randomUUID()}.tmp")
+      val out = fs.create(tmp, false)
+      try out.write(bytes) finally out.close()
+      if (fs.rename(tmp, p)) true
+      else {
+        fs.delete(tmp, false)
+        // false is a lost race only if the name exists now
+        if (!fs.exists(p)) throw new java.io.IOException(s"rename failed: $tmp -> $p")
+        false
+      }
     }
   }
 
-  /** Move `src` over `dst` (overwrite): the staged commits' renames
-    * out of their inflight dirs, whose file names are unique per write,
-    * and the legacy migration, which runs under the pointer lock. */
-  def move(src: String, dst: String): Unit = {
-    val s = new Path(src); val d = new Path(dst); val fs = fsFor(s)
-    if (fs.exists(d)) fs.delete(d, false)
-    // FileSystem.rename reports failure as `false`, not an exception —
-    // a silent false here would let migrateLegacy publish a pointer
-    // over an incomplete generation directory
-    if (!fs.rename(s, d))
-      throw new java.io.IOException(s"rename failed: $src -> $dst")
+  /** S3A's `create(overwrite=false)` is an atomic put-if-absent only on
+    * Hadoop ≥ 3.4.1 WITH `fs.s3a.create.conditional.enabled` — older
+    * clients silently degrade to exists-check-then-PUT, which would let
+    * two writers of one commit seq both believe they won. The decision
+    * is keyed on `hasPathCapability` first: on a capable client the
+    * enabled flag surfaces as the path capability, while on an older
+    * client the flag is a no-op, so trusting the flag ALONE would let
+    * exactly the broken configuration through (pure decision split
+    * out for the spec).
+    *
+    * Indeterminate probes: if `hasPathCapability` itself THREW (some
+    * S3-compatible stores and older shims reject capability queries
+    * outright — the probe then says nothing about conditional create),
+    * the enable flag in the Hadoop conf is accepted as the operator's
+    * word. A CLEAN `false` with the flag set still fails fast — a
+    * capable 3.4.1+ client advertises the capability when the feature
+    * is on — but the failure message documents the override
+    * (`-Dgraft.kv.pointer.trustConditionalCreate=true` for builds that
+    * genuinely implement conditional create without advertising it). */
+  private[graft] def conditionalCreateUnsupported(scheme: String,
+      hasCapability: Boolean): Boolean =
+    scheme.startsWith("s3") && !hasCapability
+
+  /** Probe outcome → verdict, pure for the spec: `capability` is
+    * None when the probe threw. */
+  private[graft] def probeDecision(scheme: String,
+      capability: Option[Boolean], flagEnabled: Boolean,
+      operatorTrust: Boolean): Boolean = capability match {
+    case Some(cap) =>
+      conditionalCreateUnsupported(scheme, cap) && !operatorTrust
+    case None => // indeterminate probe: defer to the operator's flag
+      scheme.startsWith("s3") && !flagEnabled && !operatorTrust
   }
 
-  def mkdirs(path: String): Unit = { val p = new Path(path); fsFor(p).mkdirs(p) }
+  /** Per-scheme probe VERDICT (None = pass, Some(msg) = fail), not just
+    * "was probed": a failed probe must keep failing every retried
+    * commit in this JVM, or a caller that catches and loops (as bench
+    * appenders do) would silently fall through to the non-atomic path
+    * the check exists to block. */
+  private val probeVerdict =
+    new java.util.concurrent.ConcurrentHashMap[String, Option[String]]()
+
+  private def probeConditionalCreate(fs: FileSystem, p: Path): Unit = {
+    val scheme = fs.getUri.getScheme
+    val verdict = probeVerdict.computeIfAbsent(scheme, _ => {
+      val cap =
+        try Some(fs.hasPathCapability(p, "fs.s3a.capability.conditional.create"))
+        catch { case _: Exception => None } // probe itself unavailable
+      val flagEnabled =
+        fs.getConf != null &&
+          fs.getConf.getBoolean("fs.s3a.create.conditional.enabled", false)
+      val operatorTrust =
+        sys.props.get("graft.kv.pointer.trustConditionalCreate")
+          .contains("true")
+      if (probeDecision(scheme, cap, flagEnabled, operatorTrust))
+        Some(
+          s"KV commits on scheme '$scheme' need an atomic conditional " +
+            "create, and the filesystem does not advertise one: S3A needs " +
+            "Hadoop >= 3.4.1 with fs.s3a.create.conditional.enabled=true. " +
+            "Without it, create(overwrite=false) is a non-atomic " +
+            "exists-then-PUT and two writers of one commit seq could both " +
+            "win. Enable the flag; if this build implements conditional " +
+            "create without advertising the capability, set " +
+            "-Dgraft.kv.pointer.trustConditionalCreate=true.")
+      else None
+    })
+    verdict.foreach(msg => throw new IllegalStateException(msg))
+  }
 
   def delete(path: String, recursive: Boolean): Boolean = {
     val p = new Path(path); val fs = fsFor(p)
@@ -227,8 +281,13 @@ object GraftFs {
     catch { case _: java.io.IOException => false } // non-empty dir, races
   }
 
-  def len(path: String): Long = {
-    val p = new Path(path); fsFor(p).getFileStatus(p).getLen
+  /** Delete the table-relative files `rels` of the table at `path`,
+    * then each of their directories that is left empty (a writer's
+    * directory, whose files are all gone): a rewrite's deletes. */
+  def deleteFiles(path: String, rels: Seq[String]): Unit = {
+    rels.foreach(r => delete(s"$path/$r", recursive = false))
+    rels.map(r => r.substring(0, r.lastIndexOf('/') max 0)).distinct
+      .filter(_.nonEmpty).foreach(d => delete(s"$path/$d", recursive = false))
   }
 
   /** Set a file's modification time (access time untouched). Stream
@@ -238,15 +297,11 @@ object GraftFs {
     val p = new Path(path); fsFor(p).setTimes(p, mtimeMs, -1)
   }
 
-  /** Carry a data file forward BY REFERENCE where the store allows it:
-    * a hard link on local/POSIX filesystems (O(1), and the bytes stay
-    * alive until BOTH directory entries are gone — so retiring the
-    * source generation later never invalidates the link), a plain copy
-    * elsewhere. This is the group-filtered CoW commit's carry-forward
-    * primitive (KVCow.scala): untouched buckets' files move into the
-    * new generation without rewriting their bytes — HBase's reference-
-    * file trick; an object-store deployment would use a manifest layer
-    * instead, which slots in behind this same seam. */
+  /** Copy a data file BY REFERENCE where the store allows it: a hard
+    * link on local/POSIX filesystems (O(1), and the bytes stay alive
+    * until BOTH directory entries are gone — so the source table
+    * deleting its file later never invalidates the link), a plain copy
+    * elsewhere. The zero-copy clone's primitive (`KVTable.cloneTo`). */
   def linkOrCopy(src: String, dst: String): Unit = {
     val s = new Path(src); val d = new Path(dst); val fs = fsFor(s)
     if (Option(fs.getUri.getScheme).forall(_ == "file")) {

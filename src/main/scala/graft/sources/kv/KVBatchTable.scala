@@ -104,8 +104,8 @@ class KVBatchTable(path: String, tsMax: Option[Long] = None)
   }
 
   override def partitioning(): Array[Transform] =
-    KVPointer.read(path).map { case (_, n) => Expressions.bucket(n, "key"): Transform }
-      .toArray
+    Some(KVLayout(path).numBuckets).filter(_ > 0)
+      .map(n => Expressions.bucket(n, "key"): Transform).toArray
 
   /** The raw cell scan, or — when the read option
     * [[KVSource.RESOLVED_AS_OF]] carries a ts cutoff — the latest-wins
@@ -417,9 +417,8 @@ class KVColumnarPartitionReader(p: KVBucketPartition, required: StructType,
 
   private def openVectorized(f: String, fLen: Long,
                              ctx: TaskAttemptContextImpl): VectorizedParquetRecordReader = {
-    // split length from the planning-time listing: these are qualified
-    // URIs (file:/..., hdfs://...) that java.io.File would stat as 0,
-    // and a zero-length split selects no row groups
+    // split length from the commit record, exact as the writer task
+    // reported it: a zero-length split selects no row groups
     // the mapred variant: Spark's reader base casts the split to it
     val split = new org.apache.hadoop.mapred.FileSplit(
       new HPath(f), 0, fLen, Array.empty[String])
@@ -438,14 +437,7 @@ class KVColumnarPartitionReader(p: KVBucketPartition, required: StructType,
         if (fileIdx >= files.length) return false
         inLog = fileIdx >= p.compactedFiles.length
         val ctx = if (inLog) logCtx else compCtx
-        // a log file a compaction retired after this scan was planned
-        // is kept, moved, until the next compaction (KVGeneration.commit)
-        vec = try openVectorized(files(fileIdx), lens(fileIdx), ctx)
-          catch {
-            case e: java.io.FileNotFoundException if inLog =>
-              openVectorized(KVGeneration.retiredLogFile(files(fileIdx))
-                .getOrElse(throw e), lens(fileIdx), ctx)
-          }
+        vec = openVectorized(files(fileIdx), lens(fileIdx), ctx)
         fileIdx += 1
       }
       if (!vec.nextKeyValue()) { vec.close(); vec = null }

@@ -1,10 +1,5 @@
 package graft.sources.kv
 
-import java.util.concurrent.ConcurrentHashMap
-
-import scala.collection.JavaConverters._
-
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -49,18 +44,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * cutoff state in memory (one ts/value slot per cutoff and live cell,
   * the same footprint class as the resolved scan) and no shuffle ever
   * runs. A log-only table is one task, the memstore-sized contract the
-  * resolved scan relies on too. Offset discovery reads parquet FOOTERS
-  * only (max `ts` column statistic per immutable file, cached), never
-  * data pages. `stepTs` is the rate limiter: a consumer catching up
+  * resolved scan relies on too. Offset discovery reads the commit log
+  * only: the high-water offset is the max cell ts the records have
+  * committed ([[KVLayout.maxTs]]), never a data file. `stepTs` is the
+  * rate limiter: a consumer catching up
   * over a long history advances at most that many cutoff units per
   * trigger, bounding per-batch work.
   *
-  * Consumption contract: a cutoff is consumed as soon as ANY file
-  * holding a cell at that ts is visible — the high-water offset is the
-  * newest footer ts. Writers must therefore commit each ts in one
-  * commit: a file landing later at an already-consumed ts (or below
-  * it) falls inside both cutoff states of every later window and is
-  * never delivered to a running stream.
+  * Consumption contract: a commit is visible whole, with all its files,
+  * so a multi-file commit is delivered whole. A commit whose cells are
+  * ALL at or below a cutoff the stream already consumed falls inside
+  * both cutoff states of every later window and is never delivered to a
+  * running stream.
   *
   * Replay/restart contract: offsets are plain cutoffs, so a replayed
   * `(start, end]` window recomputes the identical diff from the
@@ -150,42 +145,9 @@ class KVCdcMicroBatchStream(path: String, startTs: Long, stepTs: Long)
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
-  // footer max-ts per immutable data file — read once while the file is
-  // listed; entries for files a compaction retired are dropped
-  private val footerMax = new ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Files whose footer max-ts is cached. */
-  private[graft] def cachedFooters: Int = footerMax.size
-
-  private def hconf = GraftFs.hadoopConf
-
-  private def footerMaxTs(f: String): Long =
-    footerMax.computeIfAbsent(f, { _ =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new HPath(f), hconf))
-      try {
-        val m = r.getFooter.getBlocks.asScala.flatMap { b =>
-          b.getColumns.asScala
-            .filter(_.getPath.toDotString == "ts")
-            .flatMap(c => Option(c.getStatistics))
-            .collect {
-              case s if s.hasNonNullValue =>
-                s.genericGetMax.asInstanceOf[java.lang.Long].longValue()
-            }
-        }
-        java.lang.Long.valueOf(
-          if (m.isEmpty) Long.MinValue else m.max)
-      } finally r.close()
-    }).longValue()
-
-  /** Newest cell timestamp any file holds — the high-water cutoff. */
-  private def maxTsAvailable(): Long = {
-    val layout = KVLayout(path)
-    val files = layout.logFiles ++ layout.compactedByBucket.values.flatten
-    footerMax.keySet.retainAll(files.toSet.asJava)
-    files.foldLeft(startTs)((acc, f) => math.max(acc, footerMaxTs(f)))
-  }
+  /** Newest cell timestamp the table has committed — the high-water
+    * cutoff. */
+  private def maxTsAvailable(): Long = math.max(startTs, KVLayout(path).maxTs)
 
   @volatile private var availableNowTarget: Option[Long] = None
 

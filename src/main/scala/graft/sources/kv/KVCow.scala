@@ -1,6 +1,5 @@
 package graft.sources.kv
 
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -20,8 +19,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * [[KVResolvedScan]] as the delta path), Spark's ReplaceData plan
   * computes the complete post-operation contents (carried-over rows +
   * merge outputs, minus deletes), and the write lands it as a FRESH
-  * GENERATION behind the atomic pointer flip — exactly a compaction
-  * whose input had the mutation applied. Where the delta path appends
+  * GENERATION in one checkpoint record — exactly a compaction whose
+  * input had the mutation applied. Where the delta path appends
   * versions and tombstones (write-optimized: O(changed rows) written,
   * history retained, resolve cost on read), CoW pays the full rewrite
   * once and reads are then tombstone-free and maximally compact
@@ -38,13 +37,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    as a subquery projecting DISTINCT touched buckets, and
   *    [[KVCowScan.filter]] prunes the scan — and hence the rewrite —
   *    to exactly those buckets. Dropping a WHOLE group is sound
-  *    because the commit carries every unread bucket forward by
-  *    reference ([[GraftFs.linkOrCopy]]) and re-appends the scan
-  *    snapshot's log rows of unread buckets (their pending state must
-  *    survive the snapshot retirement; touched buckets' log rows are
-  *    already folded into the rewritten files — and must NOT survive,
-  *    or a row the command deleted would resurrect). A MERGE touching
-  *    k of n buckets therefore rewrites k files, not the table.
+  *    because the commit record keeps every unread bucket's files live
+  *    (it simply does not remove them) and re-appends the scan
+  *    snapshot's log rows of unread buckets into the same record
+  *    (their pending state must survive the log files' removal; touched
+  *    buckets' log rows are already folded into the rewritten files —
+  *    and must NOT survive, or a row the command deleted would
+  *    resurrect). A MERGE touching k of n buckets therefore rewrites k
+  *    files, not the table.
   *  - The write requires a distribution CLUSTERED BY `key` into
   *    exactly `numBuckets` partitions and (key, family, qualifier)
   *    ordering — Spark's hash-clustering into N partitions places a
@@ -54,15 +54,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    writes its bucket's sorted file directly. Every row is verified
   *    against [[GraftBucket.of]] at write time — a placement drift
   *    fails the job loudly instead of corrupting the layout.
-  *  - Two-phase commit: tasks write into a dot-prefixed inflight dir
-  *    (invisible to readers); job commit is the generation commit
-  *    compaction uses too ([[KVGeneration.commit]]): refuse if the
-  *    pointer moved past the scan snapshot's generation N, move the
-  *    files into `compacted/gen-<N+1>`, carry untouched buckets
-  *    forward, then completeness marker → pointer flip → snapshot
-  *    log-file retirement → N-1 pruning. Appends racing the rewrite
-  *    survive exactly as they do under compaction — only the scan
-  *    snapshot's log files are retired.
+  *  - Commit: tasks write into the rewrite's own directory, which no
+  *    reader lists; job commit is the generation commit compaction uses
+  *    too ([[KVGeneration.commit]]), one checkpoint record that drops
+  *    the touched buckets' files and the scan snapshot's log files.
+  *    Appends racing the rewrite survive exactly as they do under
+  *    compaction; a rewrite racing it on the same files makes it
+  *    throw.
   */
 class KVCowBuilder(path: String, info: RowLevelOperationInfo)
     extends RowLevelOperationBuilder {
@@ -72,7 +70,7 @@ class KVCowBuilder(path: String, info: RowLevelOperationInfo)
 
 class KVCowOperation(path: String, cmd: RowLevelOperation.Command)
     extends RowLevelOperation {
-  // ONE layout snapshot shared by scan and write: the write retires
+  // ONE layout snapshot shared by scan and write: the write drops
   // exactly the log files the scan consumed, never a racing append's
   private[kv] lazy val layout: KVLayout = KVLayout(path)
 
@@ -191,8 +189,7 @@ class KVCowWrite(path: String, layout: KVLayout, info: LogicalWriteInfo,
   private val declaredWidth = declared.length
 
   private val numBuckets = if (layout.bucketed) layout.numBuckets else 8
-  private val inflight =
-    KVGeneration.inflightDir(path, layout.generation, info.queryId())
+  private val dir = KVGeneration.newDir()
 
   override def toBatch: BatchWrite = this
   override def description(): String = s"graft-kv-cow-write `$path`"
@@ -206,77 +203,64 @@ class KVCowWrite(path: String, layout: KVLayout, info: LogicalWriteInfo,
     Expressions.sort(Expressions.column("qualifier"), SortDirection.ASCENDING))
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new KVCowWriterFactory(inflight, numBuckets, declaredWidth)
+    new KVCowWriterFactory(s"$path/$dir", numBuckets, declaredWidth)
 
-  /** The shared generation commit ([[KVGeneration.commit]]); its
-    * carry-forward step is the group-filtered rewrite's: the scan — and
-    * so the replacement — was pruned to the touched buckets; every
-    * other bucket carries its current-generation file(s) forward by
-    * reference, and its PENDING log rows are re-appended so the
-    * snapshot retirement cannot lose them. (Touched buckets' log rows
-    * are folded into the rewritten files and must NOT be re-appended —
-    * a deleted row would resurrect. A re-appended row duplicating a
-    * crashed earlier attempt's is harmless: latest-wins resolution is
-    * idempotent over identical versions.) */
+  /** The shared generation commit ([[KVGeneration.commit]]). With the
+    * runtime group filter the scan — and so the replacement — was pruned
+    * to the touched buckets: the record drops only their files and the
+    * snapshot's log files, keeps every other bucket's files, and carries
+    * the untouched buckets' PENDING log rows, re-appended, so dropping
+    * the log files cannot lose them. (Touched buckets' log rows are
+    * folded into the rewritten files and must NOT be re-appended — a
+    * deleted row would resurrect.) Without it the record drops every
+    * file of the snapshot. */
   override def commit(messages: Array[WriterCommitMessage]): Unit =
-    KVGeneration.commit(layout, numBuckets, inflight, messages.toSeq) { genDir =>
-      op.groupBuckets match {
-        case Some(touched) if layout.bucketed =>
-          val untouched = (0 until numBuckets).toSet -- touched
-          untouched.foreach { b =>
-            layout.compactedByBucket.getOrElse(b, Seq.empty).foreach { f =>
-              GraftFs.linkOrCopy(f, s"$genDir/${f.substring(f.lastIndexOf('/') + 1)}")
-            }
-          }
-          if (layout.logFiles.nonEmpty && untouched.nonEmpty) {
+    op.groupBuckets match {
+      case Some(touched) if layout.bucketed =>
+        val carried =
+          if (layout.logFiles.isEmpty || touched.size == numBuckets) (Nil, Long.MinValue)
+          else {
             import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-            KVLogWrite.append(path,
+            KVLogWrite.stage(path,
               SparkSession.active.read.schema(graft.write.KVTable.CELL_SCHEMA_DDL)
                 .parquet(layout.logFiles: _*)
                 .filter(!pmod(hash(col("key")), lit(numBuckets))
                   .isin(touched.toSeq.map(Integer.valueOf): _*))
                 .coalesce(1))
           }
-        case _ => () // no runtime group filter: full rewrite, nothing to carry
-      }
+        KVGeneration.commit(layout, numBuckets, dir, messages.toSeq,
+          layout.files.filter(f => f.bucket < 0 || touched(f.bucket)).map(_.rel), carried)
+      case _ =>
+        KVGeneration.commit(layout, numBuckets, dir, messages.toSeq, layout.files.map(_.rel))
     }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    GraftFs.delete(inflight, recursive = true): Unit
+    GraftFs.delete(s"$path/$dir", recursive = true): Unit
   }
 }
 
-case class KVCowFile(name: String) extends WriterCommitMessage
-
-class KVCowWriterFactory(inflight: String, numBuckets: Int,
+class KVCowWriterFactory(dir: String, numBuckets: Int,
                          declaredWidth: Int)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new KVCowDataWriter(inflight, numBuckets, partitionId, taskId,
+    new KVCowDataWriter(dir, numBuckets, partitionId, taskId,
       declaredWidth)
 }
 
 /** One task = one bucket = one sorted parquet file, named with the
-  * Spark bucket-file suffix (`..._00003.c000...`) so [[KVLayout]]'s
-  * listing attributes it to its bucket. The only writer of
-  * `compacted/gen-*` files: compaction and the CoW rewrite both stage
-  * through it ([[KVGeneration]]).
+  * Spark bucket-file suffix (`..._00003.c000...`) and committed with its
+  * bucket id. The only writer of compacted files: compaction and the
+  * CoW rewrite both write through it ([[KVGeneration]]).
   * Rows stream through parquet-mr in arrival (= required sort) order;
-  * the writer is created lazily so empty buckets produce no file. */
-class KVCowDataWriter(inflight: String, numBuckets: Int,
+  * the file is opened lazily so empty buckets produce no file. */
+class KVCowDataWriter(dir: String, numBuckets: Int,
                       partitionId: Int, taskId: Long, declaredWidth: Int)
     extends DataWriter[InternalRow] {
-  import KVLogDataWriter.CELL_TYPE
-
-  private val name =
-    f"part-$partitionId%05d-$taskId" + f"_$partitionId%05d.c000.snappy.parquet"
-  private var writer: org.apache.parquet.hadoop.ParquetWriter[
-    org.apache.parquet.example.data.Group] = _
-  private lazy val groups = new SimpleGroupFactory(CELL_TYPE)
+  private val out = new KVCellFileWriter(dir,
+    f"part-$partitionId%05d-$taskId" + f"_$partitionId%05d.c000.snappy.parquet",
+    partitionId)
 
   override def write(row: InternalRow): Unit = {
-    if (writer == null)
-      writer = KVLogDataWriter.openCellWriter(s"$inflight/$name")
     // ReplaceData's physical rows may carry the planner's OPERATION
     // column (RowDeltaUtils: 5=WRITE, 6=WRITE_WITH_METADATA) ahead of
     // the DECLARED columns (cells, plus `_bucket` when the group-
@@ -299,12 +283,10 @@ class KVCowDataWriter(inflight: String, numBuckets: Int,
         s"CoW clustering drift: key ${row.getLong(off)} belongs to bucket " +
           s"$b but arrived in write partition $partitionId")
     }
-    writer.write(KVLogDataWriter.cellGroup(groups, row, off))
+    out.write(row, off)
   }
 
-  override def commit(): WriterCommitMessage =
-    if (writer == null) KVCowFile("")
-    else { writer.close(); KVCowFile(name) }
-  override def abort(): Unit = if (writer != null) writer.close()
+  override def commit(): WriterCommitMessage = out.commit()
+  override def abort(): Unit = out.abort()
   override def close(): Unit = ()
 }

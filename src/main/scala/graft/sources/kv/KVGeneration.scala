@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * bulk path: sorted per-region files from one writer, then adopted
   * atomically (`repartitionAndSortWithinPartitions(RegionPartitioner)`
   * then `LoadIncrementalHFiles`, HBaseTable.scala:234-352). Every
-  * generation file is staged, one file per bucket, through
+  * generation file is written, one file per bucket, through
   * [[KVCowDataWriter]], by one of two writers:
   *  - [[writeResolved]], every compaction rewrite (`compact`,
   *    `restoreAsOf`, `compactAt`, `compactRetaining`): each task runs
@@ -27,40 +27,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *    moves between regions), and behind one shuffle of the raw cells
   *    otherwise;
   *  - the copy-on-write row-level commit ([[KVCowWrite]]).
-  * Each stages into a dot-prefixed `compacted/.inflight-g<N>-<id>`
-  * directory, N being the generation its snapshot read, which no reader
-  * lists ([[GraftFs.dataFiles]] skips hidden entries), and adopts it
-  * through [[commit]]. A generation is a directory behind the pointer,
-  * nothing else: there is no catalog entry to create, re-create or
-  * drop, and a KV table is addressed by its path alone.
+  * Each writes into its own directory `compacted/<id>` ([[newDir]]),
+  * where the files stay, and adopts them through [[commit]]: one
+  * checkpoint record ([[KVCommit.rewrite]]). A generation is a
+  * checkpoint record, nothing else: there is no catalog entry to
+  * create, re-create or drop, and a KV table is addressed by its path
+  * alone.
   */
 object KVGeneration {
-  /** Staging directory of a writer whose snapshot read generation
-    * `baseGen` (-1: never compacted). The tag lets a later commit
-    * sweep the staging dirs that can no longer commit. */
-  def inflightDir(path: String, baseGen: Int, id: String): String =
-    s"$path/compacted/.inflight-g$baseGen-$id"
-
-  private val Staged = """\.inflight-g(-?\d+)-.*""".r
-  private val Retired = """\.retired-g(\d+)""".r
-
-  /** Where log file `f`, listed by a scan planned before a commit
-    * retired it, is kept until the next commit: a reader that finds `f`
-    * gone opens this instead (None once it is deleted too). */
-  private[kv] def retiredLogFile(f: String): Option[String] = {
-    val slash = f.lastIndexOf('/')
-    GraftFs.list(f.substring(0, slash))
-      .collect { case e if e.isDir && Retired.matches(e.name) =>
-        s"${e.path}/${f.substring(slash + 1)}" }
-      .find(GraftFs.exists)
-  }
-
-  private def newInflight(snap: KVLayout): String =
-    inflightDir(snap.path, snap.generation, java.util.UUID.randomUUID.toString)
+  /** A new rewrite's directory, table-relative. */
+  def newDir(): String = s"compacted/${java.util.UUID.randomUUID}"
 
   /** Write the latest-wins view of snapshot `snap` at ts cutoff
     * `cutoff` (`Long.MaxValue`: the live state) as its next generation
-    * at `numBuckets` buckets, and publish it: every compaction rewrite.
+    * at `numBuckets` buckets, and commit it: every compaction rewrite.
     * Each task runs the [[KVResolveKernel]] over one bucket and writes
     * that bucket's file ([[rewriteBucket]]). A snapshot bucketed at
     * `numBuckets` hands task b its bucket b partition (compacted files
@@ -69,17 +49,17 @@ object KVGeneration {
     * clustered by `repartition(numBuckets, key)` — Spark's
     * `pmod(murmur3(key), n)`, i.e. [[GraftBucket]], which
     * [[KVCowDataWriter]] verifies per row: one shuffle of the raw cells.
-    * Only the snapshot's files feed it and only its log files retire, so
-    * a put racing the rewrite survives into the next log. Memory: a task
-    * holds its bucket's resolve state on the heap without spilling, as
-    * every resolved read does, and with `keepAbove` its rows above the
-    * cutoff too. */
+    * Only the snapshot's files feed it and only they are dropped, so a
+    * put racing the rewrite stays live. Memory: a task holds its
+    * bucket's resolve state on the heap without spilling, as every
+    * resolved read does, and with `keepAbove` its rows above the cutoff
+    * too. */
   def writeResolved(snap: KVLayout, numBuckets: Int, cutoff: Long,
                     keepAbove: Boolean = false,
                     expiry: Map[String, Long] = Map.empty): Unit = {
-    val inflight = newInflight(snap)
-    val factory =
-      new KVCowWriterFactory(inflight, numBuckets, KVBatchTable.CELL_SCHEMA.size)
+    val dir = newDir()
+    val factory = new KVCowWriterFactory(s"${snap.path}/$dir", numBuckets,
+      KVBatchTable.CELL_SCHEMA.size)
     // rows above a cutoff that is neither the live state nor kept are
     // pruned before the resolve
     val prune = !keepAbove && cutoff != Long.MaxValue
@@ -93,17 +73,17 @@ object KVGeneration {
         KVStagedWrite.run(SparkSession.active.sparkContext
           .parallelize(parts.toSeq, parts.length).flatMap(p => rewriteBucket(
             KVResolveKernel.scan(p, filters, hconf)(_), cutoff, keepAbove, expiry)),
-          factory, inflight, s"graft-kv bucket-local generation write `${snap.path}`")
+          factory, s"${snap.path}/$dir", s"graft-kv bucket-local generation write `${snap.path}`")
       } else if (snap.compactedFiles.isEmpty && snap.logFiles.isEmpty) Seq.empty
       else {
         val raw = SparkSession.active.read.schema(graft.write.KVTable.CELL_SCHEMA_DDL)
           .parquet(snap.compactedFiles ++ snap.logFiles: _*)
         KVStagedWrite.run((if (prune) raw.filter(col("ts") <= cutoff) else raw)
             .repartition(numBuckets, col("key")),
-          factory, inflight, s"graft-kv generation write `${snap.path}`",
+          factory, s"${snap.path}/$dir", s"graft-kv generation write `${snap.path}`",
           rows => rewriteBucket(batches(rows).foreach(_), cutoff, keepAbove, expiry))
       }
-    commit(snap, numBuckets, inflight, files)(_ => ())
+    commit(snap, numBuckets, dir, files, snap.files.map(_.rel))
   }
 
   /** One rewrite task over the cell batches `feedAll` hands out: the
@@ -158,93 +138,16 @@ object KVGeneration {
     }.takeWhile(_.numRows > 0)
   }
 
-  /** Adopt a staged generation as the successor of the generation
-    * `snap` read, and publish it:
-    *
-    *  0. refuse unless the pointer still names `snap.generation`: a
-    *     writer that read gen-N and publishes N+1 after another commit
-    *     already published N+1 (a CoW MERGE, say) would publish its
-    *     stale contents over that commit and lose it. The staging dir
-    *     is deleted and a `ConcurrentModificationException` thrown;
-    *  1. wipe a stale unpublished `gen-<N+1>` — a crashed earlier
-    *     attempt that moved some files and died before the pointer
-    *     flip; a retry computes the same N+1, and moving fresh files
-    *     NEXT TO the stale ones would publish duplicated rows. It is
-    *     unpublished by construction (the pointer still names gen-N),
-    *     and a CONCURRENT writer racing to the same generation loses at
-    *     the pointer CAS, not here;
-    *  2. move the committed tasks' files out of `inflight` (failed or
-    *     speculative attempts' files stay behind and are deleted with
-    *     it);
-    *  3. `carryForward(genDir)` — the CoW group-filtered rewrite links
-    *     its untouched buckets in here;
-    *  4. completeness marker → atomic pointer flip → sweep of every
-    *     staging dir tagged with a generation at or below N (by step 0
-    *     none of them can ever commit: crashed or doomed writers) →
-    *     retirement of the snapshot's log files into
-    *     `log/.retired-g<N+1>` (readable by the scans planned before
-    *     the flip, deleted at the next commit) → pruning of the drained
-    *     N-1 generation.
-    *
-    * A crash at any point leaves a readable table (old pointer, or
-    * marker-led recovery). Appends racing the rewrite live as other part
-    * files in `log/` and survive: only the SNAPSHOT's files are
-    * deleted. */
-  def commit(snap: KVLayout, numBuckets: Int, inflight: String,
-             messages: Seq[WriterCommitMessage])(
-             carryForward: String => Unit): Unit = {
-    val path = snap.path
-    val live = KVPointer.read(path).fold(-1)(_._1)
-    if (live != snap.generation) {
-      GraftFs.delete(inflight, recursive = true)
-      throw new java.util.ConcurrentModificationException(
-        s"$path: a rewrite of generation ${snap.generation} cannot commit, " +
-          s"the pointer already names generation $live")
-    }
-    val newGen = snap.generation + 1
-    val genDir = s"$path/compacted/gen-$newGen"
-    if (GraftFs.list(genDir).nonEmpty) GraftFs.delete(genDir, recursive = true)
-    GraftFs.mkdirs(genDir)
-    messages.foreach {
-      case KVCowFile(name) if name.nonEmpty =>
-        GraftFs.move(s"$inflight/$name", s"$genDir/$name")
-      case _ => ()
-    }
-    GraftFs.delete(inflight, recursive = true)
-    carryForward(genDir)
-    KVPointer.writeGenMeta(path, newGen, numBuckets)
-    KVPointer.publish(path, newGen, numBuckets)
-    GraftFs.list(s"$path/compacted").foreach { e =>
-      e.name match {
-        case Staged(g) if e.isDir && g.toInt < newGen =>
-          GraftFs.delete(e.path, recursive = true)
-        case _ => ()
-      }
-    }
-    // retire ONLY the snapshot's log files, never a racing append's:
-    // each moves (one rename) into the hidden `log/.retired-g<N+1>`,
-    // out of every listing taken from now on, while a scan planned
-    // before the flip still finds it there ([[retiredLogFile]]). The
-    // files retired by earlier flips have drained, as gen N-1 has.
-    val logDir = s"$path/log"
-    GraftFs.list(logDir).foreach { e =>
-      e.name match {
-        case Retired(g) if e.isDir && g.toInt < newGen =>
-          GraftFs.delete(e.path, recursive = true)
-        case _ => ()
-      }
-    }
-    if (snap.logFiles.nonEmpty) {
-      val retired = s"$logDir/.retired-g$newGen"
-      GraftFs.mkdirs(retired)
-      snap.logFiles.foreach { f =>
-        if (GraftFs.exists(f))
-          GraftFs.move(f, s"$retired/${f.substring(f.lastIndexOf('/') + 1)}")
-      }
-    }
-    // retire generation N-1 (drained: it predates every scan planned
-    // since the previous pointer flip)
-    if (newGen >= 2)
-      GraftFs.delete(s"$path/compacted/gen-${newGen - 2}", recursive = true)
+  /** Commit the files the tasks of a rewrite of `snap` wrote into
+    * `dir`, plus `carried` (files written for this same record), as the
+    * checkpoint that drops `remove` at `numBuckets` buckets
+    * ([[KVCommit.rewrite]]: a racing append is kept, a racing rewrite of
+    * the same input makes this one throw). */
+  def commit(snap: KVLayout, numBuckets: Int, dir: String,
+             messages: Seq[WriterCommitMessage], remove: Seq[String],
+             carried: (Seq[KVFile], Long) = (Nil, Long.MinValue)): Unit = {
+    val (files, maxTs) = KVStagedWrite.files(snap.path, dir, messages)
+    KVCommit.rewrite(snap, numBuckets, files ++ carried._1, remove,
+      math.max(maxTs, carried._2))
   }
 }

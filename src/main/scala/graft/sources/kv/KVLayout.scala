@@ -3,73 +3,80 @@ package graft.sources.kv
 import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
 import org.apache.spark.sql.types.LongType
 
-/** On-disk layout of a graft KV table (the engine's HBase-table
-  * analogue, see write/KVStore.scala): `<path>/compacted` holds the
-  * bucketed, key-sorted resolved state (one-or-more parquet files per
-  * bucket, Spark bucket id encoded in the file name) in per-generation
-  * directories behind the `_graft_current.txt` pointer; `<path>/log`
-  * holds post-compaction appends (the memstore analogue) as plain
-  * parquet. This mirrors what the reference derives from HBase region
-  * metadata at scan-planning time (HBaseRDD.scala:18-38: one partition
-  * per region, region boundaries from the cluster) — here the "regions"
-  * are hash buckets and the metadata is the directory itself.
+/** A graft KV table (the engine's HBase-table analogue, see
+  * write/KVStore.scala) as of one commit: the fold of its
+  * `<path>/_commits/` records ([[KVCommit]]) up to the newest seq one
+  * listing of that directory shows. The fold reads that head record and
+  * the ones below it, down to the newest checkpoint (a rewrite record,
+  * which lists the full live file set): the compacted files, bucketed
+  * and key-sorted, one or more per bucket, and the log files appended
+  * since (the memstore analogue). It lists no data directory, so a
+  * commit is in the snapshot whole or not at all. This mirrors what the
+  * reference derives from HBase region metadata at scan-planning time
+  * (HBaseRDD.scala:18-38: one partition per region, region boundaries
+  * from the cluster) — here the "regions" are hash buckets and the
+  * metadata is the commit log.
   *
   * Snapshotted driver-side at scan-planning time; the file lists ride
-  * into the input partitions, so a compaction racing with a running
-  * query cannot change which files a task reads. Listings go through
-  * the [[GraftFs]] storage seam — one `listStatus` per directory, so
-  * file sizes come with the listing (no per-file stat round-trips on
-  * HDFS).
+  * into the input partitions, so a commit racing a running query cannot
+  * change which files a task reads, and the files a rewrite drops are
+  * deleted only by the rewrite after it ([[KVCommit.rewrite]]). File
+  * lengths are the exact ones the writer tasks reported. Records are
+  * read by seq, never by listing entry, so a listing that shows a new
+  * record but misses an older one cannot leave a gap in the fold.
   */
 case class KVLayout(path: String) {
-  /** (generation, numBuckets) via the shared pointer reader
-    * ([[KVPointer]]) — compaction publishes a new `compacted/gen-<N>`
-    * directory by atomically flipping the pointer, and the previous
-    * generation survives one more compaction interval so in-flight
-    * scans (which snapshotted its file list) keep reading valid files
-    * through the swap. */
-  private val current: Option[(Int, Int)] = KVPointer.read(path)
+  /** The records from the newest checkpoint (or the first record) up to
+    * the head, oldest first. */
+  private val records: List[KVCommit] = {
+    @annotation.tailrec
+    def down(seq: Long, acc: List[KVCommit]): List[KVCommit] =
+      if (seq < 0) acc
+      else {
+        val c = KVCommit.read(path, seq)
+        if (c.rewrite) c :: acc else down(seq - 1, c :: acc)
+      }
+    down(KVCommit.head(path), Nil)
+  }
 
-  /** Generation this snapshot read, or -1 if never compacted. A writer
-    * that rewrites the snapshot publishes `generation + 1`, and only
-    * while the pointer still names `generation` ([[KVGeneration.commit]]). */
-  val generation: Int = current.map(_._1).getOrElse(-1)
+  /** Seq of the newest record this snapshot folded, or -1 for a table
+    * with no commit. A writer commits on top of it as `generation + 1`. */
+  val generation: Long = records.lastOption.fold(-1L)(_.seq)
+
+  private val checkpoint: Option[KVCommit] = records.headOption.filter(_.rewrite)
 
   /** Bucket count of the compacted state, or -1 if never compacted. */
-  val numBuckets: Int = current.map(_._2).getOrElse(-1)
+  val numBuckets: Int = checkpoint.fold(-1)(_.numBuckets)
 
-  private val logEntries: Seq[GraftFs.FileEntry] =
-    GraftFs.dataFiles(s"$path/log")
+  /** The max cell ts committed up to this snapshot (Long.MinValue: none). */
+  val maxTs: Long = records.lastOption.fold(Long.MinValue)(_.maxTs)
 
-  private val compactedEntries: Seq[GraftFs.FileEntry] = current match {
-    case None => Seq.empty
-    case Some((g, _)) => GraftFs.dataFiles(s"$path/compacted/gen-$g")
-  }
+  /** The live data files. */
+  private[graft] val files: Seq[KVFile] = records.flatMap(_.add)
 
-  val logFiles: Seq[String] = logEntries.map(_.path)
-  val compactedFiles: Seq[String] = compactedEntries.map(_.path)
+  /** Files the checkpoint removed, table-relative: the next rewrite
+    * deletes them. */
+  private[kv] def retired: Seq[String] = checkpoint.fold(Seq.empty[String])(_.remove)
 
-  /** Current generation's compacted files keyed by the bucket id in
-    * their Spark bucket-file name (`part-...-_00003.c000...`). */
-  val compactedByBucket: Map[Int, Seq[String]] = {
-    val pat = "_(\\d{5})\\.".r
-    compactedEntries
-      .flatMap(e => pat.findFirstMatchIn(e.name)
-        .map(m => m.group(1).toInt -> e.path))
-      .groupBy(_._1).map { case (b, fs) => b -> fs.map(_._2) }
-  }
+  private lazy val live: Set[String] = files.map(_.rel).toSet
+  private[kv] def isLive(rel: String): Boolean = live(rel)
 
-  /** File length by qualified path, straight from the planning-time
-    * listing — the lengths ride into the input partitions so executors
-    * never stat files (and `java.io.File` cannot stat the qualified
-    * `file:/...` URI strings these listings return at all — it reports
-    * length 0, which as a parquet split length selects zero row
-    * groups). */
-  val lenByPath: Map[String, Long] =
-    (compactedEntries ++ logEntries).map(e => e.path -> e.len).toMap
+  private def abs(f: KVFile): String = s"$path/${f.rel}"
+
+  val logFiles: Seq[String] = files.filter(_.bucket < 0).map(abs)
+  val compactedFiles: Seq[String] = files.filter(_.bucket >= 0).map(abs)
+
+  /** Compacted files keyed by bucket id. */
+  val compactedByBucket: Map[Int, Seq[String]] =
+    files.filter(_.bucket >= 0).groupBy(_.bucket).map { case (b, fs) => b -> fs.map(abs) }
+
+  /** File length by path, as the writer tasks reported it — the lengths
+    * ride into the input partitions so executors never stat files (a
+    * wrong length as a parquet split length selects the wrong row
+    * groups, zero selects none). */
+  val lenByPath: Map[String, Long] = files.map(f => abs(f) -> f.len).toMap
 
   def bucketed: Boolean = numBuckets > 0
-
   /** The resolve-group input partitions of this snapshot: one
     * [[KVBucketPartition]] per `allowed` bucket (its compacted files
     * plus the whole log, bucket-gated by the reader), or — on a
@@ -91,16 +98,13 @@ case class KVLayout(path: String) {
     else Array.empty
   }
 
-  def totalBytes: Long = (compactedEntries ++ logEntries).map(_.len).sum
+  def totalBytes: Long = files.map(_.len).sum
 }
 
 object KVLayout {
-  /** The one existence rule: the pointer names buckets, or `log/` holds
-    * a data file. Unlike a full [[KVLayout]] snapshot it lists `log/`
-    * only when there is no pointer, and never a generation's files. */
-  def exists(path: String): Boolean =
-    KVPointer.read(path).exists(_._2 > 0) ||
-      GraftFs.dataFiles(s"$path/log").nonEmpty
+  /** The one existence rule: the table has a commit record. One
+    * listing of `_commits/`, no record read. */
+  def exists(path: String): Boolean = KVCommit.head(path) >= 0
 }
 
 /** The bucket-assignment function of the compacted layout. MUST agree

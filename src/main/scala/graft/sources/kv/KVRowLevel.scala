@@ -25,9 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    the same rule as `KVTable.delete`) — masking everything at or
   *    below it while later writes stay visible, HBase delete-marker
   *    semantics.
-  * The write lands through the same two-phase inflight-rename commit as
-  * SQL INSERT ([[KVLogWrite]]), so readers racing a MERGE see a prefix
-  * of complete parquet files and failed attempts leave nothing behind.
+  * The write lands through the same one-record commit as SQL INSERT
+  * ([[KVLogWrite]]), so readers racing a MERGE see all of its files or
+  * none, and failed attempts leave nothing behind.
   *
   * The operation's READ side is [[KVResolvedScan]]: row-level SQL must
   * see the table as ROWS (the live, latest-wins state), not as the raw
@@ -107,29 +107,29 @@ class KVDeltaWriteBuilder(path: String, info: LogicalWriteInfo)
   override def build(): DeltaWrite = new KVDeltaWrite(path, info.queryId())
 }
 
-/** Shares [[KVLogWrite]]'s inflight-directory commit protocol; only the
-  * writer factory differs (delta ops instead of plain appends). */
+/** Shares [[KVLogWrite]]'s one-record commit; only the writer factory
+  * differs (delta ops instead of plain appends). */
 class KVDeltaWrite(path: String, queryId: String)
     extends KVLogWrite(path, queryId) with DeltaWrite with DeltaBatchWrite {
   override def toBatch: DeltaBatchWrite = this
   override def description(): String = s"graft-kv delta `$path`"
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
-    new KVDeltaWriterFactory(inflightDir, queryId)
+    new KVDeltaWriterFactory(s"$path/$dir", queryId)
 }
 
-class KVDeltaWriterFactory(inflight: String, queryId: String) extends DeltaWriterFactory {
+class KVDeltaWriterFactory(dir: String, queryId: String) extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new KVDeltaDataWriter(inflight, queryId, partitionId, taskId)
+    new KVDeltaDataWriter(dir, queryId, partitionId, taskId)
 }
 
 /** Translates delta ops to cells in one task-local parquet file:
   * insert/update append the (full-schema) row as-is; delete appends a
   * tombstone derived from the row id `(key, family, qualifier, ts)` —
   * granularity by null pattern, as in `KVTable.delete`. */
-class KVDeltaDataWriter(inflight: String, queryId: String, partitionId: Int,
+class KVDeltaDataWriter(dir: String, queryId: String, partitionId: Int,
                         taskId: Long)
     extends DeltaWriter[InternalRow] {
-  private val inner = new KVLogDataWriter(inflight, queryId, partitionId, taskId)
+  private val inner = new KVLogDataWriter(dir, queryId, partitionId, taskId)
 
   override def insert(row: InternalRow): Unit = inner.write(row)
 

@@ -3,7 +3,7 @@ package graft.write
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.kv.{GraftFs, KVGeneration, KVLayout, KVLogWrite, KVSource}
+import graft.sources.kv.{GraftFs, KVCommit, KVGeneration, KVLayout, KVLogWrite, KVSource}
 
 /** Cell-level KV table with the reference's storage semantics
   * (HBaseTable.scala:100-352, HBaseRDD.scala:39-42) re-expressed on
@@ -17,7 +17,7 @@ import graft.sources.kv.{GraftFs, KVGeneration, KVLayout, KVLogWrite, KVSource}
   *    delete semantics: a tombstone masks every cell at or below its ts
   *    (`tomb` = 'row' | 'family' | 'cell', HBaseTable.scala:181-212);
   *  - `compact()` writes the resolved state as a new bucketed,
-  *    key-sorted generation and swaps it in, resolving each bucket in
+  *    key-sorted generation and commits it, resolving each bucket in
   *    its own task. On a table already bucketed at the target count it
   *    is region-local, like the store's own compactions: no shuffle.
   *    Otherwise (re-bucketing, a log-only table's first compaction) it
@@ -25,9 +25,11 @@ import graft.sources.kv.{GraftFs, KVGeneration, KVLayout, KVLogWrite, KVSource}
   *    raw cells into buckets (≙ the HFile shuffle,
   *    HBaseTable.scala:219-242), resolve, write sorted, swap.
   *
-  * A table is its path: the layout under it ([[KVLayout]]) is the whole
-  * state, and every read and write addresses it by path alone — no
-  * catalog entry exists for it.
+  * A table is its path: its commit log (`<path>/_commits/<seq>`, one
+  * immutable record per change, [[graft.sources.kv.KVCommit]]) is the
+  * whole state, its fold ([[KVLayout]]) is what a read sees, and every
+  * read and write addresses it by path alone — no catalog entry exists
+  * for it.
   *
   * Scale notes: appends are cheap (no read-modify-write at write time —
   * the reference's BufferedMutator analogue) and all land through one
@@ -45,17 +47,8 @@ import graft.sources.kv.{GraftFs, KVGeneration, KVLayout, KVLogWrite, KVSource}
 class KVTable(val spark: SparkSession, val path: String) {
   import KVTable._
 
-  /** `(generation, numBuckets)` of the live compacted state, via the
-    * shared pointer reader ([[graft.sources.kv.KVPointer]] — one parse
-    * for the write path and the DSv2 scan path alike). Generations live
-    * side by side under `compacted/gen-<N>/`; the atomic pointer flip
-    * is what publishes one, and a corrupt pointer self-heals from the
-    * newest complete generation. */
-  private[graft] def currentGen: Option[(Int, Int)] =
-    graft.sources.kv.KVPointer.read(path)
-
   /** The one existence rule, shared with [[graft.sources.kv.GraftCatalog]]:
-    * a published generation or a log holding data files. */
+    * the table has a commit record. */
   def exists: Boolean = KVLayout.exists(path)
 
   private def emptyCells: DataFrame = spark.createDataFrame(
@@ -84,8 +77,8 @@ class KVTable(val spark: SparkSession, val path: String) {
     }
 
   /** M1/M2 `update`/`put` (HBaseTable.scala:100-155): append new cells;
-    * no read required (upsert-by-log). One staged file per non-empty
-    * partition of `newCells`, renamed into `log/` on commit. */
+    * no read required (upsert-by-log). One file per non-empty
+    * partition of `newCells`, all committed by one record. */
   def put(newCells: DataFrame): Unit = KVLogWrite.append(path, conform(newCells))
 
   /** M4 `delete` (HBaseTable.scala:181-212): row / family / cell
@@ -237,22 +230,23 @@ class KVTable(val spark: SparkSession, val path: String) {
     * RegionPartitioner.scala:12-68). Two compacted tables with the same
     * bucket count join co-located, shuffle-free on either side.
     *
-    * Each compaction writes a FRESH directory (`compacted/gen-<N+1>`)
-    * and then flips the pointer file: the state is written exactly
-    * once, and readers planned against gen-N keep working through the
-    * swap — its files, and the log files the swap retired, survive
-    * (the HBase scanners-hold-HFiles analogue). Generation N-1 and
-    * those log files are deleted only at the NEXT compaction, giving
-    * in-flight scans one full compaction interval to drain. */
+    * Each compaction writes FRESH files and commits them in one
+    * checkpoint record: the state is written exactly once, and readers
+    * planned before the commit keep working through the swap — the
+    * files it drops survive (the HBase scanners-hold-HFiles analogue)
+    * and are deleted only by the NEXT rewrite's commit, giving
+    * in-flight scans one full compaction interval to drain. Appends
+    * racing it stay live; a rewrite racing it on the same files makes
+    * one of the two throw `ConcurrentModificationException`. */
   def compact(numBuckets: Int = 8): Unit =
     KVGeneration.writeResolved(KVLayout(path), numBuckets, Long.MaxValue)
 
   /** M22: RESTORE — roll the live state back to the `VERSION AS OF v`
     * view by compacting THAT view into a new generation (the lakehouse
     * RESTORE/ROLLBACK command): versions and tombstones written after
-    * `v` vanish from the live state in one atomic pointer flip, and
-    * because the restore is itself just a new generation, a wrong
-    * restore is re-restorable while the previous generation survives.
+    * `v` vanish from the live state in one commit record, and because
+    * the restore is itself just a new generation, a wrong restore is
+    * re-restorable while the previous generation survives.
     * Subject to [[resolvedAsOf]]'s retention rule: a target older than
     * the last compaction restores what the store still retains. Same
     * two plans as [[compact]], each bucket resolved at cutoff `v`
@@ -261,32 +255,25 @@ class KVTable(val spark: SparkSession, val path: String) {
     KVGeneration.writeResolved(KVLayout(path), numBuckets, v)
 
   /** M21: ZERO-COPY shallow clone (the lakehouse CLONE contract): the
-    * clone is a NEW table whose gen-0 files are hard links to this
-    * table's current generation plus links to the current log files
-    * ([[graft.sources.kv.GraftFs.linkOrCopy]] — the same carry-forward
-    * seam the group-filtered CoW uses; an object store degrades to
-    * copy behind it). O(#files) metadata work, zero data bytes moved
-    * on a POSIX/HDFS-like store. The two tables then evolve
-    * independently: appends land in each table's own log; each side's
-    * compaction writes its OWN next generation; and pruning the
-    * source's old generation cannot strand the clone, because the
-    * links keep the bytes alive for as long as the clone's pointer
-    * names them (KVCloneSpec pins divergence both ways across a
-    * source compaction that retires the linked generation). */
+    * clone is a NEW table whose files are hard links to this table's
+    * live files ([[graft.sources.kv.GraftFs.linkOrCopy]]; an object
+    * store degrades to copy behind it), at the same table-relative
+    * paths, committed as one checkpoint at seq 0. O(#files) metadata
+    * work, zero data bytes moved on a POSIX/HDFS-like store. The two
+    * tables then evolve independently: each side's appends and
+    * compactions commit to its own log, and a source compaction
+    * deleting its dropped files cannot strand the clone, because the
+    * links keep the bytes alive for as long as the clone names them
+    * (KVCloneSpec pins divergence both ways across a source compaction
+    * that drops the linked files). */
   def cloneTo(destPath: String): KVTable = {
-    import graft.sources.kv.KVPointer
     require(destPath != path, "clone destination must differ from source")
     val dest = KVTable(spark, destPath, wipe = true)
     val snap = KVLayout(path)
-    def link(files: Seq[String], dir: String): Unit = files.foreach { f =>
-      GraftFs.linkOrCopy(f, s"$dir/${f.substring(f.lastIndexOf('/') + 1)}")
-    }
-    if (snap.bucketed) {
-      link(snap.compactedFiles, s"$destPath/compacted/gen-0")
-      KVPointer.writeGenMeta(destPath, 0, snap.numBuckets)
-      KVPointer.publish(destPath, 0, snap.numBuckets)
-    }
-    link(snap.logFiles, s"$destPath/log")
+    snap.files.foreach(f =>
+      GraftFs.linkOrCopy(s"$path/${f.rel}", s"$destPath/${f.rel}"))
+    if (snap.generation >= 0)
+      KVCommit.rewrite(KVLayout(destPath), snap.numBuckets, snap.files, Nil, snap.maxTs)
     dest
   }
 
@@ -388,7 +375,7 @@ class KVTable(val spark: SparkSession, val path: String) {
     val mode = spark.conf.get("spark.graft.kv.rowlevel", "delta")
     if (mode != "auto") (body, mode)
     else {
-      val n = currentGen.map(_._2).getOrElse(8)
+      val n = Some(KVLayout(path).numBuckets).filter(_ > 0).getOrElse(8)
       val touched = source
         .select(pmod(hash(col(keyCol)), lit(n)).as("b")).distinct().count()
       val threshold = spark.conf
@@ -416,13 +403,12 @@ class KVTable(val spark: SparkSession, val path: String) {
     * completes when the new generation is swapped in.
     *
     * Concurrency contract: concurrent APPENDS are safe (the rewrite
-    * retires only its snapshot's log files; racing part files survive),
-    * and concurrent READS are safe too — compaction writes a fresh
-    * generation directory and flips a pointer, and the previous
-    * generation's files and the log files the swap retired survive
-    * until the NEXT compaction, so a scan planned before the swap keeps
-    * reading valid files (HBase's scanners-hold-HFiles semantics; see
-    * [[compact]] and [[graft.sources.kv.KVGeneration.commit]]). */
+    * drops only its snapshot's files and rebases its commit record over
+    * racing appends, whose files stay live), and concurrent READS are
+    * safe too — the files the commit drops survive until the NEXT
+    * rewrite, so a scan planned before the swap keeps reading valid
+    * files (HBase's scanners-hold-HFiles semantics; see [[compact]] and
+    * [[graft.sources.kv.KVCommit.rewrite]]). */
   def compactAsync(numBuckets: Int = 8)(
       implicit ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.global)
@@ -485,7 +471,7 @@ class KVTable(val spark: SparkSession, val path: String) {
     KVGeneration.writeResolved(KVLayout(path), numBuckets, Long.MaxValue,
       expiry = ttlCutoffs(nowTs))
 
-  /** Drop all state (log + every compacted generation + files). */
+  /** Drop all state: the commit log and every file. */
   def drop(): Unit = KVTable.deleteRecursively(path)
 }
 

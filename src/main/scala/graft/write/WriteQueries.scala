@@ -204,7 +204,7 @@ object WriteQueries {
     // the later overlay AND a later tombstone are both invisible at v=5.
     "m11_version_asof" -> ((s, d) => {
       import s.implicits._
-      val t = setupOnce(s, "m11", d, version = 1) { t =>
+      val t = setupOnce(s, "m11", d, version = 2) { t =>
         t.put(customerCents(s, d, ts = 5L))
         t.compact()
         t.put(Tables.customer(s, d).filter($"c_mktsegment" === "MACHINERY")
@@ -303,7 +303,7 @@ object WriteQueries {
     // M15 (extra): the same MERGE+DELETE surface through the
     // GROUP-BASED copy-on-write strategy (spark.graft.kv.rowlevel=cow;
     // sources/kv/KVCow.scala): the operation's ReplaceData lands as a
-    // fresh bucketed generation behind the pointer flip — a compaction
+    // fresh bucketed generation in one commit record — a compaction
     // whose input had the mutation applied — instead of delta appends.
     // Same final state as the delta path, tombstone-free by
     // construction; the two strategies are the MoR/CoW pair.
@@ -417,7 +417,7 @@ object WriteQueries {
     // are repaired. At 100 TB: O(matching rows), never a table scan.
     "m19_secondary_index" -> ((s, d) => {
       import s.implicits._
-      val t = setupOnce(s, "m19", d, version = 1) { t =>
+      val t = setupOnce(s, "m19", d, version = 2) { t =>
         val cust = Tables.customer(s, d)
         def segCells(rows: org.apache.spark.sql.DataFrame, ts: Long) =
           rows.select($"c_custkey".as("key"), lit("F").as("family"),
@@ -781,7 +781,7 @@ object WriteQueries {
     // for the one case a DataFrame union cannot keep co-partitioned.
     "s10_kv_merge_read" -> ((s, d) => {
       import s.implicits._
-      val t = setupOnce(s, "s10", d, version = 1) { t =>
+      val t = setupOnce(s, "s10", d, version = 2) { t =>
         t.put(Tables.orders(s, d).select($"o_orderkey".as("key"),
           lit("F").as("family"), lit("cents").as("qualifier"),
           round($"o_totalprice" * 100).cast("long").cast("string").as("value"),

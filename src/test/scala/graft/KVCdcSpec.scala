@@ -354,16 +354,13 @@ class KVCdcSpec extends AnyFunSuite with SparkSpec {
       === KVCdcOffset(3L), "offset must not advance past available data")
   }
 
-  test("the stream's footer cache holds only the files the table lists") {
+  test("the stream's high-water offset is the max ts the commit records hold") {
     val path = targetPath("graft_kv_test/cdc_footers")
     val t = KVTable(spark, path, wipe = true)
     val stream = new KVCdcMicroBatchStream(path, 0L, Long.MaxValue)
     def check(ts: Long): Unit = {
       assert(stream.reportLatestOffset() === KVCdcOffset(ts))
-      val l = KVLayout(path)
-      val files = l.logFiles.size + l.compactedFiles.size
-      assert(stream.cachedFooters <= files,
-        s"${stream.cachedFooters} cached footers for $files data files")
+      assert(KVLayout(path).maxTs === ts)
     }
     def put(ts: Long): Unit = {
       t.put(Seq((ts, "F", "q", s"v$ts", ts))

@@ -113,9 +113,10 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
 
   private def resolvedRows(t: KVTable): Set[Row] = t.resolved().collect().toSet
 
-  private def stagingDirs(path: String): Set[String] =
-    Option(new java.io.File(s"$path/compacted").list()).toSet.flatten
-      .filter(_.startsWith(".inflight"))
+  /** The writer directories under `compacted/` that hold no live file. */
+  private def deadDirs(path: String): Set[String] =
+    Option(new java.io.File(s"$path/compacted").list()).toSet.flatten --
+      KVLayout(path).compactedFiles.map(f => f.split("/").init.last)
 
   private def shuffles(df: org.apache.spark.sql.DataFrame): Int =
     new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
@@ -140,7 +141,7 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
          |  INSERT (key, family, qualifier, value, ts, tomb)
          |  VALUES (u.key, 'F', 'q', u.value, 2, null)""".stripMargin)
     finally spark.conf.unset("spark.graft.kv.rowlevel")
-    assert(t.currentGen.map(_._1) === Some(1), "CoW MERGE published gen-1")
+    assert(KVLayout(path).generation === 2L, "CoW MERGE committed seq 2")
 
     val kvEntries = spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith("graft_kv_"))
@@ -156,40 +157,38 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
     assert(agg.count() === want.size)
   }
 
-  test("staged generation write: a stale inflight dir and an unpublished " +
-    "next generation are invisible, and the next compaction publishes " +
-    "exactly the resolved rows") {
+  test("a crashed writer's files and record tmp file are invisible, and " +
+    "the next compaction commits exactly the resolved rows") {
     val path = targetPath("graft_kv_test/staged")
     val t = KVTable(spark, path, wipe = true)
     t.put(cells((1L to 50L).map(k => k -> s"a$k"), 1L))
-    t.compact(numBuckets = 4) // gen-0
+    t.compact(numBuckets = 4)
     t.put(cells((1L to 50L by 5).map(k => k -> s"b$k"), 2L))
     val want = state(t)
     val feed = t.changeLog(Seq(0L, 1L, 2L)).collect().toSet
 
-    // a crashed writer's leftovers: an inflight dir holding a cell file,
-    // and a non-empty gen-1 the pointer never named
-    cells(Seq(999L -> "stale"), 9L).withColumn("tomb", lit(null).cast("string"))
-      .coalesce(1).write.parquet(s"$path/compacted/.inflight-crashed")
-    val gen1 = new java.io.File(s"$path/compacted/gen-1")
-    gen1.mkdirs()
-    new java.io.File(s"$path/compacted/gen-0").listFiles()
-      .filter(_.getName.endsWith(".parquet")).foreach { f =>
-        java.nio.file.Files.copy(f.toPath, new java.io.File(gen1, f.getName).toPath)
-      }
+    // a crashed rewrite's and a crashed append's files, each in its own
+    // writer dir, and the tmp file of a record that was never linked
+    Seq("compacted/crashed", "log/crashed").foreach { d =>
+      cells(Seq(999L -> "stale"), 9L).withColumn("tomb", lit(null).cast("string"))
+        .coalesce(1).write.parquet(s"$path/$d")
+    }
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(
+      s"$path/_commits/.00000000000000000003.crashed.tmp"), "graft-kv-commit 1\nseq 3\n")
     def listed = { val l = KVLayout(path); l.compactedFiles ++ l.logFiles }
-    assert(!listed.exists(_.contains(".inflight")), listed.mkString("\n"))
+    assert(!listed.exists(_.contains("crashed")), listed.mkString("\n"))
+    assert(KVLayout(path).generation === 2L)
 
     assert(state(t) === want)
     assert(t.changeLog(Seq(0L, 1L, 2L)).collect().toSet === feed)
 
-    t.compact(numBuckets = 4) // adopts gen-1 afresh
-    assert(t.currentGen === Some((1, 4)))
+    t.compact(numBuckets = 4)
+    assert(KVLayout(path).generation === 3L && KVLayout(path).numBuckets === 4)
     assert(state(t) === want)
     val stored = t.cells.select($"key", $"value").as[(Long, String)].collect()
     assert(stored.length === want.size, "duplicated or extra rows published")
     assert(stored.toSet === want)
-    assert(!listed.exists(_.contains(".inflight")), listed.mkString("\n"))
+    assert(!listed.exists(_.contains("crashed")), listed.mkString("\n"))
     t.drop()
   }
 
@@ -258,7 +257,7 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
     val rebucket = shape(t.compact(numBuckets = 8))
     assert(kernelShuffle(rebucket), s"re-bucketing: $rebucket")
     sortedFiles(path)
-    assert(t.currentGen.map(_._2) === Some(8))
+    assert(KVLayout(path).numBuckets === 8)
     assert(resolvedRows(t) === withLate)
     t.drop()
   }
@@ -316,47 +315,20 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
          |  INSERT (key, family, qualifier, value, ts, tomb)
          |  VALUES (u.key, 'F', 'q', u.value, 2, null)""".stripMargin)
     finally spark.conf.unset("spark.graft.kv.rowlevel")
-    assert(t.currentGen.map(_._1) === Some(1), "CoW MERGE published gen-1")
+    assert(KVLayout(path).generation === 2L, "CoW MERGE committed seq 2")
     val want = (1L to 40L).map(k => k -> s"v$k").toMap
       .updated(5L, "m5").updated(500L, "m500").toSet
 
     intercept[java.util.ConcurrentModificationException](
       KVGeneration.writeResolved(stale, stale.numBuckets, Long.MaxValue))
-    assert(t.currentGen.map(_._1) === Some(1))
+    assert(KVLayout(path).generation === 2L)
     assert(state(t) === want)
-    assert(stagingDirs(path).isEmpty, stagingDirs(path).toString)
-    t.drop()
-  }
-
-  test("a commit sweeps the staging dirs tagged with a generation at or " +
-    "below its snapshot's, and publishes exactly the resolved rows") {
-    val path = targetPath("graft_kv_test/sweep")
-    val t = KVTable(spark, path, wipe = true)
-    t.put(cells((1L to 50L).map(k => k -> s"a$k"), 1L))
-    t.compact(numBuckets = 4) // gen-0
-    t.put(cells((1L to 50L by 5).map(k => k -> s"b$k"), 2L))
-    val want = state(t)
-    // doomed writers' leftovers (snapshots of gen-0 and of the empty
-    // table) holding a cell file, and a dir of a writer that read gen-1
-    val doomed = Seq(".inflight-g0-crashed", ".inflight-g-1-older")
-    doomed.foreach { d =>
-      cells(Seq(999L -> "stale"), 9L).withColumn("tomb", lit(null).cast("string"))
-        .coalesce(1).write.parquet(s"$path/compacted/$d")
-    }
-    new java.io.File(s"$path/compacted/.inflight-g1-running").mkdirs()
-    assert(stagingDirs(path) === doomed.toSet + ".inflight-g1-running")
-
-    t.compact(numBuckets = 4) // publishes gen-1
-    assert(stagingDirs(path) === Set(".inflight-g1-running"))
-    assert(state(t) === want)
-    val stored = t.cells.select($"key", $"value").as[(Long, String)].collect()
-    assert(stored.length === want.size, "duplicated or extra rows published")
-    assert(stored.toSet === want)
+    assert(deadDirs(path).isEmpty, deadDirs(path).toString)
     t.drop()
   }
 
   test("a scan planned before a compaction still reads the log files the " +
-    "compaction retired, until the next compaction deletes them") {
+    "compaction dropped, until the next compaction deletes them") {
     val path = targetPath("graft_kv_test/retiredlog")
     val t = KVTable(spark, path, wipe = true)
     t.put(cells((1L to 30L).map(k => k -> s"a$k"), 1L))
@@ -375,17 +347,17 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
     def planned() = new KVResolvedScan(path, KVLayout(path),
       StructType.fromDDL("key BIGINT, value STRING"), Array.empty)
     val early = planned()
-    t.compact(numBuckets = 4) // gen-1 retires the log
-    assert(GraftFs.dataFiles(s"$path/log").isEmpty)
+    val earlyLog = KVLayout(path).logFiles
+    t.compact(numBuckets = 4) // drops the log
+    assert(KVLayout(path).logFiles.isEmpty)
     assert(drain(early) === want)
     assert(drain(planned()) === want)
     val late = planned()
     t.put(cells(Seq(1L -> "c1"), 3L))
-    t.compact(numBuckets = 4) // gen-2 deletes what gen-1 retired
+    t.compact(numBuckets = 4) // deletes what the previous one dropped
     assert(drain(late) === want)
     assert(state(t) === want + (1L -> "c1") - (1L -> "b1"))
-    assert(Option(new java.io.File(s"$path/log").list()).toSeq.flatten
-      .forall(_ == ".retired-g2"))
+    assert(earlyLog.nonEmpty && !earlyLog.exists(GraftFs.exists))
     t.drop()
   }
 

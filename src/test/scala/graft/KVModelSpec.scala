@@ -14,9 +14,7 @@ import graft.write.KVTable
 class KVModelSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  // (key, family, qualifier, value|tomb, ts)
-  private case class Op(key: Long, family: String, qualifier: String,
-                        ts: Long, tomb: Option[String])
+  import KVModel.{Cell, Op, load, model}
 
   private val genOp: Gen[Op] = for {
     key <- Gen.choose(0L, 4L)
@@ -28,31 +26,6 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
       1 -> Gen.const(Some("row")))
   } yield Op(key, fam, qual, ts, tomb)
 
-  /** Naive reference model of HBase latest-wins + tombstone masking. */
-  private def model(ops: List[Op]): Set[(Long, String, String, String, Long)] = {
-    def rowDel(k: Long) =
-      ops.filter(o => o.tomb.contains("row") && o.key == k)
-        .map(_.ts).maxOption.getOrElse(Long.MinValue)
-    def famDel(k: Long, f: String) =
-      ops.filter(o => o.tomb.contains("family") && o.key == k && o.family == f)
-        .map(_.ts).maxOption.getOrElse(Long.MinValue)
-    def cellDel(k: Long, f: String, q: String) =
-      ops.filter(o => o.tomb.contains("cell") && o.key == k &&
-          o.family == f && o.qualifier == q)
-        .map(_.ts).maxOption.getOrElse(Long.MinValue)
-    ops.filter(_.tomb.isEmpty)
-      .groupBy(o => (o.key, o.family, o.qualifier))
-      .flatMap { case ((k, f, q), cells) =>
-        val latest = cells.maxBy(_.ts)
-        val mask = List(rowDel(k), famDel(k, f), cellDel(k, f, q)).max
-        if (latest.ts > mask)
-          Some((k, f, q, s"v${latest.key}_${latest.ts}", latest.ts))
-        else None
-      }.toSet
-  }
-
-  private type Cell = (Long, String, String, String, Long)
-
   /** 40 random ops of `seed`; duplicate (key,fam,qual,ts,tomb) ops are
     * ambiguous (which value wins), so later duplicates are dropped like
     * HBase overwrites identical ts cells. */
@@ -62,22 +35,7 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
       .groupBy(o => (o._1.key, o._1.family, o._1.qualifier, o._1.ts, o._1.tomb))
       .map(_._2.head).toList.sortBy(_._2).map(_._1)
 
-  /** Writes `batch` to `t`: one put of its versions, one delete per
-    * tombstone ts. */
-  private def load(t: KVTable, batch: List[Op]): Unit = {
-    val puts = batch.filter(_.tomb.isEmpty)
-      .map(o => (o.key, o.family, o.qualifier, s"v${o.key}_${o.ts}", o.ts))
-    if (puts.nonEmpty)
-      t.put(puts.toDF("key", "family", "qualifier", "value", "ts"))
-    batch.filter(_.tomb.nonEmpty).groupBy(_.ts).foreach { case (ts, dels) =>
-      t.delete(dels.map {
-        case Op(k, _, _, _, Some("row")) => (k, None, None)
-        case Op(k, f, _, _, Some("family")) => (k, Some(f), None)
-        case Op(k, f, q, _, Some("cell")) => (k, Some(f), Some(q))
-        case o => throw new IllegalStateException(o.toString)
-      }.toDF("key", "family", "qualifier"), ts)
-    }
-  }
+
 
   private def str(row: org.apache.spark.sql.catalyst.InternalRow, i: Int) =
     if (row.isNullAt(i)) null else row.getUTF8String(i).toString
@@ -290,7 +248,7 @@ class KVModelSpec extends AnyFunSuite with SparkSpec {
       for (n <- Seq(same, other).distinct) {
         val compacted = fresh(s"compact$n")
         compacted.compact(numBuckets = n)
-        assert(compacted.currentGen.map(_._2) === Some(n))
+        assert(KVLayout(compacted.path).numBuckets === n)
         assert(state(compacted) === model(ops), s"compact($n), $clue")
         compacted.drop()
         val restored = fresh(s"restore$n")

@@ -49,3 +49,54 @@ object KVReference {
       .select(col("key"), col("family"), col("qualifier"), col("value"), col("ts"))
   }
 }
+
+/** The naive in-memory model of HBase latest-wins + tombstone masking
+  * the KV specs hold the engine to, over ops whose cell values are
+  * `v<key>_<ts>`, and the loader that writes ops to a table. */
+object KVModel {
+  /** (key, family, qualifier, ts, tomb), the value implied. */
+  case class Op(key: Long, family: String, qualifier: String,
+                ts: Long, tomb: Option[String])
+
+  type Cell = (Long, String, String, String, Long)
+
+  def model(ops: Seq[Op]): Set[Cell] = {
+    def rowDel(k: Long) =
+      ops.filter(o => o.tomb.contains("row") && o.key == k)
+        .map(_.ts).maxOption.getOrElse(Long.MinValue)
+    def famDel(k: Long, f: String) =
+      ops.filter(o => o.tomb.contains("family") && o.key == k && o.family == f)
+        .map(_.ts).maxOption.getOrElse(Long.MinValue)
+    def cellDel(k: Long, f: String, q: String) =
+      ops.filter(o => o.tomb.contains("cell") && o.key == k &&
+          o.family == f && o.qualifier == q)
+        .map(_.ts).maxOption.getOrElse(Long.MinValue)
+    ops.filter(_.tomb.isEmpty)
+      .groupBy(o => (o.key, o.family, o.qualifier))
+      .flatMap { case ((k, f, q), cells) =>
+        val latest = cells.maxBy(_.ts)
+        val mask = List(rowDel(k), famDel(k, f), cellDel(k, f, q)).max
+        if (latest.ts > mask)
+          Some((k, f, q, s"v${latest.key}_${latest.ts}", latest.ts))
+        else None
+      }.toSet
+  }
+
+  /** Writes `batch` to `t`: one put of its versions, one delete per
+    * tombstone ts. */
+  def load(t: graft.write.KVTable, batch: Seq[Op]): Unit = {
+    import t.spark.implicits._
+    val puts = batch.filter(_.tomb.isEmpty)
+      .map(o => (o.key, o.family, o.qualifier, s"v${o.key}_${o.ts}", o.ts))
+    if (puts.nonEmpty)
+      t.put(puts.toDF("key", "family", "qualifier", "value", "ts"))
+    batch.filter(_.tomb.nonEmpty).groupBy(_.ts).foreach { case (ts, dels) =>
+      t.delete(dels.map {
+        case Op(k, _, _, _, Some("row")) => (k, None, None)
+        case Op(k, f, _, _, Some("family")) => (k, Some(f), None)
+        case Op(k, f, q, _, Some("cell")) => (k, Some(f), Some(q))
+        case o => throw new IllegalStateException(o.toString)
+      }.toDF("key", "family", "qualifier"), ts)
+    }
+  }
+}

@@ -112,11 +112,11 @@ class KVSourceSpec extends AnyFunSuite with SparkSpec {
     val t = mkTable("e", "st", 1L)
     val viaDsv2 = t.resolved().orderBy($"key", $"family", $"qualifier").collect()
     // reference: the DataFrame union of plain parquet reads of the
-    // current generation's directory and the log
-    val gen = t.currentGen.get._1
-    def plain(dir: String) =
-      spark.read.schema(KVTable.CELL_SCHEMA_DDL).parquet(s"${t.path}/$dir")
-    val viaUnion = KVReference.resolve(plain(s"compacted/gen-$gen").unionByName(plain("log")))
+    // current generation's files and the log's
+    val layout = graft.sources.kv.KVLayout(t.path)
+    def plain(files: Seq[String]) =
+      spark.read.schema(KVTable.CELL_SCHEMA_DDL).parquet(files: _*)
+    val viaUnion = KVReference.resolve(plain(layout.compactedFiles).unionByName(plain(layout.logFiles)))
       .orderBy($"key", $"family", $"qualifier").collect()
     assert(viaDsv2.toSeq === viaUnion.toSeq)
   }
@@ -369,7 +369,7 @@ class KVSourceSpec extends AnyFunSuite with SparkSpec {
     t.put(cust.filter($"c_custkey" % 7 === 0)
       .select($"c_custkey".as("key"), lit("F").as("family"),
         lit("bal").as("qualifier"), lit("777").as("value"), lit(2L).as("ts")))
-    val genBefore = graft.sources.kv.KVPointer.read(path).map(_._1).get
+    val genBefore = graft.sources.kv.KVLayout(path).generation
     val ident = graft.sources.kv.KVSource.sqlName(spark, path)
     cust.select($"c_custkey".as("key"),
         (round($"c_acctbal" * 100).cast("long") + 111).cast("string").as("value"))
@@ -393,14 +393,14 @@ class KVSourceSpec extends AnyFunSuite with SparkSpec {
       case None => spark.conf.unset("spark.graft.kv.rowlevel")
     }
 
-    // two CoW ops = two generation flips, no delta/tombstones anywhere
-    val genAfter = graft.sources.kv.KVPointer.read(path).map(_._1).get
+    // two CoW ops = two commit records, no delta/tombstones anywhere
+    val genAfter = graft.sources.kv.KVLayout(path).generation
     assert(genAfter === genBefore + 2)
     val t2 = KVTable(spark, path)
     assert(t2.cells.filter($"tomb".isNotNull).count() === 0,
       "CoW must not write tombstones")
-    assert(graft.sources.kv.GraftFs.dataFiles(s"$path/log").isEmpty,
-      "CoW commit must retire the consumed log files")
+    assert(graft.sources.kv.KVLayout(path).logFiles.isEmpty,
+      "CoW commit must drop the consumed log files")
 
     val got = t2.resolved().select($"key", $"value".cast("long"))
       .as[(Long, Long)].collect().toMap
@@ -428,7 +428,7 @@ class KVSourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("group-filtered CoW: a 2-bucket MERGE rewrites exactly those buckets") {
-    import graft.sources.kv.{GraftBucket, GraftFs, KVPointer}
+    import graft.sources.kv.{GraftBucket, KVLayout}
     val path = targetPath("graft_kv_test/dsv2_cow_group")
     val t = KVTable(spark, path, wipe = true)
     val cust = Tables.customer(spark, sf)
@@ -447,10 +447,8 @@ class KVSourceSpec extends AnyFunSuite with SparkSpec {
     // group-filtered commit must carry it through the log rewrite
     t.put(Seq((kC, "F", "bal", "9999", 2L)).toDF(
       "key", "family", "qualifier", "value", "ts"))
-    val genBefore = KVPointer.read(path).map(_._1).get
-    val oldDir = s"$path/compacted/gen-$genBefore"
-    val oldFiles = GraftFs.dataFiles(oldDir).map(_.name).toSet
-    assert(oldFiles.size === 8)
+    val before = KVLayout(path)
+    assert(before.compactedByBucket.size === 8)
     val ident = graft.sources.kv.KVSource.sqlName(spark, path)
     Seq((kA, "111111"), (kB, "222222")).toDF("key", "value")
       .createOrReplaceTempView("kvspec_cowgroup_updates")
@@ -465,29 +463,15 @@ class KVSourceSpec extends AnyFunSuite with SparkSpec {
       case Some(v) => spark.conf.set("spark.graft.kv.rowlevel", v)
       case None => spark.conf.unset("spark.graft.kv.rowlevel")
     }
-    val genAfter = KVPointer.read(path).map(_._1).get
-    assert(genAfter === genBefore + 1)
-    val newDir = s"$path/compacted/gen-$genAfter"
-    val newFiles = GraftFs.dataFiles(newDir).map(_.name).toSet
+    val after = KVLayout(path)
+    assert(after.generation === before.generation + 1)
     // files-level proof: exactly the two touched buckets' files are
-    // fresh; the other six are the OLD generation's files carried
-    // forward by reference
-    val fresh = newFiles -- oldFiles
-    val carried = newFiles intersect oldFiles
-    val pat = "_(\\d{5})\\.".r
-    def bucketsOf(names: Set[String]): Set[Int] =
-      names.flatMap(n => pat.findFirstMatchIn(n).map(_.group(1).toInt))
-    assert(bucketsOf(fresh) === Set(bA, bB),
-      s"rewrote buckets ${bucketsOf(fresh)}, expected {$bA, $bB}")
-    assert(carried.size === 6, s"expected 6 carried files, got $carried")
-    // carried = same bytes by REFERENCE (hard link on local fs)
-    val sample = carried.head
-    assert(java.nio.file.Files.isSameFile(
-      java.nio.file.Paths.get(new java.net.URI(
-        GraftFs.dataFiles(oldDir).find(_.name == sample).get.path).getPath),
-      java.nio.file.Paths.get(new java.net.URI(
-        GraftFs.dataFiles(newDir).find(_.name == sample).get.path).getPath)),
-      "carried file is a copy, not a reference")
+    // fresh; the other six are the same files, still live, not copies
+    val fresh = (0 until 8).filter(b =>
+      after.compactedByBucket(b) != before.compactedByBucket(b)).toSet
+    assert(fresh === Set(bA, bB), s"rewrote buckets $fresh, expected {$bA, $bB}")
+    // the untouched bucket's pending row is re-appended in that record
+    assert(after.logFiles.size === 1 && !before.logFiles.contains(after.logFiles.head))
     // semantics: updates landed, untouched bucket kept its PENDING log
     // row (the filtered log rewrite), everything else intact
     val got = t.resolved().select($"key", $"value".cast("long"))
@@ -503,7 +487,7 @@ class KVSourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("rowlevel=auto: small MERGE plans delta, near-full MERGE plans CoW") {
-    import graft.sources.kv.{GraftFs, KVPointer}
+    import graft.sources.kv.{KVCommit, KVLayout}
     val path = targetPath("graft_kv_test/dsv2_auto")
     val t = KVTable(spark, path, wipe = true)
     val cust = Tables.customer(spark, sf)
@@ -519,7 +503,7 @@ class KVSourceSpec extends AnyFunSuite with SparkSpec {
       // SMALL command: one key = 1/8 buckets touched → MoR (delta
       // append: generation unchanged, a new log file carries the delta)
       val k = cust.select(min($"c_custkey")).as[Long].head()
-      val genBefore = KVPointer.read(path).map(_._1).get
+      val compactedBefore = KVLayout(path).compactedFiles
       val small = Seq((k, "111")).toDF("key", "value")
       small.createOrReplaceTempView("kvspec_auto_small")
       val (_, smallMode) = t.withAutoRowLevel(small) {
@@ -529,9 +513,9 @@ class KVSourceSpec extends AnyFunSuite with SparkSpec {
              |WHEN MATCHED THEN UPDATE SET value = u.value, ts = 2""".stripMargin)
       }
       assert(smallMode === "delta")
-      assert(KVPointer.read(path).map(_._1).get === genBefore,
+      assert(KVLayout(path).compactedFiles === compactedBefore,
         "small MERGE must not rewrite a generation")
-      assert(GraftFs.dataFiles(s"$path/log").nonEmpty,
+      assert(KVLayout(path).logFiles.nonEmpty,
         "small MERGE must land as a delta append")
       // NEAR-FULL command: every key → all buckets touched → CoW
       // (fresh generation, consumed log retired)
@@ -545,10 +529,11 @@ class KVSourceSpec extends AnyFunSuite with SparkSpec {
              |WHEN MATCHED THEN UPDATE SET value = u.value, ts = 3""".stripMargin)
       }
       assert(bigMode === "cow")
-      assert(KVPointer.read(path).map(_._1).get === genBefore + 1,
-        "near-full MERGE must land as a CoW generation flip")
-      assert(GraftFs.dataFiles(s"$path/log").isEmpty,
-        "CoW commit must have retired the consumed log files")
+      val afterBig = KVLayout(path)
+      assert(KVCommit.read(path, afterBig.generation).rewrite,
+        "near-full MERGE must land as a CoW rewrite record")
+      assert(afterBig.logFiles.isEmpty,
+        "CoW commit must have dropped the consumed log files")
       // the conf is back to auto, and the state reflects both commands
       assert(spark.conf.get("spark.graft.kv.rowlevel") === "auto")
       val vals = t.resolved().select($"value").distinct()

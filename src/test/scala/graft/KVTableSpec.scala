@@ -413,122 +413,35 @@ class KVTableSpec extends AnyFunSuite with SparkSpec {
   test("readers planned before a re-compaction keep working through the swap") {
     val t = fresh("genswap")
     t.put(cells((1L, "F", "a", "v1", 1L), (2L, "F", "a", "v2", 1L)))
-    t.compact() // gen-0
+    t.compact()
+    val first = graft.sources.kv.KVLayout(t.path).compactedFiles
     t.put(cells((3L, "F", "a", "v3", 2L)))
-    val planned = t.resolved() // resolved against gen-0 + the live log
+    val planned = t.resolved() // resolved against the first generation + the live log
     assert(planned.count() === 3)
-    t.compact() // gen-1 swaps in; gen-0's files survive
+    t.compact() // the second generation swaps in; the first one's files survive
+    val second = graft.sources.kv.KVLayout(t.path).compactedFiles
     // the pre-swap plan still executes: its files were not deleted
     assert(planned.count() === 3)
     assert(t.resolved().count() === 3)
-    // the NEXT compaction retires gen-0 (one full interval to drain)
+    // the NEXT compaction deletes the first generation (one full
+    // interval to drain) and keeps the second
     t.put(cells((4L, "F", "a", "v4", 3L)))
-    t.compact() // gen-2
-    val root = new java.io.File(targetPath("graft_kv_test/genswap"), "compacted")
-    assert(!new java.io.File(root, "gen-0").exists(), "gen-0 not retired")
-    assert(new java.io.File(root, "gen-1").exists(), "drain window gone")
+    t.compact()
+    def onDisk(f: String) = graft.sources.kv.GraftFs.exists(f)
+    assert(first.nonEmpty && !first.exists(onDisk), "first generation not deleted")
+    assert(second.forall(onDisk), "drain window gone")
     assert(t.resolved().count() === 4)
   }
 
-  test("truncated generation pointer recovers from the newest complete " +
-    "generation and repairs itself") {
-    val t = fresh("ptrcrash")
-    t.put(cells((1L, "F", "a", "v1", 1L)))
-    t.compact() // gen-0
-    t.put(cells((2L, "F", "a", "v2", 2L)))
-    t.compact() // gen-1
-    val ptr = new java.io.File(
-      targetPath("graft_kv_test/ptrcrash"), "compacted/_graft_current.txt")
-    // simulate the pre-atomic failure mode: crash after truncate
-    new java.io.PrintWriter(ptr).close()
-    assert(ptr.length() === 0)
-    val reread = new KVTable(spark, targetPath("graft_kv_test/ptrcrash"))
-    assert(reread.resolved().orderBy($"key").select($"value").as[String]
-      .collect().toSeq === Seq("v1", "v2"))
-    // and the pointer was repaired to the newest generation
-    assert(reread.currentGen.map(_._1) === Some(1))
-    val repaired = scala.io.Source.fromFile(ptr)
-    try assert(repaired.mkString.trim.split(" ")(0).toInt === 1)
-    finally repaired.close()
-    reread.drop()
-  }
-
-  test("garbage generation pointer recovers too") {
-    val t = fresh("ptrjunk")
+  test("a commit record that does not parse fails the read, naming the file") {
+    val t = fresh("recordjunk")
     t.put(cells((1L, "F", "a", "v1", 1L)))
     t.compact()
-    val ptr = new java.io.File(
-      targetPath("graft_kv_test/ptrjunk"), "compacted/_graft_current.txt")
-    val w = new java.io.PrintWriter(ptr)
-    try w.print("not a generation") finally w.close()
-    val reread = new KVTable(spark, targetPath("graft_kv_test/ptrjunk"))
-    assert(reread.resolved().select($"value").as[String].collect().toSeq
-      === Seq("v1"))
-    reread.drop()
-  }
-
-  test("pointer flips are atomic under reader load: gen is monotonic, " +
-    "never absent, never malformed") {
-    val path = targetPath("graft_kv_test/ptrrace")
-    KVTable(spark, path, wipe = true) // clean slate
-    new java.io.File(s"$path/compacted/gen-0").mkdirs()
-    graft.sources.kv.KVPointer.writeGenMeta(path, 0, 8)
-    graft.sources.kv.KVPointer.publish(path, 0, 8)
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val bad = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val readers = (1 to 4).map { _ =>
-      new Thread(() => {
-        var lastGen = -1
-        while (!stop.get() && bad.get() == null) {
-          graft.sources.kv.KVPointer.read(path) match {
-            case None => bad.compareAndSet(null, "pointer read came back None")
-            case Some((g, n)) =>
-              if (g < lastGen) bad.compareAndSet(null,
-                s"generation went backwards: $lastGen -> $g")
-              if (n != 8) bad.compareAndSet(null, s"bucket count corrupted: $n")
-              lastGen = g
-          }
-        }
-      })
-    }
-    readers.foreach(_.start())
-    for (g <- 1 to 300) { // publisher: 300 atomic flips under read fire
-      new java.io.File(s"$path/compacted/gen-$g").mkdirs()
-      graft.sources.kv.KVPointer.writeGenMeta(path, g, 8)
-      graft.sources.kv.KVPointer.publish(path, g, 8)
-    }
-    stop.set(true)
-    readers.foreach(_.join(10000))
-    assert(bad.get() == null, String.valueOf(bad.get()))
-    assert(graft.sources.kv.KVPointer.read(path) === Some((300, 8)))
-  }
-
-  test("legacy pre-generational layout migrates to gen-0 on first read") {
-    val t = fresh("legacy")
-    t.put(cells((1L, "F", "a", "v1", 1L), (2L, "F", "a", "v2", 1L)))
-    t.compact(numBuckets = 4) // gen-0, modern layout
-    val root = new java.io.File(targetPath("graft_kv_test/legacy"), "compacted")
-    val gen0 = new java.io.File(root, "gen-0")
-    // reshape to the legacy layout: bucket files directly under
-    // compacted/, a _graft_buckets.txt marker, no pointer, no gen dir
-    gen0.listFiles().filter(_.getName != "_graft_meta.txt").foreach { f =>
-      java.nio.file.Files.move(f.toPath,
-        new java.io.File(root, f.getName).toPath)
-    }
-    new java.io.File(gen0, "_graft_meta.txt").delete()
-    gen0.delete()
-    new java.io.File(root, "_graft_current.txt").delete()
-    val w = new java.io.PrintWriter(new java.io.File(root, "_graft_buckets.txt"))
-    try w.print("4") finally w.close()
-    // first read migrates in place and the compacted state is visible
-    val reread = new KVTable(spark, targetPath("graft_kv_test/legacy"))
-    assert(reread.currentGen === Some((0, 4)))
-    assert(reread.resolved().orderBy($"key").select($"value").as[String]
-      .collect().toSeq === Seq("v1", "v2"))
-    assert(!new java.io.File(root, "_graft_buckets.txt").exists(),
-      "legacy marker not consumed")
-    assert(new java.io.File(root, "gen-0").isDirectory)
-    reread.drop()
+    val record = graft.sources.kv.KVCommit.file(t.path, 1L)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(record), "not a commit")
+    val e = intercept[IllegalStateException](graft.sources.kv.KVLayout(t.path))
+    assert(e.getMessage.contains(record), e.getMessage)
+    t.drop()
   }
 
   test("distinct paths that slug identically keep independent state") {

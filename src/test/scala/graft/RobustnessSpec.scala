@@ -26,20 +26,6 @@ class RobustnessSpec extends AnyFunSuite with SparkSpec {
         .filter($"o_orderkey" >= 100 && $"o_orderkey" < 200).count())
   }
 
-  test("GraftFs.move surfaces rename failure instead of losing data") {
-    // FileSystem.rename reports failure as `false`; a swallowed false
-    // in migrateLegacy would publish a pointer over an incomplete
-    // generation. Source absent → rename false → must throw.
-    val dir = new java.io.File(targetPath("graft_fs_test")).getAbsolutePath
-    graft.sources.kv.GraftFs.mkdirs(dir)
-    // either shape is the contract: the local raw fs throws its own
-    // FileNotFoundException; filesystems that return false instead get
-    // our explicit "rename failed" IOException — never a silent no-op
-    intercept[java.io.IOException] {
-      graft.sources.kv.GraftFs.move(s"$dir/nope-src", s"$dir/nope-dst")
-    }
-  }
-
   test("GraftFs.readString: absent file is None, not an exception") {
     val dir = new java.io.File(targetPath("graft_fs_test")).getAbsolutePath
     assert(graft.sources.kv.GraftFs.readString(s"$dir/absent.txt").isEmpty)
