@@ -328,7 +328,7 @@ class KVGenerationSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("a scan planned before a compaction still reads the log files the " +
-    "compaction dropped, until the next compaction deletes them") {
+    "compaction retired, until the next compaction deletes them") {
     val path = targetPath("graft_kv_test/retiredlog")
     val t = KVTable(spark, path, wipe = true)
     t.put(cells((1L to 30L).map(k => k -> s"a$k"), 1L))

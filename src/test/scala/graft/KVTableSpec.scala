@@ -433,6 +433,33 @@ class KVTableSpec extends AnyFunSuite with SparkSpec {
     assert(t.resolved().count() === 4)
   }
 
+  test("truncated generation pointer recovers from the newest complete " +
+    "generation and repairs itself") {
+    val t = fresh("ptrcrash")
+    t.put(cells((1L, "F", "a", "v1", 1L)))
+    t.compact()
+    t.put(cells((2L, "F", "a", "v2", 2L)))
+    t.compact()
+    val head = graft.sources.kv.KVLayout(t.path).generation
+    // the next generation's publish crashed after truncating its record's
+    // tmp file and before linking it: the head record is never half-written
+    val record = java.nio.file.Paths.get(graft.sources.kv.KVCommit.file(t.path, head + 1))
+    val tmp = record.resolveSibling(s".${record.getFileName}.crashed.tmp")
+    java.nio.file.Files.write(tmp, Array.emptyByteArray)
+    assert(java.nio.file.Files.size(tmp) === 0)
+    val reread = new KVTable(spark, t.path)
+    assert(reread.resolved().orderBy($"key").select($"value").as[String]
+      .collect().toSeq === Seq("v1", "v2"))
+    assert(graft.sources.kv.KVLayout(t.path).generation === head)
+    // and the next commit takes the generation the crashed publish lost
+    reread.put(cells((3L, "F", "a", "v3", 3L)))
+    assert(graft.sources.kv.KVLayout(t.path).generation === head + 1)
+    assert(java.nio.file.Files.exists(record))
+    assert(reread.resolved().orderBy($"key").select($"value").as[String]
+      .collect().toSeq === Seq("v1", "v2", "v3"))
+    reread.drop()
+  }
+
   test("a commit record that does not parse fails the read, naming the file") {
     val t = fresh("recordjunk")
     t.put(cells((1L, "F", "a", "v1", 1L)))
